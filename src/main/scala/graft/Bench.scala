@@ -62,8 +62,8 @@ object Bench {
     * job (median, not min — min would hide exactly the contention this
     * exists to detect; median still sheds one-off GC pauses). Work is
     * 1M hashes PER CORE, not a fixed total: per-core work makes the
-    * nominal portable across session widths (the bench runs local[32],
-    * the spec session local[4] — both must sit inside one envelope), and
+    * nominal portable across session widths (the bench runs one thread per
+    * host core, the spec session local[4] — both must sit inside one envelope), and
     * host contention shows up as per-core throughput loss either way.
     */
   private[graft] def canarySampleMs(spark: SparkSession): Double = {
@@ -106,8 +106,7 @@ object Bench {
   private[graft] val IsolatedSideN = 40
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional durable checkpoint dir — the CLUSTER shape for the
     // iterative graph/CC operators (their per-round lineage cuts prefer

@@ -12,11 +12,17 @@ import org.apache.spark.sql.SparkSession
   *   - AQE on (runtime shuffle-partition coalescing + skew-join splitting):
   *     on a 1000-executor cluster this is what keeps small reduce stages
   *     from fragmenting and skewed keys from stalling a stage.
-  *   - shuffle.partitions sized for the local harness (32 threads); on a
-  *     real cluster this would be ~2-3x total cores, and AQE coalesces down.
+  *   - local[cores] with shuffle.partitions = cores; on a real cluster
+  *     this would be ~2-3x total cores, and AQE coalesces down.
+  *
+  * Every main takes its core count from `builder`'s default:
+  * SPARK_GRAFT_CPUS when set, else every core of the host.
   */
 object GraftSession {
-  def builder(appName: String = "graft", cores: String = "32"): SparkSession.Builder =
+  private def defaultCores: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  def builder(appName: String = "graft", cores: String = defaultCores): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
@@ -33,7 +39,7 @@ object GraftSession {
       // cost +10–35% on every other shuffle shape at this tier (256-bucket
       // map-side writes that AQE immediately coalesces away) — net −16%
       // total. On a cluster, size shuffle.partitions to the data instead;
-      // locally the pinned 32 wins.
+      // locally one partition per core wins (measured at 32 cores).
       // runtime bloom-filter pruning: for a shuffle join with a selective
       // filter on one side, inject a bloom filter of that side's join keys
       // into the other side's SCAN, so non-matching fact rows die before

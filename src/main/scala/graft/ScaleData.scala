@@ -105,8 +105,7 @@ object ScaleData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft-sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.builder("graft-scaledata",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = GraftSession.builder("graft-scaledata").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, out, factor)
     spark.stop()

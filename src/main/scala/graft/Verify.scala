@@ -6,10 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // one config source for every entry point (UTC, AQE, non-ANSI,
     // nanos-as-long, extensions): verified plans = benched plans
-    val spark = GraftSession.builder("graft-verify", cpus).getOrCreate()
+    val spark = GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for local iteration (driver sets none)

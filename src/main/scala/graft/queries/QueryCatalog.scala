@@ -3507,8 +3507,8 @@ object QueryCatalog {
 
     // the PRODUCTION configuration of the same operator: the opt-in
     // candidate-volume ceiling (2e7) passes every driver scale (sf0.01
-    // est 2.9e4, sf0.1 est 1.7e6 — Preflight tool reproduces both, 10×
-    // headroom) and fail-fasts with a sized diagnosis at ×100 (MEASURED
+    // est 2.9e4, sf0.1 est 1.7e6 — `Dedup.expectedContainmentCandidates`
+    // reproduces both, 10× headroom) and fail-fasts with a sized diagnosis at ×100 (MEASURED
     // est 1.69e8 — candidates grow linearly with the corpus here, and the
     // original 2e8 ceiling let the ×100 join burn a measured 218 s; a
     // ceiling prices what one node can chew, ~25 s at this join's

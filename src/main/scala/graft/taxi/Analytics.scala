@@ -13,17 +13,34 @@ object Analytics {
 
   import TaxiSchema.airportIds
 
-  /** Share of trips picking up at an airport (cell 101); 0.0 for an empty
-    * frame (sum over zero rows is null — getLong would NPE).
+  /** The program's ten analytics by name, in notebook order: Q1–Q8, the
+    * duration/tip correlation and the airport share, each over the
+    * featured frame.
     */
-  def airportPickupShare(df: DataFrame): Double = {
-    val agg = df.agg(
-      coalesce(sum(when(col("PULocationID").isin(airportIds: _*), 1L).otherwise(0L)),
-        lit(0L)).as("ap"),
-      count(lit(1)).as("n")).head()
-    if (agg.getLong(1) == 0L) 0.0
-    else agg.getLong(0).toDouble / agg.getLong(1) * 100
+  val queries: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "q1_tip_pct" -> q1TipPctByAirportPickup,
+    "q2_route_duration" -> q2AvgDurationByRoute,
+    "q3_payment_count" -> q3CountByPaymentType,
+    "q4_payment_rank" -> q4PaymentRankByRateCode,
+    "q5_congestion" -> q5Congestion,
+    "q6_fare_slot_dow" -> q6FareBySlotAndDow,
+    "q7_top_routes" -> (q7TopRoutes(_)),
+    "q8_airport_stats" -> q8AirportVsNonAirport,
+    "corr_duration_tip" -> corrDurationTipByPayment,
+    "airport_share" -> airportShare)
+
+  /** Share of trips picking up at an airport, percent (cell 101), as a
+    * one-row frame; 0.0 for an empty frame (sum over zero rows is null).
+    */
+  def airportShare(df: DataFrame): DataFrame = {
+    val n = count(lit(1))
+    df.agg(when(n === 0, lit(0.0))
+      .otherwise(sum(when(col("PULocationID").isin(airportIds: _*), 1L).otherwise(0L)) / n * 100)
+      .as("airport_pickup_share_pct"))
   }
+
+  /** [[airportShare]]'s value. */
+  def airportPickupShare(df: DataFrame): Double = airportShare(df).head().getDouble(0)
 
   /** Q1 (cells 102-105): average tip% (tip/total·100, rounded per-row) by
     * airport-pickup flag.

@@ -1,6 +1,6 @@
 package graft.taxi
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** The reference's cleaning lineage (SURVEY.md §2l), one pure
@@ -130,15 +130,46 @@ object Cleaning {
       .withColumn("tpep_pickup_datetime", to_timestamp(col("tpep_pickup_datetime")))
       .withColumn("tpep_dropoff_datetime", to_timestamp(col("tpep_dropoff_datetime")))
 
-  /** The full shipped lineage (strict=false ⇒ cell 49 restarts from
-    * df_valid_distance, exactly like the notebook; strict=true also applies
-    * the dead branch — year filter, timestamp swap, <300 min).
+  /** The program's cleaning and feature chain as named stages, each the
+    * step from the stage before it: `raw`, `valid_speed_distance`, in
+    * strict mode `strict_branch`, `cleaned`, `featured`. Shipped mode
+    * (strict=false) restarts cell 49 from df_valid_distance, exactly like
+    * the notebook; strict mode also applies the dead branch (year filter,
+    * timestamp swap, <300 min). The stage names are the notebook's count
+    * checkpoints (cells 5/43/103).
     */
-  def pipeline(raw: DataFrame, strict: Boolean = false): DataFrame = {
-    val validDistance = filterValidDistance(filterValidSpeed(withDuration(raw)))
-    val base = if (strict) strictBranch(validDistance) else validDistance
-    val cleaned = filterPassengers(filterFareBand(fixNegativeAmounts(
-      triageZeroDistance(base))))
-    Features.withTimeFeatures(Features.withAverageSpeed(castTypes(cleaned)))
+  def stages(strict: Boolean = false): Seq[(String, DataFrame => DataFrame)] =
+    Seq[(String, DataFrame => DataFrame)](
+      "raw" -> identity,
+      "valid_speed_distance" -> (df => filterValidDistance(filterValidSpeed(withDuration(df)))),
+      "strict_branch" -> (strictBranch _),
+      "cleaned" -> (df => filterPassengers(filterFareBand(fixNegativeAmounts(
+        triageZeroDistance(df))))),
+      "featured" -> (df => Features.withTimeFeatures(Features.withAverageSpeed(castTypes(df))))
+    ).filter { case (name, _) => strict || name != "strict_branch" }
+
+  /** Every stage's frame, in chain order. `tap` wraps each frame as it is
+    * built, so later stages build on the tapped one.
+    */
+  def cuts(raw: DataFrame, strict: Boolean = false,
+      tap: (String, DataFrame) => DataFrame = (_, df) => df): Seq[(String, DataFrame)] =
+    stages(strict).scanLeft("" -> raw) { case ((_, df), (name, step)) =>
+      name -> tap(name, step(df))
+    }.tail
+
+  /** The whole chain: the fold of [[stages]]. */
+  def pipeline(raw: DataFrame, strict: Boolean = false): DataFrame =
+    stages(strict).foldLeft(raw) { case (df, (_, step)) => step(df) }
+
+  /** Every stage's row count from one noop pass over the chain, each taken
+    * by a `Dataset.observe` tap on its stage. The pass must not feed a
+    * range-partitioned write: the partitioner's sampling job re-runs the
+    * lineage, and the taps would count every row twice.
+    */
+  def stageRows(raw: DataFrame, strict: Boolean = false): Seq[(String, Long)] = {
+    val taps = stages(strict).map { case (name, _) => name -> Observation(name) }.toMap
+    val staged = cuts(raw, strict, (name, df) => df.observe(taps(name), count(lit(1)).as("rows")))
+    staged.last._2.write.format("noop").mode("overwrite").save()
+    staged.map { case (name, _) => name -> taps(name).get("rows").asInstanceOf[Long] }
   }
 }

@@ -1,14 +1,13 @@
 package graft.taxi
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import graft.GraftSession
 import graft.sources.Tables
 
 /** The SURVEY.md §7 "runner": end-to-end wiring of the reference's program
   * — read → clean → feature → partitioned write → Q1–Q8 — with the
-  * per-stage count logging the notebook does manually (cells 5/43/103,
+  * per-stage counts the notebook takes by hand (cells 5/43/103,
   * W2_NYCTaxi_ETL.ipynb).
   *
   * Usage:
@@ -19,16 +18,33 @@ import graft.sources.Tables
   * self-contained demo of the whole program. Given the real January-2024
   * TLC file it reproduces the reference's golden stage counts
   * (2,964,624 → 2,644,148 shipped mode; BASELINE.md anchors); add
-  * --golden to ASSERT the [[TaxiGoldens]] stage counts as the stages run
-  * (require, fail-fast) — the executable form of BASELINE.md's parity
-  * table, same constants as the path-gated GoldenReplaySpec.
+  * --golden to ASSERT the [[TaxiGoldens]] stage counts (require,
+  * fail-fast) — the executable form of BASELINE.md's parity table, same
+  * constants as the path-gated GoldenReplaySpec.
   *
-  * Stage-count logging costs one count() action per stage (each a scan +
-  * 1-row reduce); production runs chasing wall-clock can skip straight to
-  * the write — the counts exist because the reference treats them as the
-  * pipeline's acceptance checks.
+  * The stage counts come from one observed noop pass over the chain
+  * ([[Cleaning.stageRows]]), then the sink writes the chain again.
   */
 object RunPipeline {
+
+  /** The program's final sink (cells 118-119 + 132): hive dirs by the
+    * pickup date parts, rows range-partitioned and sorted by (PU, DO) —
+    * the Z-order stand-in that lets row-group stats skip by route.
+    */
+  def sink(featured: DataFrame, path: String): Unit =
+    Tables.writePartitioned(Features.withDateParts(featured), path,
+      partitionCols = Seq("pickup_year", "pickup_month", "pickup_day"),
+      sortCols = Seq("PULocationID", "DOLocationID"))
+
+  /** Clean, feature and sink `raw` into `path`; returns every stage's row
+    * count, observed before the sink.
+    */
+  def run(raw: DataFrame, path: String, strict: Boolean): Seq[(String, Long)] = {
+    val rows = Cleaning.stageRows(raw, strict)
+    sink(Cleaning.pipeline(raw, strict), path)
+    rows
+  }
+
   def main(args: Array[String]): Unit = {
     def flag(name: String): Option[String] =
       args.collectFirst { case a if a.startsWith(s"--$name=") =>
@@ -44,73 +60,43 @@ object RunPipeline {
     // may be handed a host's live session (tests, notebooks) to leave alone
     val preExisting =
       org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-    val spark = GraftSession.builder("graft-taxi-pipeline",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    val spark = GraftSession.builder("graft-taxi-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def stage(name: String, want: Option[Long] = None)(df: DataFrame): DataFrame = {
-      val n = df.count()
-      println(f"[stage] $name%-28s rows=$n")
-      want.filter(_ => golden).foreach(w => require(n == w,
-        s"GOLDEN MISMATCH at $name: got $n, BASELINE.md says $w"))
-      df
-    }
-
-    val raw = stage("raw", Some(TaxiGoldens.RawRows))(rawPath match {
+    val raw = rawPath match {
       case Some(p) => spark.read.parquet(p)
       case None    => TaxiFixture.raw(spark)
-    })
-
-    // the cleaning lineage, stage-logged at the notebook's own checkpoints
-    val validDistance = stage("valid_speed+distance")(
-      Cleaning.filterValidDistance(Cleaning.filterValidSpeed(
-        Cleaning.withDuration(raw))))
-    // the notebook computes the dead branch even though the shipped
-    // lineage restarts from df_valid_distance (cell 49) — in golden mode
-    // replay it as an audit either way, so the 2,959,170 anchor is checked
-    if (golden && !strict)
-      stage("dead_branch_audit", Some(TaxiGoldens.DeadBranchRows))(
-        Cleaning.strictBranch(validDistance))
-    val base =
-      if (strict) stage("strict_branch", Some(TaxiGoldens.DeadBranchRows))(
-        Cleaning.strictBranch(validDistance))
-      else validDistance
-    // the golden final count is a shipped-mode (non-strict) anchor
-    val cleaned = stage("cleaned",
-        if (strict) None else Some(TaxiGoldens.FinalCleanedRows))(
-      Cleaning.filterPassengers(Cleaning.filterFareBand(
-        Cleaning.fixNegativeAmounts(Cleaning.triageZeroDistance(base)))))
-    val featured = stage("featured")(
-      Features.withTimeFeatures(Features.withAverageSpeed(
-        Cleaning.castTypes(cleaned))))
-
-    // partitioned final sink with the Z-order stand-in layout (cells
-    // 118-119 + 132): hive dirs by date parts, (PU,DO)-sorted row groups
-    val dated = Features.withDateParts(featured)
-    Tables.writePartitioned(dated, s"$outDir/taxi",
-      partitionCols = Seq("pickup_year", "pickup_month", "pickup_day"),
-      sortCols = Seq("PULocationID", "DOLocationID"))
+    }
+    val rows = run(raw, s"$outDir/taxi", strict)
+    rows.foreach { case (name, n) => println(f"[stage] $name%-28s rows=$n") }
     println(s"[sink] partitioned parquet at $outDir/taxi")
+
+    if (golden) {
+      val got = rows.toMap
+      // the notebook computes the dead branch even though the shipped
+      // lineage restarts from df_valid_distance (cell 49), so shipped mode
+      // audits it apart; the golden final count is a shipped-mode anchor
+      val deadBranch = got.getOrElse("strict_branch", Cleaning.strictBranch(
+        Cleaning.cuts(raw).toMap.apply("valid_speed_distance")).count())
+      val checks = Seq(("raw", got("raw"), TaxiGoldens.RawRows),
+        ("strict_branch", deadBranch, TaxiGoldens.DeadBranchRows)) ++
+        (if (strict) Nil else Seq(("cleaned", got("cleaned"), TaxiGoldens.FinalCleanedRows)))
+      checks.foreach { case (name, n, want) =>
+        require(n == want, s"GOLDEN MISMATCH at $name: got $n, BASELINE.md says $want")
+      }
+      println(s"[golden] ${checks.map(_._1).mkString(", ")} match BASELINE.md")
+    }
 
     // the analytics suite over the re-read table (partition recovery +
     // row-group skipping exercised exactly like the reference's re-reads)
     val table = spark.read.parquet(s"$outDir/taxi")
-    val queries: Seq[(String, DataFrame)] = Seq(
-      "q1_tip_pct" -> Analytics.q1TipPctByAirportPickup(table),
-      "q2_route_duration" -> Analytics.q2AvgDurationByRoute(table),
-      "q3_payment_count" -> Analytics.q3CountByPaymentType(table),
-      "q4_payment_rank" -> Analytics.q4PaymentRankByRateCode(table),
-      "q5_congestion" -> Analytics.q5Congestion(table),
-      "q6_fare_slot_dow" -> Analytics.q6FareBySlotAndDow(table),
-      "q7_top_routes" -> Analytics.q7TopRoutes(table),
-      "q8_airport_stats" -> Analytics.q8AirportVsNonAirport(table),
-      "corr_duration_tip" -> Analytics.corrDurationTipByPayment(table))
-    queries.foreach { case (name, df) =>
-      println(f"[query] $name%-20s rows=${df.count()}")
+    Analytics.queries.foreach { case (name, q) =>
+      val result = q(table).collect()
+      println(f"[query] $name%-20s rows=${result.length}")
+      // a sample of the headline results, like the notebook's display() cells
+      if (name == "q5_congestion" || name == "airport_share")
+        result.foreach(r => println(s"        $r"))
     }
-    println(f"[query] airport_share        value=${Analytics.airportPickupShare(table)}%.4f")
-    // a sample of the headline result, like the notebook's display() cells
-    queries.find(_._1 == "q5_congestion").foreach(_._2.show(truncate = false))
     if (!preExisting) spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.taxi.{Cleaning, Features, TaxiFixture}
+import graft.taxi.{Cleaning, RunPipeline, TaxiFixture}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -14,11 +14,8 @@ class TablesSpec extends SparkSpec {
   private lazy val tmp = Files.createTempDirectory("graft-sink").toString
 
   test("partitioned write + partition-pruned re-read (cells 119/127)") {
-    val cleaned = Features.withDateParts(Cleaning.pipeline(TaxiFixture.raw(spark)))
     val path = s"$tmp/final"
-    Tables.writePartitioned(cleaned, path,
-      partitionCols = Seq("pickup_year", "pickup_month", "pickup_day"),
-      sortCols = Seq("PULocationID", "DOLocationID"))
+    RunPipeline.sink(Cleaning.pipeline(TaxiFixture.raw(spark)), path)
     val back = spark.read.parquet(path)
     assert(back.count() === 11)
     // partition columns recovered from directory layout

@@ -28,13 +28,10 @@ class GoldenReplaySpec extends SparkSpec {
   }
 
   private lazy val raw: DataFrame = spark.read.parquet(TaxiGoldens.rawPath)
-  private lazy val validDistance: DataFrame =
-    Cleaning.filterValidDistance(Cleaning.filterValidSpeed(
-      Cleaning.withDuration(raw)))
-  private lazy val cleaned: DataFrame = Cleaning.pipeline(raw).cache()
-  private lazy val featured: DataFrame =
-    Features.withTimeFeatures(Features.withAverageSpeed(
-      Cleaning.castTypes(cleaned)))
+  private lazy val stages: Map[String, DataFrame] = Cleaning.cuts(raw).toMap
+  private lazy val validDistance: DataFrame = stages("valid_speed_distance")
+  private lazy val cleaned: DataFrame = stages("cleaned")
+  private lazy val featured: DataFrame = stages("featured").cache()
 
   private def relEq(got: Double, want: Double): Boolean =
     math.abs(got - want) <= TaxiGoldens.RelTol * math.max(1.0, math.abs(want))

@@ -23,6 +23,24 @@ class RunPipelineSpec extends SparkSpec {
     assert(!spark.sparkContext.isStopped)
   }
 
+  test("observed stage counts equal the fixture goldens, taken before the sink") {
+    val raw = TaxiFixture.raw(spark)
+    val out = Files.createTempDirectory("taxi-run-rows").toString
+    // a tap upstream of the range-partitioned sink would count every row
+    // twice: the partitioner's sampling job re-runs the lineage
+    val shipped = RunPipeline.run(raw, s"$out/shipped", strict = false)
+    assert(shipped === Seq("raw" -> 22L, "valid_speed_distance" -> 18L,
+      "cleaned" -> 11L, "featured" -> 11L))
+    assert(spark.read.parquet(s"$out/shipped").count() === 11)
+
+    val strict = RunPipeline.run(raw, s"$out/strict", strict = true)
+    val deadBranch = Cleaning.strictBranch(
+      Cleaning.cuts(raw).toMap.apply("valid_speed_distance")).count()
+    assert(strict === Seq("raw" -> 22L, "valid_speed_distance" -> 18L,
+      "strict_branch" -> deadBranch, "cleaned" -> 10L, "featured" -> 10L))
+    assert(spark.read.parquet(s"$out/strict").count() === 10)
+  }
+
   test("strict mode applies the dead branch (one fewer fixture row)") {
     spark
     val out = Files.createTempDirectory("taxi-run-strict").toString

@@ -11,6 +11,7 @@ class TaxiPipelineSpec extends SparkSpec {
 
   private lazy val raw = TaxiFixture.raw(spark)
   private lazy val cleaned = Cleaning.pipeline(raw).cache()
+  private lazy val validDistance = Cleaning.cuts(raw).toMap.apply("valid_speed_distance")
 
   test("speed filter drops >50mph, Inf and NaN speeds (cell 26 3VL)") {
     val afterSpeed = Cleaning.filterValidSpeed(Cleaning.withDuration(raw))
@@ -20,14 +21,11 @@ class TaxiPipelineSpec extends SparkSpec {
   }
 
   test("distance filter drops >50mi (cell 29)") {
-    val afterDistance = Cleaning.filterValidDistance(
-      Cleaning.filterValidSpeed(Cleaning.withDuration(raw)))
-    assert(afterDistance.count() === 18)
+    assert(validDistance.count() === 18)
   }
 
   test("zero-distance triage keeps flag-drop rides, drops void/glitch/anomaly (cell 49)") {
-    val triaged = Cleaning.triageZeroDistance(
-      Cleaning.filterValidDistance(Cleaning.filterValidSpeed(Cleaning.withDuration(raw))))
+    val triaged = Cleaning.triageZeroDistance(validDistance)
     // drops the 3 zero-distance drop-rule rows (void, meter glitch, high-fare)
     assert(triaged.count() === 15)
     // the rule-1 keeper (0 mi, 1 min, fare 10, card) survives
@@ -61,8 +59,7 @@ class TaxiPipelineSpec extends SparkSpec {
   }
 
   test("fare band drops out-of-band fares AND null-expected rows via 3VL (cell 58)") {
-    val pre = Cleaning.fixNegativeAmounts(Cleaning.triageZeroDistance(
-      Cleaning.filterValidDistance(Cleaning.filterValidSpeed(Cleaning.withDuration(raw)))))
+    val pre = Cleaning.fixNegativeAmounts(Cleaning.triageZeroDistance(validDistance))
     val post = Cleaning.filterFareBand(pre)
     // dropped: fare-30 out-of-band, RatecodeID 99, correlated-null row
     assert(post.count() === pre.count() - 3)
