@@ -90,7 +90,7 @@ object Bench {
   private[graft] val IsolatedTopN = 5
   /** How many of the slowest entries get isolated re-measures for the FULL
     * side artifact (bench_full.json). The r9 adjudication went blind on
-    * every name-matched in-run regression because the 1920-char line could
+    * every name-matched in-run regression because the line's budget could
     * only afford 5 isolated slots and all 5 went to new entries; the side
     * file has no byte budget, so it carries a top-40 (raised 20 → 40 in
     * r12: with ~305/329 entries in-run-omitted at sf0.1, 20 slots
@@ -165,18 +165,26 @@ object Bench {
         System.gc()
         prevFamily = fam
       }
-      val samples = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        // a failed query records -1.0 and its exception class — never its
-        // elapsed time, and never silence that lets an executor OOM
-        // masquerade as a slow neighbor. The FIRST failing class is kept:
-        // a later sample often fails differently (cache poisoned by the
-        // first crash) and would mask the root cause
-        try { exec(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case t: Throwable =>
-          failures.getOrElseUpdate(name, t.getClass.getSimpleName.stripSuffix("$")); -1.0 }
-      }
-      results(name) = if (samples.exists(_ < 0)) -1.0 else samples.min
+      // a failed query records -1.0 and its exception class — never its
+      // elapsed time, and never silence that lets an executor OOM
+      // masquerade as a slow neighbor. The FIRST failing class is kept:
+      // a later sample often fails differently (cache poisoned by the
+      // first crash) and would mask the root cause
+      val samples = timeEntry(passes)(exec(fn(spark, sfDir))) { case t: Throwable =>
+        failures.getOrElseUpdate(name, t.getClass.getSimpleName.stripSuffix("$")) }
+      results(name) = if (samples.contains(None)) -1.0 else samples.flatten.min
+    }
+    // One isolated re-measure: caches released first — exactly
+    // SPARK_GRAFT_ONLY's semantics — and the best successful sample.
+    // NonFatal only: an OOM/fatal error here means the JVM/Spark state is
+    // no longer trustworthy — let it abort the sweep rather than silently
+    // publishing numbers from a corrupted run
+    val byName = selected.toMap
+    def isolatedMin(name: String): Option[Double] = {
+      OperatorCaches.release(spark)
+      System.gc()
+      timeEntry(passes)(exec(byName(name)(spark, sfDir))) {
+        case scala.util.control.NonFatal(_) => }.flatten.minOption
     }
     // Within-family warm reuse is deliberate (those queries share sketch-
     // table plans, and warm steady state is what a pipeline sees), but it
@@ -184,30 +192,17 @@ object Bench {
     // r5 posted dedup_simhash at 3.60 s full-run vs 0.69 s isolated. Any
     // entry exceeding 2x the median of its family SIBLINGS (own time
     // excluded — with it included, a 2-family's slower member was its own
-    // median and could never trip) gets ONE isolated re-measure — caches
-    // released first, exactly SPARK_GRAFT_ONLY's semantics — and reports
-    // the better of the two: the number a user running that query alone
-    // would see. (Reporting min(warm-run, isolated) deliberately mixes the
-    // two cache regimes; the per-entry number is "best honest run".)
-    // Families of one have no siblings (never an offender); failures stay
-    // failures.
-    val byName = selected.toMap
+    // median and could never trip) gets ONE isolated re-measure and
+    // reports the better of the two: the number a user running that query
+    // alone would see. (Reporting min(warm-run, isolated) deliberately
+    // mixes the two cache regimes; the per-entry number is "best honest
+    // run".) Families of one have no siblings (never an offender);
+    // failures stay failures.
     for ((_, names) <- selected.map(_._1).groupBy(family) if names.size >= 2) {
       for (name <- names if results(name) >= 0) {
         val siblings = names.filter(_ != name).map(results(_)).filter(_ >= 0).sorted
-        if (siblings.nonEmpty && results(name) > 2 * siblings((siblings.size - 1) / 2)) {
-          OperatorCaches.release(spark)
-          System.gc()
-          val iso = (1 to passes).map { _ =>
-            val t0 = System.nanoTime()
-            try { exec(byName(name)(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-            // NonFatal only: an OOM/fatal error here means the JVM/Spark
-            // state is no longer trustworthy — let it abort the sweep
-            // rather than silently publishing numbers from a corrupted run
-            catch { case scala.util.control.NonFatal(_) => Double.MaxValue }
-          }.min
-          if (iso < results(name)) results(name) = iso
-        }
+        if (siblings.nonEmpty && results(name) > 2 * siblings((siblings.size - 1) / 2))
+          isolatedMin(name).filter(_ < results(name)).foreach(results(name) = _)
       }
     }
     // Regime disambiguation (r7 adjudication finding): in-run numbers can
@@ -216,14 +211,13 @@ object Bench {
     // contention; the canary proves the host clean). Cross-round per-query
     // comparison on in-run numbers is noise-dominated, so after the sweep
     // the N slowest successful entries get ONE isolated re-measure each
-    // (caches released first — exactly SPARK_GRAFT_ONLY's semantics) and
-    // the line ships BOTH regimes: "queries" = in-run, "isolated" = the
-    // alone-number for the entries where the regimes can differ most.
+    // and the artifacts ship BOTH regimes: "queries" = in-run, "isolated" =
+    // the alone-number for the entries where the regimes can differ most.
     // Next-round verdicts should diff isolated-to-isolated.
     val isolated = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Side-artifact width: the top IsolatedSideN slowest (slowest-first, so
-    // the line's take(IsolatedTopN) digest is exactly the old top-5), plus
-    // any SPARK_GRAFT_ISOLATE-requested names that ran successfully — the
+    // the line's take(IsolatedTopN) digest is the top-5), plus any
+    // SPARK_GRAFT_ISOLATE-requested names that ran successfully — the
     // watch-set hook for adjudicating a suspected regression without
     // waiting for it to reach the slow tail.
     val requested = sys.env.get("SPARK_GRAFT_ISOLATE")
@@ -231,56 +225,79 @@ object Bench {
       .filter(n => results.get(n).exists(_ >= 0))
     val slowest = results.toSeq.filter(_._2 >= 0).sortBy(-_._2)
       .take(IsolatedSideN).map(_._1)
-    for (name <- (slowest ++ requested).distinct) {
-      OperatorCaches.release(spark)
-      System.gc()
-      val iso = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        try { exec(byName(name)(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        // NonFatal only — same rationale as the family re-measure above
-        catch { case scala.util.control.NonFatal(_) => Double.MaxValue }
-      }.min
-      if (iso < Double.MaxValue) isolated(name) = iso
-    }
+    for (name <- (slowest ++ requested).distinct)
+      isolatedMin(name).foreach(isolated(name) = _)
     OperatorCaches.release(spark)
     // end observation AFTER the release: the canary gauges HOST health, so
     // it must not price in our own still-resident working set (at a ×100
     // tier the last family's caches pushed the end observation to 2.5 s —
     // self-load, not contention)
     canaries += canarySampleMs(spark)
-    val counterEx = queries.QueryCatalog.all.filter(_.counterExample)
-      .map(_.name).filter(results.contains)
+    val sfName = sfDir.split('/').last
     // FULL side artifact first (no byte budget — every in-run timing, the
-    // whole isolated map, failures as an object), THEN the 1920-char line
-    // as the digest the driver parses. The side path is env-overridable so
-    // scale-tier runs can keep their artifacts apart; write failures must
-    // not cost the round its stdout line, hence the non-fatal catch.
-    // A SPARK_GRAFT_ONLY-filtered run must NOT clobber the round's
-    // FULL-catalog artifact (round-10 iteration runs silently reduced it
-    // to one query between full runs) — filtered runs only write when the
-    // caller names an explicit side path.
-    val fullPath = sys.env.get("SPARK_GRAFT_BENCH_FULL")
-      .orElse(if (only.isEmpty) Some("bench_full.json") else None)
-    fullPath.foreach { fp =>
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(fp),
-        renderFull(results.toSeq, failures.toSeq, sfDir.split('/').last,
+    // whole isolated map, failures as an object, the counter-example
+    // flags), THEN the LineBudget-char line as the digest a line reader
+    // parses; write failures must not cost the round its stdout line,
+    // hence the non-fatal catch. A SPARK_GRAFT_ONLY-filtered run must NOT
+    // clobber the round's FULL-catalog artifact (round-10 iteration runs
+    // silently reduced it to one query between full runs), so filtered
+    // runs write no side artifact.
+    if (only.isEmpty) {
+      val counterEx = queries.QueryCatalog.all.filter(_.counterExample)
+        .map(_.name).filter(results.contains)
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"),
+        renderFull(results.toSeq, failures.toSeq, sfName,
           canaries.toSeq, counterEx, isolated.toSeq, passes))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] side artifact write failed: ${e.getMessage}") }
     }
-    println(renderLine(results.toSeq, failures.toSeq, sfDir.split('/').last,
-      canaries.toSeq, counterEx, isolated.toSeq.take(IsolatedTopN)))
+    println(renderLine(results.toSeq, failures.toSeq, sfName,
+      canaries.toSeq, isolated.toSeq.take(IsolatedTopN)))
     spark.stop()
   }
 
-  /** Render the FULL bench artifact (bench_full.json): everything the
-    * 1920-char stdout line's budget ladder sheds, with full query names and
-    * no omission rungs. The stdout line stays the driver contract (it
-    * parses the last 2000 chars); this file is the round-over-round
-    * comparison record — VERDICT r9's "What's wrong #1" was the line
-    * dropping 160/252 per-query timings and every name-matched isolated
-    * slot, leaving regressions unadjudicable. Schema (pinned by
-    * BenchLineSpec):
+  /** Wall seconds of `passes` back-to-back runs of one entry, None for a
+    * sample that threw something `onFailure` handles (after it has run);
+    * anything it does not handle propagates. Each caller picks its own
+    * catch policy and reduction.
+    */
+  private def timeEntry(passes: Int)(run: => Unit)(
+      onFailure: PartialFunction[Throwable, Any]): Seq[Option[Double]] =
+    (1 to passes).map { _ =>
+      val t0 = System.nanoTime()
+      try { run; Some((System.nanoTime() - t0) / 1e9) }
+      catch onFailure.andThen(_ => None)
+    }
+
+  /** Character budget of the stdout line: its reader keeps only the LAST
+    * 2000 chars of output and JSON-parses the line it finds there (round
+    * 1's 2.4 KB line outran it and the round lost its bench numbers), and
+    * sbt's ~75-char [success] trailer shares that tail.
+    */
+  private[graft] val LineBudget = 1920
+
+  // One JSON rendering shared by both artifacts: strings, integer-ms maps
+  // (-1 for a failure) and the total over successful entries.
+  private def js(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def msMap(m: Seq[(String, Double)]): String = m.map { case (k, v) =>
+    js(k) + ":" + (if (v < 0) "-1" else math.round(v * 1000).toString)
+  }.mkString("{", ",", "}")
+
+  private def totalMs(results: Seq[(String, Double)]): Long =
+    math.round(results.map(_._2).filter(_ >= 0).sum * 1000)
+
+  /** Render the FULL bench artifact (bench_full.json): every entry, no byte
+    * budget. The stdout line stays the parsed contract (its reader keeps
+    * the last 2000 chars); this file is the round-over-round comparison record —
+    * VERDICT r9's "What's wrong #1" was the line dropping 160/252
+    * per-query timings and every name-matched isolated slot, leaving
+    * regressions unadjudicable. Schema (pinned by BenchLineSpec):
     *   schema        1 (bump on breaking change)
     *   sf / unit / passes / total_ms — run identity; unit is always "ms"
     *   canary        [start, mid, end] integer ms; degraded — same envelope
@@ -300,208 +317,65 @@ object Bench {
       counterExamples: Seq[String],
       isolated: Seq[(String, Double)],
       passes: Int): String = {
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def msMap(m: Seq[(String, Double)]): String = m.map { case (k, v) =>
-      js(k) + ":" + (if (v < 0) "-1" else math.round(v * 1000).toString)
-    }.mkString("{", ",", "}")
-    val ok = results.map(_._2).filter(_ >= 0)
-    val totalMs = math.round((if (ok.nonEmpty) ok.sum else 0.0) * 1000)
     val failedObj = failures.map { case (k, e) => js(k) + ":" + js(e) }
       .mkString("{", ",", "}")
     val cex = counterExamples.map(js).mkString("[", ",", "]")
     val canaryJson = canary.map(math.round).mkString("[", ",", "]")
     s"""{"schema":1,"sf":${js(sfName)},"unit":"ms","passes":$passes,""" +
-      s""""total_ms":$totalMs,"canary":$canaryJson,""" +
+      s""""total_ms":${totalMs(results)},"canary":$canaryJson,""" +
       s""""degraded":${canaryDegraded(canary)},""" +
       s""""queries":${msMap(results)},"isolated":${msMap(isolated)},""" +
       s""""failed":$failedObj,"counterexamples":$cex}"""
   }
 
   /** Render the one-line JSON result the driver parses. Pure — unit-tested
-    * with forced failures in BenchLineSpec so a format drift (the contract
-    * with the external driver) fails a test, not a round.
+    * in BenchLineSpec so a format drift (the contract with the line's
+    * external reader) fails a test, not a round.
     *
-    * The driver keeps only the LAST 2000 chars of output and JSON-parses
-    * the line it finds there (round 1's 2.4 KB line outran it and the
-    * round lost its bench numbers), so the whole line must stay < ~1.9 KB
-    * (the 2000-char tail also holds sbt's ~75-char [success] trailer,
-    * hence the 1920 ceiling). Per-query times are INTEGER MILLISECONDS
-    * ("unit":"ms"): 3-4 digits for everything the catalog runs, vs 4+ for
-    * 2-decimal seconds — full 1 ms resolution at fewer bytes per entry,
-    * and no adaptive-precision cliff where sub-second queries all collapse
-    * to "0.1". The "q_" prefix is stripped from keys (every catalog name
-    * carries it) and sf reported as its basename. Failures record -1 in
-    * queries plus "name:ExceptionClass" in failed, IN OCCURRENCE ORDER —
-    * an array of STRINGS, so a consumer of the r4 shape
-    * ("failed":["ann_lsh"]) still parses and prefix-matching still
-    * resolves the query name. If the full-name line exceeds the ceiling,
-    * keys (including failed names) abbreviate to their shortest UNIQUE
-    * prefix (floor 6 chars — uniqueness comes from lcp+1, the floor only
-    * buys prefix stability; 8 stopped fitting at 106 queries), like git
-    * object abbreviation: prefix-stable and collision-free by construction. A failure-heavy round can blow
-    * the budget through the failed array alone (each entry carries an
-    * exception class), so under deep pressure the line first omits its
-    * fastest successful entries (declared via "omitted":k) and only as
-    * the true last resort truncates the failed list from the tail with a
-    * "+k more" marker until the line fits — better k unnamed failures
-    * than a mid-JSON driver truncation losing the whole round's numbers.
+    * Fields: "metric":"total" with "value" = the sum of successful entries
+    * and "unit":"ms"; "queries" maps each entry's full catalog name (the
+    * key bench_full.json and the benchmark use) to its in-run integer ms,
+    * -1 for a failure; "failed" lists "name:ExceptionClass" strings in
+    * occurrence order; "isolated" maps the slowest entries to their
+    * post-sweep alone-measured ms; "canary" holds the start/mid/end
+    * observations and "degraded" the envelope verdict (always present: an
+    * explicit false is the "this number is trustworthy" statement); "sf"
+    * is the data directory's basename.
     *
-    * The run-health canary renders as "canary":[ms,ms,ms] (start/mid/end
-    * observations, integer ms) plus "degraded":true|false from the pinned
-    * envelope — so a contended-host artifact like BENCH_r06 (2.4×
-    * uniformly inflated, falsified only by an out-of-band re-run)
-    * self-reports instead of reading as a regression. Both fields are
-    * always present: an explicit false is the "this number is
-    * trustworthy" statement, and ~35 bytes fits the budget.
-    *
-    * "counterexamples" lists the catalog entries flagged
-    * Q.counterExample — correct-on-fixture shapes retained as measured
-    * x100 scale failures (BENCH_SF10.md) — so the artifact carries their
-    * status instead of prose archaeology. "isolated" maps the slowest
-    * entries to their post-sweep alone-measured ms (same integer-ms unit):
-    * in-run vs isolated regimes were adjudicated to diverge up to 6x on
-    * cache-heavy entries, and cross-round comparison should diff
-    * isolated-to-isolated. Both keys render through the same
-    * abbreviation map as "queries", and both sit ABOVE failure
-    * truncation in the budget ladder. Ladder order (round-9 revision —
-    * the r8 line lost 4 of 5 isolated entries to the old order, exactly
-    * the field cross-round comparison needs): full names → floor-6
-    * abbreviation → floor-1 abbreviation WITH everything (key compression
-    * is cheaper than information loss; floor-1 sacrifices only
-    * cross-round prefix stability) → drop counterexamples (re-derivable
-    * from the catalog source; isolated measurements are not re-derivable
-    * after the run) → omit up to 16 of the FASTEST in-run timings
-    * ("omitted":k marker) keeping the isolated tail whole → shrink
-    * isolated from the tail → deeper fastest omission → truncate failures
-    * as the last resort ("queries"/"failed" are the load-bearing
-    * contract).
+    * One rule fits the line into [[LineBudget]]: omit the fewest FASTEST
+    * successful entries, ordered by (time, name), that make it fit, and
+    * declare them with "omitted":k — a parseable line missing its cheapest
+    * timings, never a shortened key. Only if the line does not fit with
+    * every successful entry omitted does "isolated" shrink from its tail,
+    * and after that "failed" truncates from its tail behind a "+k more"
+    * marker (a failure truncated away takes its -1 row with it): a
+    * failure's name and class is the one diagnostic the line exists for.
     */
   private[graft] def renderLine(
       results: Seq[(String, Double)],
       failures: Seq[(String, String)],
       sfName: String,
       canary: Seq[Double] = Seq.empty,
-      counterExamples: Seq[String] = Seq.empty,
       isolated: Seq[(String, Double)] = Seq.empty): String = {
-    def short(k: String): String = k.stripPrefix("q_")
-    val shortKeys = results.map { case (k, _) => short(k) }
-    def lcp(a: String, b: String): Int =
-      a.zip(b).takeWhile { case (x, y) => x == y }.size
-    // floor 6 buys prefix stability across rounds; uniqueness comes from
-    // lcp+1 alone, so the last-resort budget rungs may drop the floor to 1
-    // (maximal compression, still collision-free by construction)
-    def abbrevMap(floor: Int): Map[String, String] = {
-      val m = shortKeys.map { k =>
-        val longest = shortKeys.filter(_ != k).map(o => lcp(k, o)).maxOption.getOrElse(0)
-        k -> k.take(math.max(floor, longest + 1))
-      }.toMap
-      require(m.values.toSeq.distinct.size == shortKeys.size,
-        "bench key abbreviation collided")
-      m
-    }
-    val abbrevOf: Map[String, String] = abbrevMap(6)
-    val ok = results.map(_._2).filter(_ >= 0)
-    val totalMs = math.round((if (ok.nonEmpty) ok.sum else 0.0) * 1000)
-    def line(abbrev: Boolean, keepFailed: Int, keepIso: Int, keepCex: Boolean,
-        keys: Map[String, String] = abbrevOf, dropFastest: Int = 0): String = {
-      // a failures key absent from results (can't happen today, but the
-      // map is built from results only) falls back to the un-abbreviated
-      // short name rather than throwing away the whole line
-      def key(k: String): String =
-        if (abbrev) keys.getOrElse(short(k), short(k)) else short(k)
-      val kept = failures.take(keepFailed)
-        .map { case (k, err) => "\"" + key(k) + ":" + err + "\"" }
+    val fastestFirst = results.filter(_._2 >= 0).sortBy { case (k, v) => (v, k) }.map(_._1)
+    val canaryJson = canary.map(math.round).mkString("[", ",", "]")
+    def line(keepFailed: Int, keepIso: Int, omit: Int): String = {
       val marker =
-        if (failures.size > keepFailed) Seq("\"+" + (failures.size - keepFailed) + " more\"")
-        else Nil
-      val failed = (kept ++ marker).mkString("[", ",", "]")
-      // deep-pressure rung: omit the k fastest SUCCESSFUL entries (the
-      // least informative numbers) and say so via "omitted":k — a
-      // parseable line missing its cheapest timings beats a mid-JSON
-      // driver truncation losing the whole round. -1 rows stay for every
-      // failure the failed list still NAMES (row and diagnostic pair up);
-      // failures truncated down to the "+k more" marker shed their -1
-      // rows with them — at a 149-entry catalog failing wholesale, the
-      // all--1 queries map alone overflows the tail budget
-      val truncatedFailures: Set[String] =
-        failures.drop(keepFailed).map(_._1).toSet
-      val dropped: Set[String] =
-        (if (dropFastest <= 0) Set.empty[String]
-         else results.filter(_._2 >= 0).sortBy { case (k, v) => (v, k) }
-           .take(dropFastest).map(_._1).toSet) ++
-        results.collect { case (k, v) if v < 0 && truncatedFailures(k) => k }
-      val qs = results.filterNot(r => dropped.contains(r._1)).map { case (k, v) =>
-        "\"" + key(k) + "\":" + (if (v < 0) "-1" else math.round(v * 1000).toString)
-      }.mkString("{", ",", "}")
-      val omittedField =
-        if (dropped.isEmpty) "" else s""""omitted":${dropped.size},"""
-      // an undamaged line renders both extras even when empty (the
-      // explicit "nothing flagged / nothing re-measured" statement);
-      // degraded rungs omit a field entirely instead of shipping husks
-      val cexField =
-        if (keepCex)
-          Some("\"counterexamples\":" +
-            counterExamples.map(k => "\"" + key(k) + "\"").mkString("[", ",", "]"))
-        else None
-      val isoField =
-        if (keepIso > 0 || keepCex)
-          Some("\"isolated\":" + isolated.take(keepIso).map { case (k, v) =>
-            "\"" + key(k) + "\":" + math.round(v * 1000).toString
-          }.mkString("{", ",", "}"))
-        else None
-      val extraFields = (cexField.toSeq ++ isoField.toSeq).map(_ + ",").mkString
-      val canaryJson = canary.map(math.round).mkString("[", ",", "]")
-      val degraded = canaryDegraded(canary)
-      s"""{"metric":"total","value":$totalMs,"unit":"ms","queries":$qs,"failed":$failed,$omittedField$extraFields"canary":$canaryJson,"degraded":$degraded,"sf":"$sfName"}"""
+        if (failures.size > keepFailed) Seq(s"+${failures.size - keepFailed} more") else Nil
+      val failed = (failures.take(keepFailed).map { case (k, e) => s"$k:$e" } ++ marker)
+        .map(js).mkString("[", ",", "]")
+      val dropped = fastestFirst.take(omit).toSet ++ failures.drop(keepFailed).map(_._1)
+      val omitted = if (omit > 0) s""""omitted":$omit,""" else ""
+      s"""{"metric":"total","value":${totalMs(results)},"unit":"ms",""" +
+        s""""queries":${msMap(results.filterNot(r => dropped(r._1)))},""" +
+        s""""failed":$failed,$omitted"isolated":${msMap(isolated.take(keepIso))},""" +
+        s""""canary":$canaryJson,"degraded":${canaryDegraded(canary)},"sf":${js(sfName)}}"""
     }
-    // round-9 ladder: compress keys to floor-1 BEFORE shedding any
-    // information — isolated re-measures are the one artifact that cannot
-    // be reconstructed after the run (counterexamples re-derive from the
-    // catalog, failures re-reproduce, key stability is cosmetic), so they
-    // outrank everything except the failed list. Under widths no real
-    // round produces (every query 10x slower than the slowest ever
-    // recorded), fastest-entry omission kicks in BEFORE failure
-    // truncation: a failure's name+class is the one diagnostic the line
-    // exists for, a sub-second timing is the cheapest to lose.
-    lazy val tightKeys = abbrevMap(1)
-    val nOk = results.count(_._2 >= 0)
-    val geometricDrops =
-      Iterator.iterate(1)(_ * 2).takeWhile(_ < nOk) ++ Iterator(nOk)
-    val attempts =
-      Iterator(
-        line(false, failures.size, isolated.size, true),
-        line(true, failures.size, isolated.size, true),
-        line(true, failures.size, isolated.size, true, tightKeys),
-        line(true, failures.size, isolated.size, false, tightKeys)) ++
-      // fastest-omission rungs BEFORE shedding isolated: the cheapest
-      // in-run timings (marked "omitted":k, parseable) buy the whole
-      // isolated tail — the slowest entries' alone-measured numbers are
-      // worth more than the fastest entries' in-run ones. Rungs are
-      // ADAPTIVE (round-10 revision): the r9 fixed list topped out at 160
-      // and stopped covering once the catalog passed ~290 entries in the
-      // all-4-digit stress regime — the ladder fell through to isolated
-      // shedding, exactly what it was built to prevent. Doubling rungs up
-      // to two-thirds keep the queries map the load-bearing bulk; the two
-      // deep rungs (keep the 24 / 12 slowest) are reached only under
-      // widths no real round produces, and a 12-slowest map + the whole
-      // isolated tail still beats a full map with no isolated numbers
-      ((Iterator.iterate(2)(_ * 2).takeWhile(_ <= nOk * 2 / 3).toSeq ++
-        Seq(nOk * 2 / 3, nOk - 24, nOk - 12))
-        .filter(k => k > 0 && k < nOk).distinct.sorted).iterator
-        .map(k => line(true, failures.size, isolated.size, false, tightKeys,
-          dropFastest = k)) ++
-      (isolated.size - 1 to 0 by -1).iterator
-        .map(line(true, failures.size, _, false, tightKeys)) ++
-      geometricDrops
-        .map(k => line(true, failures.size, 0, false, tightKeys, dropFastest = k)) ++
-      (failures.size - 1 to 0 by -1).iterator
-        .map(line(true, _, 0, false, tightKeys, dropFastest = nOk))
-    attempts.find(_.length <= 1920)
-      .getOrElse(line(true, 0, 0, false, tightKeys, dropFastest = nOk))
+    val shapes = (isolated.size to 0 by -1).map(failures.size -> _) ++
+      (failures.size - 1 to 0 by -1).map(_ -> 0)
+    shapes.iterator
+      .flatMap { case (f, i) => (0 to fastestFirst.size).iterator.map(line(f, i, _)) }
+      .find(_.length <= LineBudget)
+      .getOrElse(line(0, 0, fastestFirst.size))
   }
 }

@@ -63,48 +63,24 @@ object QueryCatalog {
     * CTE (already threshold-filtered) for callers to select from.
     */
   private def minhashPairCtes(numHashes: Int, threshold: Double): String = {
-    val b = Dedup.autoBands(numHashes, threshold)
-    val r = numHashes / b
-    val fam = Dedup.affineParams(numHashes).zipWithIndex
-      .map { case ((a, bb), i) => s"($i, $a, $bb)" }
-      .grouped(8).map(_.mkString(", ")).mkString(",\n                  ")
-    s"""tk AS (SELECT CAST(doc_id AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
-              shi AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s FROM tk),
-              hs AS (SELECT id, list_distinct(list_transform(s,
-                  g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 2147483647))
-                  AS hv FROM shi),
-              fam(i, a, b) AS (VALUES
-                  $fam),
-              sigs AS (SELECT id, i, min((a * h + b) % 2147483647) AS sig
-                FROM (SELECT id, unnest(hv) AS h FROM hs) ph, fam GROUP BY id, i),
-              bnd AS (SELECT id, i // $r AS band, list(sig ORDER BY i) AS sl
-                FROM sigs GROUP BY id, i // $r),
-              bh AS (SELECT id, band, list_reduce(list_prepend(CAST(0 AS BIGINT), sl),
-                  (acc, v) -> (acc * 1000003 + v) % 2147483647) AS bh FROM bnd),
+    val r = numHashes / Dedup.autoBands(numHashes, threshold)
+    s"""fam(i, a, b) AS (VALUES
+                  ${affineFamValues(numHashes)}),
+              src AS (SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents),
+              ${sketchCtes("src", "m", r)},
               cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-                FROM bh a JOIN bh c
+                FROM bh_m a JOIN bh_m c
                 ON a.band = c.band AND a.bh = c.bh AND a.id < c.id),
               mh_pairs AS (SELECT id_a, id_b,
                   round(CAST(len(list_intersect(ha.hv, hb.hv)) AS DOUBLE)
                     / (len(ha.hv) + len(hb.hv)
                        - len(list_intersect(ha.hv, hb.hv))), 4) AS jaccard
-                FROM cand JOIN hs ha ON ha.id = id_a JOIN hs hb ON hb.id = id_b
+                FROM cand JOIN hsm ha ON ha.id = id_a JOIN hsm hb ON hb.id = id_b
                 WHERE round(CAST(len(list_intersect(ha.hv, hb.hv)) AS DOUBLE)
                     / (len(ha.hv) + len(hb.hv)
                        - len(list_intersect(ha.hv, hb.hv))), 4) >= $threshold)"""
   }
 
-  /** Oracle for incremental near-dup dedup: base signatures from
-    * `documents`, a derived re-crawl batch (ids +1000, every 3rd doc
-    * truncated to its first half — Jaccard ~1/3, below the 0.5 cut),
-    * band-chain probe join, component-match estimate, anti-join. All in
-    * the portable hash family so every step replays exactly.
-    */
   /** The literal affine-family VALUES rows shared by every portable-minhash
     * oracle (spliced from Dedup.affineParams — same constants as the Spark
     * expression tree).
@@ -137,6 +113,12 @@ object QueryCatalog {
                   SELECT id, i // $r AS band, list(sig ORDER BY i) AS sl
                   FROM sig_$p GROUP BY id, i // $r))"""
 
+  /** Oracle for incremental near-dup dedup: base signatures from
+    * `documents`, a derived re-crawl batch (ids +1000, every 3rd doc
+    * truncated to its first half — Jaccard ~1/3, below the 0.5 cut),
+    * band-chain probe join, component-match estimate, anti-join. All in
+    * the portable hash family so every step replays exactly.
+    */
   private def incrMinhashOracleSql(numHashes: Int, threshold: Double): String = {
     val b = Dedup.autoBands(numHashes, threshold)
     val r = numHashes / b

@@ -44,16 +44,34 @@ object Tables {
     * footer-inference job the bench pays on EVERY pass of EVERY entry
     * (~35–80 ms each, ProfileJobs "parquet at Tables.scala" rows).
     * METADATA only — no rows, no results: every query still computes
-    * from the parquet files on disk. Correct because the fixture tables
-    * are write-once per path; tables an entry overwrites go through
-    * their own readers, never this one.
+    * from the parquet files on disk. An entry is keyed on the path AND
+    * the files' identity ([[fileIdentity]]), so a path rewritten in the
+    * same JVM without going through `Tables` (ScaleData's `df.write`, a
+    * re-ingest) is re-inferred instead of read with the stale schema.
     */
   private val schemaCatalog = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, (String, org.apache.spark.sql.types.StructType)]()
+
+  /** What changes when a table path is rewritten, from one file-status
+    * lookup (no Spark job): a single-file table's length and modification
+    * time; a directory table's entry names, whose part files carry a
+    * per-write UUID.
+    */
+  private def fileIdentity(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory) fs.listStatus(p).map(_.getPath.getName).sorted.mkString(",")
+    else s"${st.getLen}@${st.getModificationTime}"
+  }
 
   private def declaredSchema(
-      spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    schemaCatalog.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+      spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val id = fileIdentity(spark, path)
+    schemaCatalog.compute(path, (p, cached) =>
+      if (cached != null && cached._1 == id) cached
+      else id -> spark.read.parquet(p).schema)._2
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

@@ -8,13 +8,32 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchLineSpec extends AnyFunSuite {
 
+  private val names = queries.QueryCatalog.all.map(_.name)
+
+  /** The real catalog at a realistic spread: log-uniform 50 ms .. 15 s
+    * (the committed sweeps span 40 ms to 11 s), seeded so runs agree.
+    */
+  private val realistic: Seq[(String, Double)] = {
+    val rnd = new scala.util.Random(7)
+    names.map(_ -> 0.05 * math.pow(300, rnd.nextDouble()))
+  }
+
+  private def omittedOf(line: String): Int =
+    "\"omitted\":([0-9]+)".r.findFirstMatchIn(line).map(_.group(1).toInt).getOrElse(0)
+
+  /** Keys of the line's "queries" object. */
+  private def queryKeys(line: String): Seq[String] = {
+    val qs = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(line).get.group(1)
+    "\"([^\"]+)\":".r.findAllMatchIn(qs).map(_.group(1)).toSeq
+  }
+
   test("failures render -1 plus a name:ExceptionClass STRING entry") {
     val line = Bench.renderLine(
       Seq("q_fast" -> 0.1234, "q_boom" -> -1.0, "q_slow" -> 2.0),
       Seq("q_boom" -> "OutOfMemoryError"),
       "sf0.1")
-    assert(line.contains("\"boom\":-1") || line.contains("\"q_boom\":-1"), line)
-    assert(line.contains("\"failed\":[\"boom:OutOfMemoryError\"]"), line)
+    assert(line.contains("\"q_boom\":-1"), line)
+    assert(line.contains("\"failed\":[\"q_boom:OutOfMemoryError\"]"), line)
     // the total excludes the failed query's wall time
     assert(line.contains("\"value\":2123"), line)
     assert(line.contains("\"sf\":\"sf0.1\""), line)
@@ -23,53 +42,85 @@ class BenchLineSpec extends AnyFunSuite {
   test("a failure-heavy round truncates the failed list instead of blowing the tail budget") {
     // every catalog query failing with a long exception class — the
     // sf-dir-misconfiguration incident shape
-    val names = queries.QueryCatalog.all.map(_.name)
     val results = names.map(_ -> -1.0)
     val failures = names.map(_ -> "QueryExecutionAnalysisException")
     val line = Bench.renderLine(results, failures, "sf0.1")
-    assert(line.length <= 1920, s"line ${line.length} chars")
-    // failures are reported in occurrence order, truncated with a marker
-    assert(line.contains(":QueryExecutionAnalysisException"), line.take(200))
+    assert(line.length <= Bench.LineBudget, s"line ${line.length} chars")
+    // failures are reported in occurrence order, truncated with a marker;
+    // the first one survives under its full name
+    assert(line.contains(
+      "\"failed\":[\"" + names.head + ":QueryExecutionAnalysisException\""), line.take(200))
     assert(line.contains(" more\""), line.takeRight(120))
-    // the first failure survives truncation, under SOME unique prefix of
-    // its name (the failure-heavy rungs may compress keys to the lcp+1
-    // floor — prefix-resolvability, not a fixed width, is the contract)
-    val firstKey = "\"failed\":\\[\"([a-z0-9_]+):".r.findFirstMatchIn(line).map(_.group(1))
-    assert(firstKey.exists(k => names.head.stripPrefix("q_").startsWith(k)),
-      s"first failure dropped or unresolvable: $firstKey")
   }
 
   test("the REAL catalog's line stays under the driver's tail budget at worst-case widths") {
     // actual catalog names (static — no session needed to build them),
     // every query at a 5-digit-ms time: wider than anything the bench has
     // ever recorded, so growth headroom is part of the pin
-    val names = queries.QueryCatalog.all.map(_.name)
     assert(names.size >= 105, s"catalog shrank? ${names.size}")
     val results = names.map(_ -> 99.999)
     val line = Bench.renderLine(results, Seq.empty, "sf0.1")
-    assert(line.length <= 1920, s"line ${line.length} chars for ${names.size} queries")
+    assert(line.length <= Bench.LineBudget, s"line ${line.length} chars for ${names.size} queries")
     // shape: one object, queries object with one entry per result, empty failed
     assert(line.startsWith("{\"metric\":\"total\",\"value\":"), line.take(60))
     assert(line.contains("\"failed\":[]"), line.takeRight(60))
-    // at this synthetic width (every query 100 s) the deep-pressure rung
-    // may omit the fastest entries — but it must SAY so, and the ledger
-    // must balance: rendered + omitted covers the whole catalog
-    val omitted = "\"omitted\":([0-9]+)".r.findFirstMatchIn(line)
-      .map(_.group(1).toInt).getOrElse(0)
-    assert("\"[a-z0-9_]+\":[0-9-]".r.findAllIn(line).size + omitted >= names.size,
-      s"missing entries (omitted=$omitted)")
+    // at this synthetic width (every query 100 s) the line omits the
+    // fastest entries — but it must SAY so, and the ledger must balance:
+    // rendered + omitted covers the whole catalog
+    val omitted = omittedOf(line)
+    assert(queryKeys(line).size + omitted === names.size, s"missing entries (omitted=$omitted)")
   }
 
   test("a failed name absent from results falls back to its short name, not a throw") {
-    // abbrevOf is built from results keys only; a failures entry outside
-    // that set must degrade to the un-abbreviated name. The filler names
-    // share only short prefixes, so abbreviation fires (the full-name line
-    // overflows) and compresses enough for the abbreviated line to fit —
-    // which is exactly the attempt that used to throw on the ghost key.
+    // a failures entry outside the results keys renders under the name
+    // as given. The wide filler names overflow the budget, so the line
+    // omits fast entries while the ghost failure must still render.
     val results = (1 to 90).map(i => f"q_z$i%02d_quite_long_query_name_padding_wide" -> 99.999)
     val line = Bench.renderLine(results, Seq("q_ghost_query" -> "IOException"), "sf0.1")
-    assert(line.length <= 1920, s"line ${line.length} chars")
-    assert(line.contains("ghost_query:IOException"), line.takeRight(200))
+    assert(line.length <= Bench.LineBudget, s"line ${line.length} chars")
+    assert(omittedOf(line) > 0, line.takeRight(200))
+    assert(line.contains("\"failed\":[\"q_ghost_query:IOException\"]"), line.takeRight(200))
+  }
+
+  test("every key in the REAL catalog's line is a full catalog name") {
+    val results = realistic.map { case (k, v) => k -> (if (k == names.last) -1.0 else v) }
+    val iso = results.sortBy(-_._2).take(Bench.IsolatedTopN)
+    val line = Bench.renderLine(results, Seq(names.last -> "IOException"), "sf0.1",
+      Seq(120.0, 120.0, 120.0), iso)
+    assert(line.length <= Bench.LineBudget, s"line ${line.length} chars")
+    val isoKeys = "\"isolated\":\\{([^}]*)\\}".r.findFirstMatchIn(line).toSeq
+      .flatMap(m => "\"([^\"]+)\":".r.findAllMatchIn(m.group(1)).map(_.group(1)))
+    val failedKeys = "\"([^\":]+):IOException\"".r.findAllMatchIn(line).map(_.group(1)).toSeq
+    val keys = queryKeys(line) ++ isoKeys ++ failedKeys
+    assert(queryKeys(line).nonEmpty && isoKeys.size == Bench.IsolatedTopN && failedKeys.size == 1)
+    assert(keys.forall(names.toSet), keys.filterNot(names.toSet).toString)
+  }
+
+  test("the kept entries are exactly the slowest ones") {
+    val line = Bench.renderLine(realistic, Seq.empty, "sf0.1")
+    val omitted = omittedOf(line)
+    assert(omitted > 0, "a realistic full-name line should not fit whole")
+    val slowestFirst = realistic.sortBy { case (k, v) => (-v, k) }.map(_._1)
+    assert(queryKeys(line).toSet === slowestFirst.dropRight(omitted).toSet)
+    // catalog order is kept among the survivors
+    assert(queryKeys(line) === names.filter(queryKeys(line).toSet))
+  }
+
+  test("when entries are omitted, rendering one more would overflow") {
+    for (scale <- Seq(0.25, 2.5, 25.0)) {
+      val results = realistic.map { case (k, v) => k -> v * scale }
+      val line = Bench.renderLine(results, Seq.empty, "sf0.1")
+      val k = omittedOf(line)
+      assert(k > 0, s"nothing omitted at x$scale")
+      // the next entry back in is the slowest omitted one; its bytes plus
+      // a separator, with the "omitted" field re-counted for k - 1
+      val (name, v) = results.sortBy { case (n, t) => (t, n) }.apply(k - 1)
+      val entry = "\"" + name + "\":" + math.round(v * 1000) + ","
+      val field = (n: Int) => if (n > 0) s""""omitted":$n,""".length else 0
+      val oneMore = line.length + entry.length - field(k) + field(k - 1)
+      assert(line.length <= Bench.LineBudget && oneMore > Bench.LineBudget,
+        s"omitted $k at x$scale: line ${line.length}, one more $oneMore")
+    }
   }
 
   test("canary observations and the degraded verdict render in the line") {
@@ -87,50 +138,32 @@ class BenchLineSpec extends AnyFunSuite {
     assert(bare.contains("\"canary\":[]") && bare.contains("\"degraded\":false"), bare)
   }
 
-  test("abbreviated keys stay unique prefixes of the full names") {
-    val results = Seq("q_dedup_clusters" -> 1.0, "q_dedup_clusters_star" -> 1.0,
-      "q_dedup_clusters_exact" -> 1.0) ++
-      (1 to 102).map(i => f"q_filler_query_with_a_rather_long_name_$i%03d" -> 0.001)
-    val line = Bench.renderLine(results, Seq.empty, "sf1")
-    val keys = "\"([a-z0-9_]+)\":[0-9-]".r.findAllMatchIn(line).map(_.group(1)).toSeq
-    assert(keys.distinct.size == keys.size, "duplicate keys in line")
-    // the three cluster variants must remain distinguishable prefixes
-    val clusterKeys = keys.filter(_.startsWith("dedup_clusters"))
-    assert(clusterKeys.size == 3, clusterKeys.toString)
-  }
-
-  test("counterexamples and isolated re-measures render with abbreviated keys") {
+  test("isolated re-measures render under full names beside the in-run time") {
     val line = Bench.renderLine(
       Seq("q_embed_neardup" -> 1.5, "q_dedup_simhash" -> 5.416, "q_fast" -> 0.1),
       Seq.empty, "sf0.1", Seq.empty,
-      counterExamples = Seq("q_embed_neardup"),
       isolated = Seq("q_dedup_simhash" -> 0.926))
-    assert(line.contains("\"counterexamples\":[\"embed_neardup\"]"), line)
     // isolated carries the alone-measured number; "queries" keeps in-run
-    assert(line.contains("\"isolated\":{\"dedup_simhash\":926}"), line)
-    assert(line.contains("\"dedup_simhash\":5416"), line)
-    // at uncontended sizes both fields are present — an empty map/array is
-    // the explicit "nothing flagged / nothing re-measured" statement
+    assert(line.contains("\"isolated\":{\"q_dedup_simhash\":926}"), line)
+    assert(line.contains("\"q_dedup_simhash\":5416"), line)
+    // the line fits whole: nothing omitted, no counter-example list (that
+    // lives in bench_full.json), and an empty isolated map is the explicit
+    // "nothing re-measured" statement
+    assert(!line.contains("\"omitted\"") && !line.contains("counterexamples"), line)
     val bare = Bench.renderLine(Seq("q_fast" -> 0.1), Seq.empty, "sf0.1")
-    assert(bare.contains("\"counterexamples\":[]") &&
-      bare.contains("\"isolated\":{}"), bare)
+    assert(bare.contains("\"isolated\":{}"), bare)
   }
 
   test("the REAL catalog's line carries the FULL isolated tail at realistic widths") {
-    // the line the actual driver run prints: real catalog names, the real
-    // counterExample flags, a full isolated tail, 4-digit-ms times for
-    // every entry (wider than any recorded round — r8's slowest was
-    // 3.3 s). The r8 ladder squeezed "isolated" to ONE entry at 115
-    // queries; the round-9 priority (compress keys before shedding
-    // measurements) must keep all IsolatedTopN entries — they are the
+    // the line a real sweep prints: real catalog names, a full
+    // isolated tail, 4-digit-ms times for every entry (wider than any
+    // recorded round — r8's slowest was 3.3 s). Fastest entries are
+    // omitted before any isolated entry: the isolated re-measures are the
     // one artifact that cannot be reconstructed after the run.
-    val qs = queries.QueryCatalog.all
-    val results = qs.map(_.name -> 9.999)
-    val cex = qs.filter(_.counterExample).map(_.name)
-    assert(cex.size >= 3, "catalog lost its counter-example flags")
+    val results = names.map(_ -> 9.999)
     val iso = results.take(Bench.IsolatedTopN).map { case (k, _) => k -> 9.999 }
-    val line = Bench.renderLine(results, Seq.empty, "sf0.1", Seq(120.0, 120.0, 120.0), cex, iso)
-    assert(line.length <= 1920, s"line ${line.length} chars")
+    val line = Bench.renderLine(results, Seq.empty, "sf0.1", Seq(120.0, 120.0, 120.0), iso)
+    assert(line.length <= Bench.LineBudget, s"line ${line.length} chars")
     val isoJson = "\"isolated\":\\{([^}]*)\\}".r.findFirstMatchIn(line).map(_.group(1))
     assert(isoJson.isDefined, s"isolated dropped entirely: ${line.takeRight(300)}")
     val isoCount = isoJson.get.count(_ == ':')
@@ -138,43 +171,21 @@ class BenchLineSpec extends AnyFunSuite {
       s"isolated carries $isoCount of ${Bench.IsolatedTopN} entries: ${isoJson.get}")
   }
 
-  test("under pressure counterexamples drop BEFORE isolated entries do") {
-    // a width regime sized so that tight keys + everything is JUST over
-    // budget and dropping the cex array alone brings it under: the ladder
-    // must shed cex (re-derivable from the catalog source) and keep the
-    // full isolated tail (not re-derivable after the run)
-    val results = (1 to 130).map(i =>
-      f"q_w$i%03d_wide_query_name_padding_out_the_line" -> 99.999)
-    val cex = results.take(10).map(_._1)
-    val iso = results.take(Bench.IsolatedTopN).map { case (k, _) => k -> 99.999 }
-    val line = Bench.renderLine(results, Seq.empty, "sf0.1",
-      Seq(120.0, 120.0, 120.0), cex, iso)
-    assert(line.length <= 1920, s"line ${line.length} chars")
-    val isoEntries = "\"isolated\":\\{([^}]*)\\}".r.findFirstMatchIn(line)
-      .map(_.group(1).count(_ == ':')).getOrElse(0)
-    assert(isoEntries === Bench.IsolatedTopN,
-      s"isolated degraded to $isoEntries entries: ${line.takeRight(200)}")
-    assert(!line.contains("\"counterexamples\":"),
-      "cex survived a squeeze that should have shed it first")
-  }
-
   test("under budget pressure the extras degrade before failures do") {
     // 5-digit-ms worst case: extras are additive diagnostics and must be
     // the first things dropped — the line still fits and still carries
     // the full failed list
-    val qs = queries.QueryCatalog.all
-    val results = qs.map(_.name -> 99.999)
-    val cex = qs.filter(_.counterExample).map(_.name)
+    val results = names.map(_ -> 99.999)
     val iso = results.take(Bench.IsolatedTopN).map { case (k, _) => k -> 99.999 }
     val line = Bench.renderLine(results, Seq("q_dedup_simhash" -> "OutOfMemoryError"),
-      "sf0.1", Seq(120.0, 120.0, 120.0), cex, iso)
-    assert(line.length <= 1920, s"line ${line.length} chars")
+      "sf0.1", Seq(120.0, 120.0, 120.0), iso)
+    assert(line.length <= Bench.LineBudget, s"line ${line.length} chars")
     assert(line.contains(":OutOfMemoryError"), "failure dropped before extras")
   }
 
   test("bench_full.json carries EVERY entry under full names — no budget ladder") {
-    // the side artifact exists because the line's ladder sheds information;
-    // pin that it never does: full catalog at worst-case widths, all names
+    // the side artifact exists because the line omits entries to fit its
+    // budget; pin that the side artifact never does: full catalog at worst-case widths, all names
     // unabbreviated, all timings present, valid JSON shape markers intact
     val qs = queries.QueryCatalog.all
     val results = qs.map(_.name -> 99.999)

@@ -154,6 +154,31 @@ class TablesSpec extends SparkSpec {
     assert(ev.schema("ts").dataType.typeName === "timestamp")
   }
 
+  test("a table path rewritten in the same JVM loads with its new schema") {
+    import spark.implicits._
+    // both layouts the loader reads: a directory of part files (ScaleData's
+    // df.write) and a single parquet file (the fixture testdata)
+    val dir = s"$tmp/rewrite"
+    val single = s"$dir/single.parquet"
+    def write(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.write.mode("overwrite").parquet(s"$dir/multi.parquet")
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/staging")
+      val part = new java.io.File(s"$dir/staging").listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, java.nio.file.Paths.get(single),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    write(Seq((1L, "a")).toDF("id", "text"))
+    for (name <- Seq("multi", "single"))
+      assert(Tables.load(spark, dir, name).columns.toSeq === Seq("id", "text"), name)
+    write(Seq((2L, "b", "en")).toDF("id", "text", "lang"))
+    for (name <- Seq("multi", "single")) {
+      val back = Tables.load(spark, dir, name)
+      assert(back.columns.toSeq === Seq("id", "text", "lang"), name)
+      assert(back.as[(Long, String, String)].collect().toSeq === Seq((2L, "b", "en")), name)
+    }
+  }
+
   test("events ts repair: nanos-as-long shape → TimestampType micros") {
     import spark.implicits._
     // the original writer generation: TIMESTAMP(NANOS), which Spark reads
