@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   *     from fragmenting and skewed keys from stalling a stage.
   *   - local[cores] with shuffle.partitions = cores; on a real cluster
   *     this would be ~2-3x total cores, and AQE coalesces down.
+  *   - a generated-class cache of 1,000 entries, so a repeated pass reuses
+  *     its compiled code instead of recompiling it with Janino.
   *
   * Every main takes its core count from `builder`'s default:
   * SPARK_GRAFT_CPUS when set, else every core of the host.
@@ -66,6 +68,18 @@ object GraftSession {
       // errors, so the engine pins the same dialect.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // Generated-class cache. The default 100 entries is below one pass's
+      // working set (about 110 classes for a taxi pass, about 162 for the
+      // benchmark's catalog_core pass), and a pass touches its classes in
+      // the same cyclic order, so the LRU missed on every access and every
+      // pass recompiled its code with Janino. Guava splits the maximum over
+      // 4 LRU segments, so the cache needs headroom above the working set:
+      // at 1,000 a repeated pass compiles nothing on the taxi fixture or
+      // month, and on catalog_core only q_stream_window_agg, whose every
+      // call starts a fresh streaming query. A static conf: it sizes a
+      // JVM-wide cache the first time codegen runs, so it only takes
+      // effect when the JVM's first session carries it.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // Streaming state store. The default HDFSBacked provider keeps ALL
       // live state on-heap per partition: measured at ×1000 (100M events)
       // the native session-window query OOMs the 32 GB heap and still

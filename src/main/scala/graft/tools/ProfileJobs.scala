@@ -16,7 +16,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * later passes are the steady state the bench's min-of-3 reports); every
   * pass prints its job table (job id, ms, #stages, group tag) plus the
   * pass total, so fixed per-job scheduler overhead separates from data
-  * work by inspection.
+  * work by inspection. Each pass also prints how many classes it compiled
+  * ([[Codegen.compiles]]): a later pass that still compiles is an entry
+  * whose generated code misses the class cache on every run.
   */
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
@@ -50,9 +52,11 @@ object ProfileJobs {
         // previous pass would otherwise be attributed to this one
         done.clear()
         starts.clear()
+        val compiled0 = Codegen.compiles
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val totalMs = (System.nanoTime() - t0) / 1000000L
+        val compiled = Codegen.compiles - compiled0
         // the listener is async: DRAIN the bus (bounded) instead of racing
         // a fixed sleep against delivery — trailing onJobEnd events after a
         // sleep were silently dropped from the pass's job table
@@ -65,7 +69,7 @@ object ProfileJobs {
           while (it.hasNext) b += it.next(); b.result().sortBy(_._1)
         }
         println(s"== $name pass $p: total ${totalMs} ms, ${jobs.size} jobs, " +
-          s"job-sum ${jobs.map(_._2).sum} ms")
+          s"job-sum ${jobs.map(_._2).sum} ms, $compiled codegen compiles")
         jobs.foreach { case (id, ms, st, site) =>
           println(f"  job $id%4d  $ms%6d ms  $st%2d stages  ${site.take(60)}")
         }
