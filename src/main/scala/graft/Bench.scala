@@ -155,12 +155,8 @@ object Bench {
       if (fam != prevFamily) {
         // drop the previous family's sketch caches and let the pause land
         // HERE, between timed regions, not inside the next query.
-        // State-store hygiene rides the same boundary: streaming entries
-        // unload their own providers after a clean drain, but a FAILED
-        // entry skips that line — leaked RocksDB natives + maintenance
-        // work would then tax every later family (the r13 driver bench's
-        // in-run-vs-isolated 3-9x gaps). A no-op when nothing is loaded.
-        graft.streaming.StreamScale.unloadStateStores()
+        // (Streaming entries unload their own state stores:
+        // StreamScale.drain does it whether the query succeeds or fails.)
         OperatorCaches.release(spark)
         System.gc()
         prevFamily = fam

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.streaming.StreamScale
 import graft.operators.{Dedup, OperatorCaches, Packing, Profiling, Similarity, SkewJoin, TextAnalysis}
 
 /** One catalog entry: a Spark implementation plus (when SQL-expressible) a
@@ -29,6 +30,34 @@ object QueryCatalog {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
+
+  /** DuckDB oracle shared by the two sessionization entries
+    * (q_stream_sessionize over flatMapGroupsWithState,
+    * q_stream_session_native over session_window): batch gap
+    * sessionization restricted to the sessions the final watermark
+    * (max second − 1 h) closes.
+    */
+  private lazy val sessionOracleSql: String =
+    """WITH e AS (SELECT user_id, date_trunc('second', ts) AS sec, value
+                         FROM events),
+              mx AS (SELECT max(sec) AS m FROM e),
+              flag AS (SELECT user_id, sec, value,
+                         CASE WHEN lag(sec) OVER w IS NULL
+                              OR date_diff('second', lag(sec) OVER w, sec) > 1800
+                         THEN 1 ELSE 0 END AS ns
+                       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec)),
+              sess AS (SELECT user_id, sec, value,
+                         sum(ns) OVER (PARTITION BY user_id ORDER BY sec
+                                       ROWS UNBOUNDED PRECEDING) AS sid
+                       FROM flag),
+              agg AS (SELECT user_id, min(sec) AS session_start,
+                        max(sec) AS session_end, count(*) AS n_events,
+                        round(sum(value), 2) AS total_value
+                      FROM sess GROUP BY user_id, sid)
+              SELECT user_id, session_start, session_end, n_events, total_value
+              FROM agg, mx
+              WHERE session_end + INTERVAL '30 minutes' <= m - INTERVAL '1 hour'
+              ORDER BY user_id, session_start"""
 
   /** Shared as-of core (clicks matched to the latest preceding purchase
     * second per user, single-shuffle union+window): q_asof_join reads it
@@ -1942,52 +1971,30 @@ object QueryCatalog {
     // a REAL Structured Streaming run, driver-gated: file-source stream
     // over the events parquet (executors read splits; no driver-side
     // MemoryStream), tumbling 1-hour windowed agg with a watermark,
-    // complete-mode memory sink, Trigger.AvailableNow — the stream drains
-    // everything available and stops, and complete mode emits every
-    // window, so the result equals the batch aggregation the DuckDB
-    // oracle computes. This gates the streaming path's ARITHMETIC
+    // complete-mode memory sink; complete mode emits every window, so the
+    // drained result equals the batch aggregation the DuckDB oracle
+    // computes. This gates the streaming path's ARITHMETIC
     // (q_ingest_neardup gates the foreachBatch dedup composition;
     // EventStreamsSpec covers late-data/watermark semantics MemoryStream
     // can exercise and a batch oracle cannot).
     Q("q_stream_window_agg",
-      (s, dir) => {
-        val agg = graft.streaming.EventStreams.windowedCounts(
+      (s, dir) => StreamScale.drain(s, dir, "q_stream_window_agg",
+        graft.streaming.EventStreams.windowedCounts(
           Tables.loadEventsStream(s, dir),
-          window = "1 hour", slide = "1 hour", watermark = "2 hours")
-        val qname = "graft_stream_window_" + math.abs(dir.hashCode).toString
-        // Every driver-gated streaming entry wraps its start+drain in
-        // StreamScale.withEventStreamScale (state partitions derived from
-        // input size instead of the session's 32 — guide §2 scale-adaptive
-        // partitioning; a stateful query pins shuffle.partitions into its
-        // checkpoint as the per-operator state-store count, and each store
-        // pays a per-batch commit file + fsync and, under RocksDB, a native
-        // instance, regardless of rows) and unloads terminated-query
-        // providers after the drain (StreamScale.unloadStateStores — the
-        // round-13 driver bench measured 3–9× in-run vs isolated gaps on
-        // this family from provider accumulation alone).
-        graft.streaming.StreamScale.withEventStreamScale(s, dir) {
-          val query = agg.writeStream.format("memory").queryName(qname)
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          query.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.table(qname)
-          .orderBy("window_start", "event_type")
-      },
+          window = "1 hour", slide = "1 hour", watermark = "2 hours"),
+        "complete")
+        .orderBy("window_start", "event_type"),
       Some("""SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
               time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS window_end,
               event_type, count(*) AS n, round(avg(value), 4) AS avg_value
               FROM events GROUP BY 1, 2, 3 ORDER BY window_start, event_type""")),
 
-    // second driver-gated streaming pattern: stream-STREAM interval join
-    // (click → purchase attribution within 30 min per user), both sides
-    // file-source streams, append-mode memory sink, AvailableNow drain.
-    // Inner stream-stream joins emit on match (the watermark only bounds
-    // join STATE), so the drained sink holds exactly the batch interval
-    // join the oracle computes; the entry aggregates the sink to a
-    // content-checksummed single row so the dump stays bounded
+    // stream-STREAM interval join (click → purchase attribution within
+    // 30 min per user), both sides file-source streams, append-mode memory
+    // sink. Inner stream-stream joins emit on match (the watermark only
+    // bounds join STATE), so the drained sink holds exactly the batch
+    // interval join the oracle computes; the entry aggregates the sink to
+    // a content-checksummed single row so the dump stays bounded
     Q("q_stream_stream_join",
       (s, dir) => {
         val ev = Tables.loadEventsStream(s, dir)
@@ -1995,25 +2002,14 @@ object QueryCatalog {
           ev.filter(col("event_type") === "click"),
           ev.filter(col("event_type") === "purchase"),
           withinMinutes = 30)
-        val qname = "graft_ss_join_" + math.abs(dir.hashCode).toString
-        s.catalog.dropTempView(qname) // append-mode sink: clear prior runs
-        // per-query ON-HEAP state store (GraftSession.withStateStore doc):
-        // the dual-sided join state is read-heavy per row and
-        // watermark-BOUNDED, so heap wins 3:1 over the session's RocksDB
-        // robustness default at ×1000 with no OOM exposure; an explicit
-        // SPARK_GRAFT_STATESTORE pin overrides the hint
-        // sides = 2: both filtered streams of the join buffer state
-        graft.streaming.StreamScale.withEventStreamScale(s, dir, sides = 2) {
-          graft.GraftSession.withStateStore(s, graft.GraftSession.HeapStateStore) {
-            val q = joined.writeStream.format("memory").queryName(qname)
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.table(qname).agg(
+        // on-heap state (GraftSession.withStateStore doc): the dual-sided
+        // join state is read-heavy per row and watermark-BOUNDED, so heap
+        // wins 3:1 over the session's RocksDB robustness default at ×1000
+        // with no OOM exposure; an explicit SPARK_GRAFT_STATESTORE pin
+        // overrides the hint. sides = 2: both filtered streams of the join
+        // buffer state
+        StreamScale.drain(s, dir, "q_stream_stream_join", joined, "append",
+          sides = 2, heapState = true).agg(
           count(lit(1)).as("n_pairs"),
           countDistinct(col("user_id")).as("n_users"),
           sum(pmod(col("l_id") * 31 + col("r_id"), lit(1000000007L)))
@@ -2028,13 +2024,12 @@ object QueryCatalog {
                 AND p.user_id = c.user_id AND p.ts >= c.ts
                 AND p.ts <= c.ts + INTERVAL '30 minutes'""")),
 
-    // SEVENTH driver-gated streaming pattern: LEFT-OUTER stream-stream
-    // join — the one streaming-join semantics where output is driven by
-    // STATE EVICTION, not by data: an unmatched click null-emits only
-    // when the global watermark strictly passes its match horizon
-    // (l_ts + 30 min), proving no purchase can still arrive; clicks
-    // inside the final lateness horizon never null-emit. With an
-    // AvailableNow drain the final watermark is
+    // LEFT-OUTER stream-stream join — the one streaming-join semantics
+    // where output is driven by STATE EVICTION, not by data: an unmatched
+    // click null-emits only when the global watermark strictly passes its
+    // match horizon (l_ts + 30 min), proving no purchase can still arrive;
+    // clicks inside the final lateness horizon never null-emit. Drained to
+    // completion, the final watermark is
     // least(max click ts, max purchase ts) − 1 h (two watermarked
     // operators; Spark's multipleWatermarkPolicy=min is the default),
     // so the emitted set is exactly: all interval matches + the
@@ -2042,8 +2037,8 @@ object QueryCatalog {
     // the oracle computes. Timestamps are second-truncated BEFORE the
     // watermark so the strict-inequality boundary (pinned by
     // EventStreamsSpec at wm == horizon → no emit) is exercised on
-    // clean instants in both engines. Same per-query on-heap hint as
-    // the inner entry (read-heavy, watermark-bounded dual-sided state).
+    // clean instants in both engines. Same on-heap state as the inner
+    // entry (read-heavy, watermark-bounded dual-sided state).
     Q("q_stream_left_join",
       (s, dir) => {
         val ev = Tables.loadEventsStream(s, dir)
@@ -2054,27 +2049,10 @@ object QueryCatalog {
           withinMinutes = 30, joinType = "left_outer")
         // FILE sink, not a memory sink: null-emits scale with |clicks|
         // (~20M rows at ×1000), and a memory sink would materialize all
-        // of them on the driver — executors write the parquet sink and
-        // the read-back aggregation stays distributed (the
-        // q_stream_sessionize precedent)
-        val sink = s"/tmp/graft-ssleft-sink-${math.abs(dir.hashCode)}"
-        val fs = new org.apache.hadoop.fs.Path(sink)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(sink), true)
-        fs.delete(new org.apache.hadoop.fs.Path(sink + "-ckpt"), true)
-        // sides = 2: both filtered streams of the join buffer state
-        graft.streaming.StreamScale.withEventStreamScale(s, dir, sides = 2) {
-          graft.GraftSession.withStateStore(s, graft.GraftSession.HeapStateStore) {
-            val q = joined.writeStream.format("parquet")
-              .option("path", sink).option("checkpointLocation", sink + "-ckpt")
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.read.parquet(sink).agg(
+        // of them on the driver. sides = 2: both filtered streams of the
+        // join buffer state
+        StreamScale.drain(s, dir, "q_stream_left_join", joined, "append",
+          files = true, sides = 2, heapState = true).agg(
           count(lit(1)).as("n_rows"),
           sum(when(col("r_id").isNull, 1L).otherwise(0L)).as("n_null_emits"),
           countDistinct(col("user_id")).as("n_users"),
@@ -2112,44 +2090,27 @@ object QueryCatalog {
                   AS BIGINT) AS pair_hash_sum
               FROM allr""")),
 
-    // EIGHTH driver-gated streaming pattern: keyed upsert (streaming
-    // SCD1) — foreachBatch folds each batch's per-user winner (max of
-    // struct(ts, event_id): lexicographic, ASSOCIATIVE, so the final
-    // state table is independent of micro-batch splits and arrival
-    // order) into a bucket-partitioned parquet state table, rewriting
-    // only the buckets the batch touches via dynamic partition
+    // keyed upsert (streaming SCD1) — foreachBatch folds each batch's
+    // per-user winner (max of struct(ts, event_id): lexicographic,
+    // ASSOCIATIVE, so the final state table is independent of micro-batch
+    // splits and arrival order; EventStreamsSpec feeds it out-of-order
+    // micro-batches) into a bucket-partitioned parquet state table,
+    // rewriting only the buckets the batch touches via dynamic partition
     // overwrite — the Delta-less streaming MERGE whose per-batch I/O is
     // proportional to touched buckets, not to the table. The oracle
     // replays last-row-per-user with a (ts DESC, event_id DESC) window
-    // and aggregates the same winner set. SPARK_GRAFT_UPSERT_BATCH_FILES
-    // caps files per micro-batch (maxFilesPerTrigger) to force a
-    // MULTI-batch AvailableNow drain: the winner fold is associative, so
-    // the oracle stays green under ANY batch split — the determinism
-    // contract proven end-to-end, not just in the spec.
+    // and aggregates the same winner set.
     Q("q_stream_upsert",
-      (s, dir) => {
-        val sink = s"/tmp/graft-upsert-${math.abs(dir.hashCode)}"
-        val fs = new org.apache.hadoop.fs.Path(sink)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(sink), true)
-        fs.delete(new org.apache.hadoop.fs.Path(sink + "-ckpt"), true)
-        val srcOpts = sys.env.get("SPARK_GRAFT_UPSERT_BATCH_FILES")
-          .map(n => Map("maxFilesPerTrigger" -> n)).getOrElse(Map.empty)
-        graft.streaming.StreamScale.withEventStreamScale(s, dir) {
-          val q = graft.streaming.EventStreams.upsertLatest(
-            Tables.loadEventsStream(s, dir, srcOpts), sink, sink + "-ckpt",
-            nBuckets = 16, availableNow = true)
-          q.awaitTermination()
+      (s, dir) => StreamScale.drain(s, dir, "q_stream_upsert") { sink =>
+          graft.streaming.EventStreams.upsertLatest(
+            Tables.loadEventsStream(s, dir), sink, sink + "-ckpt", nBuckets = 16)
         }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.read.parquet(sink)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_users"),
-            sum(pmod(col("user_id") * 31 + col("event_id"),
-              lit(1000000007L))).as("winner_hash_sum"),
-            round(sum("value"), 2).as("sum_value"))
-          .orderBy("event_type")
-      },
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_users"),
+          sum(pmod(col("user_id") * 31 + col("event_id"),
+            lit(1000000007L))).as("winner_hash_sum"),
+          round(sum("value"), 2).as("sum_value"))
+        .orderBy("event_type"),
       Some("""WITH w AS (SELECT user_id, event_id, event_type, value,
                 row_number() OVER (PARTITION BY user_id
                   ORDER BY ts DESC, event_id DESC) AS rn
@@ -2161,30 +2122,22 @@ object QueryCatalog {
               FROM w WHERE rn = 1
               GROUP BY event_type ORDER BY event_type""")),
 
-    // NINTH driver-gated streaming pattern: windowed approx-distinct
-    // users via HLL++ — O(sketch) state per (window, type) group where
-    // dedup-then-count state grows one entry per distinct id. The raw
-    // estimate is engine-specific (never hash-compared); the entry is
-    // the q_approx_distinct AUDIT shape — the streamed sketch joins the
-    // batch-exact count per window and the 3·rsd (15%) band must hold,
-    // so a Spark-side sketch regression breaks the boolean while DuckDB
-    // independently replays the exact side. Complete-mode memory sink is
-    // bounded: one row per (window, event_type).
+    // windowed approx-distinct users via HLL++ — O(sketch) state per
+    // (window, type) group where dedup-then-count state grows one entry
+    // per distinct id. The raw estimate is engine-specific (never
+    // hash-compared); the entry is the q_approx_distinct AUDIT shape — the
+    // streamed sketch joins the batch-exact count per window and the
+    // 3·rsd (15%) band must hold, so a Spark-side sketch regression breaks
+    // the boolean while DuckDB independently replays the exact side.
+    // Complete-mode memory sink is bounded: one row per (window,
+    // event_type).
     Q("q_stream_approx_distinct",
       (s, dir) => {
-        val agg = graft.streaming.EventStreams.windowedApproxDistinct(
-          Tables.loadEventsStream(s, dir),
-          window = "1 hour", watermark = "2 hours", rsd = 0.05)
-        val qname = "graft_stream_hll_" + math.abs(dir.hashCode).toString
-        graft.streaming.StreamScale.withEventStreamScale(s, dir) {
-          val query = agg.writeStream.format("memory").queryName(qname)
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          query.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        val sk = s.table(qname)
+        val sk = StreamScale.drain(s, dir, "q_stream_approx_distinct",
+          graft.streaming.EventStreams.windowedApproxDistinct(
+            Tables.loadEventsStream(s, dir),
+            window = "1 hour", watermark = "2 hours", rsd = 0.05),
+          "complete")
         val exact = t(s, dir, "events")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(countDistinct("user_id").as("exact_users"))
@@ -2207,34 +2160,24 @@ object QueryCatalog {
                 TRUE AS hll_within_tol
               FROM w GROUP BY event_type ORDER BY event_type""")),
 
-    // third driver-gated streaming pattern: exactly-once-style dedup.
-    // The stream is the events source UNIONED WITH ITSELF (two
-    // independent file-source reads — a replayed-ingest simulation with
-    // every event guaranteed duplicated), so dropDuplicatesWithinWatermark
-    // must collapse 2N arrivals to N. The oracle is the plain distinct
-    // profile of the batch table; any state-machinery failure (missed
-    // dedup, dropped id) breaks the count or the id checksum
+    // exactly-once-style streaming dedup. The stream is the events source
+    // UNIONED WITH ITSELF (two independent file-source reads — a
+    // replayed-ingest simulation with every event guaranteed duplicated),
+    // so dropDuplicatesWithinWatermark must collapse 2N arrivals to N. The
+    // oracle is the plain distinct profile of the batch table; any
+    // state-machinery failure (missed dedup, dropped id) breaks the count
+    // or the id checksum
     Q("q_stream_dedup",
       (s, dir) => {
         val doubled = Tables.loadEventsStream(s, dir)
           .unionByName(Tables.loadEventsStream(s, dir))
         val deduped = graft.streaming.EventStreams.dedupStream(doubled)
-        val qname = "graft_stream_dedup_" + math.abs(dir.hashCode).toString
-        s.catalog.dropTempView(qname)
         // sides = 2: the self-union reads the source twice; ArrivalStateRows
         // target because dedup keeps one state entry PER EVENT ID — every
         // arrival is a state probe+insert, the per-arrival state shape the
         // StreamScale sweep was run on
-        graft.streaming.StreamScale.withEventStreamScale(s, dir, sides = 2,
-          rowsPerPartition = graft.streaming.StreamScale.ArrivalStateRows) {
-          val q = deduped.writeStream.format("memory").queryName(qname)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.table(qname).agg(
+        StreamScale.drain(s, dir, "q_stream_dedup", deduped, "append",
+          sides = 2, rowsPerPartition = StreamScale.ArrivalStateRows).agg(
           count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_distinct"),
           sum(pmod(col("event_id"), lit(1000000007L))).as("id_hash_sum"))
@@ -2244,15 +2187,15 @@ object QueryCatalog {
                 CAST(sum(event_id % 1000000007) AS BIGINT) AS id_hash_sum
               FROM events""")),
 
-    // fourth driver-gated streaming pattern: stateful sessionization
-    // (flatMapGroupsWithState + event-time timeout). Sessions are emitted
-    // ONLY when the watermark passes session_end + gap, and with an
-    // AvailableNow drain the final watermark is max(ts) - 1h (the no-data
-    // micro-batch fires the pending state timeouts before termination), so
-    // the emitted set is exactly the batch gap-sessionization restricted to
-    // watermark-closable sessions — which is what the oracle computes.
-    // Events are second-truncated BEFORE the watermark so both engines
-    // reason about identical instants (ms vs micros floors differ).
+    // stateful sessionization (flatMapGroupsWithState + event-time
+    // timeout). Sessions are emitted ONLY when the watermark passes
+    // session_end + gap; drained to completion, the final watermark is
+    // max(ts) - 1h (the final no-data micro-batch fires the pending state
+    // timeouts before termination), so the emitted set is exactly the
+    // batch gap-sessionization restricted to watermark-closable sessions —
+    // which is what the oracle computes. Events are second-truncated
+    // BEFORE the watermark so both engines reason about identical instants
+    // (ms vs micros floors differ).
     Q("q_stream_sessionize",
       (s, dir) => {
         import s.implicits._
@@ -2263,62 +2206,27 @@ object QueryCatalog {
         val sessions = graft.streaming.EventStreams.sessionize(
           ev, gapMinutes = 30, watermark = "1 hour")
         // FILE sink, not a memory sink: a sparse corpus emits ~one session
-        // per event (measured: 9.5M sessions from 10M ×100 events), and a
-        // memory sink materializes all of them on the driver — executors
-        // write the parquet sink, and the read-back stays distributed
-        val sink = s"/tmp/graft-sess-sink-${math.abs(dir.hashCode)}"
-        val fs = new org.apache.hadoop.fs.Path(sink)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(sink), true)
-        fs.delete(new org.apache.hadoop.fs.Path(sink + "-ckpt"), true)
+        // per event (measured: 9.5M sessions from 10M ×100 events).
         // ArrivalStateRows target: fMGWS sessionization pays a per-arrival
         // sort+merge against the key's open-interval state — per-arrival
         // work, not a bounded aggregate (×10 A/B: 8.1 s at the 100k-row
         // width vs 5.6 s at the arrival width)
-        graft.streaming.StreamScale.withEventStreamScale(s, dir,
-          rowsPerPartition = graft.streaming.StreamScale.ArrivalStateRows) {
-          val q = sessions.writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", sink + "-ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.read.parquet(sink)
+        StreamScale.drain(s, dir, "q_stream_sessionize", sessions, "append",
+          files = true, rowsPerPartition = StreamScale.ArrivalStateRows)
           .withColumn("total_value", round(col("total_value"), 2))
           .orderBy("user_id", "session_start")
       },
-      Some("""WITH e AS (SELECT user_id, date_trunc('second', ts) AS sec, value
-                         FROM events),
-              mx AS (SELECT max(sec) AS m FROM e),
-              flag AS (SELECT user_id, sec, value,
-                         CASE WHEN lag(sec) OVER w IS NULL
-                              OR date_diff('second', lag(sec) OVER w, sec) > 1800
-                         THEN 1 ELSE 0 END AS ns
-                       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec)),
-              sess AS (SELECT user_id, sec, value,
-                         sum(ns) OVER (PARTITION BY user_id ORDER BY sec
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-                       FROM flag),
-              agg AS (SELECT user_id, min(sec) AS session_start,
-                        max(sec) AS session_end, count(*) AS n_events,
-                        round(sum(value), 2) AS total_value
-                      FROM sess GROUP BY user_id, sid)
-              SELECT user_id, session_start, session_end, n_events, total_value
-              FROM agg, mx
-              WHERE session_end + INTERVAL '30 minutes' <= m - INTERVAL '1 hour'
-              ORDER BY user_id, session_start""")),
+      Some(sessionOracleSql)),
 
-    // fifth driver-gated streaming pattern: stream-STATIC broadcast
-    // enrichment (the streaming form of the reference's implied dimension
-    // lookup). The static customer side re-resolves per micro-batch and
-    // broadcasts, so the stream side never shuffles; the per-segment
-    // aggregation runs INSIDE the stream (complete-mode state = one row
-    // per (segment, type) — bounded however large the stream; sinking the
-    // raw enriched stream instead was measured dead at ×100: 6M rows
-    // through a driver-side memory sink blow maxResultSize), and the
-    // batch join+agg oracle replays the drained result
+    // stream-STATIC broadcast enrichment (the streaming form of the
+    // reference's implied dimension lookup). The static customer side
+    // re-resolves per micro-batch and broadcasts, so the stream side never
+    // shuffles; the per-segment aggregation runs INSIDE the stream
+    // (complete-mode state = one row per (segment, type) — bounded however
+    // large the stream; sinking the raw enriched stream instead was
+    // measured dead at ×100: 6M rows through a driver-side memory sink
+    // blow maxResultSize), and the batch join+agg oracle replays the
+    // drained result
     Q("q_stream_enrich",
       (s, dir) => {
         val dim = t(s, dir, "customer")
@@ -2327,35 +2235,25 @@ object QueryCatalog {
           Tables.loadEventsStream(s, dir), dim, "user_id")
         val agg = enriched.groupBy("c_mktsegment", "event_type")
           .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-        val qname = "graft_stream_enrich_" + math.abs(dir.hashCode).toString
-        s.catalog.dropTempView(qname)
-        graft.streaming.StreamScale.withEventStreamScale(s, dir) {
-          val q = agg.writeStream.format("memory").queryName(qname)
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.table(qname).orderBy("c_mktsegment", "event_type")
+        StreamScale.drain(s, dir, "q_stream_enrich", agg, "complete")
+          .orderBy("c_mktsegment", "event_type")
       },
       Some("""SELECT c_mktsegment, event_type, count(*) AS n,
                 round(sum(value), 2) AS total
               FROM events e JOIN customer c ON c.c_custkey = e.user_id
               GROUP BY 1, 2 ORDER BY 1, 2""")),
 
-    // sixth driver-gated streaming pattern: NATIVE session_window
-    // aggregation — the built-in state-store twin of the
-    // flatMapGroupsWithState entry above. Same gap-merge semantics, same
-    // watermark-closable emission set under the AvailableNow drain, but
-    // the session state lives in Spark's session-window state store
-    // (merging windows on update) instead of user code. The window END is
-    // last-event + gap by definition, so the entry subtracts the gap back
-    // to report the fMGWS-convention session_end and the SAME oracle
-    // applies — any divergence between the two engines' session-merge or
-    // eviction rules lands as a driver hash mismatch. File sink for the
-    // same ×100 reason as q_stream_sessionize (one session per sparse
-    // event; a memory sink would driver-materialize millions).
+    // NATIVE session_window aggregation — the built-in state-store twin
+    // of the flatMapGroupsWithState entry above. Same gap-merge semantics,
+    // same watermark-closable emission set when drained, but the session
+    // state lives in Spark's session-window state store (merging windows
+    // on update) instead of user code. The window END is last-event + gap
+    // by definition, so the entry subtracts the gap back to report the
+    // fMGWS-convention session_end and the SAME oracle applies — any
+    // divergence between the two engines' session-merge or eviction rules
+    // lands as a driver hash mismatch. File sink for the same ×100 reason
+    // as q_stream_sessionize (one session per sparse event; a memory sink
+    // would driver-materialize millions).
     Q("q_stream_session_native",
       (s, dir) => {
         val ev = Tables.loadEventsStream(s, dir)
@@ -2369,49 +2267,16 @@ object QueryCatalog {
             (col("session_window.end").cast("long") - 1800L)
               .cast("timestamp").as("session_end"),
             col("n_events"), col("total_value"))
-        val sink = s"/tmp/graft-sessnat-sink-${math.abs(dir.hashCode)}"
-        val fs = new org.apache.hadoop.fs.Path(sink)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(sink), true)
-        fs.delete(new org.apache.hadoop.fs.Path(sink + "-ckpt"), true)
         // ArrivalStateRows target: the native session-window store merges
         // windows per arrival — same per-arrival state shape as the fMGWS
         // twin (×10 A/B: 13.2 s at the 100k-row width vs 6.3 s at the
         // arrival width)
-        graft.streaming.StreamScale.withEventStreamScale(s, dir,
-          rowsPerPartition = graft.streaming.StreamScale.ArrivalStateRows) {
-          val q = sess.writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", sink + "-ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.read.parquet(sink)
+        StreamScale.drain(s, dir, "q_stream_session_native", sess, "append",
+          files = true, rowsPerPartition = StreamScale.ArrivalStateRows)
           .withColumn("total_value", round(col("total_value"), 2))
           .orderBy("user_id", "session_start")
       },
-      Some("""WITH e AS (SELECT user_id, date_trunc('second', ts) AS sec, value
-                         FROM events),
-              mx AS (SELECT max(sec) AS m FROM e),
-              flag AS (SELECT user_id, sec, value,
-                         CASE WHEN lag(sec) OVER w IS NULL
-                              OR date_diff('second', lag(sec) OVER w, sec) > 1800
-                         THEN 1 ELSE 0 END AS ns
-                       FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec)),
-              sess AS (SELECT user_id, sec, value,
-                         sum(ns) OVER (PARTITION BY user_id ORDER BY sec
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-                       FROM flag),
-              agg AS (SELECT user_id, min(sec) AS session_start,
-                        max(sec) AS session_end, count(*) AS n_events,
-                        round(sum(value), 2) AS total_value
-                      FROM sess GROUP BY user_id, sid)
-              SELECT user_id, session_start, session_end, n_events, total_value
-              FROM agg, mx
-              WHERE session_end + INTERVAL '30 minutes' <= m - INTERVAL '1 hour'
-              ORDER BY user_id, session_start""")),
+      Some(sessionOracleSql)),
 
     // JSON column extraction (events.props holds JSON documents)
     Q("q_json_extract",
@@ -10813,13 +10678,12 @@ object QueryCatalog {
               FROM terms"""
       }),
 
-    // Eighth driver-gated streaming pattern: exactly-once threshold
-    // alerting via flatMapGroupsWithState — emit each user ONCE, the
-    // first time their cumulative count reaches the threshold (the fraud
-    // velocity-check shape). The emitted SET is micro-batch-split
-    // independent (users whose total reaches 70), which is exactly what
-    // the batch oracle computes; the crossing-time count is split-
-    // dependent and stays in state, never emitted.
+    // exactly-once threshold alerting via flatMapGroupsWithState — emit
+    // each user ONCE, the first time their cumulative count reaches the
+    // threshold (the fraud velocity-check shape). The emitted SET is
+    // micro-batch-split independent (users whose total reaches 70), which
+    // is exactly what the batch oracle computes; the crossing-time count
+    // is split-dependent and stays in state, never emitted.
     Q("q_stream_threshold_alert",
       (s, dir) => {
         import s.implicits._
@@ -10829,17 +10693,7 @@ object QueryCatalog {
           .as[graft.streaming.EventStreams.Event]
         val alerts = graft.streaming.EventStreams.thresholdAlerts(
           ev, minEvents = 70L)
-        val qname = "graft_stream_alert_" + math.abs(dir.hashCode).toString
-        s.catalog.dropTempView(qname)
-        graft.streaming.StreamScale.withEventStreamScale(s, dir) {
-          val q = alerts.toDF().writeStream.format("memory")
-            .queryName(qname).outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        graft.streaming.StreamScale.unloadStateStores()
-        s.table(qname).agg(
+        StreamScale.drain(s, dir, "q_stream_threshold_alert", alerts, "append").agg(
           count(lit(1)).as("n_alerted"),
           countDistinct(col("user_id")).as("n_distinct_alerted"),
           coalesce(sum(pmod(col("user_id"), lit(1000000007L))), lit(0L))

@@ -111,10 +111,7 @@ object Tables {
     * read pins it, then the same ts repair as [[load]] applies — so a
     * streaming query and its batch oracle see identical rows.
     */
-  def loadEventsStream(
-      spark: SparkSession,
-      dir: String,
-      sourceOptions: Map[String, String] = Map.empty): DataFrame = {
+  def loadEventsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val schema = declaredSchema(spark, path)
     // file streams watch a DIRECTORY. Two fixture layouts exist: the
@@ -124,17 +121,13 @@ object Tables {
     // part files: it would match nothing and the stream would silently
     // drain zero rows), and ScaleData writes a normal parquet DIRECTORY
     // (watch it directly — the shape a real ingest watches too).
-    // `sourceOptions` passes source rate limits through (e.g.
-    // maxFilesPerTrigger to force a MULTI-batch AvailableNow drain — the
-    // incremental regime the upsert sink's determinism contract is
-    // proven under).
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st =
       if (fs.getFileStatus(new org.apache.hadoop.fs.Path(path)).isDirectory)
-        spark.readStream.options(sourceOptions).schema(schema).parquet(path)
+        spark.readStream.schema(schema).parquet(path)
       else
-        spark.readStream.options(sourceOptions).schema(schema)
+        spark.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
     repairEventsTs(st)
   }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface over the `events` schema
   * (event_id, ts, user_id, event_type, value, props).
@@ -142,13 +142,15 @@ object EventStreams {
     * The merged frame is localCheckpoint'ed before the write: it READS
     * the same path the dynamic overwrite replaces, so the lineage must
     * be cut (materialized) before the first target file is deleted.
+    *
+    * Returns the configured writer; the caller picks the trigger and
+    * starts it.
     */
   def upsertLatest(
       events: DataFrame,
       statePath: String,
       checkpointPath: String,
-      nBuckets: Int = 16,
-      availableNow: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
+      nBuckets: Int = 16): DataStreamWriter[Row] = {
     require(nBuckets >= 1, "upsertLatest: nBuckets must be >= 1")
 
     def winners(df: DataFrame): DataFrame =
@@ -160,7 +162,7 @@ object EventStreams {
           col("w.event_type").as("event_type"), col("w.value").as("value"))
         .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
 
-    val writer = events.writeStream
+    events.writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
@@ -182,9 +184,6 @@ object EventStreams {
           merged.localCheckpoint(true), statePath, Seq("bucket"))
         ()
       }
-    (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
   }
 
   final case class Event(

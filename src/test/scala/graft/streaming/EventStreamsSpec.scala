@@ -316,7 +316,7 @@ class EventStreamsSpec extends SparkSpec {
     implicit val sql = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
     val in = MemoryStream[Event]
-    val q = upsertLatest(in.toDF(), s"$dir/state", s"$dir/ckpt", nBuckets = 4)
+    val q = upsertLatest(in.toDF(), s"$dir/state", s"$dir/ckpt", nBuckets = 4).start()
     // batch 1: first sighting of users 1 and 2
     in.addData(
       ev(1, "2024-01-01 10:00:00", user = 1L, v = 1.0),
