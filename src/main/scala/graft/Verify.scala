@@ -10,21 +10,38 @@ object Verify {
     // nanos-as-long, extensions): verified plans = benched plans
     val spark = GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for local iteration (driver sets none)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
+    dump(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes every catalog entry's result (only the named ones when `only`
+    * is set) as one parquet file set under `outDir/<name>`, then
+    * `oracle_sql.json` (every entry's oracle, whatever the filter) and
+    * `flags.json`. A failing entry is reported on stderr and skipped, so
+    * the compare shows it as missing output. Returns the failed names.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        val err =
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            Some(name)
+          }
+        // correctness runs are untimed: release operator-internal caches per
+        // query so the ~90 dumps never accumulate sketch tables in one JVM
+        graft.operators.OperatorCaches.releaseAll()
+        err
       }
-      // correctness runs are untimed: release operator-internal caches per
-      // query so the ~90 dumps never accumulate sketch tables in one JVM
-      graft.operators.OperatorCaches.releaseAll()
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,10 +59,10 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // flags.json rides beside the dumps so a CORRECTNESS reader sees which
     // green rows are retained scale counter-examples (Q.counterExample)
-    // without opening the catalog source — same flag the bench line carries
+    // without opening the catalog source — the same list bench_full.json carries
     val flags = queries.QueryCatalog.all.filter(_.counterExample)
       .map(qq => q(qq.name)).mkString("{\"counterexamples\": [", ",", "]}")
     Files.writeString(Paths.get(s"$outDir/flags.json"), flags)
-    spark.stop()
+    failed
   }
 }

@@ -12,12 +12,12 @@ import graft.operators.{Dedup, OperatorCaches, Packing, Profiling, Similarity, S
   * 1:1 between the two (the driver's compare sorts columns by name before
   * hashing). Every query ends in a deterministic ORDER BY so row order can
   * never cause a spurious mismatch.
-  */
-/** @param counterExample marks an entry RETAINED AS A MEASURED SCALE
+  *
+  * @param counterExample marks an entry RETAINED AS A MEASURED SCALE
   *   COUNTER-EXAMPLE: correct on the fixtures (its oracle row is green)
   *   but proven non-viable at x100 in BENCH_SF10.md, kept beside its
   *   scale-safe replacement so the failure mode stays measured, not
-  *   anecdotal. Surfaced in the bench driver line ("counterexamples")
+  *   anecdotal. Listed in `bench_full.json` and `Verify`'s `flags.json`
   *   so artifact readers see the status without archaeology.
   */
 final case class Q(
@@ -30,6 +30,384 @@ object QueryCatalog {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
+
+  /** The customer→supplier co-order pairs: one (src, dst) row per
+    * lineitem joined to its order, customer node 2·custkey and supplier
+    * node 2·suppkey+1 (one long id space for the bipartite graph).
+    */
+  private def coOrderPairs(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
+    val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).cast("long").as("src"),
+        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
+  }
+
+  /** [[coOrderPairs]] symmetrised: every pair in both directions. */
+  private def coOrderEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = coOrderPairs(s, dir)
+    pairs.unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** DuckDB twin of the co-order graph: `e0`(src, dst) the distinct
+    * [[coOrderPairs]], `edges` the distinct pairs in both directions
+    * ([[coOrderEdges]] as a set). MATERIALIZED because the unrolled
+    * rounds reference them many times.
+    */
+  private lazy val coOrderEdgeCtes: String =
+    """e0 AS MATERIALIZED (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
+                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
+                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+              edges AS MATERIALIZED (SELECT src, dst FROM e0
+                UNION SELECT dst AS src, src AS dst FROM e0)"""
+
+  /** The `planes(p, pv)` VALUES CTE: the first `nPlanes` 64-dim
+    * hyperplanes of [[Similarity.hyperplanes]] (deterministic 4-dp
+    * literals) spliced verbatim, so both engines hash on the same planes.
+    */
+  private def planesCte(nPlanes: Int): String = {
+    val rows = Similarity.hyperplanes(dim = 64, nPlanes = nPlanes).zipWithIndex
+      .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
+      .mkString(",\n                  ")
+    s"""planes(p, pv) AS (VALUES
+                  $rows)"""
+  }
+
+  /** Oracle for the sign-bit ANN entries over the full-precision corpus:
+    * `nPlanes` sign bits per vector, the hamming-`probe` multiprobe cut
+    * around query 0's bucket, and the 4-dp cosine top 10.
+    */
+  private def annLshOracleSql(nPlanes: Int, probe: Int): String =
+    s"""WITH ${planesCte(nPlanes)},
+              emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+                FROM embeddings),
+              b AS (SELECT vec_id,
+                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
+                    THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
+                FROM emb, planes GROUP BY vec_id),
+              cand AS (
+                SELECT m.vec_id,
+                  list_cosine_similarity(m.e,
+                    (SELECT e FROM emb WHERE vec_id = 0)) AS sim_raw
+                FROM emb m JOIN b USING (vec_id)
+                WHERE m.vec_id <> 0 AND
+                  bit_count(xor(b.bucket,
+                    (SELECT bucket FROM b WHERE vec_id = 0))) <= $probe)
+              SELECT vec_id, round(sim_raw, 4) AS sim FROM cand
+              ORDER BY round(sim_raw, 4) DESC, vec_id LIMIT 10"""
+
+  /** Oracle for the cosine near-dup entries
+    * ([[Similarity.cosineNearDupPairs]]): `nPlanes` hyperplanes grouped
+    * into bands of `width` planes (band p / width accumulates bit
+    * p % width, the operator's band-key loop; fixed 16/4 banding is
+    * width 4), band-collision candidates, and the 4-dp cosine cut.
+    */
+  private def cosineNearDupOracleSql(
+      threshold: Double, nPlanes: Int, width: Int): String =
+    s"""WITH ${planesCte(nPlanes)},
+              emb AS (SELECT CAST(vec_id AS BIGINT) AS id,
+                  CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+              bd AS (SELECT id, p // $width AS band,
+                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
+                    THEN 1 << (p % $width) ELSE 0 END) AS BIGINT) AS bv
+                FROM emb, planes GROUP BY id, p // $width),
+              cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
+                FROM bd a JOIN bd c
+                  ON a.band = c.band AND a.bv = c.bv AND a.id < c.id),
+              sc AS (SELECT id_a, id_b,
+                  round(list_cosine_similarity(ea.e, eb.e), 4) AS sim
+                FROM cand
+                JOIN emb ea ON ea.id = id_a
+                JOIN emb eb ON eb.id = id_b)
+              SELECT id_a, id_b, sim FROM sc WHERE sim >= $threshold
+              ORDER BY id_a, id_b"""
+
+  /** Censored order lifetimes, one row per customer: `duration` = days
+    * from first to last order, `event` = 1 unless the last order is within
+    * 30 days of the latest order date (the customer may still be active),
+    * and the experiment group `g` = custkey parity. The subjects of the
+    * survival entries.
+    */
+  private def orderLifetimes(s: SparkSession, dir: String): DataFrame = {
+    val o = t(s, dir, "orders")
+    val mx = o.agg(max(to_date(col("o_orderdate"))).as("maxd"))
+    o.groupBy("o_custkey")
+      .agg(min(to_date(col("o_orderdate"))).as("fd"),
+        max(to_date(col("o_orderdate"))).as("ld"))
+      .crossJoin(broadcast(mx))
+      .select(datediff(col("ld"), col("fd")).cast("long").as("duration"),
+        when(datediff(col("maxd"), col("ld")) > 30, 1L).otherwise(0L)
+          .as("event"),
+        pmod(col("o_custkey"), lit(2)).as("g"))
+  }
+
+  /** DuckDB twin of [[orderLifetimes]]: `subj`(duration, event, g). */
+  private lazy val orderLifetimeCtes: String =
+    """per AS (SELECT o_custkey,
+                  min(CAST(o_orderdate AS DATE)) AS fd,
+                  max(CAST(o_orderdate AS DATE)) AS ld
+                FROM orders GROUP BY 1),
+              mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS maxd
+                FROM orders),
+              subj AS (SELECT CAST(date_diff('day', fd, ld) AS BIGINT)
+                    AS duration,
+                  CASE WHEN date_diff('day', ld, (SELECT maxd FROM mx)) > 30
+                    THEN 1 ELSE 0 END AS event,
+                  o_custkey % 2 AS g
+                FROM per)"""
+
+  /** [[orderLifetimeCtes]] plus `byt`(t, n_at_t, d_t, n1_at_t, d1_t): per
+    * event time, subjects and events overall and in group 1 — the count
+    * table the two-group tests (log-rank, binary Cox) are built from.
+    */
+  private lazy val twoGroupEventCtes: String =
+    s"""$orderLifetimeCtes,
+              byt AS (SELECT duration AS t, count(*) AS n_at_t,
+                  CAST(sum(event) AS BIGINT) AS d_t,
+                  CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
+                    AS n1_at_t,
+                  CAST(sum(CASE WHEN g = 1 THEN event ELSE 0 END) AS BIGINT)
+                    AS d1_t
+                FROM subj GROUP BY 1)"""
+
+  /** Per-language document stats: count, total characters, and a
+    * content-sensitive, order-insensitive sum of portable 60-bit text
+    * hashes mod 1e9+7 (so DuckDB re-derives it) — what the format
+    * roundtrip entries compare against the parquet truth.
+    */
+  private def langTextStats(docs: DataFrame): DataFrame =
+    docs.groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("total_chars"),
+        textHashSum)
+      .orderBy("lang")
+
+  private def textHashSum: org.apache.spark.sql.Column =
+    sum(pmod(graft.operators.PortableHash.portable60(md5(col("text"))),
+        lit(1000000007L)))
+      .as("text_hash_sum")
+
+  /** DuckDB twin of [[textHashSum]]. */
+  private lazy val textHashSumSql: String =
+    s"""CAST(sum(${graft.operators.PortableHash.duckSql("md5(text)")} % 1000000007) AS BIGINT)
+                  AS text_hash_sum"""
+
+  /** DuckDB twin of [[langTextStats]] over the parquet `documents`. */
+  private lazy val langTextStatsSql: String =
+    s"""SELECT lang, count(*) AS n_docs,
+                CAST(sum(n_chars) AS BIGINT) AS total_chars,
+                $textHashSumSql
+              FROM documents GROUP BY lang ORDER BY lang"""
+
+  /** A per-fixture scratch path under `java.io.tmpdir` for an entry that
+    * writes a copy of its input: `graft-<kind>-<dir with non-alphanumerics
+    * as _>`, so reruns on one fixture overwrite the same directory.
+    */
+  private def scratchPath(kind: String, dir: String): String =
+    System.getProperty("java.io.tmpdir") +
+      s"/graft-$kind-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** One-pass embedding moments as DuckDB CTEs over the 64-dim
+    * `embeddings` (the packed moments [[graft.operators.Decomp]] folds):
+    * `v`(vec_id, x, i) one row per coordinate, `nn`(n) the vector count,
+    * `s`(i, si) column sums, `cp`(i, j, pij) upper-triangle cross products.
+    */
+  private lazy val embMomentCtes: String =
+    """v AS MATERIALIZED (
+                SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+                  generate_subscripts(embedding, 1) AS i
+                FROM embeddings
+                WHERE embedding IS NOT NULL AND len(embedding) = 64),
+              nn AS MATERIALIZED (
+                SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings
+                WHERE embedding IS NOT NULL AND len(embedding) = 64),
+              s AS MATERIALIZED (SELECT i, sum(x) AS si FROM v GROUP BY i),
+              cp AS MATERIALIZED (
+                SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS pij
+                FROM v a JOIN v b ON a.vec_id = b.vec_id AND a.i <= b.i
+                GROUP BY 1, 2)"""
+
+  /** [[embMomentCtes]] plus the covariance on the 6-dp anchor: `cov0` the
+    * upper triangle and `cov1`(i, j, c) the symmetric matrix.
+    */
+  private lazy val embCovCtes: String =
+    s"""$embMomentCtes,
+              cov0 AS (SELECT cp.i, cp.j,
+                  round(cp.pij / (SELECT n FROM nn)
+                    - (sa.si / (SELECT n FROM nn))
+                      * (sb.si / (SELECT n FROM nn)), 6) AS c
+                FROM cp JOIN s sa ON sa.i = cp.i JOIN s sb ON sb.i = cp.j),
+              cov1 AS MATERIALIZED (SELECT i, j, c FROM cov0
+                UNION ALL SELECT j AS i, i AS j, c FROM cov0 WHERE i <> j)"""
+
+  /** One principal component by power iteration against the covariance
+    * CTE `cov`: the uniform start `${p}0`, 8 matvec + normalize rounds on
+    * the 7-dp grid (`${p}1`..`${p}8`(d, v)), and the Rayleigh eigenvalue
+    * `$lam`(ev) on the 6-dp grid ([[graft.operators.Decomp]]'s replay).
+    */
+  private def powerIterCtes(p: String, cov: String, lam: String): String = {
+    val rounds = (1 to 8).map { i =>
+      s"""$p${i}r AS MATERIALIZED (SELECT $cov.i AS d,
+                  sum($cov.c * q.v) AS w
+                FROM $cov JOIN $p${i - 1} q ON q.d = $cov.j GROUP BY 1),
+              $p$i AS MATERIALIZED (SELECT d,
+                round(w / (SELECT sqrt(sum(w*w)) FROM $p${i}r), 7) AS v
+                FROM $p${i}r)"""
+    }.mkString(",\n              ")
+    s"""${p}0 AS (SELECT i AS d,
+                round(CAST(1 AS DOUBLE) / sqrt(CAST(64 AS DOUBLE)), 7) AS v
+                FROM s),
+              $rounds,
+              cvf$p AS (SELECT $cov.i AS d, sum($cov.c * q.v) AS w
+                FROM $cov JOIN ${p}8 q ON q.d = $cov.j GROUP BY 1),
+              $lam AS MATERIALIZED (SELECT round(
+                  (SELECT sum(${p}8.v * cvf$p.w) FROM ${p}8
+                    JOIN cvf$p ON cvf$p.d = ${p}8.d)
+                  / (SELECT sum(v * v) FROM ${p}8), 6) AS ev)"""
+  }
+
+  /** Blocked fuzzy record linkage over a deterministically corrupted
+    * customer registry: every 7th name gets its 12th character replaced by
+    * a hash-derived letter, and each corrupted name is matched to its best
+    * master name within edit distance 2, blocked on (length, the
+    * `suffixLen` characters from `suffixStart`) — regions the corruption
+    * does not touch ([[graft.operators.Linkage.bestMatch]]).
+    */
+  private def fuzzyLinkage(s: SparkSession, dir: String, suffixStart: Int,
+      suffixLen: Int, maxExpectedCandidates: Option[Long] = None): DataFrame = {
+    val master = t(s, dir, "customer")
+      .select(col("c_custkey").cast("long").as("id"),
+        col("c_name").as("name"))
+    val dirty = master.filter(pmod(col("id"), lit(7)) === 0)
+      .withColumn("h",
+        pmod(graft.operators.PortableHash.portable60(
+          concat(lit("fz:"), col("id").cast("string"))), lit(26L))
+          + 97L)
+      .withColumn("name", concat(substring(col("name"), 1, 11),
+        expr("chr(cast(h as int))"), substring(col("name"), 13, 6)))
+      .select("id", "name")
+    graft.operators.Linkage.bestMatch(dirty, master, Seq(
+        n => length(n), n => substring(n, suffixStart, suffixLen)),
+        maxDistance = 2, maxExpectedCandidates = maxExpectedCandidates)
+      .orderBy("id")
+  }
+
+  /** DuckDB twin of [[fuzzyLinkage]]: the same corruption, blocking,
+    * rank-1 (distance, master id) pick and candidate count.
+    */
+  private def fuzzyLinkageOracleSql(suffixStart: Int, suffixLen: Int): String =
+    s"""WITH master AS (SELECT CAST(c_custkey AS BIGINT) AS id,
+                  c_name AS name FROM customer),
+              dirty AS (SELECT id,
+                  substr(name, 1, 11)
+                    || chr(CAST(${graft.operators.PortableHash.duckSql(
+                      "'fz:' || CAST(id AS VARCHAR)")} % 26 + 97 AS INT))
+                    || substr(name, 13, 6) AS name
+                FROM master WHERE id % 7 = 0),
+              cand AS (SELECT d.id, d.name, m.id AS match_id,
+                  m.name AS match_name,
+                  CAST(levenshtein(d.name, m.name) AS BIGINT) AS dist
+                FROM dirty d JOIN master m
+                  ON length(d.name) = length(m.name)
+                  AND substr(d.name, $suffixStart, $suffixLen)
+                    = substr(m.name, $suffixStart, $suffixLen)
+                WHERE levenshtein(d.name, m.name) <= 2),
+              rk AS (SELECT *,
+                  row_number() OVER (PARTITION BY id
+                    ORDER BY dist, match_id) AS rk,
+                  CAST(count(*) OVER (PARTITION BY id) AS BIGINT)
+                    AS n_candidates
+                FROM cand)
+              SELECT id, name, match_id, match_name, dist, n_candidates
+              FROM rk WHERE rk = 1 ORDER BY id"""
+
+  /** The decontamination split: every 20th document plays the benchmark
+    * (eval) set, the rest is the corpus. Returns (corpus, benchmark).
+    */
+  private def evalSplit(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.filter(col("doc_id") % 20 =!= 0), docs.filter(col("doc_id") % 20 === 0))
+
+  /** `tk`(doc_id, t) tokens and `gr`(doc_id, gs) every 5-token gram of
+    * each document (a shorter text is one gram) — the grams the
+    * decontamination entries compare ([[Dedup.decontaminate]], n = 5).
+    */
+  private lazy val fiveGramCtes: String =
+    """tk AS (
+                SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
+                FROM documents),
+              gr AS (
+                SELECT doc_id,
+                  unnest([array_to_string(t[i:i+4], ' ')
+                          for i in range(1, greatest(len(t)-4, 1) + 1)]) AS gs
+                FROM tk)"""
+
+  /** [[fiveGramCtes]] plus the Bloom probe of [[Dedup.decontaminateBloom]]:
+    * `gh` portable gram hashes, three bit positions per gram in a 2^20-bit
+    * filter of the benchmark grams (`bpos`), and `hit`(doc_id, g) the
+    * corpus grams whose three positions are all set.
+    */
+  private lazy val bloomHitCtes: String =
+    s"""$fiveGramCtes,
+              gh AS (SELECT DISTINCT doc_id,
+                  ${graft.operators.PortableHash.duckSql("gs")} AS g FROM gr),
+              pr(p) AS (VALUES (1000003), (1000033), (1000037)),
+              bpos AS (SELECT DISTINCT (g % p) % 1048576 AS pos
+                FROM gh, pr WHERE doc_id % 20 = 0),
+              cpos AS (SELECT doc_id, g, (g % p) % 1048576 AS pos
+                FROM gh, pr WHERE doc_id % 20 <> 0),
+              hit AS (SELECT doc_id, g FROM cpos
+                WHERE pos IN (SELECT pos FROM bpos)
+                GROUP BY doc_id, g HAVING count(*) = 3)"""
+
+  /** The SemDeDup drop rule over `assign`(id, cluster, csim) and
+    * `emb`(id, e): rank each cluster's members by (csim, id) ascending and
+    * drop a member within cosine 0.3 of a lower-ranked one
+    * ([[Similarity.semDedup]]); the final SELECT of both SemDeDup oracles.
+    */
+  private val semDedupDropSql =
+    """rk AS (SELECT id, cluster, csim,
+                  CAST(row_number() OVER (PARTITION BY cluster
+                    ORDER BY csim ASC, id ASC) AS INT) AS "rank"
+                FROM assign),
+              drp AS (SELECT DISTINCT a.id FROM rk a JOIN rk b
+                  ON a.cluster = b.cluster AND b."rank" < a."rank"
+                JOIN emb ea ON ea.id = a.id JOIN emb eb ON eb.id = b.id
+                WHERE round(list_cosine_similarity(ea.e, eb.e), 6) >= 0.3)
+              SELECT r.id AS vec_id, r.cluster, r."rank",
+                (d.id IS NOT NULL) AS dropped
+              FROM rk r LEFT JOIN drp d ON d.id = r.id
+              ORDER BY vec_id"""
+
+  /** DSIR importance weights as DuckDB CTEs ([[graft.operators.Sampling.dsirLogWeights]]
+    * with the German documents as the target): unigram and bigram features
+    * hashed into 1,024 buckets, add-one smoothed target/raw log ratios per
+    * bucket, and `lw`(id, logw) each document's 4-dp summed log weight.
+    */
+  private lazy val dsirLogWeightCtes: String =
+    s"""arr AS (SELECT CAST(doc_id AS BIGINT) AS id, lang,
+                  regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+                FROM documents),
+              feats AS (SELECT id, lang,
+                  ${graft.operators.PortableHash.duckSql("f")} % 1024 AS b
+                FROM (
+                  SELECT id, lang, unnest(t) AS f FROM arr
+                  UNION ALL
+                  SELECT id, lang,
+                    unnest(list_transform(range(1, len(t)),
+                      i -> t[i] || ' ' || t[i + 1])) AS f
+                  FROM arr)),
+              tgt AS (SELECT b, count(*) AS ct FROM feats
+                WHERE lang = 'de' GROUP BY b),
+              rw AS (SELECT b, count(*) AS cr FROM feats GROUP BY b),
+              tt AS (SELECT sum(ct) AS t FROM tgt),
+              rt AS (SELECT sum(cr) AS r FROM rw),
+              ratio AS (SELECT b,
+                  ln(CAST(COALESCE(ct, 0) + 1 AS DOUBLE) / ((SELECT t FROM tt) + 1024)) -
+                  ln(CAST(COALESCE(cr, 0) + 1 AS DOUBLE) / ((SELECT r FROM rt) + 1024))
+                    AS lr
+                FROM tgt FULL OUTER JOIN rw USING (b)),
+              lw AS (SELECT id, round(sum(lr), 4) AS logw
+                FROM feats JOIN ratio USING (b) GROUP BY id)"""
 
   /** DuckDB oracle shared by the two sessionization entries
     * (q_stream_sessionize over flatMapGroupsWithState,
@@ -119,6 +497,103 @@ object QueryCatalog {
       .map { case ((a, bb), i) => s"($i, $a, $bb)" }
       .grouped(8).map(_.mkString(", ")).mkString(",\n                  ")
 
+  /** Every document as an `(id, text)` relation, id a BIGINT. */
+  private val docsRel = "(SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents) docs"
+
+  /** `tk$p`(id, t): the lower-cased, trimmed, whitespace-split tokens of
+    * each `(id, text)` row of the relation `src` — the token stream every
+    * shingle, gram and fingerprint oracle starts from.
+    */
+  private def tokenCte(src: String, p: String): String =
+    s"""tk$p AS (SELECT id,
+                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t FROM $src)"""
+
+  /** The 3-token shingle list of a token array `t`; a text of fewer than
+    * 3 tokens is one shingle ([[Dedup.shinglesAll]]'s word shingles).
+    */
+  private val shingleListSql =
+    """CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
+                  END"""
+
+  /** [[tokenCte]] plus `sh$p`(id, s), each row's distinct shingle set. */
+  private def shingleCtes(src: String, p: String): String =
+    s"""${tokenCte(src, p)},
+              sh$p AS (SELECT id, list_distinct(
+                  $shingleListSql) AS s FROM tk$p)"""
+
+  /** `sz`(id, sz) set sizes and `p`(id, g) postings of the shingle-set
+    * CTE `sh`.
+    */
+  private def shinglePostingCtes(sh: String): String =
+    s"""sz AS (SELECT id, len(s) AS sz FROM $sh),
+              p AS (SELECT id, unnest(s) AS g FROM $sh)"""
+
+  /** Exact Jaccard over the `p`/`sz` postings: `common`(id_a, id_b, inter)
+    * by posting self-join, and `jac`(id_a, id_b, jaccard) the 4-dp
+    * similarities at or above `threshold` ([[Dedup.ngramJaccard]]).
+    */
+  private def exactJaccardCtes(threshold: Double): String =
+    s"""common AS (
+                SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS DOUBLE) AS inter
+                FROM p a JOIN p b ON a.g = b.g AND a.id < b.id
+                GROUP BY 1, 2),
+              jac AS (SELECT id_a, id_b,
+                  round(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
+                FROM common JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
+                WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= $threshold)"""
+
+  /** Brute-force containment oracle shared by q_dedup_containment and its
+    * gated twin (the gate is cost-only below the ceiling): every pair's
+    * |∩| / |smaller set| over the distinct string shingles, at t = 0.3.
+    */
+  private lazy val containmentOracleSql: String =
+    s"""WITH ${shingleCtes(docsRel, "")},
+              ${shinglePostingCtes("sh")},
+              pairs AS (
+                SELECT a.id AS id_small, b.id AS id_big, count(*) AS inter
+                FROM p a JOIN p b ON a.g = b.g AND a.id <> b.id
+                JOIN sz sa ON sa.id = a.id JOIN sz sb ON sb.id = b.id
+                WHERE sa.sz < sb.sz OR (sa.sz = sb.sz AND a.id < b.id)
+                GROUP BY 1, 2)
+              SELECT id_small, id_big,
+                round(inter / CAST(sa.sz AS DOUBLE), 4) AS containment
+              FROM pairs JOIN sz sa ON sa.id = id_small
+              WHERE round(inter / CAST(sa.sz AS DOUBLE), 4) >= 0.3
+              ORDER BY id_small, id_big"""
+
+  /** Winnowing (MOSS) fingerprints as DuckDB CTEs over the token CTE
+    * `tk$p` ([[Dedup.winnowPostings]] at k = 4, w = 8): `g$p`(id, gh) the
+    * portable hash of every 4-token gram, `win$p`(id, fps) the sorted
+    * distinct minima of every 8-hash window (same short-document clamps
+    * as the Spark slices), `fpx$p`(id, fp) one row per fingerprint.
+    */
+  private def winnowCtes(p: String): String =
+    s"""g$p AS (SELECT id,
+                  [${graft.operators.PortableHash.duckSql(
+                    "array_to_string(t[i:i+3], ' ')")}
+                   FOR i IN range(1, greatest(len(t) - 3, 1) + 1)] AS gh
+                FROM tk$p),
+              win$p AS (SELECT id, list_sort(list_distinct(
+                  [list_min(gh[j:j+7])
+                   FOR j IN range(1, greatest(len(gh) - 7, 1) + 1)])) AS fps
+                FROM g$p),
+              fpx$p AS (SELECT id, unnest(fps) AS fp FROM win$p)"""
+
+  /** MOSS near-dup pairs ([[Dedup.winnowNearDupPairs]]) as DuckDB CTEs:
+    * the documents' fingerprints, the df cap (2..50 documents) and
+    * `prs`(id_a, id_b, shared) for pairs sharing at least 2 fingerprints.
+    */
+  private lazy val winnowPairCtes: String =
+    s"""${tokenCte(docsRel, "")},
+              ${winnowCtes("")},
+              keep AS (SELECT fp FROM fpx GROUP BY fp
+                HAVING count(*) BETWEEN 2 AND 50),
+              posting AS (SELECT id, fp FROM fpx SEMI JOIN keep USING (fp)),
+              prs AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS shared
+                FROM posting a JOIN posting b ON a.fp = b.fp AND a.id < b.id
+                GROUP BY 1, 2 HAVING count(*) >= 2)"""
+
   /** Portable minhash sketch CTE chain for a `(id, text)` source CTE named
     * `src`, suffixed `p`: tokenize → 3-gram shingles → md5-60bit hashes mod
     * 2^31−1 (hs$p.hv) → per-family min signatures (sig_$p) → modular band
@@ -126,12 +601,7 @@ object QueryCatalog {
     * ([[affineFamValues]]) first.
     */
   private def sketchCtes(src: String, p: String, r: Int): String =
-    s"""tk$p AS (SELECT id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t FROM $src),
-              sh$p AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s FROM tk$p),
+    s"""${shingleCtes(src, p)},
               hs$p AS (SELECT id, list_distinct(list_transform(s,
                   g -> CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) % 2147483647))
                   AS hv FROM sh$p),
@@ -141,6 +611,16 @@ object QueryCatalog {
                   (acc, v) -> (acc * 1000003 + v) % 2147483647) AS bh FROM (
                   SELECT id, i // $r AS band, list(sig ORDER BY i) AS sl
                   FROM sig_$p GROUP BY id, i // $r))"""
+
+  /** The derived re-crawl batch as an `(id, text)` query: ids +1000, every
+    * 3rd document truncated to its first half (Jaccard ~1/3 to its base).
+    */
+  private val recrawlBatchSql =
+    """SELECT CAST(doc_id + 1000 AS BIGINT) AS id,
+                  CASE WHEN doc_id % 3 = 0
+                    THEN substr(text, 1, CAST(floor(length(text) / 2) AS INT))
+                    ELSE text END AS text
+                FROM documents"""
 
   /** Oracle for incremental near-dup dedup: base signatures from
     * `documents`, a derived re-crawl batch (ids +1000, every 3rd doc
@@ -155,11 +635,7 @@ object QueryCatalog {
     s"""WITH fam(i, a, b) AS (VALUES
                   $fam),
               baseq AS (SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents),
-              newq AS (SELECT CAST(doc_id + 1000 AS BIGINT) AS id,
-                  CASE WHEN doc_id % 3 = 0
-                    THEN substr(text, 1, CAST(floor(length(text) / 2) AS INT))
-                    ELSE text END AS text
-                FROM documents),
+              newq AS ($recrawlBatchSql),
               ${sketchCtes("baseq", "b", r)},
               ${sketchCtes("newq", "n", r)},
               cand AS (SELECT DISTINCT n.id AS new_id, b.id AS base_id
@@ -191,11 +667,7 @@ object QueryCatalog {
     s"""WITH RECURSIVE fam(i, a, b) AS (VALUES
                   ${affineFamValues(numHashes)}),
               baseq AS (SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents),
-              newa AS (SELECT CAST(doc_id + 1000 AS BIGINT) AS id,
-                  CASE WHEN doc_id % 3 = 0
-                    THEN substr(text, 1, CAST(floor(length(text) / 2) AS INT))
-                    ELSE text END AS text
-                FROM documents),
+              newa AS ($recrawlBatchSql),
               newq AS (
                 SELECT id, text FROM newa
                 UNION ALL
@@ -218,14 +690,7 @@ object QueryCatalog {
                 WHERE round(CAST(len(list_intersect(ha.hv, hb.hv)) AS DOUBLE)
                     / (len(ha.hv) + len(hb.hv)
                        - len(list_intersect(ha.hv, hb.hv))), 4) >= $threshold),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM ibp
-                UNION SELECT id_b, id_a FROM ibp),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, rc.lbl FROM reach rc JOIN edges e ON e.src = rc.node),
-              comp AS (SELECT node AS id, min(lbl) AS component
-                FROM reach GROUP BY node),
+              ${minLabelClosureCtes("ibp")},
               surv AS (SELECT e.id, e.text FROM exn e
                 ANTI JOIN (SELECT id FROM comp WHERE component < id) l
                 ON e.id = l.id),
@@ -255,9 +720,7 @@ object QueryCatalog {
     val keeperJoin =
       if (strict) "k.id = n.id AND k.ti = n.ti AND k.gram = n.gram"
       else "k.id = n.id AND k.ti = n.ti"
-    s"""WITH tk AS (SELECT CAST(doc_id AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
+    s"""WITH ${tokenCte(docsRel, "")},
               g AS (SELECT id, r.pos,
                   array_to_string(t[r.pos:r.pos+4], ' ') AS gram
                 FROM tk, LATERAL unnest(range(1, len(t) - 3)) AS r(pos)
@@ -289,6 +752,31 @@ object QueryCatalog {
               ORDER BY doc_id"""
   }
 
+  /** Round 0 of both BPE chains: `w0`(w, freq) the word frequencies and
+    * `v0`(w, freq, s) each word as characters plus the `</w>` marker.
+    */
+  private val bpeWordCtes =
+    """w0 AS MATERIALIZED (SELECT x.w AS w, count(*) AS freq FROM (
+                  SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS w
+                  FROM documents) x GROUP BY 1),
+              v0 AS MATERIALIZED (SELECT w, freq,
+                  list_append([substr(w, i, 1) FOR i IN range(1, length(w) + 1)],
+                    '</w>') AS s
+                FROM w0)"""
+
+  /** Round `r`'s greedy left-to-right apply over `e$r`(w, i, mt): runs of
+    * consecutive matches (`g$r`), a merge starting at every even offset of
+    * a run (`o$r`) and the positions those merges consume (`c$r`).
+    */
+  private def bpeRunCtes(r: Int): String =
+    s"""g$r AS (SELECT *, i - row_number()
+                  OVER (PARTITION BY w, mt ORDER BY i) AS grp FROM e$r),
+              o$r AS (SELECT *, CASE WHEN mt THEN
+                  (i - min(i) OVER (PARTITION BY w, mt, grp)) % 2 = 0
+                  ELSE FALSE END AS mstart FROM g$r),
+              c$r AS (SELECT *, coalesce(lag(mstart)
+                  OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed FROM o$r)"""
+
   /** The BPE training chain as DuckDB CTEs: word-freq table, character
     * symbol arrays, then `rounds` unrolled merge rounds — weighted pair
     * counts (p), total-order argmax (m), and the greedy left-to-right
@@ -311,26 +799,14 @@ object QueryCatalog {
                     AND s[i] = (SELECT a FROM m$r)
                     AND s[i + 1] = (SELECT b FROM m$r), FALSE) AS mt
                 FROM v${r - 1}, LATERAL unnest(range(1, len(s) + 1)) t(i)),
-              g$r AS (SELECT *, i - row_number()
-                  OVER (PARTITION BY w, mt ORDER BY i) AS grp FROM e$r),
-              o$r AS (SELECT *, CASE WHEN mt THEN
-                  (i - min(i) OVER (PARTITION BY w, mt, grp)) % 2 = 0
-                  ELSE FALSE END AS mstart FROM g$r),
-              c$r AS (SELECT *, coalesce(lag(mstart)
-                  OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed FROM o$r),
+              ${bpeRunCtes(r)},
               v$r AS MATERIALIZED (SELECT w, any_value(freq) AS freq,
                   list(CASE WHEN mstart THEN sym || (SELECT b FROM m$r)
                        ELSE sym END ORDER BY i)
                     FILTER (WHERE NOT consumed) AS s
                 FROM c$r GROUP BY w)"""
     }.mkString(",\n              ")
-    s"""w0 AS MATERIALIZED (SELECT x.w AS w, count(*) AS freq FROM (
-                  SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-                  FROM documents) x GROUP BY 1),
-              v0 AS MATERIALIZED (SELECT w, freq,
-                  list_append([substr(w, i, 1) FOR i IN range(1, length(w) + 1)],
-                    '</w>') AS s
-                FROM w0),
+    s"""$bpeWordCtes,
               $rs"""
   }
 
@@ -366,25 +842,13 @@ object QueryCatalog {
                   ru.b AS rb, ru.a IS NOT NULL AS mt
                 FROM x$r x LEFT JOIN acc$r ru
                   ON x.sym = ru.a AND x.nxt = ru.b),
-              g$r AS (SELECT *, i - row_number()
-                  OVER (PARTITION BY w, mt ORDER BY i) AS grp FROM e$r),
-              o$r AS (SELECT *, CASE WHEN mt THEN
-                  (i - min(i) OVER (PARTITION BY w, mt, grp)) % 2 = 0
-                  ELSE FALSE END AS mstart FROM g$r),
-              c$r AS (SELECT *, coalesce(lag(mstart)
-                  OVER (PARTITION BY w ORDER BY i), FALSE) AS consumed FROM o$r),
+              ${bpeRunCtes(r)},
               v$r AS MATERIALIZED (SELECT w, any_value(freq) AS freq,
                   list(CASE WHEN mstart THEN sym || rb ELSE sym END ORDER BY i)
                     FILTER (WHERE NOT consumed) AS s
                 FROM c$r GROUP BY w)"""
     }.mkString(",\n              ")
-    s"""w0 AS MATERIALIZED (SELECT x.w AS w, count(*) AS freq FROM (
-                  SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
-                  FROM documents) x GROUP BY 1),
-              v0 AS MATERIALIZED (SELECT w, freq,
-                  list_append([substr(w, i, 1) FOR i IN range(1, length(w) + 1)],
-                    '</w>') AS s
-                FROM w0),
+    s"""$bpeWordCtes,
               $rs"""
   }
 
@@ -400,11 +864,7 @@ object QueryCatalog {
                 FROM edges e JOIN r${i - 1} r ON r.node = e.src
                 JOIN deg d ON d.src = e.src GROUP BY e.dst)"""
     }.mkString(",\n              ")
-    s"""WITH e0 AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              edges AS (SELECT src, dst FROM e0
-                UNION SELECT dst AS src, src AS dst FROM e0),
+    s"""WITH $coOrderEdgeCtes,
               deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
               nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
               r0 AS (SELECT src AS node,
@@ -455,6 +915,34 @@ object QueryCatalog {
                 FROM vals JOIN me ON me.g = vals.g),
               ${logHistMedianCtes("dm", "d", "ma", "mad")}"""
 
+  /** Min-label connected components of an undirected pair CTE
+    * `pairs`(id_a, id_b) as DuckDB CTEs: `edges` both directions, the
+    * recursive closure `reach`(node, lbl), and `comp`(id, component) =
+    * the least id reachable from each paired id — the labels
+    * [[Dedup.connectedComponents]] computes. The enclosing WITH must be
+    * RECURSIVE.
+    */
+  private def minLabelClosureCtes(pairs: String): String =
+    s"""edges AS (
+                SELECT id_a AS src, id_b AS dst FROM $pairs
+                UNION SELECT id_b, id_a FROM $pairs),
+              reach(node, lbl) AS (
+                SELECT src, src FROM edges
+                UNION
+                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
+              comp AS (SELECT node AS id, min(lbl) AS component
+                FROM reach GROUP BY node)"""
+
+  /** [[minLabelClosureCtes]] plus `cl`(id, component) over every
+    * document: a document with no pair is its own component (the
+    * left-join + coalesce of the cluster operators).
+    */
+  private def docComponentCtes(pairs: String): String =
+    s"""${minLabelClosureCtes(pairs)},
+              cl AS (SELECT d.id AS id, coalesce(c.component, d.id) AS component
+                FROM (SELECT CAST(doc_id AS BIGINT) AS id FROM documents) d
+                LEFT JOIN comp c ON c.id = d.id)"""
+
   private def minhashOracleSql(numHashes: Int, threshold: Double): String =
     s"""WITH ${minhashPairCtes(numHashes, threshold)}
               SELECT id_a, id_b, jaccard FROM mh_pairs ORDER BY id_a, id_b"""
@@ -466,20 +954,9 @@ object QueryCatalog {
     */
   private def minhashClustersOracleSql(numHashes: Int, threshold: Double): String =
     s"""WITH RECURSIVE ${minhashPairCtes(numHashes, threshold)},
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM mh_pairs
-                UNION SELECT id_b, id_a FROM mh_pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              comp AS (SELECT node AS id, min(lbl) AS component
-                FROM reach GROUP BY node)
-              SELECT d.id AS id, coalesce(c.component, d.id) AS component,
-                d.id = coalesce(c.component, d.id) AS keep
-              FROM (SELECT CAST(doc_id AS BIGINT) AS id FROM documents) d
-              LEFT JOIN comp c ON c.id = d.id
-              ORDER BY component, d.id"""
+              ${docComponentCtes("mh_pairs")}
+              SELECT id, component, id = component AS keep
+              FROM cl ORDER BY component, id"""
 
   /** Same clustering, weights = 1/|component| on the 6-dp grid — the
     * [[graft.operators.Dedup.clusterWeights]] soft-dedup policy.
@@ -487,18 +964,7 @@ object QueryCatalog {
   private def minhashClusterWeightsOracleSql(
       numHashes: Int, threshold: Double): String =
     s"""WITH RECURSIVE ${minhashPairCtes(numHashes, threshold)},
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM mh_pairs
-                UNION SELECT id_b, id_a FROM mh_pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              comp AS (SELECT node AS id, min(lbl) AS component
-                FROM reach GROUP BY node),
-              cl AS (SELECT d.id AS id, coalesce(c.component, d.id) AS component
-                FROM (SELECT CAST(doc_id AS BIGINT) AS id FROM documents) d
-                LEFT JOIN comp c ON c.id = d.id),
+              ${docComponentCtes("mh_pairs")},
               sz AS (SELECT component, count(*) AS cluster_size
                 FROM cl GROUP BY component)
               SELECT cl.id, cl.component, sz.cluster_size,
@@ -512,18 +978,7 @@ object QueryCatalog {
     */
   private def minhashKeepBestOracleSql(numHashes: Int, threshold: Double): String =
     s"""WITH RECURSIVE ${minhashPairCtes(numHashes, threshold)},
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM mh_pairs
-                UNION SELECT id_b, id_a FROM mh_pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              comp AS (SELECT node AS id, min(lbl) AS component
-                FROM reach GROUP BY node),
-              cl AS (SELECT d.id AS id, coalesce(c.component, d.id) AS component
-                FROM (SELECT CAST(doc_id AS BIGINT) AS id FROM documents) d
-                LEFT JOIN comp c ON c.id = d.id),
+              ${docComponentCtes("mh_pairs")},
               ql AS (SELECT CAST(doc_id AS BIGINT) AS id,
                   len(string_split_regex(trim(text), '\\s+')) AS q
                 FROM documents),
@@ -2476,29 +2931,21 @@ object QueryCatalog {
           .agg(count(lit(1)).as("n_names"), min("p_name").as("first_name"))
           .orderBy("entity")
       },
-      Some("""WITH RECURSIVE nameids AS (
+      Some(s"""WITH RECURSIVE nameids AS (
                 SELECT p_name, CAST(min(p_partkey) AS BIGINT) AS nid
                 FROM part GROUP BY p_name),
               names AS (
                 SELECT p_name, nid,
-                  regexp_extract(p_name, '[a-z]+$') AS blk FROM nameids),
+                  regexp_extract(p_name, '[a-z]+$$') AS blk FROM nameids),
               pairs AS (
                 SELECT a.nid AS id_a, b.nid AS id_b
                 FROM names a JOIN names b
                   ON a.blk = b.blk AND a.nid < b.nid
                 WHERE levenshtein(a.p_name, b.p_name) <= 3),
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              comp AS (SELECT node, min(lbl) AS component
-                FROM reach GROUP BY node)
+              ${minLabelClosureCtes("pairs")}
               SELECT coalesce(c.component, n.nid) AS entity,
                 count(*) AS n_names, min(n.p_name) AS first_name
-              FROM nameids n LEFT JOIN comp c ON c.node = n.nid
+              FROM nameids n LEFT JOIN comp c ON c.id = n.nid
               GROUP BY 1 ORDER BY entity""")),
 
     // residual-outlier detection on top of the per-key OLS fit: the
@@ -3013,26 +3460,11 @@ object QueryCatalog {
     // gated like Delta, COVERAGE §2a.)
     Q("q_orc_roundtrip",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft-orc-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        docs.write.mode("overwrite").orc(path)
-        s.read.orc(path)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("total_chars"),
-            // content-sensitive, order-insensitive: xor of doc text hashes
-            // (the repo's portable 60-bit family, so DuckDB re-derives it)
-            sum(pmod(graft.operators.PortableHash.portable60(md5(col("text"))),
-                lit(1000000007L)))
-              .as("text_hash_sum"))
-          .orderBy("lang")
+        val path = scratchPath("orc", dir)
+        t(s, dir, "documents").write.mode("overwrite").orc(path)
+        langTextStats(s.read.orc(path))
       },
-      Some(s"""SELECT lang, count(*) AS n_docs,
-                CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                CAST(sum(${graft.operators.PortableHash.duckSql("md5(text)")} % 1000000007) AS BIGINT)
-                  AS text_hash_sum
-              FROM documents GROUP BY lang ORDER BY lang""")),
+      Some(langTextStatsSql)),
 
     // JSONL source/sink roundtrip, driver-gated like q_orc_roundtrip: the
     // interchange format every corpus pipeline ingests. Spark writes the
@@ -3046,23 +3478,11 @@ object QueryCatalog {
     Q("q_jsonl_roundtrip",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft-jsonl-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+        val path = scratchPath("jsonl", dir)
         docs.write.mode("overwrite").json(path)
-        s.read.schema(docs.schema).json(path)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("total_chars"),
-            sum(pmod(graft.operators.PortableHash.portable60(md5(col("text"))),
-                lit(1000000007L)))
-              .as("text_hash_sum"))
-          .orderBy("lang")
+        langTextStats(s.read.schema(docs.schema).json(path))
       },
-      Some(s"""SELECT lang, count(*) AS n_docs,
-                CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                CAST(sum(${graft.operators.PortableHash.duckSql("md5(text)")} % 1000000007) AS BIGINT)
-                  AS text_hash_sum
-              FROM documents GROUP BY lang ORDER BY lang""")),
+      Some(langTextStatsSql)),
 
     // corrupt-record QUARANTINE on JSONL ingest — the crawl-robustness
     // path the roundtrip entry can't show: every doc_id % 7 == 0 line is
@@ -3074,8 +3494,7 @@ object QueryCatalog {
     Q("q_jsonl_quarantine",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft-jsonlq-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+        val path = scratchPath("jsonlq", dir)
         docs.select(col("doc_id"),
             to_json(struct(col("doc_id"), col("lang"), col("text"))).as("l"))
           .select(when(col("doc_id") % 7 === 0,
@@ -3088,15 +3507,11 @@ object QueryCatalog {
           .option("columnNameOfCorruptRecord", "_corrupt_record")
           .json(path)
           .groupBy(coalesce(col("lang"), lit("__quarantined")).as("lang_grp"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(pmod(graft.operators.PortableHash.portable60(md5(col("text"))),
-                lit(1000000007L)))
-              .as("text_hash_sum"))
+          .agg(count(lit(1)).as("n_docs"), textHashSum)
           .orderBy("lang_grp")
       },
       Some(s"""SELECT lang AS lang_grp, count(*) AS n_docs,
-                CAST(sum(${graft.operators.PortableHash.duckSql("md5(text)")} % 1000000007) AS BIGINT)
-                  AS text_hash_sum
+                $textHashSumSql
               FROM documents WHERE doc_id % 7 <> 0 GROUP BY lang
               UNION ALL
               SELECT '__quarantined', count(*), CAST(NULL AS BIGINT)
@@ -3111,23 +3526,12 @@ object QueryCatalog {
     Q("q_csv_roundtrip",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft-csv-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+        val path = scratchPath("csv", dir)
         docs.write.mode("overwrite").option("header", "true").csv(path)
-        s.read.schema(docs.schema).option("header", "true").csv(path)
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("total_chars"),
-            sum(pmod(graft.operators.PortableHash.portable60(md5(col("text"))),
-                lit(1000000007L)))
-              .as("text_hash_sum"))
-          .orderBy("lang")
+        langTextStats(
+          s.read.schema(docs.schema).option("header", "true").csv(path))
       },
-      Some(s"""SELECT lang, count(*) AS n_docs,
-                CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                CAST(sum(${graft.operators.PortableHash.duckSql("md5(text)")} % 1000000007) AS BIGINT)
-                  AS text_hash_sum
-              FROM documents GROUP BY lang ORDER BY lang""")),
+      Some(langTextStatsSql)),
 
     // bigram Stupid-Backoff surprisal in the CCNet shape: model trains on
     // 80% of docs, scores ALL docs, so held-out docs exercise the real
@@ -3214,31 +3618,16 @@ object QueryCatalog {
             round(col("true_pos").cast("double") / col("exact_pairs"), 4))
       },
       Some(s"""WITH ${minhashPairCtes(64, 0.5)},
-              xtk AS (SELECT doc_id AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
-              xsh AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s FROM xtk),
-              xsz AS (SELECT id, len(s) AS sz FROM xsh),
-              xp AS (SELECT id, unnest(s) AS g FROM xsh),
-              xcommon AS (
-                SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS DOUBLE) AS inter
-                FROM xp a JOIN xp b ON a.g = b.g AND a.id < b.id
-                GROUP BY 1, 2),
-              exact AS (
-                SELECT id_a, id_b FROM xcommon
-                JOIN xsz sa ON sa.id = id_a JOIN xsz sb ON sb.id = id_b
-                WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.5)
+              ${shinglePostingCtes("shm")},
+              ${exactJaccardCtes(0.5)}
               SELECT
-                (SELECT count(*) FROM exact) AS exact_pairs,
+                (SELECT count(*) FROM jac) AS exact_pairs,
                 (SELECT count(*) FROM mh_pairs) AS lsh_pairs,
-                (SELECT count(*) FROM mh_pairs SEMI JOIN exact USING (id_a, id_b))
+                (SELECT count(*) FROM mh_pairs SEMI JOIN jac USING (id_a, id_b))
                   AS true_pos,
-                round(CAST((SELECT count(*) FROM mh_pairs SEMI JOIN exact
+                round(CAST((SELECT count(*) FROM mh_pairs SEMI JOIN jac
                     USING (id_a, id_b)) AS DOUBLE)
-                  / (SELECT count(*) FROM exact), 4) AS recall""")),
+                  / (SELECT count(*) FROM jac), 4) AS recall""")),
 
     // portable token hashes (md5 top-64, two 32-bit halves) make the whole
     // path engine-replayable: the oracle recomputes per-bit majority votes,
@@ -3302,26 +3691,10 @@ object QueryCatalog {
     Q("q_dedup_ngram_jaccard",
       (s, dir) => Dedup.ngramJaccard(t(s, dir, "documents"), threshold = 0.15)
         .orderBy("id_a", "id_b"),
-      Some("""WITH tk AS (
-                SELECT doc_id AS id,
-                  regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-              sh AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s
-                FROM tk),
-              sz AS (SELECT id, len(s) AS sz FROM sh),
-              p AS (SELECT id, unnest(s) AS g FROM sh),
-              common AS (
-                SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS DOUBLE) AS inter
-                FROM p a JOIN p b ON a.g = b.g AND a.id < b.id
-                GROUP BY 1, 2)
-              SELECT id_a, id_b,
-                round(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
-              FROM common JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
-              WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.15
-              ORDER BY id_a, id_b""")),
+      Some(s"""WITH ${shingleCtes(docsRel, "")},
+              ${shinglePostingCtes("sh")},
+              ${exactJaccardCtes(0.15)}
+              SELECT id_a, id_b, jaccard FROM jac ORDER BY id_a, id_b""")),
 
     // asymmetric containment pairs (small-in-big subset detection). The
     // prefix candidate filter is lossless, so the oracle is plain brute
@@ -3329,28 +3702,7 @@ object QueryCatalog {
     Q("q_dedup_containment",
       (s, dir) => Dedup.containmentPairs(t(s, dir, "documents"), threshold = 0.3)
         .orderBy("id_small", "id_big"),
-      Some("""WITH tk AS (
-                SELECT doc_id AS id,
-                  regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-              sh AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s
-                FROM tk),
-              sz AS (SELECT id, len(s) AS sz FROM sh),
-              p AS (SELECT id, unnest(s) AS g FROM sh),
-              pairs AS (
-                SELECT a.id AS id_small, b.id AS id_big, count(*) AS inter
-                FROM p a JOIN p b ON a.g = b.g AND a.id <> b.id
-                JOIN sz sa ON sa.id = a.id JOIN sz sb ON sb.id = b.id
-                WHERE sa.sz < sb.sz OR (sa.sz = sb.sz AND a.id < b.id)
-                GROUP BY 1, 2)
-              SELECT id_small, id_big,
-                round(inter / CAST(sa.sz AS DOUBLE), 4) AS containment
-              FROM pairs JOIN sz sa ON sa.id = id_small
-              WHERE round(inter / CAST(sa.sz AS DOUBLE), 4) >= 0.3
-              ORDER BY id_small, id_big""")),
+      Some(containmentOracleSql)),
 
     // the PRODUCTION configuration of the same operator: the opt-in
     // candidate-volume ceiling (2e7) passes every driver scale (sf0.01
@@ -3365,28 +3717,7 @@ object QueryCatalog {
       (s, dir) => Dedup.containmentPairs(t(s, dir, "documents"),
           threshold = 0.3, maxExpectedCandidates = 2e7)
         .orderBy("id_small", "id_big"),
-      Some("""WITH tk AS (
-                SELECT doc_id AS id,
-                  regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-              sh AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s
-                FROM tk),
-              sz AS (SELECT id, len(s) AS sz FROM sh),
-              p AS (SELECT id, unnest(s) AS g FROM sh),
-              pairs AS (
-                SELECT a.id AS id_small, b.id AS id_big, count(*) AS inter
-                FROM p a JOIN p b ON a.g = b.g AND a.id <> b.id
-                JOIN sz sa ON sa.id = a.id JOIN sz sb ON sb.id = b.id
-                WHERE sa.sz < sb.sz OR (sa.sz = sb.sz AND a.id < b.id)
-                GROUP BY 1, 2)
-              SELECT id_small, id_big,
-                round(inter / CAST(sa.sz AS DOUBLE), 4) AS containment
-              FROM pairs JOIN sz sa ON sa.id = id_small
-              WHERE round(inter / CAST(sa.sz AS DOUBLE), 4) >= 0.3
-              ORDER BY id_small, id_big""")),
+      Some(containmentOracleSql)),
 
     // winnowing (MOSS) fingerprint selection: the oracle replays the
     // portable gram hashes and the window-min selection verbatim with
@@ -3396,21 +3727,9 @@ object QueryCatalog {
       (s, dir) => Dedup.winnowPostings(t(s, dir, "documents"))
         .select(col("id").as("doc_id"), col("fp"))
         .orderBy("doc_id", "fp"),
-      Some(s"""WITH tk AS (
-                SELECT CAST(doc_id AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
-              g AS (SELECT id,
-                  [${graft.operators.PortableHash.duckSql(
-                    "array_to_string(t[i:i+3], ' ')")}
-                   FOR i IN range(1, greatest(len(t) - 3, 1) + 1)] AS gh
-                FROM tk),
-              win AS (SELECT id, list_sort(list_distinct(
-                  [list_min(gh[j:j+7])
-                   FOR j IN range(1, greatest(len(gh) - 7, 1) + 1)])) AS fps
-                FROM g)
-              SELECT id AS doc_id, unnest(fps) AS fp FROM win
-              ORDER BY doc_id, fp""")),
+      Some(s"""WITH ${tokenCte(docsRel, "")},
+              ${winnowCtes("")}
+              SELECT id AS doc_id, fp FROM fpx ORDER BY doc_id, fp""")),
 
     // MOSS near-dup pairs over the winnowed fingerprints: df-capped
     // (ubiquitous fingerprints dropped pre-join, the ngramJaccard.maxDf
@@ -3419,27 +3738,8 @@ object QueryCatalog {
     Q("q_winnow_neardup",
       (s, dir) => Dedup.winnowNearDupPairs(t(s, dir, "documents"))
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH tk AS (
-                SELECT CAST(doc_id AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
-              g AS (SELECT id,
-                  [${graft.operators.PortableHash.duckSql(
-                    "array_to_string(t[i:i+3], ' ')")}
-                   FOR i IN range(1, greatest(len(t) - 3, 1) + 1)] AS gh
-                FROM tk),
-              win AS (SELECT id, list_sort(list_distinct(
-                  [list_min(gh[j:j+7])
-                   FOR j IN range(1, greatest(len(gh) - 7, 1) + 1)])) AS fps
-                FROM g),
-              fpx AS (SELECT id, unnest(fps) AS fp FROM win),
-              keep AS (SELECT fp FROM fpx GROUP BY fp
-                HAVING count(*) BETWEEN 2 AND 50),
-              posting AS (SELECT id, fp FROM fpx SEMI JOIN keep USING (fp))
-              SELECT a.id AS id_a, b.id AS id_b, count(*) AS shared
-              FROM posting a JOIN posting b ON a.fp = b.fp AND a.id < b.id
-              GROUP BY 1, 2 HAVING count(*) >= 2
-              ORDER BY id_a, id_b""")),
+      Some(s"""WITH $winnowPairCtes
+              SELECT id_a, id_b, shared FROM prs ORDER BY id_a, id_b""")),
 
     // winnow clusters: MOSS pairs fed through the min-label connected
     // components — the same (pairs → CC → singletons join back) reduction
@@ -3458,38 +3758,9 @@ object QueryCatalog {
             coalesce(col("component"), col("id")).as("component"))
           .orderBy("component", "id")
       },
-      Some(s"""WITH RECURSIVE tk AS (
-                SELECT CAST(doc_id AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
-              g AS (SELECT id,
-                  [${graft.operators.PortableHash.duckSql(
-                    "array_to_string(t[i:i+3], ' ')")}
-                   FOR i IN range(1, greatest(len(t) - 3, 1) + 1)] AS gh
-                FROM tk),
-              win AS (SELECT id, list_sort(list_distinct(
-                  [list_min(gh[j:j+7])
-                   FOR j IN range(1, greatest(len(gh) - 7, 1) + 1)])) AS fps
-                FROM g),
-              fpx AS (SELECT id, unnest(fps) AS fp FROM win),
-              keep AS (SELECT fp FROM fpx GROUP BY fp
-                HAVING count(*) BETWEEN 2 AND 50),
-              posting AS (SELECT id, fp FROM fpx SEMI JOIN keep USING (fp)),
-              prs AS (SELECT a.id AS id_a, b.id AS id_b
-                FROM posting a JOIN posting b ON a.fp = b.fp AND a.id < b.id
-                GROUP BY 1, 2 HAVING count(*) >= 2),
-              edges AS (SELECT id_a AS src, id_b AS dst FROM prs
-                UNION SELECT id_b, id_a FROM prs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              comp AS (SELECT node AS id, min(lbl) AS component
-                FROM reach GROUP BY node)
-              SELECT d.id AS id, coalesce(c.component, d.id) AS component
-              FROM (SELECT CAST(doc_id AS BIGINT) AS id FROM documents) d
-              LEFT JOIN comp c ON c.id = d.id
-              ORDER BY component, id""")),
+      Some(s"""WITH RECURSIVE $winnowPairCtes,
+              ${docComponentCtes("prs")}
+              SELECT id, component FROM cl ORDER BY component, id""")),
 
     // incremental winnow probe: re-crawl batch (ids +1000, every 3rd doc
     // truncated to its first half — the q_ingest_neardup fixture shape)
@@ -3507,40 +3778,14 @@ object QueryCatalog {
         Dedup.winnowIncremental(newBatch, base)
           .orderBy("new_id", "base_id")
       },
-      Some(s"""WITH bt AS (
-                SELECT CAST(doc_id AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                FROM documents),
-              bg AS (SELECT id,
-                  [${graft.operators.PortableHash.duckSql(
-                    "array_to_string(t[i:i+3], ' ')")}
-                   FOR i IN range(1, greatest(len(t) - 3, 1) + 1)] AS gh
-                FROM bt),
-              bw AS (SELECT id, list_sort(list_distinct(
-                  [list_min(gh[j:j+7])
-                   FOR j IN range(1, greatest(len(gh) - 7, 1) + 1)])) AS fps
-                FROM bg),
-              bfp AS (SELECT id, unnest(fps) AS fp FROM bw),
-              keep AS (SELECT fp FROM bfp GROUP BY fp HAVING count(*) <= 50),
-              nt AS (SELECT CAST(doc_id + 1000 AS BIGINT) AS id,
-                  regexp_split_to_array(lower(trim(
-                    CASE WHEN doc_id % 3 = 0
-                    THEN substring(text, 1, CAST(floor(length(text) / 2) AS INT))
-                    ELSE text END)), '\\s+') AS t
-                FROM documents),
-              ng AS (SELECT id,
-                  [${graft.operators.PortableHash.duckSql(
-                    "array_to_string(t[i:i+3], ' ')")}
-                   FOR i IN range(1, greatest(len(t) - 3, 1) + 1)] AS gh
-                FROM nt),
-              nw AS (SELECT id, list_sort(list_distinct(
-                  [list_min(gh[j:j+7])
-                   FOR j IN range(1, greatest(len(gh) - 7, 1) + 1)])) AS fps
-                FROM ng),
-              nfp AS (SELECT id, unnest(fps) AS fp FROM nw)
+      Some(s"""WITH ${tokenCte(docsRel, "b")},
+              ${winnowCtes("b")},
+              keep AS (SELECT fp FROM fpxb GROUP BY fp HAVING count(*) <= 50),
+              ${tokenCte(s"($recrawlBatchSql) nb", "n")},
+              ${winnowCtes("n")}
               SELECT n.id AS new_id, b.id AS base_id, count(*) AS shared
-              FROM nfp n
-              JOIN (SELECT id, fp FROM bfp SEMI JOIN keep USING (fp)) b
+              FROM fpxn n
+              JOIN (SELECT id, fp FROM fpxb SEMI JOIN keep USING (fp)) b
                 ON n.fp = b.fp
               GROUP BY 1, 2 HAVING count(*) >= 2
               ORDER BY new_id, base_id""")),
@@ -3635,34 +3880,11 @@ object QueryCatalog {
       (s, dir) => Dedup.connectedComponentsStar(
           Dedup.ngramJaccard(t(s, dir, "documents"), threshold = 0.15))
         .orderBy("id"),
-      Some("""WITH RECURSIVE tk AS (
-                SELECT doc_id AS id,
-                  regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-              sh AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s
-                FROM tk),
-              sz AS (SELECT id, len(s) AS sz FROM sh),
-              p AS (SELECT id, unnest(s) AS g FROM sh),
-              common AS (
-                SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS DOUBLE) AS inter
-                FROM p a JOIN p b ON a.g = b.g AND a.id < b.id
-                GROUP BY 1, 2),
-              pairs AS (
-                SELECT id_a, id_b
-                FROM common JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
-                WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.15),
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-              SELECT node AS id, min(lbl) AS component
-              FROM reach GROUP BY node ORDER BY id""")),
+      Some(s"""WITH RECURSIVE ${shingleCtes(docsRel, "")},
+              ${shinglePostingCtes("sh")},
+              ${exactJaccardCtes(0.15)},
+              ${minLabelClosureCtes("jac")}
+              SELECT id, component FROM comp ORDER BY id""")),
 
     // the candidate-bound regime's documented escape hatch, driver-visible
     // (BENCH_SF10.md note 2): at t = 0.15 the All-Pairs prefix keeps ~85%
@@ -3675,37 +3897,15 @@ object QueryCatalog {
       (s, dir) => Dedup.connectedComponentsStar(
           Dedup.ngramJaccard(t(s, dir, "documents"), threshold = 0.15, maxDf = 4))
         .orderBy("id"),
-      Some("""WITH RECURSIVE tk AS (
-                SELECT doc_id AS id,
-                  regexp_split_to_array(lower(trim(text)), '\s+') AS t
-                FROM documents),
-              sh AS (SELECT id, list_distinct(
-                  CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]
-                  END) AS s
-                FROM tk),
+      Some(s"""WITH RECURSIVE ${shingleCtes(docsRel, "")},
               p0 AS (SELECT id, unnest(s) AS g FROM sh),
               gdf AS (SELECT g, count(*) AS df FROM p0 GROUP BY g),
               p AS (SELECT p0.id, p0.g FROM p0 JOIN gdf USING (g)
                 WHERE df <= 4),
               sz AS (SELECT id, count(*) AS sz FROM p GROUP BY id),
-              common AS (
-                SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS DOUBLE) AS inter
-                FROM p a JOIN p b ON a.g = b.g AND a.id < b.id
-                GROUP BY 1, 2),
-              pairs AS (
-                SELECT id_a, id_b
-                FROM common JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
-                WHERE round(inter / (sa.sz + sb.sz - inter), 4) >= 0.15),
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION SELECT id_b, id_a FROM pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
-              SELECT node AS id, min(lbl) AS component
-              FROM reach GROUP BY node ORDER BY id""")),
+              ${exactJaccardCtes(0.15)},
+              ${minLabelClosureCtes("jac")}
+              SELECT id, component FROM comp ORDER BY id""")),
 
     // incremental ingest dedup: a simulated re-crawl batch (ids shifted by
     // 1000; every 3rd doc edited) anti-joined against the existing corpus
@@ -3866,17 +4066,8 @@ object QueryCatalog {
     // bare 0.85 as DECIMAL; 1 - 0.85 must be the IEEE subtraction Spark
     // performs, not an exact decimal 0.15)
     Q("q_pagerank",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.operators.GraphRank.pageRank(edges, iterations = 8)
-          .orderBy("node")
-      },
+      (s, dir) => graft.operators.GraphRank
+        .pageRank(coOrderEdges(s, dir), iterations = 8).orderBy("node"),
       Some(pagerankOracleSql)),
 
     // the BUDGET-GATED configuration of the same pageRank: the caller
@@ -3889,47 +4080,20 @@ object QueryCatalog {
     // BENCH_SF10 addendum 40's 58-minute silent timeout. Gate is
     // cost-only below the ceiling: identical results, same oracle.
     Q("q_pagerank_gated",
-      (s, dir) => {
-        val liT = t(s, dir, "lineitem")
-        val li = liT.select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.operators.GraphRank.pageRank(edges, iterations = 8,
-            maxEdgeScanRows = 3e9, estimatedEdges = Some(2L * liT.count()))
-          .orderBy("node")
-      },
+      (s, dir) => graft.operators.GraphRank.pageRank(coOrderEdges(s, dir),
+          iterations = 8, maxEdgeScanRows = 3e9,
+          estimatedEdges = Some(2L * t(s, dir, "lineitem").count()))
+        .orderBy("node"),
       Some(pagerankOracleSql)),
 
-    // synchronous label propagation over the same co-order graph: 4 fixed
-    // rounds, majority label with min-label ties — integer state, so the
-    // oracle unrolls the rounds with no float grid at all
     // deterministic negative sampling for link prediction: per node, 3
     // hash-drawn non-edges (real-node semi-join, edge anti-join, first-3
     // in draw order) — the oracle replays every md5 draw, both joins,
     // and the windowed cut
     Q("q_negative_samples",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.operators.GraphRank.negativeSamples(edges, k = 3)
-          .orderBy("src", "draw")
-      },
-      Some(s"""WITH pairs AS MATERIALIZED (
-                SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              edges AS MATERIALIZED (
-                SELECT DISTINCT src, dst FROM (
-                  SELECT src, dst FROM pairs
-                  UNION ALL SELECT dst AS src, src AS dst FROM pairs)),
+      (s, dir) => graft.operators.GraphRank
+        .negativeSamples(coOrderEdges(s, dir), k = 3).orderBy("src", "draw"),
+      Some(s"""WITH $coOrderEdgeCtes,
               nodes AS MATERIALIZED (
                 SELECT DISTINCT src AS node FROM edges
                 UNION SELECT DISTINCT dst FROM edges),
@@ -3983,13 +4147,7 @@ object QueryCatalog {
     // (MATERIALIZED, the kCore lesson) and must agree node-for-node
     Q("q_graph_bfs",
       (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = coOrderEdges(s, dir)
         val landmarks = edges.select(col("src").as("node"))
           .distinct().orderBy("node").limit(2)
         graft.operators.GraphRank.multiSourceBfs(edges, landmarks, maxHops = 4)
@@ -4003,13 +4161,7 @@ object QueryCatalog {
               d$h AS MATERIALIZED (SELECT * FROM d${h - 1}
                 UNION ALL SELECT node, $h AS dist FROM f$h)"""
         }.mkString(",\n              ")
-        s"""WITH pairs AS MATERIALIZED (
-                SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              edges AS MATERIALIZED (
-                SELECT DISTINCT src, dst FROM (
-                  SELECT src, dst FROM pairs
-                  UNION ALL SELECT dst AS src, src AS dst FROM pairs)),
+        s"""WITH $coOrderEdgeCtes,
               srcs AS MATERIALIZED (SELECT DISTINCT src AS node
                 FROM edges ORDER BY node LIMIT 2),
               d0 AS MATERIALIZED (SELECT node, 0 AS dist FROM srcs),
@@ -4018,18 +4170,12 @@ object QueryCatalog {
               SELECT node, dist FROM d4 ORDER BY node"""
       }),
 
+    // synchronous label propagation over the same co-order graph: 4 fixed
+    // rounds, majority label with min-label ties — integer state, so the
+    // oracle unrolls the rounds with no float grid at all
     Q("q_label_propagation",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.operators.GraphRank.labelPropagation(edges, iterations = 4)
-          .orderBy("node")
-      },
+      (s, dir) => graft.operators.GraphRank
+        .labelPropagation(coOrderEdges(s, dir), iterations = 4).orderBy("node"),
       Some {
         val iters = (1 to 4).map { i =>
           s"""l$i AS (SELECT node, label FROM (
@@ -4039,11 +4185,7 @@ object QueryCatalog {
                 FROM edges e JOIN l${i - 1} l ON l.node = e.src
                 GROUP BY e.dst, l.label) WHERE rn = 1)"""
         }.mkString(",\n              ")
-        s"""WITH e0 AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              edges AS (SELECT src, dst FROM e0
-                UNION SELECT dst AS src, src AS dst FROM e0),
+        s"""WITH $coOrderEdgeCtes,
               l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
               $iters
               SELECT node, label FROM l4 ORDER BY node"""
@@ -4324,23 +4466,12 @@ object QueryCatalog {
     // docs sharing >=1 distinct 5-gram with it are flagged with hit counts
     Q("q_decontaminate",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-        Dedup.decontaminate(
-            docs.filter(col("doc_id") % 20 =!= 0),
-            docs.filter(col("doc_id") % 20 === 0),
-            n = 5)
-          .orderBy("id")
+        val (corp, bench) = evalSplit(t(s, dir, "documents"))
+        Dedup.decontaminate(corp, bench, n = 5).orderBy("id")
       },
-      Some("""WITH tk AS (
-                SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-                FROM documents),
-              gr AS (
-                SELECT doc_id,
-                  unnest([array_to_string(t[i:i+4], ' ')
-                          for i in range(1, greatest(len(t)-4, 1) + 1)]) AS g
-                FROM tk),
-              bench AS (SELECT DISTINCT g FROM gr WHERE doc_id % 20 = 0),
-              corp AS (SELECT DISTINCT doc_id, g FROM gr WHERE doc_id % 20 <> 0)
+      Some(s"""WITH $fiveGramCtes,
+              bench AS (SELECT DISTINCT gs AS g FROM gr WHERE doc_id % 20 = 0),
+              corp AS (SELECT DISTINCT doc_id, gs AS g FROM gr WHERE doc_id % 20 <> 0)
               SELECT CAST(corp.doc_id AS BIGINT) AS id, count(*) AS n_hits
               FROM corp WHERE g IN (SELECT g FROM bench)
               GROUP BY 1 ORDER BY id""")),
@@ -4352,31 +4483,10 @@ object QueryCatalog {
     // oracle rebuilds the filter and replays every probe
     Q("q_decontaminate_bloom",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-        Dedup.decontaminateBloom(
-            docs.filter(col("doc_id") % 20 =!= 0),
-            docs.filter(col("doc_id") % 20 === 0),
-            n = 5)
-          .orderBy("id")
+        val (corp, bench) = evalSplit(t(s, dir, "documents"))
+        Dedup.decontaminateBloom(corp, bench, n = 5).orderBy("id")
       },
-      Some(s"""WITH tk AS (
-                SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-                FROM documents),
-              gr AS (
-                SELECT doc_id,
-                  unnest([array_to_string(t[i:i+4], ' ')
-                          for i in range(1, greatest(len(t)-4, 1) + 1)]) AS gs
-                FROM tk),
-              gh AS (SELECT DISTINCT doc_id,
-                  ${graft.operators.PortableHash.duckSql("gs")} AS g FROM gr),
-              pr(p) AS (VALUES (1000003), (1000033), (1000037)),
-              bpos AS (SELECT DISTINCT (g % p) % 1048576 AS pos
-                FROM gh, pr WHERE doc_id % 20 = 0),
-              cpos AS (SELECT doc_id, g, (g % p) % 1048576 AS pos
-                FROM gh, pr WHERE doc_id % 20 <> 0),
-              hit AS (SELECT doc_id, g FROM cpos
-                WHERE pos IN (SELECT pos FROM bpos)
-                GROUP BY doc_id, g HAVING count(*) = 3)
+      Some(s"""WITH $bloomHitCtes
               SELECT CAST(doc_id AS BIGINT) AS id, count(*) AS n_hits
               FROM hit GROUP BY 1 ORDER BY id""")),
 
@@ -4385,9 +4495,7 @@ object QueryCatalog {
     // false-positive margin is measured against the exact operator
     Q("q_decontaminate_bloom_fpr",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val corp = docs.filter(col("doc_id") % 20 =!= 0)
-        val bench = docs.filter(col("doc_id") % 20 === 0)
+        val (corp, bench) = evalSplit(t(s, dir, "documents"))
         val bloom = Dedup.decontaminateBloom(corp, bench, n = 5)
           .select(col("id"))
         val exact = Dedup.decontaminate(corp, bench, n = 5)
@@ -4399,26 +4507,8 @@ object QueryCatalog {
             sum(when(col("exact_hit").isNull, 1L).otherwise(0L))
               .as("false_flags"))
       },
-      Some(s"""WITH tk AS (
-                SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-                FROM documents),
-              gr AS (
-                SELECT doc_id,
-                  unnest([array_to_string(t[i:i+4], ' ')
-                          for i in range(1, greatest(len(t)-4, 1) + 1)]) AS gs
-                FROM tk),
-              gh AS (SELECT DISTINCT doc_id,
-                  ${graft.operators.PortableHash.duckSql("gs")} AS g FROM gr),
-              pr(p) AS (VALUES (1000003), (1000033), (1000037)),
-              bpos AS (SELECT DISTINCT (g % p) % 1048576 AS pos
-                FROM gh, pr WHERE doc_id % 20 = 0),
-              cpos AS (SELECT doc_id, g, (g % p) % 1048576 AS pos
-                FROM gh, pr WHERE doc_id % 20 <> 0),
-              bloom AS (SELECT doc_id FROM (
-                  SELECT doc_id, g FROM cpos
-                  WHERE pos IN (SELECT pos FROM bpos)
-                  GROUP BY doc_id, g HAVING count(*) = 3)
-                GROUP BY doc_id),
+      Some(s"""WITH $bloomHitCtes,
+              bloom AS (SELECT DISTINCT doc_id FROM hit),
               bench AS (SELECT DISTINCT gs FROM gr WHERE doc_id % 20 = 0),
               exact AS (SELECT DISTINCT doc_id FROM gr
                 WHERE doc_id % 20 <> 0 AND gs IN (SELECT gs FROM bench))
@@ -4758,18 +4848,7 @@ object QueryCatalog {
             threshold = 0.5, portable = true).select("id", "component"))
         .orderBy("id"),
       Some(s"""WITH RECURSIVE ${minhashPairCtes(64, 0.5)},
-              edges AS (
-                SELECT id_a AS src, id_b AS dst FROM mh_pairs
-                UNION SELECT id_b, id_a FROM mh_pairs),
-              reach(node, lbl) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-              comp AS (SELECT node AS id, min(lbl) AS component
-                FROM reach GROUP BY node),
-              cl AS (SELECT d.id AS id, coalesce(c.component, d.id) AS component
-                FROM (SELECT CAST(doc_id AS BIGINT) AS id FROM documents) d
-                LEFT JOIN comp c ON c.id = d.id)
+              ${docComponentCtes("mh_pairs")}
               SELECT id, component, CASE
                 WHEN substring(md5('lsplit:' || CAST(component AS VARCHAR)), 1, 1)
                   IN ('0','1','2','3','4','5','6','7','8','9','a','b') THEN 'train'
@@ -4921,30 +5000,7 @@ object QueryCatalog {
         graft.operators.Sampling.dsirSample(
           docs, docs.filter(col("lang") === "de"), n = 50)
       },
-      Some(s"""WITH arr AS (SELECT CAST(doc_id AS BIGINT) AS id, lang,
-                  regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-                FROM documents),
-              feats AS (SELECT id, lang,
-                  ${graft.operators.PortableHash.duckSql("f")} % 1024 AS b
-                FROM (
-                  SELECT id, lang, unnest(t) AS f FROM arr
-                  UNION ALL
-                  SELECT id, lang,
-                    unnest(list_transform(range(1, len(t)),
-                      i -> t[i] || ' ' || t[i + 1])) AS f
-                  FROM arr)),
-              tgt AS (SELECT b, count(*) AS ct FROM feats
-                WHERE lang = 'de' GROUP BY b),
-              rw AS (SELECT b, count(*) AS cr FROM feats GROUP BY b),
-              tt AS (SELECT sum(ct) AS t FROM tgt),
-              rt AS (SELECT sum(cr) AS r FROM rw),
-              ratio AS (SELECT b,
-                  ln(CAST(COALESCE(ct, 0) + 1 AS DOUBLE) / ((SELECT t FROM tt) + 1024)) -
-                  ln(CAST(COALESCE(cr, 0) + 1 AS DOUBLE) / ((SELECT r FROM rt) + 1024))
-                    AS lr
-                FROM tgt FULL OUTER JOIN rw USING (b)),
-              lw AS (SELECT id, round(sum(lr), 4) AS logw
-                FROM feats JOIN ratio USING (b) GROUP BY id)
+      Some(s"""WITH $dsirLogWeightCtes
               SELECT id AS doc_id, logw,
                 round(logw - ln(-ln(
                   (${graft.operators.PortableHash.duckSql("'dsir:' || CAST(id AS VARCHAR)")} + 1)
@@ -4966,30 +5022,7 @@ object QueryCatalog {
             count(lit(1)).as("n_docs"))
           .orderBy("lang")
       },
-      Some(s"""WITH arr AS (SELECT CAST(doc_id AS BIGINT) AS id, lang,
-                  regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-                FROM documents),
-              feats AS (SELECT id, lang,
-                  ${graft.operators.PortableHash.duckSql("f")} % 1024 AS b
-                FROM (
-                  SELECT id, lang, unnest(t) AS f FROM arr
-                  UNION ALL
-                  SELECT id, lang,
-                    unnest(list_transform(range(1, len(t)),
-                      i -> t[i] || ' ' || t[i + 1])) AS f
-                  FROM arr)),
-              tgt AS (SELECT b, count(*) AS ct FROM feats
-                WHERE lang = 'de' GROUP BY b),
-              rw AS (SELECT b, count(*) AS cr FROM feats GROUP BY b),
-              tt AS (SELECT sum(ct) AS t FROM tgt),
-              rt AS (SELECT sum(cr) AS r FROM rw),
-              ratio AS (SELECT b,
-                  ln(CAST(COALESCE(ct, 0) + 1 AS DOUBLE) / ((SELECT t FROM tt) + 1024)) -
-                  ln(CAST(COALESCE(cr, 0) + 1 AS DOUBLE) / ((SELECT r FROM rt) + 1024))
-                    AS lr
-                FROM tgt FULL OUTER JOIN rw USING (b)),
-              lw AS (SELECT id, round(sum(lr), 4) AS logw
-                FROM feats JOIN ratio USING (b) GROUP BY id)
+      Some(s"""WITH $dsirLogWeightCtes
               SELECT d.lang, round(avg(logw), 4) AS avg_logw,
                 count(*) AS n_docs
               FROM lw JOIN (SELECT CAST(doc_id AS BIGINT) AS id, lang
@@ -5306,18 +5339,7 @@ object QueryCatalog {
                   SELECT id, cid, sim, row_number() OVER (PARTITION BY id
                     ORDER BY sim DESC, cid DESC) AS rn
                   FROM scored) WHERE rn = 1),
-              rk AS (SELECT id, cluster, csim,
-                  CAST(row_number() OVER (PARTITION BY cluster
-                    ORDER BY csim ASC, id ASC) AS INT) AS "rank"
-                FROM assign),
-              drp AS (SELECT DISTINCT a.id FROM rk a JOIN rk b
-                  ON a.cluster = b.cluster AND b."rank" < a."rank"
-                JOIN emb ea ON ea.id = a.id JOIN emb eb ON eb.id = b.id
-                WHERE round(list_cosine_similarity(ea.e, eb.e), 6) >= 0.3)
-              SELECT r.id AS vec_id, r.cluster, r."rank",
-                (d.id IS NOT NULL) AS dropped
-              FROM rk r LEFT JOIN drp d ON d.id = r.id
-              ORDER BY vec_id""")),
+              $semDedupDropSql""")),
 
     // SemDeDup with TWO-LEVEL assignment (coarse super-cluster argmax,
     // then argmax over only that super's members — n·(s + k/s) cosines
@@ -5359,18 +5381,7 @@ object QueryCatalog {
                   FROM emb r JOIN a1 USING (id)
                   JOIN c2s ON c2s.sid = a1.sid
                   JOIN cent c ON c.cid = c2s.cid) WHERE rn = 1),
-              rk AS (SELECT id, cluster, csim,
-                  CAST(row_number() OVER (PARTITION BY cluster
-                    ORDER BY csim ASC, id ASC) AS INT) AS "rank"
-                FROM assign),
-              drp AS (SELECT DISTINCT a.id FROM rk a JOIN rk b
-                  ON a.cluster = b.cluster AND b."rank" < a."rank"
-                JOIN emb ea ON ea.id = a.id JOIN emb eb ON eb.id = b.id
-                WHERE round(list_cosine_similarity(ea.e, eb.e), 6) >= 0.3)
-              SELECT r.id AS vec_id, r.cluster, r."rank",
-                (d.id IS NOT NULL) AS dropped
-              FROM rk r LEFT JOIN drp d ON d.id = r.id
-              ORDER BY vec_id""")),
+              $semDedupDropSql""")),
 
     // the oracle replays the hyperplanes verbatim (they are deterministic
     // 4-dp literals — Similarity.hyperplanes) and independently re-derives
@@ -5382,30 +5393,7 @@ object QueryCatalog {
         Similarity.annTopK(emb.filter(col("vec_id") =!= 0), q, dim = 64,
           k = 10, nPlanes = 8, probeHamming = 3)
       },
-      Some {
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = 8)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
-        s"""WITH planes(p, pv) AS (VALUES
-                  $planeValues),
-              emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                FROM embeddings),
-              b AS (SELECT vec_id,
-                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
-                    THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
-                FROM emb, planes GROUP BY vec_id),
-              cand AS (
-                SELECT m.vec_id,
-                  list_cosine_similarity(m.e,
-                    (SELECT e FROM emb WHERE vec_id = 0)) AS sim_raw
-                FROM emb m JOIN b USING (vec_id)
-                WHERE m.vec_id <> 0 AND
-                  bit_count(xor(b.bucket,
-                    (SELECT bucket FROM b WHERE vec_id = 0))) <= 3)
-              SELECT vec_id, round(sim_raw, 4) AS sim FROM cand
-              ORDER BY round(sim_raw, 4) DESC, vec_id LIMIT 10"""
-      }),
+      Some(annLshOracleSql(nPlanes = 8, probe = 3))),
 
     // the query-side AUTO twin (judge r6 item 4 — the last fixed-bucket
     // LSH surface): bucket width and multiprobe radius derived from
@@ -5425,28 +5413,7 @@ object QueryCatalog {
       },
       Some {
         val (w, h) = Similarity.autoAnnParams(0.9, n = 499L, dim = 64)
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = w)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
-        s"""WITH planes(p, pv) AS (VALUES
-                  $planeValues),
-              emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                FROM embeddings),
-              b AS (SELECT vec_id,
-                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
-                    THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
-                FROM emb, planes GROUP BY vec_id),
-              cand AS (
-                SELECT m.vec_id,
-                  list_cosine_similarity(m.e,
-                    (SELECT e FROM emb WHERE vec_id = 0)) AS sim_raw
-                FROM emb m JOIN b USING (vec_id)
-                WHERE m.vec_id <> 0 AND
-                  bit_count(xor(b.bucket,
-                    (SELECT bucket FROM b WHERE vec_id = 0))) <= $h)
-              SELECT vec_id, round(sim_raw, 4) AS sim FROM cand
-              ORDER BY round(sim_raw, 4) DESC, vec_id LIMIT 10"""
+        annLshOracleSql(nPlanes = w, probe = h)
       }),
 
     // the 100-TB serving shape, end-to-end (round 8): the corpus at rest
@@ -5474,16 +5441,11 @@ object QueryCatalog {
         // not as an inscrutable hash mismatch — the guard CTE below
         // raises a named error when the live count disagrees
         val (w, h) = Similarity.autoAnnParams(0.9, n = 499L, dim = 64)
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = w)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
         s"""WITH guard AS (SELECT CASE
                   WHEN (SELECT count(*) FROM embeddings) = 500 THEN 1
                   ELSE error('q_ann_quantized oracle is spliced for a 499-vector corpus (500 embeddings incl. query 0); the fixture size changed - regenerate the catalog oracle')
                   END AS ok),
-              planes(p, pv) AS (VALUES
-                  $planeValues),
+              ${planesCte(w)},
               emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
                 FROM embeddings, guard),
               rest AS (SELECT vec_id, e,
@@ -5514,41 +5476,16 @@ object QueryCatalog {
       }),
 
     // oracle replays the 16 literal hyperplanes (Similarity.hyperplanes,
-    // 4-dp — same splice pattern as q_ann_lsh), re-derives the 4×4-bit
-    // band keys from the sign-bit bucket, the band-collision candidate
-    // pairs, and the rounded-cosine threshold cut
+    // 4-dp — same splice pattern as q_ann_lsh), re-derives the four 4-plane
+    // band keys, the band-collision candidate pairs, and the rounded-cosine
+    // threshold cut
     Q("q_embed_neardup",
       // the operator returns unsorted (no pair-cardinality range shuffle
       // inside composed pipelines); the oracle compare orders HERE
       (s, dir) => Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
         dim = 64, threshold = 0.25, nPlanes = 16, bands = 4)
         .orderBy("id_a", "id_b"),
-      Some {
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = 16)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
-        s"""WITH planes(p, pv) AS (VALUES
-                  $planeValues),
-              emb AS (SELECT CAST(vec_id AS BIGINT) AS id,
-                  CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-              b AS (SELECT id,
-                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
-                    THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
-                FROM emb, planes GROUP BY id),
-              bd AS (SELECT id, band, (bucket >> (band * 4)) & 15 AS bv
-                FROM b, (SELECT unnest(range(0, 4)) AS band) bands),
-              cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-                FROM bd a JOIN bd c
-                  ON a.band = c.band AND a.bv = c.bv AND a.id < c.id),
-              sc AS (SELECT id_a, id_b,
-                  round(list_cosine_similarity(ea.e, eb.e), 4) AS sim
-                FROM cand
-                JOIN emb ea ON ea.id = id_a
-                JOIN emb eb ON eb.id = id_b)
-              SELECT id_a, id_b, sim FROM sc WHERE sim >= 0.25
-              ORDER BY id_a, id_b"""
-      },
+      Some(cosineNearDupOracleSql(threshold = 0.25, nPlanes = 16, width = 4)),
       counterExample = true), // fixed 16/4: occupancy² candidates, measured killed at x100 (BENCH_SF10.md §4)
 
     // the SCALE-SAFE mode behind a driver gate: nPlanes = 0 lets
@@ -5569,29 +5506,7 @@ object QueryCatalog {
         .orderBy("id_a", "id_b"),
       Some {
         val (np, nb) = Similarity.autoCosineBanding(0.25, n = 500L, dim = 64)
-        val w = np / nb
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = np)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
-        s"""WITH planes(p, pv) AS (VALUES
-                  $planeValues),
-              emb AS (SELECT CAST(vec_id AS BIGINT) AS id,
-                  CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-              bd AS (SELECT id, p // $w AS band,
-                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
-                    THEN 1 << (p % $w) ELSE 0 END) AS BIGINT) AS bv
-                FROM emb, planes GROUP BY id, p // $w),
-              cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-                FROM bd a JOIN bd c
-                  ON a.band = c.band AND a.bv = c.bv AND a.id < c.id),
-              sc AS (SELECT id_a, id_b,
-                  round(list_cosine_similarity(ea.e, eb.e), 4) AS sim
-                FROM cand
-                JOIN emb ea ON ea.id = id_a
-                JOIN emb eb ON eb.id = id_b)
-              SELECT id_a, id_b, sim FROM sc WHERE sim >= 0.25
-              ORDER BY id_a, id_b"""
+        cosineNearDupOracleSql(threshold = 0.25, nPlanes = np, width = np / nb)
       },
       // auto banding is scale-safe ONLY above the GW feasibility boundary;
       // at t = 0.25 no 95%-recall banding is sub-quadratic (BENCH_SF10.md
@@ -5620,32 +5535,7 @@ object QueryCatalog {
       (s, dir) => Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
         dim = 64, threshold = 0.9, nPlanes = 16, bands = 4)
         .orderBy("id_a", "id_b"),
-      Some {
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = 16)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
-        s"""WITH planes(p, pv) AS (VALUES
-                  $planeValues),
-              emb AS (SELECT CAST(vec_id AS BIGINT) AS id,
-                  CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-              b AS (SELECT id,
-                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
-                    THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
-                FROM emb, planes GROUP BY id),
-              bd AS (SELECT id, band, (bucket >> (band * 4)) & 15 AS bv
-                FROM b, (SELECT unnest(range(0, 4)) AS band) bands),
-              cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-                FROM bd a JOIN bd c
-                  ON a.band = c.band AND a.bv = c.bv AND a.id < c.id),
-              sc AS (SELECT id_a, id_b,
-                  round(list_cosine_similarity(ea.e, eb.e), 4) AS sim
-                FROM cand
-                JOIN emb ea ON ea.id = id_a
-                JOIN emb eb ON eb.id = id_b)
-              SELECT id_a, id_b, sim FROM sc WHERE sim >= 0.9
-              ORDER BY id_a, id_b"""
-      },
+      Some(cosineNearDupOracleSql(threshold = 0.9, nPlanes = 16, width = 4)),
       counterExample = true), // fixed banding's candidate volume is threshold-independent: same x100 kill as q_embed_neardup
 
     Q("q_embed_neardup_auto_t90",
@@ -5654,29 +5544,7 @@ object QueryCatalog {
         .orderBy("id_a", "id_b"),
       Some {
         val (np, nb) = Similarity.autoCosineBanding(0.9, n = 500L, dim = 64)
-        val w = np / nb
-        val planeValues = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = np)
-          .zipWithIndex
-          .map { case (p, i) => s"($i, ${p.mkString("[", ", ", "]")}::DOUBLE[])" }
-          .mkString(",\n                  ")
-        s"""WITH planes(p, pv) AS (VALUES
-                  $planeValues),
-              emb AS (SELECT CAST(vec_id AS BIGINT) AS id,
-                  CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-              bd AS (SELECT id, p // $w AS band,
-                  CAST(sum(CASE WHEN list_dot_product(e, pv) >= 0
-                    THEN 1 << (p % $w) ELSE 0 END) AS BIGINT) AS bv
-                FROM emb, planes GROUP BY id, p // $w),
-              cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-                FROM bd a JOIN bd c
-                  ON a.band = c.band AND a.bv = c.bv AND a.id < c.id),
-              sc AS (SELECT id_a, id_b,
-                  round(list_cosine_similarity(ea.e, eb.e), 4) AS sim
-                FROM cand
-                JOIN emb ea ON ea.id = id_a
-                JOIN emb eb ON eb.id = id_b)
-              SELECT id_a, id_b, sim FROM sc WHERE sim >= 0.9
-              ORDER BY id_a, id_b"""
+        cosineNearDupOracleSql(threshold = 0.9, nPlanes = np, width = np / nb)
       }),
 
     // fully replayed in DuckDB: the 16 centroids are the smallest
@@ -5727,14 +5595,8 @@ object QueryCatalog {
           t(s, dir, "documents"), Dedup.shinglesAll(col("text"), 3),
           threshold = 0.2, maxDf = 100)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH tk AS (SELECT doc_id AS id,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-                   FROM documents),
-              gs AS (SELECT id, unnest(
-                      CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                      ELSE [array_to_string(t[i:i+2], ' ')
-                            FOR i IN range(1, len(t) - 1)] END) AS term_str
-                    FROM tk),
+      Some(s"""WITH ${tokenCte(docsRel, "")},
+              gs AS (SELECT id, unnest($shingleListSql) AS term_str FROM tk),
               g AS (SELECT id,
                       ${graft.operators.PortableHash.duckSql("term_str")} AS term
                     FROM gs),
@@ -6643,13 +6505,7 @@ object QueryCatalog {
     // contrib-CTE + full-outer-teleport-stitch per round.
     Q("q_ppr",
       (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = coOrderEdges(s, dir)
         val seeds = edges.select(col("src").as("node"))
           .distinct().orderBy("node").limit(2)
         graft.operators.GraphRank.personalizedPageRank(
@@ -6666,11 +6522,7 @@ object QueryCatalog {
                     * coalesce(c.sc, 0), 7) AS r
                 FROM c$i c FULL OUTER JOIN tp t ON t.node = c.node)"""
         }.mkString(",\n              ")
-        s"""WITH e0 AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              edges AS (SELECT src, dst FROM e0
-                UNION SELECT dst AS src, src AS dst FROM e0),
+        s"""WITH $coOrderEdgeCtes,
               deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
               seeds AS (SELECT DISTINCT src AS node FROM edges
                 ORDER BY node LIMIT 2),
@@ -6890,13 +6742,7 @@ object QueryCatalog {
     // the oracle replays LPA round-for-round, then the two counts.
     Q("q_modularity",
       (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = coOrderEdges(s, dir)
         val comms = graft.operators.GraphRank.labelPropagation(edges, iterations = 4)
         graft.operators.GraphRank.modularity(edges, comms)
       },
@@ -6909,11 +6755,7 @@ object QueryCatalog {
                 FROM edges e JOIN l${i - 1} l ON l.node = e.src
                 GROUP BY e.dst, l.label) WHERE rn = 1)"""
         }.mkString(",\n              ")
-        s"""WITH e0 AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              edges AS (SELECT src, dst FROM e0
-                UNION SELECT dst AS src, src AS dst FROM e0),
+        s"""WITH $coOrderEdgeCtes,
               l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
               $iters,
               und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
@@ -6952,33 +6794,24 @@ object QueryCatalog {
     // the oracle unrolls both half-steps of every round as chained CTEs
     // (raw sums + one L2 scalar each — same replay doctrine as pagerank).
     Q("q_hits",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val edges = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-        graft.operators.GraphRank.hits(edges, iterations = 6).orderBy("node")
-      },
+      (s, dir) => graft.operators.GraphRank
+        .hits(coOrderPairs(s, dir), iterations = 6).orderBy("node"),
       Some {
         val rounds = (1 to 6).map { i =>
           val ph = if (i == 1) "h0" else s"h${i - 1}"
           s"""a${i}r AS MATERIALIZED (SELECT e.dst AS node, sum(h.h) AS x
-                FROM e JOIN $ph h ON h.node = e.src GROUP BY e.dst),
+                FROM e0 e JOIN $ph h ON h.node = e.src GROUP BY e.dst),
               a$i AS MATERIALIZED (SELECT node,
                 round(x / (SELECT sqrt(sum(x*x)) FROM a${i}r), 7) AS a
                 FROM a${i}r),
               h${i}r AS MATERIALIZED (SELECT e.src AS node, sum(a.a) AS x
-                FROM e JOIN a$i a ON a.node = e.dst GROUP BY e.src),
+                FROM e0 e JOIN a$i a ON a.node = e.dst GROUP BY e.src),
               h$i AS MATERIALIZED (SELECT node,
                 round(x / (SELECT sqrt(sum(x*x)) FROM h${i}r), 7) AS h
                 FROM h${i}r)"""
         }.mkString(",\n              ")
-        s"""WITH e AS MATERIALIZED (
-                SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              srcs AS (SELECT DISTINCT src FROM e),
+        s"""WITH $coOrderEdgeCtes,
+              srcs AS (SELECT DISTINCT src FROM e0),
               ns AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM srcs),
               h0 AS (SELECT src AS node,
                 round(CAST(1 AS DOUBLE) / sqrt((SELECT n FROM ns)), 7) AS h
@@ -7038,28 +6871,9 @@ object QueryCatalog {
     // active). The estimator the censoring makes necessary — a plain
     // duration histogram reads censored subjects as churned-early.
     Q("q_survival_km",
-      (s, dir) => {
-        val o = t(s, dir, "orders")
-        val mx = o.agg(max(to_date(col("o_orderdate"))).as("maxd"))
-        val subj = o.groupBy("o_custkey")
-          .agg(min(to_date(col("o_orderdate"))).as("fd"),
-            max(to_date(col("o_orderdate"))).as("ld"))
-          .crossJoin(broadcast(mx))
-          .select(datediff(col("ld"), col("fd")).cast("long").as("duration"),
-            when(datediff(col("maxd"), col("ld")) > 30, 1L).otherwise(0L)
-              .as("event"))
-        graft.operators.Survival.kaplanMeier(subj).orderBy("t")
-      },
-      Some("""WITH per AS (SELECT o_custkey,
-                  min(CAST(o_orderdate AS DATE)) AS fd,
-                  max(CAST(o_orderdate AS DATE)) AS ld
-                FROM orders GROUP BY 1),
-              mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS maxd FROM orders),
-              subj AS (SELECT CAST(date_diff('day', fd, ld) AS BIGINT)
-                    AS duration,
-                  CASE WHEN date_diff('day', ld, (SELECT maxd FROM mx)) > 30
-                    THEN 1 ELSE 0 END AS event
-                FROM per),
+      (s, dir) => graft.operators.Survival.kaplanMeier(orderLifetimes(s, dir))
+        .orderBy("t"),
+      Some(s"""WITH $orderLifetimeCtes,
               byt AS (SELECT duration AS t, count(*) AS n_at_t,
                   CAST(sum(event) AS BIGINT) AS d_events
                 FROM subj GROUP BY 1),
@@ -7087,38 +6901,8 @@ object QueryCatalog {
     // expected group-1 events at each event time, all terms exact-integer
     // derived, 1-dof critical 3.841 spliced (the SRM convention).
     Q("q_logrank",
-      (s, dir) => {
-        val o = t(s, dir, "orders")
-        val mx = o.agg(max(to_date(col("o_orderdate"))).as("maxd"))
-        val subj = o.groupBy("o_custkey")
-          .agg(min(to_date(col("o_orderdate"))).as("fd"),
-            max(to_date(col("o_orderdate"))).as("ld"))
-          .crossJoin(broadcast(mx))
-          .select(datediff(col("ld"), col("fd")).cast("long").as("duration"),
-            when(datediff(col("maxd"), col("ld")) > 30, 1L).otherwise(0L)
-              .as("event"),
-            pmod(col("o_custkey"), lit(2)).as("g"))
-        graft.operators.Survival.logRank(subj)
-      },
-      Some("""WITH per AS (SELECT o_custkey,
-                  min(CAST(o_orderdate AS DATE)) AS fd,
-                  max(CAST(o_orderdate AS DATE)) AS ld
-                FROM orders GROUP BY 1),
-              mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS maxd
-                FROM orders),
-              subj AS (SELECT CAST(date_diff('day', fd, ld) AS BIGINT)
-                    AS duration,
-                  CASE WHEN date_diff('day', ld, (SELECT maxd FROM mx)) > 30
-                    THEN 1 ELSE 0 END AS event,
-                  o_custkey % 2 AS g
-                FROM per),
-              byt AS (SELECT duration AS t, count(*) AS n_at_t,
-                  CAST(sum(event) AS BIGINT) AS d_t,
-                  CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n1_at_t,
-                  CAST(sum(CASE WHEN g = 1 THEN event ELSE 0 END) AS BIGINT)
-                    AS d1_t
-                FROM subj GROUP BY 1),
+      (s, dir) => graft.operators.Survival.logRank(orderLifetimes(s, dir)),
+      Some(s"""WITH $twoGroupEventCtes,
               rk AS (SELECT t, d_t, d1_t,
                   CAST(sum(n_at_t) OVER w AS BIGINT) AS n_t,
                   CAST(sum(n1_at_t) OVER w AS BIGINT) AS n1_t
@@ -7271,49 +7055,11 @@ object QueryCatalog {
       (s, dir) => graft.operators.Decomp.pcaTopComponent(
           t(s, dir, "embeddings"), "embedding", dim = 64, rounds = 8)
         .orderBy("dim"),
-      Some {
-        val rounds = (1 to 8).map { i =>
-          val pv = if (i == 1) "p0" else s"p${i - 1}"
-          s"""p${i}r AS MATERIALIZED (SELECT cov.i AS d, sum(cov.c * p.v) AS w
-                FROM cov JOIN $pv p ON p.d = cov.j GROUP BY cov.i),
-              p$i AS MATERIALIZED (SELECT d,
-                round(w / (SELECT sqrt(sum(w*w)) FROM p${i}r), 7) AS v
-                FROM p${i}r)"""
-        }.mkString(",\n              ")
-        s"""WITH v AS MATERIALIZED (
-                SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                  generate_subscripts(embedding, 1) AS i
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-              nn AS MATERIALIZED (
-                SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-              s AS MATERIALIZED (SELECT i, sum(x) AS si FROM v GROUP BY i),
-              cp AS MATERIALIZED (
-                SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS pij
-                FROM v a JOIN v b ON a.vec_id = b.vec_id AND a.i <= b.i
-                GROUP BY 1, 2),
-              cov0 AS (SELECT cp.i, cp.j,
-                  round(cp.pij / (SELECT n FROM nn)
-                    - (sa.si / (SELECT n FROM nn))
-                      * (sb.si / (SELECT n FROM nn)), 6) AS c
-                FROM cp JOIN s sa ON sa.i = cp.i JOIN s sb ON sb.i = cp.j),
-              cov AS MATERIALIZED (SELECT i, j, c FROM cov0
-                UNION ALL SELECT j AS i, i AS j, c FROM cov0 WHERE i <> j),
-              p0 AS (SELECT i AS d,
-                round(CAST(1 AS DOUBLE) / sqrt(CAST(64 AS DOUBLE)), 7) AS v
-                FROM s),
-              $rounds,
-              cvf AS (SELECT cov.i AS d, sum(cov.c * p.v) AS w
-                FROM cov JOIN p8 p ON p.d = cov.j GROUP BY cov.i),
-              lam AS (SELECT round(
-                  (SELECT sum(p8.v * cvf.w) FROM p8
-                    JOIN cvf ON cvf.d = p8.d)
-                  / (SELECT sum(v * v) FROM p8), 6) AS eigenvalue)
+      Some(s"""WITH $embCovCtes,
+              ${powerIterCtes("p", "cov1", "lam")}
               SELECT p8.d AS dim, p8.v AS loading,
-                (SELECT eigenvalue FROM lam) AS eigenvalue
-              FROM p8 ORDER BY dim"""
-      }),
+                (SELECT ev FROM lam) AS eigenvalue
+              FROM p8 ORDER BY dim""")),
 
     // top-15 most correlated embedding-dimension pairs from the SAME
     // one-pass packed moments — the feature-redundancy audit that shares
@@ -7322,19 +7068,7 @@ object QueryCatalog {
     Q("q_corr_matrix",
       (s, dir) => graft.operators.Decomp.corrTopPairs(
           t(s, dir, "embeddings"), "embedding", dim = 64, k = 15),
-      Some("""WITH v AS MATERIALIZED (
-                SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                  generate_subscripts(embedding, 1) AS i
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-              nn AS MATERIALIZED (
-                SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-              s AS MATERIALIZED (SELECT i, sum(x) AS si FROM v GROUP BY i),
-              cp AS MATERIALIZED (
-                SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS pij
-                FROM v a JOIN v b ON a.vec_id = b.vec_id AND a.i <= b.i
-                GROUP BY 1, 2),
+      Some(s"""WITH $embMomentCtes,
               corr0 AS (SELECT cp.i, cp.j,
                   round((cp.pij / nn.n - (sa.si / nn.n) * (sb.si / nn.n))
                     / sqrt((pa.pij / nn.n - (sa.si / nn.n) * (sa.si / nn.n))
@@ -7747,13 +7481,7 @@ object QueryCatalog {
     // engines; hub fan-out is capped at k = 5 by construction.
     Q("q_graph_sage",
       (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val fwd = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).cast("long").as("src"),
-            (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        val edges = fwd.unionByName(
-          fwd.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = coOrderEdges(s, dir)
         val feats = t(s, dir, "customer")
           .select((col("c_custkey") * 2).cast("long").as("node"),
             round(col("c_acctbal"), 6).as("x"))
@@ -7763,12 +7491,7 @@ object QueryCatalog {
         graft.operators.GraphRank.neighborhoodFeatures(edges, feats, k = 5)
           .orderBy("node")
       },
-      Some("""WITH p AS (SELECT DISTINCT
-                  CAST(o_custkey * 2 AS BIGINT) AS c,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS s
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              e AS (SELECT c AS src, s AS dst FROM p
-                UNION SELECT s, c FROM p),
+      Some(s"""WITH $coOrderEdgeCtes,
               f AS (SELECT CAST(c_custkey * 2 AS BIGINT) AS node,
                   round(c_acctbal, 6) AS x FROM customer
                 UNION ALL SELECT CAST(s_suppkey * 2 + 1 AS BIGINT),
@@ -7776,7 +7499,7 @@ object QueryCatalog {
               h AS (SELECT src, dst,
                   CAST(('0x' || substr(md5('sage:' || src || ':' || dst),
                     1, 15)) AS BIGINT) AS hh
-                FROM e),
+                FROM edges),
               samp AS (SELECT src, dst FROM (
                   SELECT src, dst, row_number() OVER
                     (PARTITION BY src ORDER BY hh, dst) AS rn
@@ -8222,67 +7945,18 @@ object QueryCatalog {
       (s, dir) => graft.operators.Decomp.pcaTopComponents(
           t(s, dir, "embeddings"), "embedding", dim = 64, k = 2, rounds = 8)
         .orderBy("component", "dim"),
-      Some {
-        def rounds(prefix: String, covName: String): String =
-          (1 to 8).map { i =>
-            val pv = if (i == 1) s"${prefix}0" else s"$prefix${i - 1}"
-            s"""$prefix${i}r AS MATERIALIZED (SELECT $covName.i AS d,
-                  sum($covName.c * p.v) AS w
-                FROM $covName JOIN $pv p ON p.d = $covName.j GROUP BY 1),
-              $prefix$i AS MATERIALIZED (SELECT d,
-                round(w / (SELECT sqrt(sum(w*w)) FROM $prefix${i}r), 7) AS v
-                FROM $prefix${i}r)"""
-          }.mkString(",\n              ")
-        s"""WITH v AS MATERIALIZED (
-                SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-                  generate_subscripts(embedding, 1) AS i
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-              nn AS MATERIALIZED (
-                SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-              s AS MATERIALIZED (SELECT i, sum(x) AS si FROM v GROUP BY i),
-              cp AS MATERIALIZED (
-                SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS pij
-                FROM v a JOIN v b ON a.vec_id = b.vec_id AND a.i <= b.i
-                GROUP BY 1, 2),
-              cov0 AS (SELECT cp.i, cp.j,
-                  round(cp.pij / (SELECT n FROM nn)
-                    - (sa.si / (SELECT n FROM nn))
-                      * (sb.si / (SELECT n FROM nn)), 6) AS c
-                FROM cp JOIN s sa ON sa.i = cp.i JOIN s sb ON sb.i = cp.j),
-              cov1 AS MATERIALIZED (SELECT i, j, c FROM cov0
-                UNION ALL SELECT j AS i, i AS j, c FROM cov0 WHERE i <> j),
-              pa0 AS (SELECT i AS d,
-                round(CAST(1 AS DOUBLE) / sqrt(CAST(64 AS DOUBLE)), 7) AS v
-                FROM s),
-              ${rounds("pa", "cov1")},
-              cvfa AS (SELECT cov1.i AS d, sum(cov1.c * p.v) AS w
-                FROM cov1 JOIN pa8 p ON p.d = cov1.j GROUP BY 1),
-              lam1 AS MATERIALIZED (SELECT round(
-                  (SELECT sum(pa8.v * cvfa.w) FROM pa8
-                    JOIN cvfa ON cvfa.d = pa8.d)
-                  / (SELECT sum(v * v) FROM pa8), 6) AS ev),
+      Some(s"""WITH $embCovCtes,
+              ${powerIterCtes("pa", "cov1", "lam1")},
               cov2 AS MATERIALIZED (SELECT c1.i, c1.j,
                   round(c1.c - (SELECT ev FROM lam1) * va.v * vb.v, 6) AS c
                 FROM cov1 c1 JOIN pa8 va ON va.d = c1.i
                 JOIN pa8 vb ON vb.d = c1.j),
-              pb0 AS (SELECT i AS d,
-                round(CAST(1 AS DOUBLE) / sqrt(CAST(64 AS DOUBLE)), 7) AS v
-                FROM s),
-              ${rounds("pb", "cov2")},
-              cvfb AS (SELECT cov2.i AS d, sum(cov2.c * p.v) AS w
-                FROM cov2 JOIN pb8 p ON p.d = cov2.j GROUP BY 1),
-              lam2 AS MATERIALIZED (SELECT round(
-                  (SELECT sum(pb8.v * cvfb.w) FROM pb8
-                    JOIN cvfb ON cvfb.d = pb8.d)
-                  / (SELECT sum(v * v) FROM pb8), 6) AS ev)
+              ${powerIterCtes("pb", "cov2", "lam2")}
               SELECT CAST(1 AS BIGINT) AS component, d AS dim, v AS loading,
                 (SELECT ev FROM lam1) AS eigenvalue FROM pa8
               UNION ALL
               SELECT CAST(2 AS BIGINT), d, v, (SELECT ev FROM lam2) FROM pb8
-              ORDER BY component, dim"""
-      }))
+              ORDER BY component, dim""")))
 
   /** Session-10 wave: rank-based inference (Mann–Whitney, Spearman,
     * BH-FDR), ranking/calibration quality (PR-AUC, ECE, NDCG/MRR/recall),
@@ -9060,19 +8734,7 @@ object QueryCatalog {
     // per-event-time count table as the log-rank test, so the entire fit
     // is grouped-count arithmetic, no per-subject exp() pass.
     Q("q_cox_ph",
-      (s, dir) => {
-        val o = t(s, dir, "orders")
-        val mx = o.agg(max(to_date(col("o_orderdate"))).as("maxd"))
-        val subj = o.groupBy("o_custkey")
-          .agg(min(to_date(col("o_orderdate"))).as("fd"),
-            max(to_date(col("o_orderdate"))).as("ld"))
-          .crossJoin(broadcast(mx))
-          .select(datediff(col("ld"), col("fd")).cast("long").as("duration"),
-            when(datediff(col("maxd"), col("ld")) > 30, 1L).otherwise(0L)
-              .as("event"),
-            pmod(col("o_custkey"), lit(2)).as("g"))
-        graft.operators.Survival.coxPH(subj)
-      },
+      (s, dir) => graft.operators.Survival.coxPH(orderLifetimes(s, dir)),
       Some {
         val iters = (1 to 4).map { k =>
           val ebPrev = if (k == 1) "1.0" else s"(SELECT eb FROM e${k - 1})"
@@ -9085,25 +8747,7 @@ object QueryCatalog {
                   round(exp(round($bPrev + u / i, 7)), 7) AS eb
                 FROM it${k - 1})"""
         }.mkString(",\n              ")
-        s"""WITH per AS (SELECT o_custkey,
-                  min(CAST(o_orderdate AS DATE)) AS fd,
-                  max(CAST(o_orderdate AS DATE)) AS ld
-                FROM orders GROUP BY 1),
-              mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS maxd
-                FROM orders),
-              subj AS (SELECT CAST(date_diff('day', fd, ld) AS BIGINT)
-                    AS duration,
-                  CASE WHEN date_diff('day', ld, (SELECT maxd FROM mx)) > 30
-                    THEN 1 ELSE 0 END AS event,
-                  o_custkey % 2 AS g
-                FROM per),
-              byt AS (SELECT duration AS t, count(*) AS n_at_t,
-                  CAST(sum(event) AS BIGINT) AS d_t,
-                  CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n1_at_t,
-                  CAST(sum(CASE WHEN g = 1 THEN event ELSE 0 END) AS BIGINT)
-                    AS d1_t
-                FROM subj GROUP BY 1),
+        s"""WITH $twoGroupEventCtes,
               rk AS (SELECT t, d_t, d1_t,
                   CAST(sum(n1_at_t) OVER w AS BIGINT) AS n1_t,
                   CAST(sum(n_at_t) OVER w AS BIGINT)
@@ -9392,45 +9036,8 @@ object QueryCatalog {
     // thousands-digit twin. n_candidates rides along as the linkage-
     // confidence audit.
     Q("q_fuzzy_linkage",
-      (s, dir) => {
-        val master = t(s, dir, "customer")
-          .select(col("c_custkey").cast("long").as("id"),
-            col("c_name").as("name"))
-        val dirty = master.filter(pmod(col("id"), lit(7)) === 0)
-          .withColumn("h",
-            pmod(graft.operators.PortableHash.portable60(
-              concat(lit("fz:"), col("id").cast("string"))), lit(26L))
-              + 97L)
-          .withColumn("name", concat(substring(col("name"), 1, 11),
-            expr("chr(cast(h as int))"), substring(col("name"), 13, 6)))
-          .select("id", "name")
-        graft.operators.Linkage.bestMatch(dirty, master, Seq(
-            n => length(n), n => substring(n, 16, 3)), maxDistance = 2)
-          .orderBy("id")
-      },
-      Some(s"""WITH master AS (SELECT CAST(c_custkey AS BIGINT) AS id,
-                  c_name AS name FROM customer),
-              dirty AS (SELECT id,
-                  substr(name, 1, 11)
-                    || chr(CAST(${graft.operators.PortableHash.duckSql(
-                      "'fz:' || CAST(id AS VARCHAR)")} % 26 + 97 AS INT))
-                    || substr(name, 13, 6) AS name
-                FROM master WHERE id % 7 = 0),
-              cand AS (SELECT d.id, d.name, m.id AS match_id,
-                  m.name AS match_name,
-                  CAST(levenshtein(d.name, m.name) AS BIGINT) AS dist
-                FROM dirty d JOIN master m
-                  ON length(d.name) = length(m.name)
-                  AND substr(d.name, 16, 3) = substr(m.name, 16, 3)
-                WHERE levenshtein(d.name, m.name) <= 2),
-              rk AS (SELECT *,
-                  row_number() OVER (PARTITION BY id
-                    ORDER BY dist, match_id) AS rk,
-                  CAST(count(*) OVER (PARTITION BY id) AS BIGINT)
-                    AS n_candidates
-                FROM cand)
-              SELECT id, name, match_id, match_name, dist, n_candidates
-              FROM rk WHERE rk = 1 ORDER BY id"""),
+      (s, dir) => fuzzyLinkage(s, dir, suffixStart = 16, suffixLen = 3),
+      Some(fuzzyLinkageOracleSql(suffixStart = 16, suffixLen = 3)),
       // fixed-width 1000-block key: candidates grow quadratically with
       // the registry — measured 132 s in-run / 146.5 s isolated at x100
       // (BENCH_SF10 addenda 7 & 10); kept beside q_fuzzy_linkage_fine
@@ -9485,18 +9092,13 @@ object QueryCatalog {
     val posUnion = (1 to 4)
       .map(t => s"SELECT walker, node, $t AS pos FROM s$t")
       .mkString("\n                UNION ALL ")
-    s"""WITH ebase AS (SELECT DISTINCT
-                  CAST(o_custkey * 2 AS BIGINT) AS src,
-                  CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              e AS (SELECT src, dst FROM ebase
-                UNION SELECT dst, src FROM ebase),
+    s"""WITH $coOrderEdgeCtes,
               adj AS MATERIALIZED (SELECT src, dst,
                   CAST(row_number() OVER (PARTITION BY src ORDER BY dst)
                     AS BIGINT) - 1 AS rn,
                   CAST(count(*) OVER (PARTITION BY src) AS BIGINT) AS deg
-                FROM e),
-              s0 AS (SELECT DISTINCT src AS walker, src AS node FROM e),
+                FROM edges),
+              s0 AS (SELECT DISTINCT src AS walker, src AS node FROM edges),
               $hops,
               pos AS (SELECT walker, node, 0 AS pos FROM s0
                 UNION ALL $posUnion),
@@ -9932,46 +9534,9 @@ object QueryCatalog {
     // is identical to the ungated entry, at ×100 it fails fast with the
     // sized diagnosis naming the lever (refine the blocking keys).
     Q("q_fuzzy_linkage_gated",
-      (s, dir) => {
-        val master = t(s, dir, "customer")
-          .select(col("c_custkey").cast("long").as("id"),
-            col("c_name").as("name"))
-        val dirty = master.filter(pmod(col("id"), lit(7)) === 0)
-          .withColumn("h",
-            pmod(graft.operators.PortableHash.portable60(
-              concat(lit("fz:"), col("id").cast("string"))), lit(26L))
-              + 97L)
-          .withColumn("name", concat(substring(col("name"), 1, 11),
-            expr("chr(cast(h as int))"), substring(col("name"), 13, 6)))
-          .select("id", "name")
-        graft.operators.Linkage.bestMatch(dirty, master, Seq(
-            n => length(n), n => substring(n, 16, 3)), maxDistance = 2,
-            maxExpectedCandidates = Some(100000000L))
-          .orderBy("id")
-      },
-      Some(s"""WITH master AS (SELECT CAST(c_custkey AS BIGINT) AS id,
-                  c_name AS name FROM customer),
-              dirty AS (SELECT id,
-                  substr(name, 1, 11)
-                    || chr(CAST(${graft.operators.PortableHash.duckSql(
-                      "'fz:' || CAST(id AS VARCHAR)")} % 26 + 97 AS INT))
-                    || substr(name, 13, 6) AS name
-                FROM master WHERE id % 7 = 0),
-              cand AS (SELECT d.id, d.name, m.id AS match_id,
-                  m.name AS match_name,
-                  CAST(levenshtein(d.name, m.name) AS BIGINT) AS dist
-                FROM dirty d JOIN master m
-                  ON length(d.name) = length(m.name)
-                  AND substr(d.name, 16, 3) = substr(m.name, 16, 3)
-                WHERE levenshtein(d.name, m.name) <= 2),
-              rk AS (SELECT *,
-                  row_number() OVER (PARTITION BY id
-                    ORDER BY dist, match_id) AS rk,
-                  CAST(count(*) OVER (PARTITION BY id) AS BIGINT)
-                    AS n_candidates
-                FROM cand)
-              SELECT id, name, match_id, match_name, dist, n_candidates
-              FROM rk WHERE rk = 1 ORDER BY id""")),
+      (s, dir) => fuzzyLinkage(s, dir, suffixStart = 16, suffixLen = 3,
+        maxExpectedCandidates = Some(100000000L)),
+      Some(fuzzyLinkageOracleSql(suffixStart = 16, suffixLen = 3))),
 
     // The SCALE-SAFE blocking for the same linkage problem: one more
     // suffix digit in the block key (substr 15,4 instead of 16,3 — still
@@ -9981,45 +9546,8 @@ object QueryCatalog {
     // to the shared linear band. Identical match set: every true match
     // agrees on the wider key by construction.
     Q("q_fuzzy_linkage_fine",
-      (s, dir) => {
-        val master = t(s, dir, "customer")
-          .select(col("c_custkey").cast("long").as("id"),
-            col("c_name").as("name"))
-        val dirty = master.filter(pmod(col("id"), lit(7)) === 0)
-          .withColumn("h",
-            pmod(graft.operators.PortableHash.portable60(
-              concat(lit("fz:"), col("id").cast("string"))), lit(26L))
-              + 97L)
-          .withColumn("name", concat(substring(col("name"), 1, 11),
-            expr("chr(cast(h as int))"), substring(col("name"), 13, 6)))
-          .select("id", "name")
-        graft.operators.Linkage.bestMatch(dirty, master, Seq(
-            n => length(n), n => substring(n, 15, 4)), maxDistance = 2)
-          .orderBy("id")
-      },
-      Some(s"""WITH master AS (SELECT CAST(c_custkey AS BIGINT) AS id,
-                  c_name AS name FROM customer),
-              dirty AS (SELECT id,
-                  substr(name, 1, 11)
-                    || chr(CAST(${graft.operators.PortableHash.duckSql(
-                      "'fz:' || CAST(id AS VARCHAR)")} % 26 + 97 AS INT))
-                    || substr(name, 13, 6) AS name
-                FROM master WHERE id % 7 = 0),
-              cand AS (SELECT d.id, d.name, m.id AS match_id,
-                  m.name AS match_name,
-                  CAST(levenshtein(d.name, m.name) AS BIGINT) AS dist
-                FROM dirty d JOIN master m
-                  ON length(d.name) = length(m.name)
-                  AND substr(d.name, 15, 4) = substr(m.name, 15, 4)
-                WHERE levenshtein(d.name, m.name) <= 2),
-              rk AS (SELECT *,
-                  row_number() OVER (PARTITION BY id
-                    ORDER BY dist, match_id) AS rk,
-                  CAST(count(*) OVER (PARTITION BY id) AS BIGINT)
-                    AS n_candidates
-                FROM cand)
-              SELECT id, name, match_id, match_name, dist, n_candidates
-              FROM rk WHERE rk = 1 ORDER BY id""")),
+      (s, dir) => fuzzyLinkage(s, dir, suffixStart = 15, suffixLen = 4),
+      Some(fuzzyLinkageOracleSql(suffixStart = 15, suffixLen = 4))),
 
     // Quantile normalization of document length across languages: each
     // (lang, n_chars) maps to the POOLED type-1 quantile at its
@@ -10346,17 +9874,8 @@ object QueryCatalog {
     // re-derives the ranked adjacency and replays ALL FOUR hops hash-for-
     // hash, so a single divergent step anywhere in any walk mismatches.
     Q("q_walk_cooc",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).cast("long").as("src"),
-            (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.operators.GraphRank.walkCooccurrence(edges, steps = 4,
-          window = 2, topK = 20, seed = "dw")
-      },
+      (s, dir) => graft.operators.GraphRank.walkCooccurrence(
+        coOrderEdges(s, dir), steps = 4, window = 2, topK = 20, seed = "dw"),
       Some(walkCoocOracleSql)),
 
     // the budget-gated twin (the q_pagerank_gated convention): identical
@@ -10367,19 +9886,10 @@ object QueryCatalog {
     // estimatedEdges = 2*|lineitem| (bidirectional trade graph) prices
     // the gate from table stats without counting the distinct edge set.
     Q("q_walk_cooc_gated",
-      (s, dir) => {
-        val liT = t(s, dir, "lineitem")
-        val li = liT.select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val pairs = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).cast("long").as("src"),
-            (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-        val edges = pairs.unionByName(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.operators.GraphRank.walkCooccurrence(edges, steps = 4,
-          window = 2, topK = 20, seed = "dw",
-          maxEdgeScanRows = 3e9, estimatedEdges = Some(2L * liT.count()))
-      },
+      (s, dir) => graft.operators.GraphRank.walkCooccurrence(
+        coOrderEdges(s, dir), steps = 4, window = 2, topK = 20, seed = "dw",
+        maxEdgeScanRows = 3e9,
+        estimatedEdges = Some(2L * t(s, dir, "lineitem").count())),
       Some(walkCoocOracleSql)),
 
     // Gini concentration of per-user total value — the inequality audit

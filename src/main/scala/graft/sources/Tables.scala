@@ -19,14 +19,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet scan; schema comes from the footer (reference cell 3).
-    *
-    * Schema repair, mirroring the reference's to_timestamp normalization
-    * (W2_NYCTaxi_ETL.ipynb cell 81): the `events` table carries
-    * TIMESTAMP(NANOS) which Spark 4 only reads as long (legacy
-    * nanosAsLong, set in the session) — normalize it back to a microsecond
-    * TimestampType column so downstream datetime functions apply.
-    */
   /** Schema-evolving read: union the footer schemas of every file under
     * `path` (columns added by later ingest batches come back null-filled
     * for older files). Off by default in Spark because it costs one footer
@@ -73,6 +65,16 @@ object Tables {
       else id -> spark.read.parquet(p).schema)._2
   }
 
+  /** Parquet scan of `dir/name.parquet`; the schema comes from the footer
+    * (reference cell 3), read once per file identity ([[declaredSchema]]).
+    *
+    * Schema repair, mirroring the reference's to_timestamp normalization
+    * (W2_NYCTaxi_ETL.ipynb cell 81): the `events` table carries
+    * TIMESTAMP(NANOS) which Spark 4 only reads as long (legacy
+    * nanosAsLong, set in the session) — normalize it back to a microsecond
+    * TimestampType column so downstream datetime functions apply
+    * ([[repairEventsTs]]).
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = spark.read.schema(declaredSchema(spark, path)).parquet(path)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.functions._
 
 /** Pins the amplifier invariants the ×N scale proofs depend on — the
@@ -31,53 +32,54 @@ class ScaleDataSpec extends SparkSpec {
 
   test("×30 amplification preserves dup linearity, replica-0 identity, and vector geometry") {
     val src = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft-scale-spec").toString
-    val factor = 30 // past the old 26 ceiling on purpose
-    ScaleData.run(spark, src, out, factor)
+    withTempDir("scale-spec") { out =>
+      val factor = 30 // past the old 26 ceiling on purpose
+      ScaleData.run(spark, src, out, factor)
 
-    val baseDocs = spark.read.parquet(s"$src/documents.parquet")
-    val docs = spark.read.parquet(s"$out/documents.parquet")
-    assert(docs.count() == factor * baseDocs.count())
+      val baseDocs = spark.read.parquet(s"$src/documents.parquet")
+      val docs = spark.read.parquet(s"$out/documents.parquet")
+      assert(docs.count() == factor * baseDocs.count())
 
-    // replica 0 bit-identical (id-addressed queries keep their anchors)
-    val r0 = docs.filter(col("doc_id") < 100000000L)
-    assert(r0.exceptAll(baseDocs).isEmpty && baseDocs.exceptAll(r0).isEmpty)
+      // replica 0 bit-identical (id-addressed queries keep their anchors)
+      val r0 = docs.filter(col("doc_id") < 100000000L)
+      assert(r0.exceptAll(baseDocs).isEmpty && baseDocs.exceptAll(r0).isEmpty)
 
-    // linear dup growth == distinct lettered texts grow exactly ×factor
-    // (a cross-replica collision — the caesar-period failure mode — would
-    // make this count fall short)
-    def letteredDistinct(df: org.apache.spark.sql.DataFrame): Long =
-      df.filter(col("text").rlike("[A-Za-z]")).select("text").distinct().count()
-    assert(letteredDistinct(docs) == factor * letteredDistinct(baseDocs))
+      // linear dup growth == distinct lettered texts grow exactly ×factor
+      // (a cross-replica collision — the caesar-period failure mode — would
+      // make this count fall short)
+      def letteredDistinct(df: org.apache.spark.sql.DataFrame): Long =
+        df.filter(col("text").rlike("[A-Za-z]")).select("text").distinct().count()
+      assert(letteredDistinct(docs) == factor * letteredDistinct(baseDocs))
 
-    // per-replica internal dup structure preserved exactly: the multiset of
-    // exact-dup group sizes must be identical in every replica
-    val groupSizes = docs
-      .withColumn("replica", (col("doc_id") / 100000000L).cast("long"))
-      .groupBy("replica", "text").count()
-      .groupBy("replica", "count").agg(count("*").as("n_groups"))
-    assert(groupSizes.select("count", "n_groups").distinct().count() ==
-      groupSizes.filter(col("replica") === 0).count())
+      // per-replica internal dup structure preserved exactly: the multiset of
+      // exact-dup group sizes must be identical in every replica
+      val groupSizes = docs
+        .withColumn("replica", (col("doc_id") / 100000000L).cast("long"))
+        .groupBy("replica", "text").count()
+        .groupBy("replica", "count").agg(count("*").as("n_groups"))
+      assert(groupSizes.select("count", "n_groups").distinct().count() ==
+        groupSizes.filter(col("replica") === 0).count())
 
-    // embeddings: orthogonal transform ⇒ norms preserved bit-for-bit up to
-    // fp addition order; compare per-vector against its replica-0 source
-    val emb = spark.read.parquet(s"$out/embeddings.parquet")
-      .withColumn("src_id", col("vec_id") % 100000000L)
-      .withColumn("norm2", aggregate(col("embedding"), lit(0.0d),
-        (acc, x) => acc + x * x))
-    val baseNorm = spark.read.parquet(s"$src/embeddings.parquet")
-      .withColumn("norm2", aggregate(col("embedding"), lit(0.0d),
-        (acc, x) => acc + x * x))
-      .select(col("vec_id").as("src_id"), col("norm2").as("base_norm2"))
-    val drift = emb.join(baseNorm, "src_id")
-      .select(max(abs(col("norm2") - col("base_norm2")))).head().getDouble(0)
-    assert(drift < 1e-3, s"norm drift $drift — transform not orthogonal")
+      // embeddings: orthogonal transform ⇒ norms preserved bit-for-bit up to
+      // fp addition order; compare per-vector against its replica-0 source
+      val emb = spark.read.parquet(s"$out/embeddings.parquet")
+        .withColumn("src_id", col("vec_id") % 100000000L)
+        .withColumn("norm2", aggregate(col("embedding"), lit(0.0d),
+          (acc, x) => acc + x * x))
+      val baseNorm = spark.read.parquet(s"$src/embeddings.parquet")
+        .withColumn("norm2", aggregate(col("embedding"), lit(0.0d),
+          (acc, x) => acc + x * x))
+        .select(col("vec_id").as("src_id"), col("norm2").as("base_norm2"))
+      val drift = emb.join(baseNorm, "src_id")
+        .select(max(abs(col("norm2") - col("base_norm2")))).head().getDouble(0)
+      assert(drift < 1e-3, s"norm drift $drift — transform not orthogonal")
 
-    // and vectors must NOT be identical across replicas (the rotation-only
-    // failure mode at r ≥ dim; here any pair suffices as a canary)
-    val distinctVecs = emb.select("embedding").distinct().count()
-    val baseVecs = baseNorm.count()
-    assert(distinctVecs > (factor - 1) * baseVecs,
-      s"cross-replica vector collisions: $distinctVecs distinct of ${factor * baseVecs}")
+      // and vectors must NOT be identical across replicas (the rotation-only
+      // failure mode at r ≥ dim; here any pair suffices as a canary)
+      val distinctVecs = emb.select("embedding").distinct().count()
+      val baseVecs = baseNorm.count()
+      assert(distinctVecs > (factor - 1) * baseVecs,
+        s"cross-replica vector collisions: $distinctVecs distinct of ${factor * baseVecs}")
+    }
   }
 }

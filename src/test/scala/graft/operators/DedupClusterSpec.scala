@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.functions._
 
 class DedupClusterSpec extends SparkSpec {
@@ -48,28 +49,29 @@ class DedupClusterSpec extends SparkSpec {
   test("iterative rounds use RELIABLE checkpoints when a checkpoint dir is set") {
     import spark.implicits._
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
-      val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val star = Dedup.connectedComponentsStar(chain)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star.size == 30 && star.values.forall(_ == 1L))
-      val prop = Dedup.connectedComponents(chain)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(prop === star)
-      // the reliable path really ran: checkpoint blocks were written to dir
-      def rddFiles(f: java.io.File): Int =
-        Option(f.listFiles).toSeq.flatten
-          .map(c => if (c.isDirectory) rddFiles(c) else if (c.getName.startsWith("part-")) 1 else 0)
-          .sum
-      assert(rddFiles(new java.io.File(dir)) > 0)
-    } finally {
-      // restore the no-checkpoint-dir default so other suites sharing this
-      // SparkContext keep using localCheckpoint (private[spark] setter)
-      classOf[org.apache.spark.SparkContext]
-        .getMethod("checkpointDir_$eq", classOf[Option[_]])
-        .invoke(sc, None)
+    withTempDir("ckpt") { dir =>
+      sc.setCheckpointDir(dir)
+      try {
+        val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+        val star = Dedup.connectedComponentsStar(chain)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(star.size == 30 && star.values.forall(_ == 1L))
+        val prop = Dedup.connectedComponents(chain)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(prop === star)
+        // the reliable path really ran: checkpoint blocks were written to dir
+        def rddFiles(f: java.io.File): Int =
+          Option(f.listFiles).toSeq.flatten
+            .map(c => if (c.isDirectory) rddFiles(c) else if (c.getName.startsWith("part-")) 1 else 0)
+            .sum
+        assert(rddFiles(new java.io.File(dir)) > 0)
+      } finally {
+        // restore the no-checkpoint-dir default so other suites sharing this
+        // SparkContext keep using localCheckpoint (private[spark] setter)
+        classOf[org.apache.spark.SparkContext]
+          .getMethod("checkpointDir_$eq", classOf[Option[_]])
+          .invoke(sc, None)
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.functions._
 
 class GraphRankSpec extends SparkSpec {
@@ -438,25 +439,26 @@ class GraphRankSpec extends SparkSpec {
     // EAGER when a checkpoint dir is set; this pins both the results and
     // the files under that mode (the DedupClusterSpec CC convention).
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-scc-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
-      // cycles over a one-way bridge + a trim-heavy DAG tail: exercises the
-      // trim loop, coloring, membership and the peel update states
-      val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 10L, 10L -> 11L,
-        11L -> 10L, 11L -> 20L, 20L -> 21L, 21L -> 22L)
-      val got = sccOf(edges)
-      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
-        11L -> 10L, 20L -> 20L, 21L -> 21L, 22L -> 22L))
-      def rddFiles(f: java.io.File): Int =
-        Option(f.listFiles).toSeq.flatten
-          .map(c => if (c.isDirectory) rddFiles(c)
-            else if (c.getName.startsWith("part-")) 1 else 0).sum
-      assert(rddFiles(new java.io.File(dir)) > 0)
-    } finally {
-      classOf[org.apache.spark.SparkContext]
-        .getMethod("checkpointDir_$eq", classOf[Option[_]])
-        .invoke(sc, None)
+    withTempDir("scc-ckpt") { dir =>
+      sc.setCheckpointDir(dir)
+      try {
+        // cycles over a one-way bridge + a trim-heavy DAG tail: exercises the
+        // trim loop, coloring, membership and the peel update states
+        val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 10L, 10L -> 11L,
+          11L -> 10L, 11L -> 20L, 20L -> 21L, 21L -> 22L)
+        val got = sccOf(edges)
+        assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+          11L -> 10L, 20L -> 20L, 21L -> 21L, 22L -> 22L))
+        def rddFiles(f: java.io.File): Int =
+          Option(f.listFiles).toSeq.flatten
+            .map(c => if (c.isDirectory) rddFiles(c)
+              else if (c.getName.startsWith("part-")) 1 else 0).sum
+        assert(rddFiles(new java.io.File(dir)) > 0)
+      } finally {
+        classOf[org.apache.spark.SparkContext]
+          .getMethod("checkpointDir_$eq", classOf[Option[_]])
+          .invoke(sc, None)
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 
 class MultimodalSpec extends SparkSpec {
 
@@ -15,18 +16,20 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("binaryFile source reads payload bytes with file metadata, glob-filtered") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media")
-    java.nio.file.Files.write(dir.resolve("a.img"), Array[Byte](1, 2, 3, 4))
-    java.nio.file.Files.write(dir.resolve("b.img"), Array[Byte](9, 8))
-    java.nio.file.Files.write(dir.resolve("skip.wav"), Array[Byte](7))
-    val df = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
-    assert(df.columns.toSet === Set("path", "modificationTime", "length", "content"))
-    val rows = df.collect().map(r =>
-      r.getAs[String]("path").split('/').last -> r.getAs[Array[Byte]]("content").toSeq)
-      .toMap
-    assert(rows.keySet === Set("a.img", "b.img")) // .wav filtered by glob
-    assert(rows("a.img") === Seq[Byte](1, 2, 3, 4))
-    assert(rows("b.img") === Seq[Byte](9, 8))
+    withTempDir("media") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      java.nio.file.Files.write(dir.resolve("a.img"), Array[Byte](1, 2, 3, 4))
+      java.nio.file.Files.write(dir.resolve("b.img"), Array[Byte](9, 8))
+      java.nio.file.Files.write(dir.resolve("skip.wav"), Array[Byte](7))
+      val df = Multimodal.readBinaryDir(spark, dir.toString, glob = "*.img")
+      assert(df.columns.toSet === Set("path", "modificationTime", "length", "content"))
+      val rows = df.collect().map(r =>
+        r.getAs[String]("path").split('/').last -> r.getAs[Array[Byte]]("content").toSeq)
+        .toMap
+      assert(rows.keySet === Set("a.img", "b.img")) // .wav filtered by glob
+      assert(rows("a.img") === Seq[Byte](1, 2, 3, 4))
+      assert(rows("b.img") === Seq[Byte](9, 8))
+    }
   }
 
   test("fromDocuments builds typed media items with binary payloads") {

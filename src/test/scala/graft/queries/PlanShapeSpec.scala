@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.TempDirs.withTempDir
 
 /** Plan-shape regression guard: the scale properties the engine is built
   * around, asserted on the planned (pre-execution) physical plans of the
@@ -173,34 +174,35 @@ class PlanShapeSpec extends SparkSpec {
     import graft.sources.Tables
     val emb = Tables.load(spark, sf, "embeddings")
     val (assigned, centroids) = Similarity.ivfAssign(emb, k = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
-    val allDirs = new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("centroid_id="))
-    assert(allDirs > 2, s"fixture degenerate: only $allDirs centroid dirs")
-    // probe 2 of the k centroids, the IVF query path's at-rest shape
-    val probes = centroids.map(_._1).sorted.take(2)
-    val probed = spark.read.parquet(dir)
-      .filter(col("centroid_id").isin(probes: _*))
-    probed.collect()
-    val plan = probed.queryExecution.executedPlan.toString
-    // the centroid predicate is a PARTITION filter (directory pruning),
-    // not a data filter evaluated after reading everything
-    assert(plan.contains("PartitionFilters") && plan.contains("centroid_id"), plan)
-    assert(!plan.contains("PushedFilters: [In(centroid_id"), plan)
-    // and the scan's file set really shrank to the probed directories
-    val scanned = probed.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.get
-    val filesPerDir = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("centroid_id="))
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-      .toMap
-    val expected = probes.map(p => filesPerDir(s"centroid_id=$p")).sum.toLong
-    assert(scanned === expected,
-      s"scan read $scanned files, probed dirs hold $expected of ${filesPerDir.values.sum}")
+    withTempDir("ivf") { dir =>
+      assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
+      val allDirs = new java.io.File(dir).listFiles()
+        .count(_.getName.startsWith("centroid_id="))
+      assert(allDirs > 2, s"fixture degenerate: only $allDirs centroid dirs")
+      // probe 2 of the k centroids, the IVF query path's at-rest shape
+      val probes = centroids.map(_._1).sorted.take(2)
+      val probed = spark.read.parquet(dir)
+        .filter(col("centroid_id").isin(probes: _*))
+      probed.collect()
+      val plan = probed.queryExecution.executedPlan.toString
+      // the centroid predicate is a PARTITION filter (directory pruning),
+      // not a data filter evaluated after reading everything
+      assert(plan.contains("PartitionFilters") && plan.contains("centroid_id"), plan)
+      assert(!plan.contains("PushedFilters: [In(centroid_id"), plan)
+      // and the scan's file set really shrank to the probed directories
+      val scanned = probed.queryExecution.executedPlan.collectLeaves()
+        .collectFirst {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.metrics("numFiles").value
+        }.get
+      val filesPerDir = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("centroid_id="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+        .toMap
+      val expected = probes.map(p => filesPerDir(s"centroid_id=$p")).sum.toLong
+      assert(scanned === expected,
+        s"scan read $scanned files, probed dirs hold $expected of ${filesPerDir.values.sum}")
+    }
   }
 
   test("LSH table at rest: multiprobe scan is partition-pruned to matching buckets") {
@@ -218,39 +220,40 @@ class PlanShapeSpec extends SparkSpec {
     val bucketed = emb.select(col("vec_id"),
       Similarity.lshBucket(Similarity.toDouble(col("embedding")), dim, nPlanes)
         .as("bucket"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh").toString
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-    val bucketDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(d =>
-        d.getName.stripPrefix("bucket=").toLong ->
-          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    assert(bucketDirs.size > 4, s"fixture degenerate: ${bucketDirs.size} buckets")
-    // query bucket = the same plane-sign fold annTopK computes driver-side
-    val queryVec = Similarity.collectQueryVec(emb, 1)
-    val qBucket = Similarity.hyperplanes(dim, nPlanes).zipWithIndex
-      .foldLeft(0L) { case (acc, (p, i)) =>
-        if (p.zip(queryVec).map { case (a, b) => a * b }.sum >= 0)
-          acc | (1L << i) else acc
-      }
-    val probed = spark.read.parquet(dir)
-      .filter(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
-    probed.collect()
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
-    assert(!plan.contains("PushedFilters: [") ||
-      !plan.contains("PushedFilters: [bucket"), plan)
-    val scanned = probed.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.get
-    val matching = bucketDirs.filter { case (b, _) =>
-      java.lang.Long.bitCount(b ^ qBucket) <= probeHamming }
-    val expected = matching.values.sum.toLong
-    assert(matching.size < bucketDirs.size,
-      "probe matched every bucket — pruning not exercised")
-    assert(scanned === expected,
-      s"scan read $scanned files, probed buckets hold $expected of ${bucketDirs.values.sum}")
+    withTempDir("lsh") { dir =>
+      bucketed.write.mode("overwrite").partitionBy("bucket").parquet(dir)
+      val bucketDirs = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("bucket=")).map(d =>
+          d.getName.stripPrefix("bucket=").toLong ->
+            d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+      assert(bucketDirs.size > 4, s"fixture degenerate: ${bucketDirs.size} buckets")
+      // query bucket = the same plane-sign fold annTopK computes driver-side
+      val queryVec = Similarity.collectQueryVec(emb, 1)
+      val qBucket = Similarity.hyperplanes(dim, nPlanes).zipWithIndex
+        .foldLeft(0L) { case (acc, (p, i)) =>
+          if (p.zip(queryVec).map { case (a, b) => a * b }.sum >= 0)
+            acc | (1L << i) else acc
+        }
+      val probed = spark.read.parquet(dir)
+        .filter(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
+      probed.collect()
+      val plan = probed.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
+      assert(!plan.contains("PushedFilters: [") ||
+        !plan.contains("PushedFilters: [bucket"), plan)
+      val scanned = probed.queryExecution.executedPlan.collectLeaves()
+        .collectFirst {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.metrics("numFiles").value
+        }.get
+      val matching = bucketDirs.filter { case (b, _) =>
+        java.lang.Long.bitCount(b ^ qBucket) <= probeHamming }
+      val expected = matching.values.sum.toLong
+      assert(matching.size < bucketDirs.size,
+        "probe matched every bucket — pruning not exercised")
+      assert(scanned === expected,
+        s"scan read $scanned files, probed buckets hold $expected of ${bucketDirs.values.sum}")
+    }
   }
 
   test("partition-pruned scan skips non-matching hive partitions") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.taxi.{Cleaning, RunPipeline, TaxiFixture}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -11,7 +11,12 @@ import java.nio.file.Files
   */
 class TablesSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft-sink").toString
+  // one directory for the whole suite: the catalog-DDL test reads the
+  // table the partitioned-write test leaves behind
+  private lazy val tmp = TempDirs.create("sink")
+
+  override def afterAll(): Unit =
+    try TempDirs.deleteTree(tmp) finally super.afterAll()
 
   test("partitioned write + partition-pruned re-read (cells 119/127)") {
     val path = s"$tmp/final"

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.functions._
 
 class ZOrderSpec extends SparkSpec {
@@ -43,30 +44,34 @@ class ZOrderSpec extends SparkSpec {
     // 64x64 grid, one row per cell; 16 files either z-ordered or sorted by a
     val grid = (for (a <- 0 until 64; b <- 0 until 64) yield (a.toLong, b.toLong))
       .toDF("a", "b")
-    val zPath = java.nio.file.Files.createTempDirectory("graft-z").toString + "/t"
-    val sPath = java.nio.file.Files.createTempDirectory("graft-s").toString + "/t"
-    Tables.writeZOrdered(grid, zPath, Seq("a", "b"), numFiles = 16, bits = 6)
-    grid.repartitionByRange(16, col("a")).sortWithinPartitions("a", "b")
-      .write.mode("overwrite").parquet(sPath)
+    withTempDir("z") { zDir =>
+      val zPath = s"$zDir/t"
+      withTempDir("s") { sDir =>
+        val sPath = s"$sDir/t"
+        Tables.writeZOrdered(grid, zPath, Seq("a", "b"), numFiles = 16, bits = 6)
+        grid.repartitionByRange(16, col("a")).sortWithinPartitions("a", "b")
+          .write.mode("overwrite").parquet(sPath)
 
-    // per-file footer-equivalent stats; a box on b alone intersects…
-    def filesHit(path: String): (Int, Int) = {
-      val st = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("b").as("bmn"), max("b").as("bmx")).collect()
-      val hit = st.count(r => !(r.getLong(2) < 8L || r.getLong(1) > 15L))
-      (hit, st.length)
+        // per-file footer-equivalent stats; a box on b alone intersects…
+        def filesHit(path: String): (Int, Int) = {
+          val st = spark.read.parquet(path)
+            .groupBy(input_file_name().as("f"))
+            .agg(min("b").as("bmn"), max("b").as("bmx")).collect()
+          val hit = st.count(r => !(r.getLong(2) < 8L || r.getLong(1) > 15L))
+          (hit, st.length)
+        }
+        val (zHit, zFiles) = filesHit(zPath)
+        val (sHit, sFiles) = filesHit(sPath)
+        assert(zFiles === 16 && sFiles === 16)
+        // 1-D a-sort: every file spans the whole b domain -> zero pruning
+        assert(sHit === 16, s"a-sorted layout unexpectedly pruned b: $sHit")
+        // z-order: only files whose b-range overlaps [8, 15] can match
+        assert(zHit <= 8, s"z-order pruned too little on b: $zHit of $zFiles")
+        // both layouts return the identical rows for the box
+        val want = grid.filter(col("b").between(8, 15)).count()
+        assert(spark.read.parquet(zPath).filter(col("b").between(8, 15)).count() === want)
+        assert(spark.read.parquet(sPath).filter(col("b").between(8, 15)).count() === want)
+      }
     }
-    val (zHit, zFiles) = filesHit(zPath)
-    val (sHit, sFiles) = filesHit(sPath)
-    assert(zFiles === 16 && sFiles === 16)
-    // 1-D a-sort: every file spans the whole b domain -> zero pruning
-    assert(sHit === 16, s"a-sorted layout unexpectedly pruned b: $sHit")
-    // z-order: only files whose b-range overlaps [8, 15] can match
-    assert(zHit <= 8, s"z-order pruned too little on b: $zHit of $zFiles")
-    // both layouts return the identical rows for the box
-    val want = grid.filter(col("b").between(8, 15)).count()
-    assert(spark.read.parquet(zPath).filter(col("b").between(8, 15)).count() === want)
-    assert(spark.read.parquet(sPath).filter(col("b").between(8, 15)).count() === want)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -145,24 +146,25 @@ class EventStreamsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val in = MemoryStream[Event]
-    val q = windowedCounts(in.toDF(), window = "1 hour", slide = "1 hour",
-        watermark = "30 minutes")
-      .writeStream.format("parquet")
-      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
-      .outputMode("append").start()
-    in.addData(ev(1, "2024-01-01 10:05:00"), ev(2, "2024-01-01 10:20:00"))
-    q.processAllAvailable()
-    in.addData(ev(3, "2024-01-01 13:00:00")) // advance watermark, close window
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.read.parquet(s"$dir/out")
-    val rows = out.collect()
-    assert(rows.exists(r => r.getAs[Long]("n") == 2L &&
-      r.getAs[String]("event_type") == "click"))
-    // checkpoint directory materialized (exactly-once bookkeeping)
-    assert(new java.io.File(s"$dir/ckpt").exists())
+    withTempDir("stream") { dir =>
+      val in = MemoryStream[Event]
+      val q = windowedCounts(in.toDF(), window = "1 hour", slide = "1 hour",
+          watermark = "30 minutes")
+        .writeStream.format("parquet")
+        .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
+        .outputMode("append").start()
+      in.addData(ev(1, "2024-01-01 10:05:00"), ev(2, "2024-01-01 10:20:00"))
+      q.processAllAvailable()
+      in.addData(ev(3, "2024-01-01 13:00:00")) // advance watermark, close window
+      q.processAllAvailable()
+      q.stop()
+      val out = spark.read.parquet(s"$dir/out")
+      val rows = out.collect()
+      assert(rows.exists(r => r.getAs[Long]("n") == 2L &&
+        r.getAs[String]("event_type") == "click"))
+      // checkpoint directory materialized (exactly-once bookkeeping)
+      assert(new java.io.File(s"$dir/ckpt").exists())
+    }
   }
 
   test("sessionization closes sessions after the gap and aggregates per session") {
@@ -314,52 +316,53 @@ class EventStreamsSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
-    val in = MemoryStream[Event]
-    val q = upsertLatest(in.toDF(), s"$dir/state", s"$dir/ckpt", nBuckets = 4).start()
-    // batch 1: first sighting of users 1 and 2
-    in.addData(
-      ev(1, "2024-01-01 10:00:00", user = 1L, v = 1.0),
-      ev(2, "2024-01-01 10:00:00", user = 2L, typ = "view", v = 2.0))
-    q.processAllAvailable()
-    // batch 2: an OLDER event for user 1 (must NOT regress the key) and a
-    // newer one for user 2 (must replace)
-    in.addData(
-      ev(3, "2024-01-01 09:00:00", user = 1L, typ = "stale", v = 9.0),
-      ev(4, "2024-01-01 11:00:00", user = 2L, typ = "buy", v = 5.0))
-    q.processAllAvailable()
-    // batch 3: a new user, plus a ts TIE for user 1 — higher event_id wins
-    in.addData(
-      ev(5, "2024-01-01 10:00:00", user = 3L, typ = "view", v = 4.0),
-      ev(6, "2024-01-01 10:00:00", user = 1L, typ = "tie", v = 7.0))
-    q.processAllAvailable()
-    q.stop()
-    val state = spark.read.parquet(s"$dir/state").collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        ((r.getAs[Long]("event_id"), r.getAs[String]("event_type"),
-          r.getAs[Double]("value")))).toMap
-    assert(state === Map(
-      1L -> ((6L, "tie", 7.0)),     // ts tie broken by event_id: 6 > 1
-      2L -> ((4L, "buy", 5.0)),     // newer ts replaced the view
-      3L -> ((5L, "view", 4.0))))
-    // the state table is laid out by key bucket (hive partition dirs) so
-    // the per-batch dynamic overwrite rewrites touched buckets only
-    val buckets = new java.io.File(s"$dir/state").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(buckets.forall(_.startsWith("bucket=")))
-    assert(buckets === Set("bucket=1", "bucket=2", "bucket=3"))
-    // the per-batch merge's read side must PARTITION-PRUNE to the touched
-    // buckets — that is the "per-batch I/O ∝ touched keys" claim: the
-    // bucket filter lands in PartitionFilters (directory pruning before
-    // any row is read), not in the post-scan Filter
-    import org.apache.spark.sql.functions.col
-    val pruned = spark.read.parquet(s"$dir/state")
-      .filter(col("bucket").isin(1L))
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") &&
-      scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("bucket"), scan)
-    assert(pruned.count() === 1L) // only user 1 lives in bucket 1
+    withTempDir("upsert") { dir =>
+      val in = MemoryStream[Event]
+      val q = upsertLatest(in.toDF(), s"$dir/state", s"$dir/ckpt", nBuckets = 4).start()
+      // batch 1: first sighting of users 1 and 2
+      in.addData(
+        ev(1, "2024-01-01 10:00:00", user = 1L, v = 1.0),
+        ev(2, "2024-01-01 10:00:00", user = 2L, typ = "view", v = 2.0))
+      q.processAllAvailable()
+      // batch 2: an OLDER event for user 1 (must NOT regress the key) and a
+      // newer one for user 2 (must replace)
+      in.addData(
+        ev(3, "2024-01-01 09:00:00", user = 1L, typ = "stale", v = 9.0),
+        ev(4, "2024-01-01 11:00:00", user = 2L, typ = "buy", v = 5.0))
+      q.processAllAvailable()
+      // batch 3: a new user, plus a ts TIE for user 1 — higher event_id wins
+      in.addData(
+        ev(5, "2024-01-01 10:00:00", user = 3L, typ = "view", v = 4.0),
+        ev(6, "2024-01-01 10:00:00", user = 1L, typ = "tie", v = 7.0))
+      q.processAllAvailable()
+      q.stop()
+      val state = spark.read.parquet(s"$dir/state").collect()
+        .map(r => r.getAs[Long]("user_id") ->
+          ((r.getAs[Long]("event_id"), r.getAs[String]("event_type"),
+            r.getAs[Double]("value")))).toMap
+      assert(state === Map(
+        1L -> ((6L, "tie", 7.0)),     // ts tie broken by event_id: 6 > 1
+        2L -> ((4L, "buy", 5.0)),     // newer ts replaced the view
+        3L -> ((5L, "view", 4.0))))
+      // the state table is laid out by key bucket (hive partition dirs) so
+      // the per-batch dynamic overwrite rewrites touched buckets only
+      val buckets = new java.io.File(s"$dir/state").listFiles()
+        .filter(_.isDirectory).map(_.getName).toSet
+      assert(buckets.forall(_.startsWith("bucket=")))
+      assert(buckets === Set("bucket=1", "bucket=2", "bucket=3"))
+      // the per-batch merge's read side must PARTITION-PRUNE to the touched
+      // buckets — that is the "per-batch I/O ∝ touched keys" claim: the
+      // bucket filter lands in PartitionFilters (directory pruning before
+      // any row is read), not in the post-scan Filter
+      import org.apache.spark.sql.functions.col
+      val pruned = spark.read.parquet(s"$dir/state")
+        .filter(col("bucket").isin(1L))
+      val scan = pruned.queryExecution.executedPlan.toString
+      assert(scan.contains("PartitionFilters") &&
+        scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
+          .contains("bucket"), scan)
+      assert(pruned.count() === 1L) // only user 1 lives in bucket 1
+    }
   }
 
   test("windowedApproxDistinct sketches per-window distinct users within the rsd band") {

@@ -1,8 +1,7 @@
 package graft.taxi
 
-import java.nio.file.Files
-
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import graft.tools.Codegen
 
 /** The session's generated-class cache holds a whole pass of the taxi
@@ -16,11 +15,12 @@ class CodegenCacheSpec extends SparkSpec {
     * table read back, every analytic to the noop sink.
     */
   private def pass(): Unit = {
-    val out = Files.createTempDirectory("taxi-codegen").toString
-    RunPipeline.sink(Cleaning.pipeline(TaxiFixture.raw(spark)), out)
-    val table = spark.read.parquet(out)
-    Analytics.queries.foreach { case (_, q) =>
-      q(table).write.mode("overwrite").format("noop").save()
+    withTempDir("taxi-codegen") { out =>
+      RunPipeline.sink(Cleaning.pipeline(TaxiFixture.raw(spark)), out)
+      val table = spark.read.parquet(out)
+      Analytics.queries.foreach { case (_, q) =>
+        q(table).write.mode("overwrite").format("noop").save()
+      }
     }
   }
 
