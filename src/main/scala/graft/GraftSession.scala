@@ -87,13 +87,10 @@ object GraftSession {
       // ~100k users × open sessions never fits a single JVM's heap.
       // RocksDB (in /opt/spark/jars, rocksdbjni 9.8.4) moves state
       // off-heap with disk spill — the production cluster shape for
-      // large stateful streaming. Default ON; SPARK_GRAFT_STATESTORE=heap
-      // restores the on-heap provider for small-state comparisons.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("heap"))
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // large stateful streaming. The provider is a runtime conf, so one
+      // query can run under another (withStateStore below) and
+      // tools.AbConf A/Bs it per entry.
+      .config(StateStoreKey, RocksDbStateStore)
 
   def local(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()
@@ -124,21 +121,14 @@ object GraftSession {
     * SIZE is watermark-bounded (horizon × arrival rate per partition),
     * not corpus-unbounded like open sessions. Per-query heap is safe
     * exactly where state is bounded and lookup-dominated.
-    *
-    * An explicit session-global `SPARK_GRAFT_STATESTORE` pin OUTRANKS the
-    * hint (the block becomes a no-op): the env exists for A/B
-    * measurement, and a pin that silently un-pins itself inside hinted
-    * queries would corrupt the comparison it was set up for.
     */
-  def withStateStore[T](s: SparkSession, providerClass: String)(body: => T): T =
-    if (sys.env.contains("SPARK_GRAFT_STATESTORE")) body
-    else {
-      val prev = s.conf.getOption(StateStoreKey)
-      s.conf.set(StateStoreKey, providerClass)
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(StateStoreKey, v)
-        case None    => s.conf.unset(StateStoreKey)
-      }
+  def withStateStore[T](s: SparkSession, providerClass: String)(body: => T): T = {
+    val prev = s.conf.getOption(StateStoreKey)
+    s.conf.set(StateStoreKey, providerClass)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(StateStoreKey, v)
+      case None    => s.conf.unset(StateStoreKey)
     }
+  }
 }

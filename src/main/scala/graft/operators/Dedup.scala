@@ -5,9 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline. New scope beyond
   * the reference (its only dedup-shaped op is distinct(), SURVEY.md §2b);
-  * built entirely from Catalyst built-ins (higher-order array functions +
-  * xxhash64), so everything distributes: the only shuffles are the
-  * candidate-generation groupBy/joins, never a cartesian product.
+  * built from Catalyst built-ins (higher-order array functions, md5,
+  * xxhash64) and a few codegen'd native expressions (graftnative), so
+  * everything distributes: the only shuffles are the candidate-generation
+  * groupBy/joins, never a cartesian product.
+  *
+  * The MinHash and SimHash sketches have ONE hash family, the
+  * engine-portable md5 family of [[PortableHash]]: every signature these
+  * operators emit or persist (a sketch table is identity at rest) is
+  * replayed exactly by an independent engine, the DuckDB oracles.
   *
   * Scale notes (100 TB): every method here is
   *   narrow map (per-doc sketch) → shuffle on sketch key → verify join.
@@ -363,41 +369,15 @@ object Dedup {
     newDf.join(seen, md5(newDf(textCol)) === seen("__graft_seen_h"), "left_anti")
   }
 
-  /** MinHash signature from a column of pre-hashed shingles (array<long>):
-    * numHashes independent families realized as xxhash64(h, seed_i) —
-    * re-seeding the hash beats (a*x+b) mod p both for speed (no modulo) and
-    * for ANSI-safety (no overflowing multiply).
-    *
-    * Computed by the NATIVE one-pass expression
-    * (graftnative.MinHashSignature, codegen'd): the HOF formulation
-    * ([[minHashSignatureHof]], kept as the lockstep oracle) walks the
-    * shingle array once per family through interpreted lambdas and was the
-    * dedup family's measured cost center — 29 s for a 5,000-doc sf0.1
-    * sketch vs ~1.5 s for the shingle hashing feeding it.
-    */
-  def minHashSignature(shingleHashes: Column, numHashes: Int): Column =
-    org.apache.spark.sql.graftnative.MinHashSignature.xxhash(shingleHashes, numHashes)
-
-  /** Reference HOF formulation of [[minHashSignature]] — the correctness
-    * oracle for the native expression (MinHashSignatureSpec lockstep).
-    */
-  private[graft] def minHashSignatureHof(shingleHashes: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingleHashes, h => xxhash64(h, lit(i))))
-    }: _*)
-
-  // ------------------------------------------------------ portable MinHash
-  // An engine-replayable variant of the sketch: base shingle hash =
+  // ------------------------------------------------------------- MinHash
+  // The engine-replayable sketch: base shingle hash =
   // PortableHash.portable60 of the gram STRING reduced mod 2^31-1, families
   // = literal affine permutations (a_i·h + b_i) mod p, band key = a modular
   // chain over the band's signature values. Every step is plain md5 +
   // 64-bit-safe integer arithmetic, so an independent engine (the DuckDB
   // oracle for q_dedup_minhash) reproduces signatures, band collisions, and
-  // the verified pair set EXACTLY. Cost vs the xxhash64 path: one md5 per
-  // gram instead of one long-hash (~4x that step); the 64-family sweep is
-  // multiplies+mods, comparable to re-seeded hashing. Use the xxhash64
-  // path when sketches never leave the job; this one when signatures are
-  // persisted for other engines or must be independently auditable.
+  // the verified pair set EXACTLY. Cost: one md5 per gram (~4x an xxhash64
+  // of it); the 64-family sweep is multiplies+mods in one native loop.
 
   /** 2^31−1 (Mersenne prime): affine products stay ≤ ~2^62 — no ANSI
     * overflow — and the modulus is cheap in any engine.
@@ -421,14 +401,15 @@ object Dedup {
     array_distinct(transform(shingles(text, k),
       g => PortableHash.portable60(g) % MinHashP))
 
-  /** Portable signature: min over shingles of each affine family. Same
-    * native one-pass expression as [[minHashSignature]] (52 s → sub-second
-    * for the sf0.1 sketch); the affine constants are embedded as plan
-    * references, so the values — and the DuckDB oracles replaying them —
-    * are unchanged.
+  /** Signature: min over shingles of each affine family, computed by the
+    * native one-pass expression (graftnative.MinHashSignature: 52 s →
+    * sub-second for the sf0.1 sketch; the HOF form
+    * [[minHashSignaturePortableHof]] is kept as its lockstep oracle). The
+    * affine constants are embedded as plan references, so the values — and
+    * the DuckDB oracles replaying them — are those of the HOF form.
     */
   def minHashSignaturePortable(shingleHashes: Column, numHashes: Int): Column =
-    org.apache.spark.sql.graftnative.MinHashSignature.portable(
+    org.apache.spark.sql.graftnative.MinHashSignature(
       shingleHashes, numHashes, affineParams(numHashes), MinHashP)
 
   /** Reference HOF formulation of [[minHashSignaturePortable]] — the
@@ -458,24 +439,20 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       numHashes: Int = 64,
-      shingleK: Int = 3,
-      portable: Boolean = false): DataFrame =
+      shingleK: Int = 3): DataFrame =
     df.select(
       col(idCol).cast("long").as("id"),
-      (if (portable) minHashSignaturePortable(portableShingleHashes(col(textCol), shingleK), numHashes)
-       else minHashSignature(hashedShingles(col(textCol), shingleK), numHashes)).as("sig"))
+      minHashSignaturePortable(portableShingleHashes(col(textCol), shingleK), numHashes)
+        .as("sig"))
 
   /** Band-key structs (band, bh) for a signature — ONE derivation shared by
     * [[minHashLsh]]'s self-join and [[incrementalMinHash]]'s probe join, so
     * a probe against a persisted sketch table can never band differently
     * than the job that built it.
     */
-  private[operators] def bandStructs(sig: Column, b0: Int, r: Int, portable: Boolean): Column =
-    transform(sequence(lit(0), lit(b0 - 1)), i => {
-      val sl = slice(sig, i * lit(r) + 1, lit(r))
-      struct(i.as("band"),
-        (if (portable) portableBandChain(sl) else xxhash64(sl, i)).as("bh"))
-    })
+  private def bandStructs(sig: Column, b0: Int, r: Int): Column =
+    transform(sequence(lit(0), lit(b0 - 1)), i =>
+      struct(i.as("band"), portableBandChain(slice(sig, i * lit(r) + 1, lit(r))).as("bh")))
 
   /** Auto-banding: fewest bands whose collision probability at `threshold`
     * is ≥ 95% (see [[minHashLsh]] scaladoc for the full rationale).
@@ -515,8 +492,7 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 0,
       shingleK: Int = 3,
-      threshold: Double = 0.5,
-      portable: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     // auto = divisor pairs (b = n/r) from widest r down to the r=2 floor
     // (recall(t) = 1-(1-t^r)^b at t = threshold, 95% target); no divisor
     // reaching it → smallest divisor >= 2 so banding stays valid for odd
@@ -534,15 +510,12 @@ object Dedup {
     // Tracked in OperatorCaches: callers release via releaseAll().
     val sketched = OperatorCaches.persistTracked(df.select(
         col(idCol).cast("long").as("id"),
-        (if (portable) portableShingleHashes(col(textCol), shingleK)
-         else hashedShingles(col(textCol), shingleK)).as("sh"))
-      .select(col("id"), col("sh"),
-        (if (portable) minHashSignaturePortable(col("sh"), numHashes)
-         else minHashSignature(col("sh"), numHashes)).as("sig")))
+        portableShingleHashes(col(textCol), shingleK).as("sh"))
+      .select(col("id"), col("sh"), minHashSignaturePortable(col("sh"), numHashes).as("sig")))
 
     val banded = sketched.select(
       col("id"),
-      explode(bandStructs(col("sig"), b0, r, portable)).as("bk"))
+      explode(bandStructs(col("sig"), b0, r)).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.bh"))
 
     // candidate ids only through the band shuffle; shingle arrays join back
@@ -602,20 +575,19 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 0,
       shingleK: Int = 3,
-      threshold: Double = 0.5,
-      portable: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val b0 = if (bands > 0) bands else autoBands(numHashes, threshold)
     require(numHashes % b0 == 0, "bands must divide numHashes")
     val r = numHashes / b0
     val newSk = OperatorCaches.persistTracked(
-      minHashSketchTable(newDf, idCol, textCol, numHashes, shingleK, portable))
+      minHashSketchTable(newDf, idCol, textCol, numHashes, shingleK))
     // the base side is consumed twice (band join + signature join): persist
     // so a computed sketch frame isn't sketched twice — for the production
     // parquet-backed table this just pins the (id, sig) columns once
     val baseSk = OperatorCaches.persistTracked(baseSketches)
     def banded(sk: DataFrame): DataFrame = sk.select(
       col("id"),
-      explode(bandStructs(col("sig"), b0, r, portable)).as("bk"))
+      explode(bandStructs(col("sig"), b0, r)).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.bh"))
     val cand = banded(newSk).as("n")
       .join(banded(baseSk).as("b"),
@@ -636,23 +608,15 @@ object Dedup {
       newDf(idCol).cast("long") === col("__graft_dup_id"), "left_anti")
   }
 
-  /** 64-bit SimHash of the token stream, packed into a long. Per-token
-    * xxhash64 votes +1/-1 on each bit position; the sign of the per-bit sum
-    * is the fingerprint bit. Computed by the native codegen'd
-    * [[org.apache.spark.sql.graftnative.SimHash64]] expression — one hash +
-    * 64 register adds per token inside WholeStageCodegen, replacing the
-    * interpreted HOF fold ([[simHashHof]], kept as the lockstep oracle)
-    * that allocated a 64-long vote array per token.
-    */
-  def simHash(text: Column): Column =
-    org.apache.spark.sql.graftnative.SimHash64(toks(text))
-
-  /** Reference HOF formulation of [[simHash]] (interpreted lambda dispatch
-    * per token) — the correctness oracle for the native expression's
-    * lockstep spec, never the hot path.
+  /** Reference per-row formulation of the 64-bit SimHash of the token
+    * stream, packed into a long: per-token [[PortableHash.portable64]]
+    * votes +1/-1 on each bit position; the sign of the per-bit sum is the
+    * fingerprint bit. An interpreted HOF fold that allocates a 64-long
+    * vote array per token — the lockstep oracle for [[simHashSketch]],
+    * never the hot path.
     */
   private[graft] def simHashHof(text: Column): Column = {
-    val hs = transform(toks(text), t => xxhash64(t))
+    val hs = transform(toks(text), t => PortableHash.portable64(t))
     val votes = aggregate(
       hs,
       array_repeat(lit(0L), 64),
@@ -669,7 +633,7 @@ object Dedup {
     array((63 to 0 by -1).map(b =>
       when(shiftrightunsigned(h, b).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))): _*)
 
-  /** Bulk SimHash sketch (id, sh) — bit-identical to [[simHash]] but built
+  /** Bulk SimHash sketch (id, sh) — bit-identical to [[simHashHof]] but built
     * as explode(token hashes) → 64 codegen'd bit-count SUMs → repack,
     * instead of the per-row higher-order-function fold. The HOF path
     * allocates a 64-long vote array per TOKEN and runs interpreted
@@ -678,15 +642,13 @@ object Dedup {
     * stage with map-side partial sums, so at scale it is a narrow
     * explode + one shuffle of 65 longs per document. Equivalence: bit b is
     * set iff Σ votes > 0 iff 2·(count of set bit b) > n_tokens. Docs whose
-    * token array is null produce no row here (vs a null sh from simHash) —
+    * token array is null produce no row here (vs a null sh from simHashHof) —
     * indistinguishable downstream, since null never equi-joins.
     */
   private[operators] def simHashSketch(
-      df: DataFrame, idCol: String, textCol: String,
-      portable: Boolean = false): DataFrame = {
+      df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tokens = df.select(col(idCol).cast("long").as("id"),
-      explode(transform(toks(col(textCol)),
-        t => if (portable) PortableHash.portable64(t) else xxhash64(t))).as("h"))
+      explode(transform(toks(col(textCol)), t => PortableHash.portable64(t))).as("h"))
     val bitSums = (63 to 0 by -1).map(b =>
       sum(shiftrightunsigned(col("h"), b).bitwiseAND(lit(1L))).as(s"s$b"))
     val counted = tokens.groupBy("id")
@@ -709,9 +671,8 @@ object Dedup {
       df: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      maxHamming: Int = 3,
-      portable: Boolean = false): DataFrame =
-    hammingPairs(simHashSketch(df, idCol, textCol, portable), maxHamming)
+      maxHamming: Int = 3): DataFrame =
+    hammingPairs(simHashSketch(df, idCol, textCol), maxHamming)
 
   /** Pigeonhole-banded hamming pairs over ANY 64-bit sketch column — the
     * pair machinery behind [[simHashPairs]], reusable for every 64-bit
@@ -1148,10 +1109,8 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       threshold: Double = 0.5,
-      useStar: Boolean = false,
-      portable: Boolean = false): DataFrame = {
-    val pairs = minHashLsh(df, idCol, textCol, threshold = threshold,
-      portable = portable)
+      useStar: Boolean = false): DataFrame = {
+    val pairs = minHashLsh(df, idCol, textCol, threshold = threshold)
     // iterate ONLY over nodes that have edges (dup-group members — usually
     // a small fraction of the corpus); the singleton majority joins back
     // afterwards as its own component, so no per-round shuffle carries it

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Cost: md5 is ~4x xxhash64 per call — narrow-map work that is
   * scan-dominated at 100 TB. Keep xxhash64 for hashes that never leave the
-  * job (shuffle keys, transient sketches).
+  * job (shuffle keys, in-job gram hashes); the MinHash and SimHash
+  * sketches in `Dedup` use this family only.
   */
 object PortableHash {
 

@@ -35,15 +35,11 @@ object Profiling {
   def distinctCounts(df: DataFrame, cols: Seq[String]): DataFrame =
     aggAll(df, cols.map(c => countDistinct(col(c)).as(s"dist_$c")))
 
-  /** Scale path for cell 16: HyperLogLog++ sketch — one pass, no per-column
-    * shuffle of raw values, bounded error. The variant to use at 100 TB.
-    */
-  def approxDistinctCounts(df: DataFrame, cols: Seq[String], rsd: Double = 0.01): DataFrame =
-    aggAll(df, cols.map(c => approx_count_distinct(col(c), rsd).as(s"dist_$c")))
-
-  /** Sketch-accuracy audit of [[approxDistinctCounts]]: one row per column
-    * with the EXACT distinct count and whether the HLL++ estimate lands
-    * within `tol` relative error of it. The HLL estimate itself is
+  /** Scale path for cell 16, under audit: the HyperLogLog++ sketch
+    * (`approx_count_distinct`: one pass, no per-column shuffle of raw
+    * values, bounded error) checked against [[distinctCounts]]. One row
+    * per column with the EXACT distinct count and whether the HLL++
+    * estimate lands within `tol` relative error of it. The HLL estimate itself is
     * order-independent and hash-deterministic, so the booleans are
     * deterministic — which makes this auditable by an independent engine
     * (the oracle recomputes the exact counts and asserts the bound holds),

@@ -507,8 +507,7 @@ object TextAnalysis {
     * a different engine — so it must be reproducible outside Spark (the
     * DuckDB oracle replays this chain verbatim via list_reduce). md5 is
     * ~4x the per-token cost of xxhash64; one narrow map, no shuffle, so
-    * scan-dominated at 100 TB either way. [[fingerprintXx]] keeps the
-    * cheaper chain for fingerprints that never leave the job.
+    * scan-dominated at 100 TB either way.
     */
   def fingerprint(df: DataFrame, textCol: String = "text"): DataFrame =
     df.withColumn("fingerprint",
@@ -517,16 +516,6 @@ object TextAnalysis {
         lit(1125899906842597L),
         (acc, tok) => PortableHash.portable60(
           concat(acc.cast("string"), lit(":"), tok))))
-
-  /** xxhash64 variant of [[fingerprint]] — fastest chain when the
-    * fingerprint is job-internal (not persisted for other engines).
-    */
-  def fingerprintXx(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("fingerprint",
-      aggregate(
-        wsTokens(col(textCol)),
-        lit(1125899906842597L),
-        (acc, tok) => xxhash64(acc, tok)))
 
   /** Fixed-size token-window chunking with overlap — the context-window
     * splitter of a training pipeline (documents → model-sized pieces,

@@ -461,7 +461,7 @@ object QueryCatalog {
   }
 
   /** DuckDB CTE chain replaying the PORTABLE MinHash+LSH path end-to-end
-    * (Dedup.minHashLsh(portable = true), shingleK = 3): md5-60bit shingle
+    * (Dedup.minHashLsh, shingleK = 3): md5-60bit shingle
     * hashes mod 2^31−1, the literal affine families (spliced from
     * Dedup.affineParams — same constants as the Spark expression tree),
     * min-per-family signatures, banding at the auto-derived (b, r), the
@@ -2460,9 +2460,8 @@ object QueryCatalog {
         // on-heap state (GraftSession.withStateStore doc): the dual-sided
         // join state is read-heavy per row and watermark-BOUNDED, so heap
         // wins 3:1 over the session's RocksDB robustness default at ×1000
-        // with no OOM exposure; an explicit SPARK_GRAFT_STATESTORE pin
-        // overrides the hint. sides = 2: both filtered streams of the join
-        // buffer state
+        // with no OOM exposure. sides = 2: both filtered streams of the
+        // join buffer state
         StreamScale.drain(s, dir, "q_stream_stream_join", joined, "append",
           sides = 2, heapState = true).agg(
           count(lit(1)).as("n_pairs"),
@@ -3583,13 +3582,13 @@ object QueryCatalog {
     // 0.5 is the realistic fuzzy-dedup operating point: auto-banding keeps
     // ≥95% band-collision recall at the threshold (0.2 would need the
     // degenerate r<2 banding — see Dedup.minHashLsh scaladoc). Portable
-    // hash families, so the oracle replays the ENTIRE sketch path in
+    // hash family, so the oracle replays the ENTIRE sketch path in
     // DuckDB: base md5-60bit shingle hashes, the literal affine
     // permutations, banding, the modular band chain, candidate collisions,
     // and the exact-Jaccard verify.
     Q("q_dedup_minhash",
-      (s, dir) => Dedup.minHashLsh(t(s, dir, "documents"), threshold = 0.5,
-        portable = true).orderBy("id_a", "id_b"),
+      (s, dir) => Dedup.minHashLsh(t(s, dir, "documents"), threshold = 0.5)
+        .orderBy("id_a", "id_b"),
       Some(minhashOracleSql(numHashes = 64, threshold = 0.5))),
 
     // LSH recall AUDIT as one driver-checked row (the accuracy-audit
@@ -3608,7 +3607,7 @@ object QueryCatalog {
         // operators persist their sketch/prefix internals, so the
         // recomputed final joins are cheap — no entry-level persist
         val e = Dedup.ngramJaccard(docs, threshold = 0.5).select("id_a", "id_b")
-        val l = Dedup.minHashLsh(docs, threshold = 0.5, portable = true)
+        val l = Dedup.minHashLsh(docs, threshold = 0.5)
           .select("id_a", "id_b")
         e.agg(count(lit(1)).as("exact_pairs"))
           .crossJoin(l.agg(count(lit(1)).as("lsh_pairs")))
@@ -3636,8 +3635,8 @@ object QueryCatalog {
     // blocks, and verifies bit_count(xor) — identical pair set by
     // construction, not by luck
     Q("q_dedup_simhash",
-      (s, dir) => Dedup.simHashPairs(t(s, dir, "documents"), maxHamming = 4,
-        portable = true).orderBy("id_a", "id_b"),
+      (s, dir) => Dedup.simHashPairs(t(s, dir, "documents"), maxHamming = 4)
+        .orderBy("id_a", "id_b"),
       Some {
         // same block derivation as simHashPairs: chunks = maxHamming+1
         val chunks = 5
@@ -3836,8 +3835,8 @@ object QueryCatalog {
     // a corpus-cardinality range shuffle on every composed call); the
     // row-by-row oracle compare gets its ordering HERE
     Q("q_dedup_clusters",
-      (s, dir) => Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5,
-        portable = true).orderBy("component", "id"),
+      (s, dir) => Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5)
+        .orderBy("component", "id"),
       Some(minhashClustersOracleSql(numHashes = 64, threshold = 0.5))),
 
     // production keeper policy over the same clusters: keep each dup
@@ -3846,8 +3845,7 @@ object QueryCatalog {
     Q("q_dedup_keep_best",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val clusters = Dedup.fuzzyDedupClusters(docs, threshold = 0.5,
-          portable = true)
+        val clusters = Dedup.fuzzyDedupClusters(docs, threshold = 0.5)
         val quality = docs.select(col("doc_id").cast("long").as("id"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("q"))
         Dedup.keepBest(clusters, quality).orderBy("component", "id")
@@ -3860,8 +3858,7 @@ object QueryCatalog {
     // clustering, the component counts, and the 6-dp weight
     Q("q_dedup_cluster_weights",
       (s, dir) => Dedup.clusterWeights(
-          Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5,
-            portable = true))
+          Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5))
         .orderBy("component", "id"),
       Some(minhashClusterWeightsOracleSql(numHashes = 64, threshold = 0.5))),
 
@@ -3869,7 +3866,7 @@ object QueryCatalog {
     // must equal q_dedup_clusters exactly (same independent oracle)
     Q("q_dedup_clusters_star",
       (s, dir) => Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5,
-        useStar = true, portable = true).orderBy("component", "id"),
+        useStar = true).orderBy("component", "id"),
       Some(minhashClustersOracleSql(numHashes = 64, threshold = 0.5))),
 
     // the clustering path made oracle-able end-to-end: exact ngram-Jaccard
@@ -3942,15 +3939,15 @@ object QueryCatalog {
           when(col("doc_id") % 3 === 0,
             expr("substring(text, 1, CAST(floor(length(text) / 2) AS INT))"))
             .otherwise(col("text")).as("text"))
-        val baseSketches = Dedup.minHashSketchTable(docs, portable = true)
-        Dedup.incrementalMinHash(newBatch, baseSketches, portable = true)
+        val baseSketches = Dedup.minHashSketchTable(docs)
+        Dedup.incrementalMinHash(newBatch, baseSketches)
           .select(col("doc_id").cast("long").as("doc_id")).orderBy("doc_id")
       },
       Some(incrMinhashOracleSql(numHashes = 64, threshold = 0.5))),
 
-    // ONE streaming-ingest foreachBatch round, batch-shaped so the driver's
-    // oracle covers the streaming dedup path's arithmetic end-to-end
-    // (CorpusIngest composes exactly these operators per micro-batch; the
+    // ONE streaming-ingest foreachBatch round: the stream's own
+    // CorpusIngest.ingestRound, run on a synthesized batch so the DuckDB
+    // oracle covers the streaming dedup path's arithmetic end-to-end (the
     // MemoryStream e2e is spec'd in CorpusIngestSpec). The batch: every doc
     // re-crawled (ids +1000, every 3rd truncated to its first half), plus
     // an in-batch NEAR-dup of each truncated doc (ids +2000, one appended
@@ -3971,25 +3968,10 @@ object QueryCatalog {
               concat(col("text"), lit(" nearvar")).as("text")))
           .unionByName(a.filter((col("doc_id") - 1000) % 5 === 0)
             .select((col("doc_id") + 2000).as("doc_id"), col("text")))
-        val fresh = Dedup.exact(batch)
-        // lineage cut after the exact stages, exactly like the real
-        // foreachBatch round (whose batch arrives as concrete blocks): the
-        // synthesized union+dedup+anti plan otherwise rides into every
-        // downstream consumer — the in-batch LSH, the CC rounds, the
-        // sketch probe, the final anti-join — and Catalyst re-analysis of
-        // the fanned-out tree dominates wall time (driver-side, data-
-        // independent: measured ~18 s at sf0.1 AND sf1 before the cut)
-        val exactNovel = Dedup.incrementalExactByDigest(fresh,
-          docs.select(md5(col("text")).as("digest"))).localCheckpoint()
-        val pairs = Dedup.minHashLsh(exactNovel, threshold = 0.5, portable = true)
-        val losers = Dedup.connectedComponents(pairs)
-          .filter(col("id") =!= col("component"))
-          .select(col("id").as("__graft_nd"))
-        val inBatch = exactNovel.join(losers,
-          exactNovel("doc_id").cast("long") === col("__graft_nd"), "left_anti")
-          .localCheckpoint()
-        val baseSk = Dedup.minHashSketchTable(docs, portable = true)
-        Dedup.incrementalMinHash(inBatch, baseSk, portable = true)
+        graft.streaming.CorpusIngest.ingestRound(batch,
+            seenDigests = Some(docs.select(md5(col("text")).as("digest"))),
+            nearDupThreshold = Some(0.5),
+            baseSketches = Some(Dedup.minHashSketchTable(docs)))
           .select(col("doc_id").cast("long").as("doc_id")).orderBy("doc_id")
       },
       Some(ingestNeardupOracleSql(numHashes = 64, threshold = 0.5))),
@@ -4844,8 +4826,8 @@ object QueryCatalog {
     // decision checked
     Q("q_leakage_safe_split",
       (s, dir) => graft.operators.Sampling.leakageSafeSplit(
-          Dedup.fuzzyDedupClusters(t(s, dir, "documents"),
-            threshold = 0.5, portable = true).select("id", "component"))
+          Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5)
+            .select("id", "component"))
         .orderBy("id"),
       Some(s"""WITH RECURSIVE ${minhashPairCtes(64, 0.5)},
               ${docComponentCtes("mh_pairs")}

@@ -12,7 +12,8 @@ import graft.operators.Dedup
   * documents reach the corpus). New scope beyond the reference (batch-only,
   * SURVEY.md §2i), composing the batch operators it already ships:
   * per-batch exact dedup + digest anti-join against everything kept so far
-  * ([[Dedup.incrementalExact]]) + hive-partitioned append.
+  * ([[Dedup.incrementalExactByDigest]]), optionally the near-dup stages,
+  * + hive-partitioned append.
   *
   * Scale + exactly-once notes:
   *  - The anti-join carries 16-byte md5 digests, never document bodies; at
@@ -30,14 +31,66 @@ import graft.operators.Dedup
   */
 object CorpusIngest {
 
+  /** ONE ingest round over frames — the body of every micro-batch, and of
+    * the `q_ingest_neardup` catalog entry, which runs it on a synthesized
+    * re-crawl batch so the DuckDB oracle checks the round the stream runs.
+    * Stages, each a lineage-cut frame the next one reads:
+    *  1. within-batch exact dedup ([[Dedup.exact]]: lowest id per text);
+    *  2. the digest anti-join against `seenDigests` (a `digest` column of
+    *     md5(text), one per kept doc; None = nothing kept yet);
+    *  3. with `nearDupThreshold` set, the within-batch near-dup prune:
+    *     LSH pairs collapsed to connected components, one min-id
+    *     representative per transitive dup group — the policy of batch
+    *     [[Dedup.fuzzyDedupClusters]], so a streamed corpus cannot diverge
+    *     from a batch-deduped one. Dup groups are near-cliques, so the
+    *     min-label CC converges in 1-2 rounds on a micro-batch;
+    *  4. then the probe of `baseSketches` ([[Dedup.minHashSketchTable]]
+    *     rows of everything kept so far; None = none yet) by
+    *     [[Dedup.incrementalMinHash]], which reads (id, sig) only, never
+    *     base text.
+    *
+    * Every stage's output is an EAGER lineage cut (localCheckpoint): the
+    * exact stages feed both the LSH self-join and the anti-join after it,
+    * and an uncut plan rides into every downstream consumer — Catalyst
+    * re-analysis of the fanned-out tree dominated the catalog entry's wall
+    * time (planning, not data: ~18 s at sf0.1 AND sf1). The
+    * returned frame is concrete blocks whose plan reads no path, which the
+    * stream's appends rely on (see [[incrementalCorpusIngest]]).
+    */
+  def ingestRound(
+      batch: DataFrame,
+      seenDigests: Option[DataFrame],
+      nearDupThreshold: Option[Double],
+      baseSketches: Option[DataFrame],
+      idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame = {
+    val fresh = Dedup.exact(batch, idCol, textCol)
+    val exactNovel = seenDigests
+      .fold(fresh)(Dedup.incrementalExactByDigest(fresh, _, textCol))
+      .localCheckpoint()
+    nearDupThreshold.fold(exactNovel) { t =>
+      val losers = Dedup.connectedComponents(
+          Dedup.minHashLsh(exactNovel, idCol, textCol, threshold = t))
+        .filter(col("id") =!= col("component"))
+        .select(col("id").as("__graft_nd"))
+      val inBatch = exactNovel.join(losers,
+        exactNovel(idCol).cast("long") === col("__graft_nd"), "left_anti")
+        .localCheckpoint()
+      baseSketches.fold(inBatch)(sk =>
+        Dedup.incrementalMinHash(inBatch, sk, idCol, textCol, threshold = t)
+          .localCheckpoint())
+    }
+  }
+
   /** Start the ingest stream: `docs` must contain `idCol`, `textCol`, and
-    * `partitionCols`. Returns the StreamingQuery handle.
+    * `partitionCols`. Returns the StreamingQuery handle. Each non-empty
+    * micro-batch runs [[ingestRound]] over frames read from the paths.
     *
     * With `digestPath` set, a digest TABLE (one 16-byte md5 per kept doc)
     * is maintained next to the corpus and the anti-join runs against it —
     * the base corpus text is never rescanned on ingest
-    * ([[Dedup.incrementalExactByDigest]]); without it, the base read
-    * projects just the text column for hashing. Write order is corpus
+    * ([[Dedup.incrementalExactByDigest]]); without it, the digests are
+    * hashed from the base corpus's text column. Write order is corpus
     * first, digests second: a crash between the two re-admits a duplicate
     * on the next batch (benign — it gets filtered against the corpus
     * content it duplicates downstream), instead of a digest existing for a
@@ -45,17 +98,14 @@ object CorpusIngest {
     * document forever).
     *
     * With `sketchPath` set, the stream additionally drops NEAR-duplicates
-    * (estimated Jaccard ≥ `nearDupThreshold`): within the batch via the
-    * LSH pair join collapsed to connected components (one min-id
-    * representative per transitive dup group — the same policy as batch
-    * [[Dedup.fuzzyDedupClusters]]), and against everything kept so far by
-    * probing the minhash sketch table
-    * ([[Dedup.minHashSketchTable]]) maintained at `sketchPath` — the fuzzy
-    * analogue of the digest table, and like it, probes read (id, sig)
-    * only, never base text. Same corpus-first write order: a crash that
-    * commits bodies but not sketches re-ADMITS a later near-dup (benign,
-    * cleanable offline); the reverse order could drop future novel
-    * documents against sketches of bodies that never committed.
+    * (estimated Jaccard ≥ `nearDupThreshold`), within the batch and
+    * against the minhash sketch table ([[Dedup.minHashSketchTable]])
+    * maintained at `sketchPath` — the fuzzy analogue of the digest table,
+    * in the md5 family every sketch in the library uses. Same corpus-first
+    * write order: a crash that commits bodies but not sketches re-ADMITS a
+    * later near-dup (benign, cleanable offline); the reverse order could
+    * drop future novel documents against sketches of bodies that never
+    * committed.
     */
   def incrementalCorpusIngest(
       docs: DataFrame,
@@ -75,60 +125,32 @@ object CorpusIngest {
         // every later batch's base read ("Unable to infer schema")
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          // within-batch exact dedup (keep lowest id per text)
-          val fresh = Dedup.exact(batch, idCol, textCol)
           val fs = new Path(basePath)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val exactNovel = digestPath match {
-            case Some(dp) if fs.exists(new Path(dp)) =>
-              Dedup.incrementalExactByDigest(fresh,
-                spark.read.parquet(dp), textCol)
-            case None if fs.exists(new Path(basePath)) =>
-              // pin the schema: tolerant of a base dir a crashed attempt
-              // left behind with no data files
-              Dedup.incrementalExact(fresh,
-                spark.read.schema(batch.schema).parquet(basePath), textCol)
-            case _ => fresh // first non-empty batch: nothing seen yet
+          def existing(p: String): Option[String] =
+            Some(p).filter(q => fs.exists(new Path(q)))
+          val seenDigests = digestPath match {
+            case Some(dp) => existing(dp).map(spark.read.parquet(_))
+            // pin the schema: tolerant of a base dir a crashed attempt
+            // left behind with no data files
+            case None => existing(basePath).map(bp =>
+              spark.read.schema(batch.schema).parquet(bp)
+                .select(md5(col(textCol)).as("digest")))
           }
-          val novel0 = sketchPath match {
-            case Some(sp) =>
-              // within-batch near-dup prune with the same representative
-              // policy as fuzzyDedupClusters: collapse verified LSH pairs
-              // to connected components and keep the min-id per component —
-              // the streaming path now deduplicates by the SAME transitive-
-              // cluster semantics as the batch path (standard fuzzy-dedup
-              // policy: one keeper per dup group, members linked only
-              // transitively still collapse). The previous drop-every-id_b
-              // heuristic also never kept a near pair, but kept non-minimal
-              // cluster members the batch path would drop, so a corpus
-              // ingested via streaming could diverge from one deduped in
-              // batch. Dup groups are near-cliques, so the min-label CC
-              // converges in 1-2 rounds on a micro-batch.
-              val pairs = Dedup.minHashLsh(exactNovel, idCol, textCol,
-                threshold = nearDupThreshold)
-              val losers = Dedup.connectedComponents(pairs)
-                .filter(col("id") =!= col("component"))
-                .select(col("id").as("__graft_nd"))
-              val inBatch = exactNovel.join(losers,
-                exactNovel(idCol).cast("long") === col("__graft_nd"),
-                "left_anti")
-              if (fs.exists(new Path(sp)))
-                Dedup.incrementalMinHash(inBatch, spark.read.parquet(sp),
-                  idCol, textCol, threshold = nearDupThreshold)
-              else inBatch
-            case None => exactNovel
-          }
-          // EAGER lineage cut before any sink append — load-bearing, not a
-          // cache nicety: novel0's plan READS the digest/sketch paths this
+          // the round's lineage cuts are load-bearing here, not a cache
+          // nicety: the kept set's plan READS the digest/sketch paths this
           // batch also APPENDS to, and DataFrameWriter append triggers
           // recacheByPath on the target, which re-materializes every cached
           // plan reading it against the NEW file list. A merely persisted
-          // kept-set would be recomputed after the first append and
+          // kept set would be recomputed after the first append and
           // anti-join itself against its own just-written digests — later
           // sinks would then see it EMPTY (the sketch table silently lost
-          // every batch's rows). The localCheckpoint pins the batch's rows
-          // as concrete blocks whose plan references no path at all.
-          val novel = novel0.localCheckpoint()
+          // every batch's rows). The cut pins the batch's rows as concrete
+          // blocks whose plan references no path at all.
+          val novel = ingestRound(batch, seenDigests,
+            sketchPath.map(_ => nearDupThreshold),
+            sketchPath.flatMap(existing).map(spark.read.parquet(_)),
+            idCol, textCol)
           try {
             // same all-empty guard for all sinks, same reason as above
             if (!novel.isEmpty) {

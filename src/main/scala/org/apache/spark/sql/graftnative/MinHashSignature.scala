@@ -7,7 +7,7 @@ package org.apache.spark.sql.graftnative
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -21,40 +21,30 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * array_min(transform(sh, h => f_i(h)))))` — walks the shingle array once
   * PER FAMILY through interpreted lambda dispatch (HOFs never reach
   * codegen), and profiling showed it IS the dedup family's cost center:
-  * 52 s (portable) / 29 s (xxhash64) for a 5,000-doc sf0.1 sketch, flat
-  * across JIT warmup, vs ~1.5 s for the shingle hashing that feeds it.
-  * This expression is the loop a native engine would write — hash each
-  * element once, sweep the family minima in registers — and replaces a
-  * 64× interpreted array walk with one fused primitive loop.
+  * 52 s for a 5,000-doc sf0.1 sketch, flat across JIT warmup, vs ~1.5 s
+  * for the shingle hashing that feeds it. This expression is the loop a
+  * native engine would write — sweep the family minima in registers per
+  * element — and replaces a 64× interpreted array walk with one fused
+  * primitive loop.
   *
-  * Two modes, bit-identical to the HOF forms they replace (lockstep-spec'd
-  * in MinHashSignatureSpec):
-  *  - `affine = Some(params)` (portable): sig_i = min((a_i·h + b_i) mod p)
-  *    — the engine-replayable family the DuckDB oracles re-derive.
-  *  - `affine = None` (fast path): sig_i = min(xxhash64(h, i)), replicating
-  *    the builtin's chained hashing exactly: XXH64.hashInt(i,
-  *    XXH64.hashLong(h, 42)). The element hash is computed ONCE per
-  *    element here, where the HOF form re-hashed it per family.
+  * The families are the engine-replayable affine permutations
+  * sig_i = min((a_i·h + b_i) mod p) the DuckDB oracles re-derive,
+  * bit-identical to the HOF form (lockstep-spec'd in MinHashSignatureSpec).
   *
   * Null semantics: a null input array and an empty (or all-null) input
   * array yield an array of `numHashes` null entries (array_min of nothing
-  * is null, matching the HOF forms), and the output itself is never null.
-  * Null ELEMENTS are skipped — deliberately NOT the HOF xxhash64 artifact,
-  * where `xxhash64(NULL, i)` skips the null input and degenerates to
-  * hashing the seed alone (hashInt(i, 42)), injecting a phantom min
-  * candidate. No sketch builder produces null elements (they come from
-  * array_distinct over transform of tokenized text), so the contracts
-  * only diverge on inputs the library never constructs; the spec pins
-  * both behaviors.
+  * is null), and the output itself is never null. Null ELEMENTS are
+  * skipped, as the HOF form's array_min skips the null its transform
+  * yields for them.
   */
 case class MinHashSignature(
     child: Expression,
     numHashes: Int,
-    affine: Option[Seq[(Long, Long)]],
+    affine: Seq[(Long, Long)],
     prime: Long) extends UnaryExpression {
 
   require(numHashes > 0, "numHashes must be positive")
-  require(affine.forall(_.length == numHashes),
+  require(affine.length == numHashes,
     "affine params must have one (a, b) pair per hash family")
 
   // fail at ANALYSIS, not execution: getLong over a non-long array would
@@ -71,8 +61,8 @@ case class MinHashSignature(
 
   override def prettyName: String = "minhash_signature"
 
-  private lazy val aArr: Array[Long] = affine.map(_.map(_._1).toArray).orNull
-  private lazy val bArr: Array[Long] = affine.map(_.map(_._2).toArray).orNull
+  private lazy val aArr: Array[Long] = affine.map(_._1).toArray
+  private lazy val bArr: Array[Long] = affine.map(_._2).toArray
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
@@ -82,34 +72,18 @@ case class MinHashSignature(
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var any = false
     var j = 0
-    if (affine.isDefined) {
-      while (j < m) {
-        if (!arr.isNullAt(j)) {
-          any = true
-          val h = arr.getLong(j)
-          var i = 0
-          while (i < numHashes) {
-            val x = (aArr(i) * h + bArr(i)) % prime
-            if (x < mins(i)) mins(i) = x
-            i += 1
-          }
+    while (j < m) {
+      if (!arr.isNullAt(j)) {
+        any = true
+        val h = arr.getLong(j)
+        var i = 0
+        while (i < numHashes) {
+          val x = (aArr(i) * h + bArr(i)) % prime
+          if (x < mins(i)) mins(i) = x
+          i += 1
         }
-        j += 1
       }
-    } else {
-      while (j < m) {
-        if (!arr.isNullAt(j)) {
-          any = true
-          val t = XXH64.hashLong(arr.getLong(j), 42L)
-          var i = 0
-          while (i < numHashes) {
-            val x = XXH64.hashInt(i, t)
-            if (x < mins(i)) mins(i) = x
-            i += 1
-          }
-        }
-        j += 1
-      }
+      j += 1
     }
     if (!any) new GenericArrayData(new Array[Any](numHashes))
     else new GenericArrayData(mins)
@@ -125,27 +99,8 @@ case class MinHashSignature(
     val h = ctx.freshName("h")
     val x = ctx.freshName("x")
     val gad = classOf[GenericArrayData].getName
-    val xxh = classOf[XXH64].getName
-    val inner = affine match {
-      case Some(_) =>
-        val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-        val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-        s"""
-           |long $h = ${childGen.value}.getLong($j);
-           |for (int $i = 0; $i < $numHashes; $i++) {
-           |  long $x = ($aRef[$i] * $h + $bRef[$i]) % ${prime}L;
-           |  if ($x < $mins[$i]) $mins[$i] = $x;
-           |}
-         """.stripMargin
-      case None =>
-        s"""
-           |long $h = $xxh.hashLong(${childGen.value}.getLong($j), 42L);
-           |for (int $i = 0; $i < $numHashes; $i++) {
-           |  long $x = $xxh.hashInt($i, $h);
-           |  if ($x < $mins[$i]) $mins[$i] = $x;
-           |}
-         """.stripMargin
-    }
+    val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
+    val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
     ev.copy(isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral,
       code = code"""
         |${childGen.code}
@@ -159,7 +114,11 @@ case class MinHashSignature(
         |    for (int $j = 0; $j < $m; $j++) {
         |      if (!${childGen.value}.isNullAt($j)) {
         |        $any = true;
-        |        $inner
+        |        long $h = ${childGen.value}.getLong($j);
+        |        for (int $i = 0; $i < $numHashes; $i++) {
+        |          long $x = ($aRef[$i] * $h + $bRef[$i]) % ${prime}L;
+        |          if ($x < $mins[$i]) $mins[$i] = $x;
+        |        }
         |      }
         |    }
         |  }
@@ -175,14 +134,9 @@ case class MinHashSignature(
 }
 
 object MinHashSignature {
-  /** Column-API entry: xxhash64 re-seed fast path. */
-  def xxhash(shingleHashes: Column, numHashes: Int): Column =
-    ExpressionUtils.column(MinHashSignature(
-      ExpressionUtils.expression(shingleHashes), numHashes, None, 0L))
-
-  /** Column-API entry: portable affine-family path. */
-  def portable(shingleHashes: Column, numHashes: Int,
+  /** Column-API entry: the affine family `params` modulo `prime`. */
+  def apply(shingleHashes: Column, numHashes: Int,
       params: Seq[(Long, Long)], prime: Long): Column =
     ExpressionUtils.column(MinHashSignature(
-      ExpressionUtils.expression(shingleHashes), numHashes, Some(params), prime))
+      ExpressionUtils.expression(shingleHashes), numHashes, params, prime))
 }

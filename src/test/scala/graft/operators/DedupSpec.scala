@@ -40,34 +40,30 @@ class DedupSpec extends SparkSpec {
     assert(j === 1.0)
   }
 
-  test("portable minhash finds the same dup structure as the xxhash64 path") {
-    // different hash families ⇒ different band collisions are possible, but
-    // the verified output (true-Jaccard ≥ t pairs) must agree on clear
-    // duplicates and clear non-pairs
-    val p = Dedup.minHashLsh(docs, threshold = 0.3, portable = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(p.contains((1L, 2L)) && p.contains((1L, 3L)) && p.contains((2L, 3L)))
-    assert(!p.exists(q => q._1 == 6L || q._2 == 6L))
-    val j = Dedup.minHashLsh(docs, threshold = 0.5, portable = true)
-      .filter(col("id_a") === 1 && col("id_b") === 2)
-      .select("jaccard").head().getDouble(0)
-    assert(j === 1.0)
-  }
-
   test("portable simhash: identical docs collide at hamming 0, unrelated don't") {
-    val pairs = Dedup.simHashPairs(docs, maxHamming = 3, portable = true)
+    val pairs = Dedup.simHashPairs(docs, maxHamming = 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(pairs((1L, 2L)) === 0)
     assert(!pairs.contains((1L, 4L)))
   }
 
   test("simHashSketch (aggregate path) is bit-identical to the simHash column") {
-    val viaCol = docs.select(col("doc_id").cast("long").as("id"),
-      Dedup.simHash(col("text")).as("sh"))
+    // the sketch (explode → 64 bit-count sums → repack) against the per-row
+    // HOF vote fold, on the corpus plus token-count and whitespace extremes
+    import spark.implicits._
+    val corpus = docs.unionByName(Seq(
+      (7L, ("lorem ipsum dolor sit amet " * 40).trim),
+      (8L, "  Mixed   CASE   and   spacing  "),
+      (9L, "single")).toDF("doc_id", "text"))
+    val viaCol = corpus.select(col("doc_id").cast("long").as("id"),
+      Dedup.simHashHof(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaAgg = Dedup.simHashSketch(docs, "doc_id", "text")
+    val viaAgg = Dedup.simHashSketch(corpus, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaAgg === viaCol)
+    // identical docs agree, distinct docs differ
+    assert(viaAgg(1L) === viaAgg(2L))
+    assert(viaAgg(1L) !== viaAgg(7L))
   }
 
   test("simhash: identical docs at hamming 0; unrelated docs far apart") {
@@ -81,7 +77,7 @@ class DedupSpec extends SparkSpec {
     // exhaustive ground truth: all pairs with bit_count(xor) <= 20
     import org.apache.spark.sql.functions.{bit_count, col}
     val sk = docs.select(col("doc_id").cast("long").as("id"),
-      Dedup.simHash(col("text")).as("sh"))
+      Dedup.simHashHof(col("text")).as("sh"))
     val truth = sk.as("a").join(sk.as("b"), col("a.id") < col("b.id"))
       .select(col("a.id"), col("b.id"),
         bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast("int").as("h"))

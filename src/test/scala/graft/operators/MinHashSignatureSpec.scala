@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Lockstep guard for the native one-pass MinHash signature expression
   * (graftnative.MinHashSignature) against the higher-order-function
-  * formulations it replaced — same contract as CosineSimilaritySpec: the
+  * formulation it replaced — same contract as CosineSimilaritySpec: the
   * native codegen path must be BIT-IDENTICAL to the composed built-ins,
   * including the degenerate shapes (empty array, null array, null
   * elements), or every persisted sketch table and every DuckDB oracle
@@ -29,18 +29,6 @@ class MinHashSignatureSpec extends SparkSpec {
   private def collectSigs(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
     df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
 
-  test("xxhash64 mode is bit-identical to the HOF formulation") {
-    val sh = Dedup.hashedShingles(col("text"))
-    val native = collectSigs(docs.select(col("doc_id"),
-      Dedup.minHashSignature(sh, n)))
-    val hof = collectSigs(docs.select(col("doc_id"),
-      Dedup.minHashSignatureHof(sh, n)))
-    assert(native === hof)
-    // identical docs get identical signatures; distinct docs don't
-    assert(native(1L) === native(2L))
-    assert(native(1L) !== native(5L))
-  }
-
   test("portable mode is bit-identical to the HOF formulation") {
     val sh = Dedup.portableShingleHashes(col("text"))
     val native = collectSigs(docs.select(col("doc_id"),
@@ -50,17 +38,17 @@ class MinHashSignatureSpec extends SparkSpec {
     assert(native === hof)
     // every portable value stays in [0, p)
     assert(native.values.flatten.forall(v => v >= 0 && v < Dedup.MinHashP))
+    // identical docs get identical signatures; distinct docs don't
+    assert(native(1L) === native(2L))
+    assert(native(1L) !== native(5L))
   }
 
-  test("interpreted eval agrees with codegen on both modes") {
-    // force the interpreted path by evaluating via a fresh Projection-less
-    // context: collect() under codegen vs a local relation eval with
-    // codegen disabled session-wide
+  test("interpreted eval agrees with codegen") {
+    // collect() under codegen vs the same plan with codegen disabled
+    // session-wide (no whole-stage codegen, interpreted expression factory)
     val sh = Dedup.portableShingleHashes(col("text"))
     val underCodegen = collectSigs(docs.select(col("doc_id"),
       Dedup.minHashSignaturePortable(sh, n)))
-    val xCodegen = collectSigs(docs.select(col("doc_id"),
-      Dedup.minHashSignature(Dedup.hashedShingles(col("text")), n)))
     val conf = spark.conf
     val prevWs = conf.get("spark.sql.codegen.wholeStage")
     val prevFm = conf.get("spark.sql.codegen.factoryMode")
@@ -70,9 +58,6 @@ class MinHashSignatureSpec extends SparkSpec {
       val interpreted = collectSigs(docs.select(col("doc_id"),
         Dedup.minHashSignaturePortable(sh, n)))
       assert(interpreted === underCodegen)
-      val ix = collectSigs(docs.select(col("doc_id"),
-        Dedup.minHashSignature(Dedup.hashedShingles(col("text")), n)))
-      assert(ix === xCodegen)
     } finally {
       conf.set("spark.sql.codegen.wholeStage", prevWs)
       conf.set("spark.sql.codegen.factoryMode", prevFm)
@@ -83,13 +68,12 @@ class MinHashSignatureSpec extends SparkSpec {
     import spark.implicits._
     val ints = Seq((1L, Seq(1, 2, 3))).toDF("id", "sh")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      ints.select(org.apache.spark.sql.graftnative.MinHashSignature
-        .xxhash(col("sh"), 8)).collect()
+      ints.select(Dedup.minHashSignaturePortable(col("sh"), 8)).collect()
     }
     assert(e.getMessage.contains("array<bigint>"), e.getMessage)
   }
 
-  test("degenerate inputs: HOF-matching null/empty arrays; saner null elements") {
+  test("degenerate inputs: null/empty arrays and null elements match the HOF form") {
     import spark.implicits._
     val weird = Seq(
       (1L, Seq(7L, 8L, 9L)),
@@ -98,33 +82,19 @@ class MinHashSignatureSpec extends SparkSpec {
         lit(null).cast("array<bigint>").as("sh")))
       .union(Seq(4L).toDF("id").select(col("id"),
         expr("array(5L, NULL, 6L)").as("sh")))
-    def viaNative = weird.select(col("id"),
-      org.apache.spark.sql.graftnative.MinHashSignature.xxhash(col("sh"), 8).as("sig"))
-    def viaHof = weird.select(col("id"),
-      array((0 until 8).map(i =>
-        array_min(transform(col("sh"), h => xxhash64(h, lit(i))))): _*).as("sig"))
-    val nat = viaNative.collect().map(r => r.getLong(0) -> r.getSeq[java.lang.Long](1).toSeq).toMap
-    val hof = viaHof.collect().map(r => r.getLong(0) -> r.getSeq[java.lang.Long](1).toSeq).toMap
-    // null-free, empty, and null ARRAYS agree with the HOF form exactly
-    for (id <- Seq(1L, 2L, 3L)) assert(nat(id) === hof(id), s"id $id")
+    def sigs(f: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column) =
+      weird.select(col("id"), f(col("sh"), 8).as("sig")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[java.lang.Long](1).toSeq).toMap
+    val nat = sigs(Dedup.minHashSignaturePortable)
+    val hof = sigs(Dedup.minHashSignaturePortableHof)
+    // every shape agrees with the HOF form exactly, null elements included
+    for (id <- Seq(1L, 2L, 3L, 4L)) assert(nat(id) === hof(id), s"id $id")
     assert(nat(2L).forall(_ == null) && nat(2L).size == 8)
     assert(nat(3L).forall(_ == null))
-    // null ELEMENTS: the native expression skips them (min over the
-    // non-null hashes only)...
+    // a null ELEMENT is skipped: the min runs over the non-null hashes only
     val expected = weird.filter(col("id") === 1)
-      .select(org.apache.spark.sql.graftnative.MinHashSignature
-        .xxhash(expr("array(5L, 6L)"), 8).as("sig"))
+      .select(Dedup.minHashSignaturePortable(expr("array(5L, 6L)"), 8).as("sig"))
       .head().getSeq[java.lang.Long](0).toSeq
     assert(nat(4L) === expected)
-    // ...whereas the HOF artifact injects a phantom candidate per family —
-    // xxhash64(NULL, i) skips the null INPUT and hashes the seed chain
-    // alone (hashInt(i, 42)). Pin the artifact so a change in Spark's
-    // builtin surfaces here instead of silently shifting the oracle.
-    val phantom = weird.filter(col("id") === 1)
-      .select(array((0 until 8).map(i => least(
-        xxhash64(lit(5L), lit(i)), xxhash64(lit(6L), lit(i)),
-        xxhash64(lit(null).cast("bigint"), lit(i)))): _*).as("sig"))
-      .head().getSeq[java.lang.Long](0).toSeq
-    assert(hof(4L) === phantom)
   }
 }

@@ -394,30 +394,23 @@ class EventStreamsSpec extends SparkSpec {
     assert(math.abs(rows("2024-01-01 12:00:00.0") - 1L) <= 1L)
   }
 
-  test("session default: RocksDB state store provider (heap escape hatch via env)") {
+  test("session default: RocksDB state store provider") {
     // the on-heap provider is a measured OOM cliff for native session
     // windows at corpus scale (BENCH_SF10 round-12 addendum 4); pin the
     // default so a silent config regression can't reintroduce it
     val provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("heap"))
-      assert(provider.endsWith("HDFSBackedStateStoreProvider"))
-    else
-      assert(provider.endsWith("RocksDBStateStoreProvider"), provider)
+    assert(provider === graft.GraftSession.RocksDbStateStore)
   }
 
   test("withStateStore scopes a per-query provider and restores the default") {
     // the per-entry hint for read-heavy watermark-bounded join state
     // (q_stream_stream_join): inside the block the conf carries the hint,
-    // after it the session default is back — unless an explicit
-    // SPARK_GRAFT_STATESTORE pin outranks the hint (no-op then)
+    // after it the session default is back
     val key = "spark.sql.streaming.stateStore.providerClass"
     val before = spark.conf.get(key)
     val seen = graft.GraftSession.withStateStore(
       spark, graft.GraftSession.HeapStateStore) { spark.conf.get(key) }
-    if (sys.env.contains("SPARK_GRAFT_STATESTORE"))
-      assert(seen === before) // explicit pin wins; hint is a no-op
-    else
-      assert(seen === graft.GraftSession.HeapStateStore)
+    assert(seen === graft.GraftSession.HeapStateStore)
     assert(spark.conf.get(key) === before)
     // restore also runs on a throwing body
     intercept[RuntimeException] {
