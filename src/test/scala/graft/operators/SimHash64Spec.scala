@@ -3,12 +3,10 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Lockstep guard for the native one-pass SimHash expression
-  * (graftnative.SimHash64) against the HOF vote-fold it replaced — same
-  * contract as MinHashSignatureSpec: bit-identical on every input the
-  * library constructs (including empty and null token arrays), pinned
-  * divergence on the one artifact input it deliberately cleans up (null
-  * ELEMENTS, which no tokenizer produces).
+/** The per-row SimHash fingerprint ([[Dedup.simHashHof]]) against the bulk
+  * aggregate sketch ([[Dedup.simHashSketch]]) on token-count and whitespace
+  * extremes: a repeated long text, a single token, a two-token doc, mixed
+  * case with runs of spaces, and a null text.
   */
 class SimHash64Spec extends SparkSpec {
 
@@ -22,77 +20,23 @@ class SimHash64Spec extends SparkSpec {
       5L -> ("lorem ipsum dolor sit amet " * 40).trim,
       6L -> "  Mixed   CASE   and   spacing  ")
       .toDF("doc_id", "text")
-  }
-
-  private def collectSh(df: org.apache.spark.sql.DataFrame): Map[Long, Any] =
-    df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
-
-  test("native fingerprint is bit-identical to the HOF vote fold") {
-    val native = collectSh(docs.select(col("doc_id"), Dedup.simHash(col("text"))))
-    val hof = collectSh(docs.select(col("doc_id"), Dedup.simHashHof(col("text"))))
-    assert(native === hof)
-    // identical docs agree, distinct docs differ
-    assert(native(1L) === native(2L))
-    assert(native(1L) !== native(5L))
+      .union(Seq(7L).toDF("doc_id").select(col("doc_id"),
+        lit(null).cast("string").as("text")))
   }
 
   test("native fingerprint equals the bulk simHashSketch aggregate") {
-    // the sketch path (explode → 64 bit-count sums) is the third
-    // formulation of the same math; all three must agree
+    // explode → 64 bit-count sums → repack must reproduce the per-row
+    // vote fold bit for bit
     val viaSketch = Dedup.simHashSketch(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val native = collectSh(docs.select(col("doc_id"),
-      Dedup.simHash(col("text")).as("sh")))
-    viaSketch.foreach { case (id, sh) => assert(native(id) === sh, s"doc $id") }
-  }
-
-  test("interpreted eval agrees with codegen") {
-    val underCodegen = collectSh(docs.select(col("doc_id"), Dedup.simHash(col("text"))))
-    val conf = spark.conf
-    val prevWs = conf.get("spark.sql.codegen.wholeStage")
-    val prevFm = conf.get("spark.sql.codegen.factoryMode")
-    try {
-      conf.set("spark.sql.codegen.wholeStage", "false")
-      conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val interpreted = collectSh(docs.select(col("doc_id"), Dedup.simHash(col("text"))))
-      assert(interpreted === underCodegen)
-    } finally {
-      conf.set("spark.sql.codegen.wholeStage", prevWs)
-      conf.set("spark.sql.codegen.factoryMode", prevFm)
-    }
-  }
-
-  test("degenerate inputs: null text → null, empty tokens → HOF-identical, null elements pinned") {
-    import spark.implicits._
-    val weird = Seq((1L, "x y z")).toDF("id", "text")
-      .union(Seq(2L).toDF("id").select(col("id"), lit(null).cast("string").as("text")))
-    val nat = collectSh(weird.select(col("id"), Dedup.simHash(col("text"))))
-    val hof = collectSh(weird.select(col("id"), Dedup.simHashHof(col("text"))))
-    assert(nat === hof)
-    assert(nat(2L) == null, "null text must fingerprint as null")
-    // empty token array (direct expression use): 0L, matching the fold seed
-    val empty = Seq(Tuple1(Seq.empty[String])).toDF("toks")
-      .select(org.apache.spark.sql.graftnative.SimHash64(col("toks")).as("sh"))
-      .head().getLong(0)
-    assert(empty === 0L)
-    // null ELEMENT divergence, pinned: the native skips it; the HOF's
-    // three-valued when(...).otherwise(-1) turns xxhash64(NULL)'s null
-    // votes into a -1 on every bit (no tokenizer produces null elements)
-    val mixed = Seq(Tuple1(Seq("a", "b"))).toDF("toks")
-      .select(col("toks"), expr("array('a', NULL, 'b')").as("withNull"))
-    val skipped = mixed.select(
-      org.apache.spark.sql.graftnative.SimHash64(col("withNull")).as("sh"),
-      org.apache.spark.sql.graftnative.SimHash64(col("toks")).as("clean"))
-      .head()
-    assert(skipped.getLong(0) === skipped.getLong(1), "null element must be skipped")
-  }
-
-  test("non-string array input fails at analysis, not execution") {
-    import spark.implicits._
-    val longs = Seq((1L, Seq(1L, 2L))).toDF("id", "toks")
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      longs.select(org.apache.spark.sql.graftnative.SimHash64(col("toks"))).collect()
-    }
-    assert(e.getMessage.contains("array<string>"), e.getMessage)
+    val perRow = docs.select(col("doc_id"), Dedup.simHashHof(col("text")))
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(perRow(7L) == null, "null text must fingerprint as null")
+    // a null text has no tokens to explode, so the sketch has no row for it
+    assert(viaSketch.keySet === perRow.keySet - 7L)
+    viaSketch.foreach { case (id, sh) => assert(perRow(id) === sh, s"doc $id") }
+    // identical docs agree, distinct docs differ
+    assert(viaSketch(1L) === viaSketch(2L))
+    assert(viaSketch(1L) !== viaSketch(5L))
   }
 }
