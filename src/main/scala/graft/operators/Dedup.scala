@@ -26,18 +26,6 @@ object Dedup {
   /** Tokenize + lowercase. */
   private def toks(text: Column): Column = split(lower(trim(text)), "\\s+")
 
-  /** Truncate plan lineage between iterative rounds (mandatory: each
-    * round's plan otherwise embeds all previous rounds and Catalyst
-    * re-analysis goes exponential). Uses a RELIABLE checkpoint when the
-    * session has a checkpoint dir — on a 1000-executor cluster the blocks
-    * survive executor loss, where localCheckpoint blocks would kill the
-    * job — and falls back to executor-local blocks otherwise (local[],
-    * tests).
-    */
-  private def truncated(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** Distinct word-level k-shingles of a text column. Short docs (< k
     * tokens) contribute their whole token string as a single shingle.
     *
@@ -341,24 +329,24 @@ object Dedup {
   /** Incremental exact dedup: keep only the rows of `newDf` whose text does
     * not already appear in `baseDf` — the every-ingest operation of a
     * growing corpus (dedup the new crawl against everything kept so far).
-    * Anti-join on md5 digests, so the shuffle carries 16-byte keys, never
-    * document bodies; at 100 TB the base corpus side is a digest column
-    * scan, and a pre-computed digest table makes it a pure key join.
+    * The [[incrementalExactByDigest]] anti-join over md5 digests of the
+    * base text (the join [[graft.streaming.CorpusIngest]] runs when it
+    * keeps no digest table), so the shuffle carries 16-byte keys, never
+    * document bodies.
     */
   def incrementalExact(
       newDf: DataFrame,
       baseDf: DataFrame,
-      textCol: String = "text"): DataFrame = {
-    val seen = baseDf.select(md5(col(textCol)).as("__graft_seen_h")).distinct()
-    newDf.join(seen, md5(newDf(textCol)) === seen("__graft_seen_h"), "left_anti")
-  }
+      textCol: String = "text"): DataFrame =
+    incrementalExactByDigest(newDf,
+      baseDf.select(md5(col(textCol)).as("digest")), textCol)
 
-  /** Digest-table variant of [[incrementalExact]]: the base side is a
-    * PRE-COMPUTED digest column (e.g. the table [[graft.streaming
-    * .CorpusIngest]] maintains alongside the corpus), so the every-ingest
-    * anti-join never rescans base document bodies at all — the build side
-    * is a bare 16-byte-per-doc key table, and the only text ever hashed is
-    * the incoming batch's.
+  /** The digest anti-join: keep the rows of `newDf` whose md5(text) is not
+    * in `baseDigests`. With a PRE-COMPUTED digest column (e.g. the table
+    * [[graft.streaming.CorpusIngest]] maintains alongside the corpus) the
+    * every-ingest anti-join never rescans base document bodies at all —
+    * the build side is a bare 16-byte-per-doc key table, and the only text
+    * ever hashed is the incoming batch's.
     */
   def incrementalExactByDigest(
       newDf: DataFrame,
@@ -827,7 +815,7 @@ object Dedup {
     * mass instead of 400 (the "keep all, downweight" policy discussed in
     * the SemDeDup/data-ablation literature — preserves within-cluster
     * variation that hard dedup throws away, while removing the frequency
-    * bias). Composes with any clustering here (minhash, SimHash, star,
+    * bias). Composes with any clustering here (minhash, SimHash, n-gram,
     * embedding) and feeds [[Sampling.weightedSample]] /
     * [[Sampling.budgetSelect]] directly.
     *
@@ -930,35 +918,65 @@ object Dedup {
   /** Connected components over near-duplicate pairs → dedup clusters, so a
     * corpus keeps ONE representative per transitive duplicate group (the
     * step after any pairwise method: pairs alone under-delete when dups
-    * chain A~B~C without A~C).
+    * chain A~B~C without A~C). Input (id_a, id_b) pairs; output (id,
+    * component = min id reachable) for every id in a pair.
     *
-    * Min-label propagation: comp(v) ← min(comp(v), min comp over N(v)),
-    * iterated to fixpoint — rounds = component diameter, which for dedup
-    * clusters (dense near-clique dup groups) is 1–2. For graphs with long
-    * chains use [[connectedComponentsStar]] (O(log n) rounds). Returns
-    * (id, component) where component = min id reachable.
+    * The pair table is cut once ([[Lineage.cut]]). Min-label propagation
+    * ([[minLabelComponents]]: one round per hop to the component's min,
+    * plus one that sees the fixpoint) runs on it for at most
+    * [[ProbeRounds]] rounds; only if those have not converged does
+    * large-star/small-star contraction ([[starComponents]]: O(log n)
+    * rounds whatever the diameter, each round costlier) run on the same
+    * cut table. Measured at sf0.1 (4 cores, noop sink over a persisted
+    * pair table, median of 6): on [[minHashLsh]]'s near-clique pairs (256,
+    * every node 1 hop from its min) min-label took 906 ms and star
+    * 1,457 ms; on q_dedup_clusters_maxdf's chain-like pairs (5,201, up to
+    * 14 hops, 15 rounds) min-label took 4,490 ms and star 3,391 ms.
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    // materialize the (possibly expensive) pair source ONCE: each loop
+    // reads it more than once, and without the cut the upstream plan (e.g.
+    // a full minhash-LSH) executes per reference, and again after a switch
+    val cutPairs = Lineage.cut(pairs.select(
+      col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
+    minLabelComponents(cutPairs, ProbeRounds).getOrElse(starComponents(cutPairs))
+  }
+
+  /** Min-label rounds before the switch to star: 3 label every node
+    * within two hops of its min and see the fixpoint. At sf0.01 and sf0.1
+    * the catalog's pair sets need 2 (q_entity_clusters' 3), except
+    * q_dedup_clusters_maxdf's at sf0.1 (15).
+    */
+  private val ProbeRounds = 3
+
+  /** Round cap of [[starComponents]]: a graph that has not contracted to
+    * stars by then fails loudly, never with unconverged labels
+    * (q_dedup_clusters_maxdf's sf0.1 pairs converge in 5).
+    */
+  private val StarRounds = 20
+
+  /** Min-label propagation over (id_a, id_b) long pairs:
+    * comp(v) ← min(comp(v), min comp over N(v)), for at most `rounds`
+    * rounds. Returns the (id, component) labels at the fixpoint, or None
+    * when `rounds` rounds have not reached it.
     *
     * Convergence is detected with one aggregate per round, no join: every
     * label is monotonically non-increasing, so sum(component) strictly
     * decreases until the fixpoint (summed as decimal(38,0) — no wrap).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  private[operators] def minLabelComponents(
+      pairs: DataFrame, rounds: Int): Option[DataFrame] = {
     import org.apache.spark.storage.StorageLevel
-    // materialize the (possibly expensive) pair source ONCE before the
-    // union references it twice — without this the upstream plan (e.g. a
-    // full minhash-LSH) executes once per union branch
-    val pairs0 = truncated(
-      pairs.select(col("id_a").cast("long").as("src"),
-        col("id_b").cast("long").as("dst")))
+    val src = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     // undirected, deduplicated edge list (8-byte endpoints only)
-    val edges = pairs0
-      .union(pairs0.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = src
+      .union(src.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // labels lineage is truncated per round (see [[truncated]]): round k's
-    // plan would otherwise embed rounds 0..k-1 and Catalyst re-analysis
-    // would dominate — see connectedComponentsStar for the measurement
+    // labels lineage is cut per round: round k's plan would otherwise
+    // embed rounds 0..k-1 and Catalyst re-analysis would dominate — see
+    // starComponents for the measurement
     var labels = Lineage.cutLazy(edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
       .withColumn("component", col("id")))
@@ -972,7 +990,7 @@ object Dedup {
 
     var converged = prevSum.signum == 0 && labels.isEmpty
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < rounds) {
       val viaNbr = edges
         .join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"))
@@ -996,17 +1014,14 @@ object Dedup {
     }
     // labels are materialized checkpoint blocks; the edge cache can go now
     edges.unpersist(blocking = false)
-    labels
+    Option.when(converged)(labels)
   }
 
   /** Connected components via alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — O(log n) rounds regardless of component diameter, vs the
-    * O(diameter) of [[connectedComponents]]'s label propagation. Same
-    * contract: input (id_a, id_b) pairs, output (id, component = min id
-    * reachable). Prefer this for graphs that can chain (provenance links,
-    * URL graphs); min-label stays the default for near-clique dup groups
-    * where diameter ≈ 1 and each round is cheaper.
+    * SoCC'14) over (id_a, id_b) long pairs — O(log n) rounds regardless of
+    * component diameter. Output (id, component = min id reachable); fails
+    * when [[StarRounds]] rounds have not reached the fixpoint.
     *
     * Each round is two grouped-min shuffles over an edge list that only
     * ever holds 8-byte endpoint pairs — no adjacency materialization, no
@@ -1018,7 +1033,7 @@ object Dedup {
     * multiset equality is set equality; a false match needs a 64-bit
     * hash-sum collision — the same risk class as the shingle hashing).
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  private[operators] def starComponents(pairs: DataFrame): DataFrame = {
     // canonical undirected edges (lo < hi), self-loops dropped
     def canon(df: DataFrame): DataFrame = df
       .select(least(col("src"), col("dst")).as("lo"),
@@ -1026,20 +1041,18 @@ object Dedup {
       .filter(col("lo") =!= col("hi"))
       .distinct()
 
-    // Lineage MUST be truncated per round: each round's plan embeds the
-    // previous round's, so without truncation Catalyst re-analyzes an
-    // exponentially growing tree and planning time dwarfs execution
-    // (measured: round 2 already 20 s on a 10-node chain). [[truncated]]
-    // materializes partitions and replaces the plan with a LogicalRDD
-    // (reliable checkpoint when the session has a checkpoint dir).
-    // It also means the (possibly expensive) `pairs` input evaluates once.
-    val pairs0 = truncated(pairs.select(col("id_a").cast("long").as("src"),
-        col("id_b").cast("long").as("dst")))
-    val nodes = pairs0.select(col("src").as("id"))
-      .union(pairs0.select(col("dst").as("id")))
+    val src = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+    val nodes = src.select(col("src").as("id"))
+      .union(src.select(col("dst").as("id")))
       .distinct()
-    // lazy cut — fingerprint(edges) below is the materializing action
-    var edges = Lineage.cutLazy(canon(pairs0))
+    // Lineage MUST be cut per round: each round's plan embeds the previous
+    // round's, so without a cut Catalyst re-analyzes an exponentially
+    // growing tree and planning time dwarfs execution (measured: round 2
+    // already 20 s on a 10-node chain). The cut materializes partitions
+    // and replaces the plan with a LogicalRDD (reliable checkpoint when
+    // the session has a checkpoint dir). Lazy here — fingerprint(edges)
+    // below is the materializing action.
+    var edges = Lineage.cutLazy(canon(src))
 
     def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
@@ -1059,7 +1072,7 @@ object Dedup {
       math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
         edgeCount / 1000000L + 1L)).toInt
     lazy val spark = pairs.sparkSession
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < StarRounds) {
       // large-star(u): m = min(N(u) ∪ {u}); link every LARGER neighbor to m
       val adj = edges.select(col("lo").as("u"), col("hi").as("v"))
         .union(edges.select(col("hi").as("u"), col("lo").as("v")))
@@ -1088,6 +1101,8 @@ object Dedup {
       edges = ss
       iter += 1
     }
+    require(converged,
+      s"starComponents did not reach a fixpoint within $StarRounds rounds")
     // fixpoint is a forest of stars centered on each component's min id
     nodes
       .join(edges.select(col("hi").as("id"), col("lo").as("component"))
@@ -1095,10 +1110,10 @@ object Dedup {
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** End-to-end fuzzy dedup: minhash-LSH pairs → connected components →
-    * per-cluster representative (min id). Returns (id, component, keep).
-    * `useStar` switches the clustering to [[connectedComponentsStar]]; the
-    * labels are identical either way (component = min reachable id).
+  /** End-to-end fuzzy dedup: minhash-LSH pairs → [[connectedComponents]]
+    * (min-label on near-clique dup groups, star contraction when the probe
+    * rounds see chains) → per-cluster representative (min id). Returns
+    * (id, component, keep).
     * Output is UNSORTED — a determinism orderBy here would be a global
     * range shuffle over a corpus-cardinality table on every call (one row
     * per document); the catalog entries the oracle compares row-by-row add
@@ -1108,15 +1123,12 @@ object Dedup {
       df: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      threshold: Double = 0.5,
-      useStar: Boolean = false): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val pairs = minHashLsh(df, idCol, textCol, threshold = threshold)
     // iterate ONLY over nodes that have edges (dup-group members — usually
     // a small fraction of the corpus); the singleton majority joins back
     // afterwards as its own component, so no per-round shuffle carries it
-    val comps =
-      if (useStar) connectedComponentsStar(pairs)
-      else connectedComponents(pairs)
+    val comps = connectedComponents(pairs)
     df.select(col(idCol).cast("long").as("id"))
       .join(comps, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))

@@ -919,7 +919,8 @@ object QueryCatalog {
     * `pairs`(id_a, id_b) as DuckDB CTEs: `edges` both directions, the
     * recursive closure `reach`(node, lbl), and `comp`(id, component) =
     * the least id reachable from each paired id — the labels
-    * [[Dedup.connectedComponents]] computes. The enclosing WITH must be
+    * [[Dedup.connectedComponents]] computes, whichever of its two loops
+    * (min-label or star contraction) it runs. The enclosing WITH must be
     * RECURSIVE.
     */
   private def minLabelClosureCtes(pairs: String): String =
@@ -948,8 +949,9 @@ object QueryCatalog {
               SELECT id_a, id_b, jaccard FROM mh_pairs ORDER BY id_a, id_b"""
 
   /** Oracle for the fuzzy cluster entries: the portable minhash pairs fed
-    * through a recursive-CTE transitive closure with min-label reduction,
-    * singletons joined back as their own component (mirrors
+    * through a recursive-CTE transitive closure with min-label reduction
+    * (the min-reachable-id labels of Dedup.connectedComponents), singletons
+    * joined back as their own component (mirrors
     * Dedup.fuzzyDedupClusters' left-join + coalesce).
     */
   private def minhashClustersOracleSql(numHashes: Int, threshold: Double): String =
@@ -2905,10 +2907,11 @@ object QueryCatalog {
 
     // full ER pipeline: block → edit-distance verify → connected
     // components → one canonical entity id per name group. Reuses the
-    // SAME min-label CC machinery the dedup family oracles (recursive-CTE
-    // closure); singleton names (no match edge) stay their own entity via
-    // the left join + coalesce — the contract a downstream keyed join
-    // needs (every name resolves to exactly one entity, matched or not).
+    // SAME connected-components operator the dedup family runs (oracle:
+    // the recursive-CTE closure); singleton names (no match edge) stay
+    // their own entity via the left join + coalesce — the contract a
+    // downstream keyed join needs (every name resolves to exactly one
+    // entity, matched or not).
     Q("q_entity_clusters",
       (s, dir) => {
         val nameIds = t(s, dir, "part").groupBy("p_name")
@@ -3740,8 +3743,8 @@ object QueryCatalog {
       Some(s"""WITH $winnowPairCtes
               SELECT id_a, id_b, shared FROM prs ORDER BY id_a, id_b""")),
 
-    // winnow clusters: MOSS pairs fed through the min-label connected
-    // components — the same (pairs → CC → singletons join back) reduction
+    // winnow clusters: MOSS pairs fed through the connected components
+    // operator — the same (pairs → CC → singletons join back) reduction
     // the minhash cluster entries use, closing the winnowing family
     // (fingerprint → pairs → incremental → clusters). Oracle: winnow pair
     // chain + recursive-CTE transitive closure
@@ -3862,19 +3865,12 @@ object QueryCatalog {
         .orderBy("component", "id"),
       Some(minhashClusterWeightsOracleSql(numHashes = 64, threshold = 0.5))),
 
-    // same clustering via large-star/small-star (O(log n) rounds) — labels
-    // must equal q_dedup_clusters exactly (same independent oracle)
-    Q("q_dedup_clusters_star",
-      (s, dir) => Dedup.fuzzyDedupClusters(t(s, dir, "documents"), threshold = 0.5,
-        useStar = true).orderBy("component", "id"),
-      Some(minhashClustersOracleSql(numHashes = 64, threshold = 0.5))),
-
     // the clustering path made oracle-able end-to-end: exact ngram-Jaccard
     // pairs (deterministic, no sketch seeds) fed through the same
-    // large-star/small-star CC the fuzzy path uses, checked against a
+    // connected components the fuzzy path uses, checked against a
     // DuckDB recursive-CTE transitive closure with min-label reduction
     Q("q_dedup_clusters_exact",
-      (s, dir) => Dedup.connectedComponentsStar(
+      (s, dir) => Dedup.connectedComponents(
           Dedup.ngramJaccard(t(s, dir, "documents"), threshold = 0.15))
         .orderBy("id"),
       Some(s"""WITH RECURSIVE ${shingleCtes(docsRel, "")},
@@ -3891,7 +3887,7 @@ object QueryCatalog {
     // every planted dup pair, whose shared grams ride at df 2, while the
     // loose transitive tail that only overlapped on common grams drops).
     Q("q_dedup_clusters_maxdf",
-      (s, dir) => Dedup.connectedComponentsStar(
+      (s, dir) => Dedup.connectedComponents(
           Dedup.ngramJaccard(t(s, dir, "documents"), threshold = 0.15, maxDf = 4))
         .orderBy("id"),
       Some(s"""WITH RECURSIVE ${shingleCtes(docsRel, "")},

@@ -15,10 +15,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for the same data-skipping effect on those key columns.
   */
 object Tables {
-  val tpch: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Schema-evolving read: union the footer schemas of every file under
     * `path` (columns added by later ingest batches come back null-filled
     * for older files). Off by default in Spark because it costs one footer
@@ -137,10 +133,6 @@ object Tables {
   /** CSV dimension load with header inference (reference README.md:20). */
   def loadCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
-  /** Stage checkpoint: overwrite Parquet (reference cells 31/36/46/60/...). */
-  def checkpoint(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** Partitioned final sink (reference cell 119's Delta write, re-expressed
     * as hive-layout Parquet). `sortCols` stands in for Z-ORDER (cell 132):

@@ -42,8 +42,9 @@ object CorpusIngest {
     *     LSH pairs collapsed to connected components, one min-id
     *     representative per transitive dup group — the policy of batch
     *     [[Dedup.fuzzyDedupClusters]], so a streamed corpus cannot diverge
-    *     from a batch-deduped one. Dup groups are near-cliques, so the
-    *     min-label CC converges in 1-2 rounds on a micro-batch;
+    *     from a batch-deduped one. Dup groups are near-cliques, so
+    *     [[Dedup.connectedComponents]] converges within its min-label
+    *     probe rounds on a micro-batch and never runs star contraction;
     *  4. then the probe of `baseSketches` ([[Dedup.minHashSketchTable]]
     *     rows of everything kept so far; None = none yet) by
     *     [[Dedup.incrementalMinHash]], which reads (id, sig) only, never

@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 
 class DedupClusterSpec extends SparkSpec {
 
+  /** Rounds enough for min-label to converge on every graph below. */
+  private val minLabelRounds = 100
+
   test("connected components labels transitive groups by min id") {
     import spark.implicits._
     // components: {1,2,3,4} (chain), {10,11}, {20} (self-pair)
@@ -15,6 +18,13 @@ class DedupClusterSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
+
+    // 60-node chain: diameter 59, far past the min-label probe rounds —
+    // the operator must switch loops, not return half-propagated labels
+    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val viaChain = Dedup.connectedComponents(chain)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaChain.size == 60 && viaChain.values.forall(_ == 1L), viaChain)
   }
 
   test("large-star/small-star agrees with label propagation on chains and random graphs") {
@@ -22,7 +32,7 @@ class DedupClusterSpec extends SparkSpec {
     // 60-node chain: worst case for label propagation (diameter 59),
     // log-round case for star contraction
     val chain = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val viaStar = Dedup.connectedComponentsStar(chain)
+    val viaStar = Dedup.starComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaStar.size == 60 && viaStar.values.forall(_ == 1L))
 
@@ -31,19 +41,19 @@ class DedupClusterSpec extends SparkSpec {
     val edges = Seq.fill(150)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter { case (a, b) => a != b }
     val pairs = edges.toDF("id_a", "id_b")
-    val star = Dedup.connectedComponentsStar(pairs)
+    val star = Dedup.starComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.connectedComponents(pairs)
+    val prop = Dedup.minLabelComponents(pairs, minLabelRounds).get
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star === prop)
 
     // empty edge list degenerates cleanly
-    assert(Dedup.connectedComponentsStar(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
-      .isEmpty)
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(Dedup.starComponents(empty).isEmpty)
     // min-label too: a dup-free ingest micro-batch produces zero pairs, and
     // sum() over the empty label set is null — must converge, not NPE
-    assert(Dedup.connectedComponents(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
-      .isEmpty)
+    assert(Dedup.minLabelComponents(empty, 1).exists(_.isEmpty))
+    assert(Dedup.connectedComponents(empty).isEmpty)
   }
 
   test("iterative rounds use RELIABLE checkpoints when a checkpoint dir is set") {
@@ -53,10 +63,10 @@ class DedupClusterSpec extends SparkSpec {
       sc.setCheckpointDir(dir)
       try {
         val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-        val star = Dedup.connectedComponentsStar(chain)
+        val star = Dedup.starComponents(chain)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(star.size == 30 && star.values.forall(_ == 1L))
-        val prop = Dedup.connectedComponents(chain)
+        val prop = Dedup.minLabelComponents(chain, minLabelRounds).get
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(prop === star)
         // the reliable path really ran: checkpoint blocks were written to dir

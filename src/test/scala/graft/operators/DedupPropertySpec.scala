@@ -294,9 +294,9 @@ class DedupPropertySpec extends SparkSpec {
       val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
       val pairs = edges.toDF("id_a", "id_b")
-      val star = Dedup.connectedComponentsStar(pairs)
+      val star = Dedup.starComponents(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val prop = Dedup.connectedComponents(pairs)
+      val prop = Dedup.minLabelComponents(pairs, rounds = 100).get
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(star === prop, s"divergence at seed=$seed n=$n m=$m")
       // every label is a member of its own component (root is reachable)

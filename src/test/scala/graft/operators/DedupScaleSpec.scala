@@ -33,9 +33,9 @@ class DedupScaleSpec extends SparkSpec {
       .count()
     assert(cliquePairs === 21L * 20L / 2L, s"clique incomplete: $cliquePairs of 210")
 
-    // star contraction puts the whole clique in one component labeled by
-    // its min id (the rep-0 original)
-    val comps = Dedup.connectedComponentsStar(pairs.select("id_a", "id_b"))
+    // connected components puts the whole clique in one component labeled
+    // by its min id (the rep-0 original)
+    val comps = Dedup.connectedComponents(pairs.select("id_a", "id_b"))
       .filter(col("id").isin(cliqueIds.toSeq: _*))
       .select("component").distinct().collect().map(_.getLong(0))
     assert(comps.toSeq === Seq(longest))

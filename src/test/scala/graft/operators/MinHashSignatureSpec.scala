@@ -97,4 +97,27 @@ class MinHashSignatureSpec extends SparkSpec {
       .head().getSeq[java.lang.Long](0).toSeq
     assert(nat(4L) === expected)
   }
+
+  test("golden signature: one fixed document's 64 portable minima") {
+    // literal values, not recomputed from the code under test: every
+    // oracle and lockstep test above reads the affine family from
+    // Dedup.affineParams, so a changed seed would pass them all while every
+    // persisted sketch table stopped matching newly sketched documents
+    val sig = docs.filter(col("doc_id") === 1L)
+      .select(Dedup.minHashSignaturePortable(
+        Dedup.portableShingleHashes(col("text")), n))
+      .head().getSeq[Long](0)
+    assert(sig === Seq(
+      908597545L, 18099493L, 217496197L, 50842836L, 217575879L, 245732327L,
+      53066765L, 212114485L, 222771607L, 17557892L, 88772421L, 122319699L,
+      106753994L, 403733917L, 80959851L, 542393204L, 337584329L, 272822526L,
+      750334255L, 88699122L, 237708592L, 23566146L, 357072259L, 72898836L,
+      911883945L, 227768194L, 13080351L, 152428021L, 379566951L, 292986964L,
+      1150426L, 376308319L, 43738811L, 1197051L, 521931668L, 88764563L,
+      76427890L, 364904896L, 402709177L, 415037913L, 437058697L, 467176092L,
+      39524462L, 131026933L, 281360931L, 181904200L, 325615400L, 152880375L,
+      192824723L, 102760444L, 517024346L, 143463561L, 372967618L, 489513605L,
+      361556475L, 225560165L, 65278492L, 151826212L, 717333605L, 434182328L,
+      124786131L, 77013518L, 595139433L, 295090925L))
+  }
 }
