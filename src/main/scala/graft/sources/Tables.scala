@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Source/sink surface (reference SURVEY.md §2a, §2k).
   *
@@ -37,8 +38,8 @@ object Tables {
     * same JVM without going through `Tables` (ScaleData's `df.write`, a
     * re-ingest) is re-inferred instead of read with the stale schema.
     */
-  private val schemaCatalog = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+  private val schemaCatalog =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
   /** What changes when a table path is rewritten, from one file-status
     * lookup (no Spark job): a single-file table's length and modification
@@ -53,8 +54,7 @@ object Tables {
     else s"${st.getLen}@${st.getModificationTime}"
   }
 
-  private def declaredSchema(
-      spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+  private def declaredSchema(spark: SparkSession, path: String): StructType = {
     val id = fileIdentity(spark, path)
     schemaCatalog.compute(path, (p, cached) =>
       if (cached != null && cached._1 == id) cached
@@ -69,37 +69,50 @@ object Tables {
     * TIMESTAMP(NANOS) which Spark 4 only reads as long (legacy
     * nanosAsLong, set in the session) — normalize it back to a microsecond
     * TimestampType column so downstream datetime functions apply
-    * ([[repairEventsTs]]).
+    * ([[repairedRead]]).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = spark.read.schema(declaredSchema(spark, path)).parquet(path)
-    if (name == "events") repairEventsTs(df) else df
+    val timestamps = if (name == "events") Seq("ts") else Nil
+    repairedRead(declaredSchema(spark, path), timestamps)(spark.read.schema(_).parquet(path))
   }
 
-  /** Normalize the events table's timestamp — keyed on the table NAME (via
-    * [[load]]/[[loadEventsStream]]), not "any ts column". Two writer
-    * generations exist: TIMESTAMP(NANOS), which Spark 4 only reads as long
-    * (legacy nanosAsLong, set in the session) → divide to micros; and
-    * TIMESTAMP(MICROS) with no tz annotation → TimestampNTZType, which
-    * session-TZ datetime functions (and the TimestampType contract every
-    * downstream operator assumes) don't apply to → reinterpret the same
-    * micros as UTC instants (session TZ is UTC, so wall-clock == instant;
-    * the cell-81 repair of SURVEY.md §1). A future table whose long ts
-    * is already micros/seconds must not be silently divided.
+  /** A parquet read whose named timestamp columns come back as
+    * TimestampType — the one repair for every raw read whose timestamps
+    * downstream code treats as instants: the events table's `ts` (via
+    * [[load]]/[[loadEventsStream]]) and the taxi trip file's pickup and
+    * dropoff columns (`RunPipeline.readRaw`). `read` runs the read under
+    * the schema it is given; `schema` is the file's own. Keyed on column
+    * NAMES the caller knows to be timestamps, never on "any long column".
+    * Two writer generations exist:
+    *  - TIMESTAMP(MICROS) with no tz annotation, which the footer gives as
+    *    TimestampNTZType (the real TLC file): the read declares the
+    *    column TimestampType, so the scan returns the same micros as UTC
+    *    instants (session TZ is UTC, so wall-clock == instant; the
+    *    cell-81 repair of SURVEY.md §1). This costs nothing per row. A
+    *    cast after the read would instead be inlined into every predicate
+    *    that reads the column, and in the taxi chain that pushes the fused
+    *    clean+features method over HotSpot's 8,000-bytecode compile limit.
+    *    Session-TZ datetime functions do not apply to NTZ, and
+    *    `cast(TIMESTAMP_NTZ AS BIGINT)` is not even a legal cast.
+    *  - TIMESTAMP(NANOS), which Spark 4 only reads as long (legacy
+    *    nanosAsLong, set in the session): divided to micros after the
+    *    read.
+    * A column of any other type, or a name the file lacks, is left as it
+    * is.
     */
-  private def repairEventsTs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    df.schema.find(_.name == "ts").map(_.dataType) match {
-      case Some(LongType) =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts DIV 1000")))
-      case Some(TimestampNTZType) =>
-        df.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
+  def repairedRead(schema: StructType, columns: Seq[String])(
+      read: StructType => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{expr, timestamp_micros}
+    val declared = StructType(schema.map {
+      case f if columns.contains(f.name) && f.dataType == TimestampNTZType =>
+        f.copy(dataType = TimestampType)
+      case f => f
+    })
+    columns.filter(c => declared.find(_.name == c).exists(_.dataType == LongType))
+      .foldLeft(read(declared)) { (df, c) =>
+        df.withColumn(c, timestamp_micros(expr(s"`$c` DIV 1000")))
+      }
   }
 
   /** FILE-SOURCE streaming read of the events table — the production shape
@@ -121,13 +134,12 @@ object Tables {
     // (watch it directly — the shape a real ingest watches too).
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st =
-      if (fs.getFileStatus(new org.apache.hadoop.fs.Path(path)).isDirectory)
-        spark.readStream.schema(schema).parquet(path)
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-    repairEventsTs(st)
+    val isDir = fs.getFileStatus(new org.apache.hadoop.fs.Path(path)).isDirectory
+    repairedRead(schema, Seq("ts")) { declared =>
+      if (isDir) spark.readStream.schema(declared).parquet(path)
+      else spark.readStream.schema(declared)
+        .option("pathGlobFilter", "events.parquet").parquet(dir)
+    }
   }
 
   /** CSV dimension load with header inference (reference README.md:20). */

@@ -1,13 +1,17 @@
 package graft.taxi
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** The reference's analytics query set Q1-Q8 (SURVEY.md §2l step 11), each
   * a pure function over the cleaned frame. Aggregations are hash aggs
   * (partial → shuffle on the group key → final); top-k queries plan as
-  * TakeOrderedAndProject, so only k rows ever reach the driver.
+  * TakeOrderedAndProject, so only k rows ever reach the driver. The
+  * ordered aggregates whose row count is bounded by their key domain (Q1,
+  * Q3, Q5, Q6, Q8 and the duration/tip correlation) sort in the final
+  * aggregate's one task (`sortBounded`), so their plans carry no range
+  * exchange and run no sampling job.
   */
 object Analytics {
 
@@ -29,6 +33,19 @@ object Analytics {
     "corr_duration_tip" -> corrDurationTipByPayment,
     "airport_share" -> airportShare)
 
+  /** `df` sorted by `cols` in one task: the partitions are merged without a
+    * shuffle, so the plan has no range exchange and Spark runs no
+    * `RangePartitioner` sampling job or extra stage for the sort.
+    *
+    * Only for a post-aggregate whose row count is bounded by its key
+    * domain: the airport flag, the payment types, the slots × weekdays (at
+    * most 35 rows) or the trip type. Never use it on a frame that grows
+    * with the data, such as Q2's up to 265² routes: one task would then
+    * sort every row, a single-partition cliff at scale.
+    */
+  private def sortBounded(df: DataFrame, cols: Column*): DataFrame =
+    df.coalesce(1).orderBy(cols: _*)
+
   /** Share of trips picking up at an airport, percent (cell 101), as a
     * one-row frame; 0.0 for an empty frame (sum over zero rows is null).
     */
@@ -45,11 +62,11 @@ object Analytics {
   /** Q1 (cells 102-105): average tip% (tip/total·100, rounded per-row) by
     * airport-pickup flag.
     */
-  def q1TipPctByAirportPickup(df: DataFrame): DataFrame =
+  def q1TipPctByAirportPickup(df: DataFrame): DataFrame = sortBounded(
     Features.withAirportPickupFlag(Features.withTipPercent(df))
       .groupBy("is_airport_pickup")
-      .agg(avg("tip_percent").as("average_tip_percentage"))
-      .orderBy("is_airport_pickup")
+      .agg(avg("tip_percent").as("average_tip_percentage")),
+    col("is_airport_pickup"))
 
   /** Q2 (cell 107): average duration per (PU, DO) pair. */
   def q2AvgDurationByRoute(df: DataFrame): DataFrame =
@@ -59,10 +76,10 @@ object Analytics {
   /** Q3 (cell 109): trips per payment type, counted via count(RatecodeID)
     * (count-ignores-null, exactly as the reference wrote it).
     */
-  def q3CountByPaymentType(df: DataFrame): DataFrame =
+  def q3CountByPaymentType(df: DataFrame): DataFrame = sortBounded(
     df.groupBy("payment_type")
-      .agg(count(col("RatecodeID")).as("trip_count"))
-      .orderBy("payment_type")
+      .agg(count(col("RatecodeID")).as("trip_count")),
+    col("payment_type"))
 
   /** Q4 (cell 111): payment-type popularity rank within each rate code,
     * then code→label recodings (labels only for the codes the reference
@@ -87,21 +104,21 @@ object Analytics {
     * avg_speed_mph alias is the reference's (units actually mi/min —
     * Features.withAverageSpeed).
     */
-  def q5Congestion(df: DataFrame): DataFrame =
+  def q5Congestion(df: DataFrame): DataFrame = sortBounded(
     df.groupBy("time_of_day_slot")
       .agg(
         avg("average_speed").as("avg_speed_mph"),
         avg("time_take_min").as("avg_duration_min"),
-        count(lit(1)).as("trip_count"))
-      .orderBy("time_of_day_slot")
+        count(lit(1)).as("trip_count")),
+    col("time_of_day_slot"))
 
   /** Q6 (cell 138): average fare + trip count by (slot, day-of-week). */
-  def q6FareBySlotAndDow(df: DataFrame): DataFrame =
+  def q6FareBySlotAndDow(df: DataFrame): DataFrame = sortBounded(
     df.groupBy("time_of_day_slot", "pickup_day_of_week")
       .agg(
         round(avg("fare_amount"), 2).as("avg_fare"),
-        count(lit(1)).as("trip_count"))
-      .orderBy("pickup_day_of_week", "time_of_day_slot")
+        count(lit(1)).as("trip_count")),
+    col("pickup_day_of_week"), col("time_of_day_slot"))
 
   /** Q7 (cells 140/144): top-10 routes during peak slots. The cell-144
     * variant also renders a "route" label; both peak sets appear in the
@@ -116,13 +133,13 @@ object Analytics {
       .limit(10)
 
   /** Correlation of duration and tip per payment type (cell 146). */
-  def corrDurationTipByPayment(df: DataFrame): DataFrame =
+  def corrDurationTipByPayment(df: DataFrame): DataFrame = sortBounded(
     df.groupBy("payment_type")
       .agg(
         corr(col("time_take_min"), col("tip_amount")).as("corr_duration_tip"),
         round(avg("time_take_min"), 2).as("avg_duration"),
-        round(avg("tip_amount"), 2).as("avg_tip"))
-      .orderBy(col("corr_duration_tip").desc)
+        round(avg("tip_amount"), 2).as("avg_tip")),
+    col("corr_duration_tip").desc)
 
   /** Q8 (cell 147): airport vs non-airport trips (either endpoint), with
     * the second tip definition tip_pct = tip/fare·100 when fare>0.
@@ -137,12 +154,13 @@ object Analytics {
         when(col("fare_amount") > 0,
           round(col("tip_amount") / col("fare_amount") * 100, 2))
           .otherwise(lit(null)))
-    tagged.groupBy("trip_type")
-      .agg(
-        round(avg("trip_distance"), 2).as("avg_distance_miles"),
-        round(avg("fare_amount"), 2).as("avg_fare_usd"),
-        round(avg("tip_pct"), 2).as("avg_tip_percentage"),
-        count(lit(1)).as("total_trips"))
-      .orderBy("trip_type")
+    sortBounded(
+      tagged.groupBy("trip_type")
+        .agg(
+          round(avg("trip_distance"), 2).as("avg_distance_miles"),
+          round(avg("fare_amount"), 2).as("avg_fare_usd"),
+          round(avg("tip_pct"), 2).as("avg_tip_percentage"),
+          count(lit(1)).as("total_trips")),
+      col("trip_type"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.taxi
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** The reference's cleaning lineage (SURVEY.md §2l), one pure
@@ -15,11 +15,25 @@ import org.apache.spark.sql.functions._
   */
 object Cleaning {
 
-  /** Trip duration in minutes from the timestamp delta (cell 23). */
+  /** Minutes from `pickup` to `dropoff`, from whole epoch seconds — the
+    * value of the notebook's unix_timestamp delta for any timestamp after
+    * 1970 (before it, the cast floors where unix_timestamp truncates
+    * toward zero). A plain cast to long is
+    * the smallest code Spark generates for it, and the optimizer inlines
+    * this expression into about ten predicate positions of the fused
+    * clean+features method, which must stay under HotSpot's 8,000-bytecode
+    * compile limit. The cast needs TimestampType input: repair a raw
+    * TIMESTAMP_NTZ file through `Tables.repairedRead`.
+    */
+  private def durationMin(pickup: Column, dropoff: Column): Column =
+    (dropoff.cast("long") - pickup.cast("long")) / 60.0
+
+  /** Trip duration in minutes from the timestamp delta (cell 23), through
+    * `durationMin`.
+    */
   def withDuration(df: DataFrame): DataFrame =
     df.withColumn("time_take_min",
-      (unix_timestamp(col("tpep_dropoff_datetime")) -
-        unix_timestamp(col("tpep_pickup_datetime"))) / 60.0)
+      durationMin(col("tpep_pickup_datetime"), col("tpep_dropoff_datetime")))
 
   /** Keep average speed ≤ 50 mph (cell 26). Quirk kept verbatim: a
     * zero-duration trip makes the divisor 0, and Spark SQL's Divide (ANSI
@@ -52,8 +66,7 @@ object Cleaning {
         when(col("time_take_min") < 0, col("tpep_pickup_datetime"))
           .otherwise(col("tpep_dropoff_datetime")))
       .withColumn("time_take_min_corrected",
-        (unix_timestamp(col("corrected_dropoff")) -
-          unix_timestamp(col("corrected_pickup"))) / 60.0)
+        durationMin(col("corrected_pickup"), col("corrected_dropoff")))
       .drop("tpep_pickup_datetime", "tpep_dropoff_datetime", "time_take_min")
       .withColumnRenamed("corrected_pickup", "tpep_pickup_datetime")
       .withColumnRenamed("corrected_dropoff", "tpep_dropoff_datetime")

@@ -14,19 +14,32 @@ object Features {
   def withAverageSpeed(df: DataFrame): DataFrame =
     df.withColumn("average_speed", col("trip_distance") / col("time_take_min"))
 
+  /** The notebook's slot of each hour of the day, indexed by the hour
+    * (cell 88's when-chain: 0-5 Night, 6-11 Morning, 12-16 Afternoon,
+    * 17-20 Evening, the rest LateNight).
+    */
+  private val slotOfHour: Seq[String] = (0 until 24).map {
+    case h if h <= 5  => "Night"
+    case h if h <= 11 => "Morning"
+    case h if h <= 16 => "Afternoon"
+    case h if h <= 20 => "Evening"
+    case _            => "LateNight"
+  }
+
   /** pickup_hour_of_day, pickup_day_of_week (1=Sunday, Spark convention),
-    * time_of_day_slot (cells 87-88). The when-chain ends in otherwise, so
-    * the slot column is non-nullable.
+    * time_of_day_slot (cells 87-88). The slot is one lookup in a 24-entry
+    * literal array ([[slotOfHour]]) rather than the notebook's four-way
+    * when-chain: the chain's range tests were a large share of the fused
+    * clean+features method, which must stay under HotSpot's 8,000-bytecode
+    * compile limit. A null hour falls to LateNight, as the chain's
+    * otherwise did, so the slot column stays non-nullable.
     */
   def withTimeFeatures(df: DataFrame): DataFrame =
     df.withColumn("pickup_hour_of_day", hour(col("tpep_pickup_datetime")))
       .withColumn("pickup_day_of_week", dayofweek(col("tpep_pickup_datetime")))
       .withColumn("time_of_day_slot",
-        when(col("pickup_hour_of_day").between(0, 5), lit("Night"))
-          .when(col("pickup_hour_of_day").between(6, 11), lit("Morning"))
-          .when(col("pickup_hour_of_day").between(12, 16), lit("Afternoon"))
-          .when(col("pickup_hour_of_day").between(17, 20), lit("Evening"))
-          .otherwise(lit("LateNight")))
+        coalesce(element_at(typedLit(slotOfHour), col("pickup_hour_of_day") + 1),
+          lit("LateNight")))
 
   /** tip_percent = round(tip/total·100, 2) — Q1's definition (cell 102).
     * Distinct from Q8's tip_pct (tip/fare, cell 147); both exist in the

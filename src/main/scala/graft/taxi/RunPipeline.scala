@@ -1,6 +1,6 @@
 package graft.taxi
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSession
 import graft.sources.Tables
@@ -36,6 +36,15 @@ object RunPipeline {
       partitionCols = Seq("pickup_year", "pickup_month", "pickup_day"),
       sortCols = Seq("PULocationID", "DOLocationID"))
 
+  /** The raw trip file at `path` with its pickup and dropoff timestamps
+    * read as TimestampType ([[Tables.repairedRead]]). The real TLC file
+    * stores them as TIMESTAMP_NTZ, which the cleaning chain's duration
+    * cast does not accept.
+    */
+  def readRaw(spark: SparkSession, path: String): DataFrame =
+    Tables.repairedRead(spark.read.parquet(path).schema,
+      Seq("tpep_pickup_datetime", "tpep_dropoff_datetime"))(spark.read.schema(_).parquet(path))
+
   /** Clean, feature and sink `raw` into `path`; returns every stage's row
     * count, observed before the sink.
     */
@@ -58,13 +67,12 @@ object RunPipeline {
 
     // only stop a session this run created — under getOrCreate the runner
     // may be handed a host's live session (tests, notebooks) to leave alone
-    val preExisting =
-      org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
+    val preExisting = SparkSession.getDefaultSession.isDefined
     val spark = GraftSession.builder("graft-taxi-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val raw = rawPath match {
-      case Some(p) => spark.read.parquet(p)
+      case Some(p) => readRaw(spark, p)
       case None    => TaxiFixture.raw(spark)
     }
     val rows = run(raw, s"$outDir/taxi", strict)

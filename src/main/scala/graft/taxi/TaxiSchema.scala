@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
   */
 object TaxiSchema {
 
-  /** The 19 raw columns as Parquet infers them (cell 4). `timestamp_ntz`
-    * in the raw file; normalized to TimestampType by Cleaning.castTypes
-    * (the reference's cell 81 to_timestamp repair, session TZ pinned UTC).
+  /** The 19 raw columns as Parquet infers them (cell 4), after the read's
+    * timestamp repair: the raw file's `timestamp_ntz` pickup and dropoff
+    * columns become TimestampType in `RunPipeline.readRaw` (the
+    * reference's cell 81 to_timestamp repair, session TZ pinned UTC).
     */
   val raw: StructType = StructType(Seq(
     StructField("VendorID", IntegerType),

@@ -256,6 +256,65 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("key-bounded taxi aggregates sort in one task: no range exchange, rows in order") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.taxi.{Analytics, Cleaning, RunPipeline, TaxiFixture}
+    withTempDir("taxi-sorted") { dir =>
+      RunPipeline.sink(Cleaning.pipeline(TaxiFixture.raw(spark)), dir)
+      val table = spark.read.parquet(dir)
+      assert(table.inputFiles.length > 1, "fixture sink wrote one file")
+      // each query with its orderBy applied to the collected rows (a stable
+      // sort, so rows already in order come back unchanged)
+      val ordered = Seq[(String, DataFrame => DataFrame, Seq[Row] => Seq[Row])](
+        ("q1", Analytics.q1TipPctByAirportPickup, _.sortBy(_.getAs[Boolean]("is_airport_pickup"))),
+        ("q3", Analytics.q3CountByPaymentType, _.sortBy(_.getAs[Int]("payment_type"))),
+        ("q5", Analytics.q5Congestion, _.sortBy(_.getAs[String]("time_of_day_slot"))),
+        ("q6", Analytics.q6FareBySlotAndDow, _.sortBy(r =>
+          (r.getAs[Int]("pickup_day_of_week"), r.getAs[String]("time_of_day_slot")))),
+        ("q8", Analytics.q8AirportVsNonAirport, _.sortBy(_.getAs[String]("trip_type"))),
+        ("corr", Analytics.corrDurationTipByPayment, _.sortBy(r => -r.getAs[Double]("corr_duration_tip"))))
+      for ((name, q, sorted) <- ordered) {
+        val df = q(table)
+        val rows = df.collect().toSeq
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.toLowerCase.contains("rangepartitioning"), s"$name plans a range exchange:\n$plan")
+        assert(rows.length > 1, s"$name: ${rows.length} rows cannot show an order")
+        assert(rows === sorted(rows), s"$name rows out of order")
+      }
+    }
+  }
+
+  test("the taxi sink's generated methods stay under HotSpot's 8,000-bytecode limit") {
+    // a method over 8,000 bytecodes is never JIT-compiled; the fused
+    // clean+features method has about 11 B of headroom, and the NTZ
+    // repair's casts inline into it too. Plans are read after execution:
+    // before it, an adaptive plan hides its query stages
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.taxi.{Cleaning, RunPipeline, TaxiPipelineSpec}
+    import graft.tools.Codegen
+    for (ntz <- Seq(false, true)) withTempDir("taxi-codegen-size") { dir =>
+      val raw = TaxiPipelineSpec.fixtureFile(spark, s"$dir/raw", ntz)
+      val plans = new ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+          plans.add(qe.executedPlan); ()
+        }
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        RunPipeline.sink(Cleaning.pipeline(raw), s"$dir/sink")
+        org.apache.spark.graft.TestListenerBus.waitUntilEmpty(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val sizes = plans.asScala.toSeq.map(Codegen.maxMethodBytecode)
+      assert(sizes.nonEmpty, s"ntz=$ntz: the sink's write was not seen")
+      assert(sizes.max > 0 && sizes.max <= 8000, s"ntz=$ntz: max method ${sizes.max} B")
+    }
+  }
+
   test("partition-pruned scan skips non-matching hive partitions") {
     // writePartitioned layout verified in TablesSpec; here the catalog's
     // time-bucketed events query must keep its filter at the scan

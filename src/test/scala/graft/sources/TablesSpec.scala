@@ -202,9 +202,10 @@ class TablesSpec extends SparkSpec {
   test("events ts repair: timestamp_ntz shape → TimestampType, same instant") {
     import spark.implicits._
     // the regenerated-testdata writer generation: TIMESTAMP(MICROS) with
-    // no tz annotation → Spark reads TimestampNTZType. The repair casts to
-    // TimestampType under the UTC session TZ, so the wall-clock value IS
-    // the instant — downstream datetime functions and window ops apply.
+    // no tz annotation → Spark reads TimestampNTZType. The repair reads the
+    // column as TimestampType, the same micros as UTC instants (the session
+    // TZ is UTC, so the wall-clock value IS the instant) — downstream
+    // datetime functions and window ops apply.
     val dir = s"$tmp/tsrepair_ntz"
     Seq((1L, "2024-01-01T00:00:00"))
       .toDF("event_id", "raw")

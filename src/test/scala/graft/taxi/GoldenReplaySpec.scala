@@ -27,7 +27,7 @@ class GoldenReplaySpec extends SparkSpec {
     })
   }
 
-  private lazy val raw: DataFrame = spark.read.parquet(TaxiGoldens.rawPath)
+  private lazy val raw: DataFrame = RunPipeline.readRaw(spark, TaxiGoldens.rawPath)
   private lazy val stages: Map[String, DataFrame] = Cleaning.cuts(raw).toMap
   private lazy val validDistance: DataFrame = stages("valid_speed_distance")
   private lazy val cleaned: DataFrame = stages("cleaned")

@@ -1,7 +1,10 @@
 package graft.taxi
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Per-branch cleaning semantics + pipeline invariants (SURVEY.md §5):
   * each rule of §2l exercised by a dedicated fixture row, including the
@@ -99,6 +102,31 @@ class TaxiPipelineSpec extends SparkSpec {
     assert(!f("time_of_day_slot").nullable)
   }
 
+  test("a timestamp_ntz raw file, through the read's repair, gives the same stages and rows") {
+    withTempDir("taxi-ntz") { dir =>
+      val ntz = TaxiPipelineSpec.fixtureFile(spark, dir, ntz = true)
+      assert(spark.read.parquet(dir).schema("tpep_pickup_datetime").dataType === TimestampNTZType)
+      assert(ntz.schema("tpep_pickup_datetime").dataType === TimestampType)
+      assert(ntz.schema("tpep_dropoff_datetime").dataType === TimestampType)
+      assert(Cleaning.stageRows(ntz) === Seq("raw" -> 22L, "valid_speed_distance" -> 18L,
+        "cleaned" -> 11L, "featured" -> 11L))
+      def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+      assert(rows(Cleaning.pipeline(ntz)) === rows(cleaned))
+    }
+  }
+
+  test("slot lookup matches the notebook's hour ranges; a null hour is LateNight") {
+    import spark.implicits._
+    val pickups = (0 until 24).map(h =>
+      Option(java.sql.Timestamp.valueOf(f"2024-01-15 $h%02d:30:00"))) :+ None
+    val slots = Features.withTimeFeatures(pickups.toDF("tpep_pickup_datetime"))
+      .select("pickup_hour_of_day", "time_of_day_slot").collect()
+      .map(r => Option(r.getAs[Integer](0)).map(_.toInt) -> r.getString(1)).toMap
+    assert(slots === (0 until 24).map(h => Option(h) -> (
+      if (h <= 5) "Night" else if (h <= 11) "Morning" else if (h <= 16) "Afternoon"
+      else if (h <= 20) "Evening" else "LateNight")).toMap + (None -> "LateNight"))
+  }
+
   test("average_speed is miles per MINUTE (reference quirk, cell 86)") {
     val r = cleaned.filter(col("trip_distance") === 3.0)
       .select("average_speed").head().getDouble(0)
@@ -187,5 +215,20 @@ class TaxiPipelineSpec extends SparkSpec {
     // card: 9 points, strongly but not perfectly correlated (JFK outlier)
     val (c1, d1, t1) = rows(1)
     assert(c1 > 0.95 && c1 < 0.96 && d1 === 16.22 && t1 === 4.0)
+  }
+}
+
+object TaxiPipelineSpec {
+
+  /** The fixture written to a parquet file under `dir` and read back
+    * through `RunPipeline.readRaw`; with `ntz` its two timestamps are
+    * written as TIMESTAMP_NTZ, as in the real TLC file.
+    */
+  def fixtureFile(spark: SparkSession, dir: String, ntz: Boolean): DataFrame = {
+    val ts = Seq("tpep_pickup_datetime", "tpep_dropoff_datetime")
+    val fixture = TaxiFixture.raw(spark)
+    (if (ntz) ts.foldLeft(fixture)((df, c) => df.withColumn(c, col(c).cast(TimestampNTZType)))
+     else fixture).write.mode("overwrite").parquet(dir)
+    RunPipeline.readRaw(spark, dir)
   }
 }
