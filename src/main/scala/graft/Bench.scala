@@ -106,6 +106,11 @@ object Bench {
   private[graft] val IsolatedSideN = 40
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional comma-separated query filter for local iteration; an
+    // unknown name fails here, before any Spark work. Catalog order
+    // (stable), so family grouping below is contiguous
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = queries.QueryCatalog.select(only).map(q => q.name -> q.fn)
     val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional durable checkpoint dir — the CLUSTER shape for the
@@ -117,12 +122,6 @@ object Bench {
     // cleanCheckpoints is on (GraftSession), so superseded rounds delete.
     sys.env.get("SPARK_GRAFT_CKPT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
-    // optional comma-separated query filter for local iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // catalog order (stable), so family grouping below is contiguous
-    val selected = queries.QueryCatalog.all
-      .map(q => q.name -> q.fn)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // Loop shape: per-QUERY min-of-N with operator caches released at query-
     // FAMILY boundaries — NOT per-pass sweeps over the whole catalog. The
     // r4 per-pass sweep kept 104 queries' sketch caches resident at once;
@@ -272,15 +271,24 @@ object Bench {
     */
   private[graft] val LineBudget = 1920
 
-  // One JSON rendering shared by both artifacts: strings, integer-ms maps
-  // (-1 for a failure) and the total over successful entries.
-  private def js(s: String): String = "\"" + s.flatMap {
+  /** The one JSON string literal of the repo's artifacts (both Bench
+    * outputs, Verify's `oracle_sql.json` and `flags.json`): escapes
+    * backslash, quote and ALL control chars (< 0x20), newline, CR and tab
+    * by name — a raw tab or CR in an oracle's SQL would otherwise make the
+    * compare's json.load fail and silently zero the correctness check.
+    */
+  private[graft] def js(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
 
+  // Shared by both Bench artifacts: integer-ms maps (-1 for a failure) and
+  // the total over successful entries.
   private def msMap(m: Seq[(String, Double)]): String = m.map { case (k, v) =>
     js(k) + ":" + (if (v < 0) "-1" else math.round(v * 1000).toString)
   }.mkString("{", ",", "}")

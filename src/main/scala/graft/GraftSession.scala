@@ -88,8 +88,7 @@ object GraftSession {
       // RocksDB (in /opt/spark/jars, rocksdbjni 9.8.4) moves state
       // off-heap with disk spill — the production cluster shape for
       // large stateful streaming. The provider is a runtime conf, so one
-      // query can run under another (withStateStore below) and
-      // tools.AbConf A/Bs it per entry.
+      // query can run under another (withStateStore below).
       .config(StateStoreKey, RocksDbStateStore)
 
   def local(appName: String = "graft"): SparkSession = {

@@ -457,48 +457,27 @@ object GraphRank {
   }
 
   /** Link-prediction pair scores over shared neighborhoods (Liben-Nowell
-    * & Kleinberg 2003) — the SCORING complement of [[negativeSamples]]'
-    * training negatives: for every source pair (u < v) sharing at least
-    * one destination, the common-neighbor count and the Adamic-Adar
-    * weight Σ_w 1/ln(deg(w)) over the shared destinations w (rarer
-    * shared neighbors carry more signal than ubiquitous ones — the same
-    * insight behind idf). Degrees are destination posting-list sizes in
-    * the DEDUPED edge set.
+    * & Kleinberg 2003) for a provided (src_a, src_b) candidate list (from
+    * a blocking stage, a negative sampler, or a recall model) — the
+    * SCORING complement of [[negativeSamples]]' training negatives. Per
+    * candidate: the common-neighbor count and the Adamic-Adar weight
+    * Σ_w 1/ln(deg(w)) over the shared destinations w (rarer shared
+    * neighbors carry more signal than ubiquitous ones — the same insight
+    * behind idf). Degrees are destination posting-list sizes in the
+    * DEDUPED edge set.
+    *
+    * Scoring a list costs |candidates|·d̄ posting rows through two
+    * src-keyed joins — linear in the list however big the graph gets.
+    * Enumerating every co-neighbor pair instead costs Σ deg² candidates
+    * (measured OOM at ×100 on one box, BENCH_SF10).
     *
     * `maxDegree` is the hub cap, same deterministic reduced-graph
     * semantics as ngramJaccard.maxDf / triangleCountCapped: destinations
-    * with more than maxDegree sources are removed BEFORE pairing (their
-    * AA summand ~1/ln(huge) is noise, their candidate volume is deg² —
-    * all cost, no signal), so scores are exactly the scores of the
-    * reduced graph and an oracle replays them. Candidate volume is
-    * Σ deg² over surviving destinations — the cap, not the join, is the
-    * 100-TB lever. Degree-1 destinations drop too (they cannot pair, and
-    * 1/ln(1) is undefined).
-    */
-  def linkScores(edges: DataFrame, maxDegree: Long = Long.MaxValue): DataFrame = {
-    val e = OperatorCaches.persistTracked(
-      edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst")).distinct())
-    val deg = e.groupBy("dst").agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= 2 && col("deg") <= maxDegree)
-    val posting = OperatorCaches.persistTracked(e.join(deg, Seq("dst")))
-    posting.as("a").join(posting.as("b"),
-        col("a.dst") === col("b.dst") && col("a.src") < col("b.src"))
-      .groupBy(col("a.src").as("src_a"), col("b.src").as("src_b"))
-      .agg(count(lit(1)).as("common"),
-        round(sum(lit(1.0) / log(col("a.deg"))), 6).as("adamic_adar"))
-  }
-
-  /** Candidate-set link scoring — the SCALE PATH for [[linkScores]]: score
-    * a provided (src_a, src_b) candidate list (from a blocking stage, a
-    * negative sampler, or a recall model) instead of enumerating all
-    * co-neighbor pairs. All-pairs costs Σ deg² candidates (measured OOM
-    * at ×100 on one box, BENCH_SF10); scoring a list costs
-    * |candidates|·d̄ posting rows through two src-keyed joins — linear in
-    * the list however big the graph gets. Same Adamic-Adar semantics,
-    * same maxDegree reduced-graph cap; candidates with no surviving
-    * common neighbor score (0, 0.0) rather than dropping (a ranked
-    * candidate list wants every row back).
+    * with more than maxDegree sources are removed BEFORE scoring (their
+    * AA summand ~1/ln(huge) is noise), so scores are exactly the scores
+    * of the reduced graph and an oracle replays them. Candidates with no
+    * surviving common neighbor score (0, 0.0) rather than dropping (a
+    * ranked candidate list wants every row back).
     */
   def scoreCandidatePairs(
       candidates: DataFrame,
@@ -506,11 +485,11 @@ object GraphRank {
       maxDegree: Long = Long.MaxValue): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
-    // deg >= 2 exactly as linkScores: a dst shared by two DISTINCT
-    // sources has deg >= 2 by construction so the filter costs legit
-    // candidates nothing, but a degenerate self-pair (u, u) in the input
-    // list matches deg-1 destinations and would sum 1/ln(1) = Infinity
-    // into adamic_adar without it
+    // deg >= 2: a dst shared by two DISTINCT sources has deg >= 2 by
+    // construction so the filter costs legit candidates nothing, but a
+    // degenerate self-pair (u, u) in the input list matches deg-1
+    // destinations and would sum 1/ln(1) = Infinity into adamic_adar
+    // without it
     val deg = e.groupBy("dst").agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= 2 && col("deg") <= maxDegree)
     val posting = OperatorCaches.persistTracked(e.join(deg, Seq("dst")))

@@ -481,8 +481,8 @@ object Similarity {
 
   /** [[annTopK]] with the bucket width and probe radius derived from
     * (similarity target, corpus size, dim) instead of pinned — the
-    * scale-safe query-side configuration. `n` as in cosineNearDupPairs
-    * auto mode: supply it when known (zero Spark jobs at construction);
+    * scale-safe query-side configuration. `n` as in [[cosineNearDupPairs]]:
+    * supply it when known (zero Spark jobs at construction);
     * with `n = None` the count doubles as the cache materialization of
     * the projected frame the bucket scan then reads.
     */
@@ -916,26 +916,22 @@ object Similarity {
     * catalog entries add it), not a pair-cardinality range shuffle inside
     * every composed pipeline.
     *
-    * Scale note: a FIXED `nPlanes`/`bands` fixes the bucket space, so
-    * candidate volume grows with per-bucket occupancy SQUARED — measured
-    * 16.5× cost for 10× vectors at 16 planes / 4 bands (BENCH_SF1.md's one
-    * super-linear entry). Band width must grow ~log2(n) to hold occupancy
-    * constant — exactly the knob a production near-dup pass tunes; the
-    * fixed catalog entry pins small literal params only because its DuckDB
-    * oracle splices the planes verbatim. `nPlanes = 0` turns the knob
-    * automatically: [[autoCosineBanding]] picks (width, bands) from
-    * (threshold, corpus size, dim), and the band keys come from the native
-    * [[lshBandKeys]] — per-band longs with no 63-bit pack ceiling. In auto
-    * mode the `bands` argument is IGNORED (both dimensions are derived
-    * together), and the corpus size comes from `n` when the caller knows
-    * it (ingest pipelines know their batch size) — construction then runs
-    * no Spark job at all. With `n = None` the operator counts the
-    * projected (id, vector) frame AFTER persisting it, so the count
-    * doubles as the cache materialization and the raw input is still
-    * scanned exactly once.
+    * Banding: a fixed band width fixes the bucket space, so candidate
+    * volume grows with per-bucket occupancy SQUARED — measured 16.5× cost
+    * for 10× vectors at 16 planes / 4 bands (BENCH_SF1.md) and killed at
+    * x100 (BENCH_SF10.md §4). Band width must grow ~log2(n) to hold
+    * occupancy constant, so [[autoCosineBanding]] picks (width, bands)
+    * from (threshold, corpus size, dim), and the band keys come from the
+    * native [[lshBandKeys]] — per-band longs with no 63-bit pack ceiling.
+    * The corpus size comes from `n` when the caller knows it (ingest
+    * pipelines know their batch size) — construction then runs no Spark
+    * job at all. With `n = None` the operator counts the projected
+    * (id, vector) frame AFTER persisting it, so the count doubles as the
+    * cache materialization and the raw input is still scanned exactly
+    * once.
     */
-  /** Cost-model-derived (nPlanes, bands) for [[cosineNearDupPairs]] auto
-    * mode: returns (w·b, b).
+  /** Cost-model-derived (nPlanes, bands) for [[cosineNearDupPairs]]:
+    * returns (w·b, b).
     *
     * A ≥-threshold pair agrees with a random hyperplane's sign with
     * probability p = 1 − arccos(t)/π (Goemans–Williamson), so a w-bit band
@@ -969,7 +965,7 @@ object Similarity {
     * same derivation to splice the planes, so any change here must keep
     * the q_embed_neardup_auto entry's Spark and DuckDB sides in lockstep.
     */
-  /** Expected LSH candidate PAIRS for [[cosineNearDupPairs]] auto mode at
+  /** Expected LSH candidate PAIRS for [[cosineNearDupPairs]] at
     * (threshold, n, dim) — the pre-flight feasibility check for the bound
     * BENCH_SF10.md §5 measures. Random far vectors collide in a w-bit band
     * with probability 2^-w, so the derived (w, b) implies ≈ b · n²/2^(w+1)
@@ -1010,73 +1006,48 @@ object Similarity {
       df: DataFrame,
       dim: Int,
       threshold: Double = 0.95,
-      nPlanes: Int = 16,
-      bands: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       n: Option[Long] = None,
       maxExpectedCandidatePairs: Double = 1e9): DataFrame = {
     val vd = toDouble(col(vecCol))
     val projected = df.select(col(idCol).cast("long").as("id"), vd.as("v"))
-    // persist the sketch either way: the band-key expression (many dot
+    // banding params need the corpus size, but the sketch
+    // expression needs the banding params — so when the caller can't
+    // supply `n`, persist the (id, v) projection FIRST and let the
+    // count() double as its cache materialization: the raw input is
+    // scanned exactly once either way
+    val base =
+      if (n.isDefined) projected
+      else OperatorCaches.persistTracked(projected)
+    val nEff = n.getOrElse(base.count())
+    // fail-fast feasibility gate: below the LSH boundary (low threshold
+    // at large n — the Goemans–Williamson agreement bound analyzed in
+    // BENCH_SF10.md §5) NO 95%-recall banding is sub-quadratic, and the
+    // band join would die 20 minutes in with an opaque executor error.
+    // Estimate the verification-candidate volume from the derived
+    // banding FIRST and refuse with a diagnosis instead: e.g.
+    // (t=0.25, n=5e5) estimates ~1.7e11 pairs. The ceiling's 1e9
+    // default is ~one node-hour of verification work (≈400 FLOP-equiv
+    // per candidate); callers who really want the quadratic override it.
+    val est = expectedAutoCandidatePairs(threshold, nEff, dim)
+    if (est > maxExpectedCandidatePairs)
+      throw new IllegalArgumentException(
+        f"cosineNearDupPairs at (threshold=$threshold%.2f, n=$nEff, " +
+          f"dim=$dim) expects ~$est%.2e LSH candidate pairs — above the " +
+          f"$maxExpectedCandidatePairs%.1e ceiling. This regime is below the " +
+          "LSH feasibility boundary (expectedAutoCandidatePairs is the " +
+          "pre-flight check); use annTopKAuto (per-vector top-k) or the IVF " +
+          "path (ivfTopK) for low-similarity discovery, or " +
+          "raise maxExpectedCandidatePairs to force the quadratic join.")
+    val (np, nb) = autoCosineBanding(threshold, nEff, dim)
+    // persist the sketch: the band-key expression (many dot
     // products) must evaluate once per vector, not once per band per join
-    // side. banded(id, v, band, bv) is the mode-independent contract.
-    val (sketched, banded) =
-      if (nPlanes > 0) {
-        // fixed mode: caller-pinned params, single-long pack (≤ 63 bits),
-        // band values sliced with shifts — the oracle-spliceable shape.
-        // A non-dividing band count would leave the top bits un-banded
-        // (lost recall); bands > nPlanes would give zero-width masks —
-        // every row colliding with every row, the cartesian this operator
-        // exists to avoid
-        require(bands > 0 && nPlanes % bands == 0, "bands must divide nPlanes")
-        val w = nPlanes / bands
-        val s = OperatorCaches.persistTracked(
-          projected.withColumn("bucket", lshBucket(col("v"), dim, nPlanes)))
-        val bd = s.select(
-          col("id"), col("v"),
-          explode(array((0 until bands).map(i =>
-            struct(lit(i).as("band"),
-              shiftrightunsigned(col("bucket"), i * w).bitwiseAND(lit((1L << w) - 1)).as("bv"))): _*))
-            .as("bk"))
-          .select(col("id"), col("v"), col("bk.band"), col("bk.bv"))
-        (s, bd)
-      } else {
-        // auto mode: banding params need the corpus size, but the sketch
-        // expression needs the banding params — so when the caller can't
-        // supply `n`, persist the (id, v) projection FIRST and let the
-        // count() double as its cache materialization: the raw input is
-        // scanned exactly once either way
-        val base =
-          if (n.isDefined) projected
-          else OperatorCaches.persistTracked(projected)
-        val nEff = n.getOrElse(base.count())
-        // fail-fast feasibility gate: below the LSH boundary (low threshold
-        // at large n — the Goemans–Williamson agreement bound analyzed in
-        // BENCH_SF10.md §5) NO 95%-recall banding is sub-quadratic, and the
-        // band join would die 20 minutes in with an opaque executor error.
-        // Estimate the verification-candidate volume from the derived
-        // banding FIRST and refuse with a diagnosis instead: e.g.
-        // (t=0.25, n=5e5) estimates ~1.7e11 pairs. The ceiling's 1e9
-        // default is ~one node-hour of verification work (≈400 FLOP-equiv
-        // per candidate); callers who really want the quadratic override it.
-        val est = expectedAutoCandidatePairs(threshold, nEff, dim)
-        if (est > maxExpectedCandidatePairs)
-          throw new IllegalArgumentException(
-            f"cosineNearDupPairs auto mode at (threshold=$threshold%.2f, n=$nEff, " +
-              f"dim=$dim) expects ~$est%.2e LSH candidate pairs — above the " +
-              f"$maxExpectedCandidatePairs%.1e ceiling. This regime is below the " +
-              "LSH feasibility boundary (expectedAutoCandidatePairs is the " +
-              "pre-flight check); use annTopKAuto (per-vector top-k) or the IVF " +
-              "path (ivfTopK) for low-similarity discovery, or " +
-              "raise maxExpectedCandidatePairs to force the quadratic join.")
-        val (np, nb) = autoCosineBanding(threshold, nEff, dim)
-        val s = OperatorCaches.persistTracked(
-          base.withColumn("bands", lshBandKeys(col("v"), dim, np / nb, nb)))
-        val bd = s.select(col("id"), col("v"),
-            posexplode(col("bands")).as(Seq("band", "bv")))
-        (s, bd)
-      }
+    // side
+    val sketched = OperatorCaches.persistTracked(
+      base.withColumn("bands", lshBandKeys(col("v"), dim, np / nb, nb)))
+    val banded = sketched.select(col("id"), col("v"),
+        posexplode(col("bands")).as(Seq("band", "bv")))
     // candidate ids first (cheap longs through the shuffle + dedup), then
     // join vectors back and compute cosine once per UNIQUE candidate pair
     val pairs = banded.as("a").join(banded.as("b"),

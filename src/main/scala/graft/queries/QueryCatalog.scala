@@ -15,10 +15,14 @@ import graft.operators.{Dedup, OperatorCaches, Packing, Profiling, Similarity, S
   *
   * @param counterExample marks an entry RETAINED AS A MEASURED SCALE
   *   COUNTER-EXAMPLE: correct on the fixtures (its oracle row is green)
-  *   but proven non-viable at x100 in BENCH_SF10.md, kept beside its
-  *   scale-safe replacement so the failure mode stays measured, not
-  *   anecdotal. Listed in `bench_full.json` and `Verify`'s `flags.json`
-  *   so artifact readers see the status without archaeology.
+  *   but proven non-viable at x100 in BENCH_SF10.md, kept so the
+  *   failure mode stays measured, not anecdotal. Listed in
+  *   `bench_full.json` and `Verify`'s `flags.json` so artifact readers
+  *   see the status without archaeology. One entry carries it:
+  *   `q_embed_neardup_auto`, the only near-dup entry whose fixture
+  *   answer holds verified pairs (t = 0.25, below the LSH feasibility
+  *   boundary at x100; `q_embed_neardup_auto_t90` is the scale-safe
+  *   regime).
   */
 final case class Q(
     name: String,
@@ -99,8 +103,8 @@ object QueryCatalog {
   /** Oracle for the cosine near-dup entries
     * ([[Similarity.cosineNearDupPairs]]): `nPlanes` hyperplanes grouped
     * into bands of `width` planes (band p / width accumulates bit
-    * p % width, the operator's band-key loop; fixed 16/4 banding is
-    * width 4), band-collision candidates, and the 4-dp cosine cut.
+    * p % width, the operator's band-key loop), band-collision candidates,
+    * and the 4-dp cosine cut.
     */
   private def cosineNearDupOracleSql(
       threshold: Double, nPlanes: Int, width: Int): String =
@@ -5453,34 +5457,20 @@ object QueryCatalog {
               ORDER BY round(sim_raw, 4) DESC, vec_id LIMIT 10"""
       }),
 
-    // oracle replays the 16 literal hyperplanes (Similarity.hyperplanes,
-    // 4-dp — same splice pattern as q_ann_lsh), re-derives the four 4-plane
-    // band keys, the band-collision candidate pairs, and the rounded-cosine
-    // threshold cut
-    Q("q_embed_neardup",
-      // the operator returns unsorted (no pair-cardinality range shuffle
-      // inside composed pipelines); the oracle compare orders HERE
-      (s, dir) => Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
-        dim = 64, threshold = 0.25, nPlanes = 16, bands = 4)
-        .orderBy("id_a", "id_b"),
-      Some(cosineNearDupOracleSql(threshold = 0.25, nPlanes = 16, width = 4)),
-      counterExample = true), // fixed 16/4: occupancy² candidates, measured killed at x100 (BENCH_SF10.md §4)
-
-    // the SCALE-SAFE mode behind a driver gate: nPlanes = 0 lets
-    // autoCosineBanding derive (width, bands) from (threshold, corpus
-    // size, dim) — the configuration BENCH_SF1 proved necessary (the fixed
-    // 16/4 entry above is the one measured super-linear shape, kept for
-    // continuity). The derivation is a pure function, so the oracle
-    // replays it at catalog-build time for the verify tier's corpus size
-    // (500 embeddings at sf0.01 — a fixture regeneration that changes the
-    // count fails this row loudly, by construction) and splices the
-    // derived per-band hyperplanes verbatim: band p/w's key accumulates
-    // bit p%w per plane p, exactly lshBandKeys' native loop. The Spark
-    // side passes n = None, exercising the count-materializes-the-cache
-    // auto path end-to-end.
+    // cosine near-dup pairs: autoCosineBanding derives (width, bands) from
+    // (threshold, corpus size, dim). The derivation is a pure function, so
+    // the oracle replays it at catalog-build time for the verify tier's
+    // corpus size (500 embeddings at sf0.01 — a fixture regeneration that
+    // changes the count fails this row loudly, by construction) and
+    // splices the derived per-band hyperplanes verbatim: band p/w's key
+    // accumulates bit p%w per plane p, exactly lshBandKeys' native loop.
+    // The Spark side passes n = None, exercising the
+    // count-materializes-the-cache path end-to-end. The operator returns
+    // unsorted (no pair-cardinality range shuffle inside composed
+    // pipelines); the oracle compare orders HERE.
     Q("q_embed_neardup_auto",
       (s, dir) => Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
-        dim = 64, threshold = 0.25, nPlanes = 0)
+        dim = 64, threshold = 0.25)
         .orderBy("id_a", "id_b"),
       Some {
         val (np, nb) = Similarity.autoCosineBanding(0.25, n = 500L, dim = 64)
@@ -5488,37 +5478,25 @@ object QueryCatalog {
       },
       // auto banding is scale-safe ONLY above the GW feasibility boundary;
       // at t = 0.25 no 95%-recall banding is sub-quadratic (BENCH_SF10.md
-      // §5) — at x100 this entry now dies fast in the operator's
+      // §5) — at x100 this entry dies fast in the operator's
       // expectedAutoCandidatePairs gate with a diagnosis
       counterExample = true),
 
-    // the same fixed/auto pair at t = 0.9 — the threshold real near-dup
-    // dedup runs at, and the regime where the scale claims SEPARATE:
-    // fixed 16/4's candidate volume is threshold-INDEPENDENT (4-bit bands
-    // = 16 buckets whatever t is; occupancy n/16 squared — the measured
-    // x100 timeout), while auto at t = 0.9 derives ~2-bucket-per-vector
-    // band widths (feasible w tracks log2 n because GW agreement p = 0.86
-    // is high) and stays near-linear. At t = 0.25 NO 95%-recall banding
-    // is sub-quadratic (candidates ~ n^2/(2p)^w with 2p = 1.16 needs
-    // w ~ 88 -> 3e20 bands — the GW bound, not an implementation gap), so
-    // the t-0.25 entries above are the honest-but-infeasible-at-x100
-    // regime and THIS pair is the scale-safe one. The synthetic
-    // embeddings top out at cosine 0.60, so both entries return 0 rows on
-    // the fixtures (the oracle still pins the whole banding+verify
-    // machinery end-to-end; high-threshold RESULT correctness is spec'd
-    // with planted dups in SimilaritySpec) — what the bench measures is
-    // the candidate-generation cost, which is exactly the quantity that
-    // diverges at x100 (BENCH_SF10.md).
-    Q("q_embed_neardup_t90",
-      (s, dir) => Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
-        dim = 64, threshold = 0.9, nPlanes = 16, bands = 4)
-        .orderBy("id_a", "id_b"),
-      Some(cosineNearDupOracleSql(threshold = 0.9, nPlanes = 16, width = 4)),
-      counterExample = true), // fixed banding's candidate volume is threshold-independent: same x100 kill as q_embed_neardup
-
+    // the same derivation at t = 0.9 — the threshold real near-dup dedup
+    // runs at, and the regime where the banding stays near-linear:
+    // feasible widths track log2 n because GW agreement p = 0.86 is high.
+    // At t = 0.25 NO 95%-recall banding is sub-quadratic (candidates
+    // ~ n^2/(2p)^w with 2p = 1.16 needs w ~ 88 -> 3e20 bands — the GW
+    // bound, not an implementation gap), so the entry above is the
+    // honest-but-infeasible-at-x100 regime and THIS one is the scale-safe
+    // one. The synthetic embeddings top out at cosine 0.60, so it returns
+    // 0 rows on the fixtures (the oracle still pins the whole
+    // banding+verify machinery end-to-end; high-threshold RESULT
+    // correctness is spec'd with planted dups in SimilaritySpec) — what
+    // the bench measures is the candidate-generation cost.
     Q("q_embed_neardup_auto_t90",
       (s, dir) => Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
-        dim = 64, threshold = 0.9, nPlanes = 0)
+        dim = 64, threshold = 0.9)
         .orderBy("id_a", "id_b"),
       Some {
         val (np, nb) = Similarity.autoCosineBanding(0.9, n = 500L, dim = 64)
@@ -6242,43 +6220,15 @@ object QueryCatalog {
               FROM rc FULL OUTER JOIN rb ON rc.id = rb.id
               ORDER BY rrf DESC, doc_id LIMIT 10""")),
 
-    // link-prediction scoring: supplier pairs ranked by Adamic-Adar over
-    // shared customers (the customer-supplier graph q_graph_bfs walks).
-    // maxDegree = 60 exercises the hub cap — customers buying from more
-    // than 60 suppliers are boilerplate, all candidate volume and no
-    // signal, and drop with reduced-graph semantics the oracle replays.
-    // RETAINED AS A MEASURED SCALE COUNTER-EXAMPLE: all-pairs enumeration
-    // is Σ deg² candidates (~1.8B at ×100 — measured heap death on the
-    // 32-partition single-box bench, BENCH_SF10); the scale-safe path is
-    // q_link_scores_candidates (score a bounded candidate list).
-    Q("q_link_scores",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val edges = li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_suppkey").as("src"), col("o_custkey").as("dst"))
-        graft.operators.GraphRank.linkScores(edges, maxDegree = 60)
-          .orderBy(col("adamic_adar").desc, col("src_a"), col("src_b"))
-          .limit(20)
-      },
-      Some("""WITH e AS (SELECT DISTINCT l_suppkey AS src, o_custkey AS dst
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-              deg AS (SELECT dst, count(*) AS deg FROM e GROUP BY dst
-                HAVING count(*) >= 2 AND count(*) <= 60),
-              p AS (SELECT e.src, e.dst, deg.deg FROM e JOIN deg USING (dst))
-              SELECT a.src AS src_a, b.src AS src_b,
-                count(*) AS common,
-                round(sum(1.0 / ln(a.deg)), 6) AS adamic_adar
-              FROM p a JOIN p b ON a.dst = b.dst AND a.src < b.src
-              GROUP BY 1, 2
-              ORDER BY adamic_adar DESC, src_a, src_b LIMIT 20"""),
-      counterExample = true),
-
-    // the scale path q_link_scores' counter-example note names: score a
-    // BOUNDED candidate list (here: consecutive-suppkey pairs standing in
-    // for a blocking stage's output) against the graph — |candidates|·d̄
-    // posting rows through two src-keyed joins, linear at any graph
-    // size. Zero-common candidates come back scored (0, 0.0).
+    // link-prediction scoring: supplier pairs scored by Adamic-Adar over
+    // shared customers (the customer-supplier graph q_graph_bfs walks) for
+    // a BOUNDED candidate list (here: consecutive-suppkey pairs standing in
+    // for a blocking stage's output) — |candidates|·d̄ posting rows through
+    // two src-keyed joins, linear at any graph size. maxDegree = 60
+    // exercises the hub cap — customers buying from more than 60 suppliers
+    // are boilerplate, all candidate volume and no signal, and drop with
+    // reduced-graph semantics the oracle replays. Zero-common candidates
+    // come back scored (0, 0.0).
     Q("q_link_scores_candidates",
       (s, dir) => {
         val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
@@ -9004,24 +8954,7 @@ object QueryCatalog {
               SELECT w.label, s.s AS scatter, w.worst_ratio,
                 (SELECT db_index FROM db) AS db_index
               FROM wr w JOIN scat s USING (label) ORDER BY label""")),
-
-    // Blocked fuzzy record linkage over a deterministically corrupted
-    // customer registry: every 7th name gets one mid-string digit
-    // replaced by a hash-derived letter; blocking on (length, last-3-
-    // digit suffix) — the regions the corruption model does not touch —
-    // shrinks candidates to the suffix block, and the rank-1 window
-    // (distance, master id) picks the true source over its distance-2
-    // thousands-digit twin. n_candidates rides along as the linkage-
-    // confidence audit.
-    Q("q_fuzzy_linkage",
-      (s, dir) => fuzzyLinkage(s, dir, suffixStart = 16, suffixLen = 3),
-      Some(fuzzyLinkageOracleSql(suffixStart = 16, suffixLen = 3)),
-      // fixed-width 1000-block key: candidates grow quadratically with
-      // the registry — measured 132 s in-run / 146.5 s isolated at x100
-      // (BENCH_SF10 addenda 7 & 10); kept beside q_fuzzy_linkage_fine
-      // (the 10x-block scale path, 16.8 s) and q_fuzzy_linkage_gated
-      // (the fail-fast pre-flight)
-      counterExample = true))
+    )
   }
 
   /** Shared fixture for the GBDT entries: extended price in cents as the
@@ -9504,13 +9437,20 @@ object QueryCatalog {
                   AS xcorr
               FROM j GROUP BY lag ORDER BY lag""")),
 
-    // q_fuzzy_linkage behind the candidate-volume pre-flight (ceiling
+    // Blocked fuzzy record linkage over a deterministically corrupted
+    // customer registry: every 7th name gets one mid-string digit
+    // replaced by a hash-derived letter; blocking on (length, last-3-
+    // digit suffix) — the regions the corruption model does not touch —
+    // shrinks candidates to the suffix block, and the rank-1 window
+    // (distance, master id) picks the true source over its distance-2
+    // thousands-digit twin. n_candidates rides along as the linkage-
+    // confidence audit. Behind the candidate-volume pre-flight (ceiling
     // 1e8): the length+suffix blocking key is FIXED-width, so blocks grow
     // linearly with the registry and candidates quadratically — measured
-    // 146.5 s isolated at ×100 (BENCH_SF10 round-10 addendum). The gate
-    // costs two grouped counts; at oracle scale it passes and the result
-    // is identical to the ungated entry, at ×100 it fails fast with the
-    // sized diagnosis naming the lever (refine the blocking keys).
+    // 146.5 s isolated at ×100 without the gate (BENCH_SF10 round-10
+    // addendum). The gate costs two grouped counts; at oracle scale it
+    // passes, at ×100 it fails fast with the sized diagnosis naming the
+    // lever (refine the blocking keys, as the next entry does).
     Q("q_fuzzy_linkage_gated",
       (s, dir) => fuzzyLinkage(s, dir, suffixStart = 16, suffixLen = 3,
         maxExpectedCandidates = Some(100000000L)),
@@ -11099,4 +11039,18 @@ object QueryCatalog {
     relational ++ relational2 ++ text ++ sampling ++ embeddings ++ media ++
       taxi ++ session8 ++ session9 ++ session9b ++ session10 ++ session10b ++
       session11 ++ session12
+
+  /** The entries a comma-separated name list (`SPARK_GRAFT_ONLY`) selects,
+    * in catalog order; every entry when `names` is None. A list that is
+    * empty or names an unknown entry throws, naming the unknown names: a
+    * typo must fail, not select nothing and report green.
+    */
+  def select(names: Option[String]): Seq[Q] = names.fold(all) { list =>
+    val wanted = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- all.map(_.name)
+    require(wanted.nonEmpty, s"empty catalog selection: '$list'")
+    require(unknown.isEmpty,
+      s"no catalog entry named ${unknown.toSeq.sorted.mkString(", ")}")
+    all.filter(q => wanted(q.name))
+  }
 }

@@ -42,16 +42,21 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
   /** What changes when a table path is rewritten, from one file-status
-    * lookup (no Spark job): a single-file table's length and modification
-    * time; a directory table's entry names, whose part files carry a
-    * per-write UUID.
+    * lookup and at most one top-level listing (no Spark job): a
+    * single-file table's length and modification time; a directory
+    * table's modification time and entry names. A flat table's part
+    * files carry a per-write UUID, but a hive-partitioned table's root
+    * lists the same names (`_SUCCESS,y=2024`) after every overwrite; the
+    * overwrite recreates the root, so its modification time moves.
     */
   private def fileIdentity(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = fs.getFileStatus(p)
-    if (st.isDirectory) fs.listStatus(p).map(_.getPath.getName).sorted.mkString(",")
-    else s"${st.getLen}@${st.getModificationTime}"
+    val names =
+      if (st.isDirectory) fs.listStatus(p).map(_.getPath.getName).sorted.mkString(",")
+      else st.getLen.toString
+    s"$names@${st.getModificationTime}"
   }
 
   private def declaredSchema(spark: SparkSession, path: String): StructType = {

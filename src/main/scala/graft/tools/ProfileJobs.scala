@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.GraftSession
+import graft.queries.{Q, QueryCatalog}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Per-JOB wall-time profiler for catalog queries — the measurement tool
@@ -23,9 +24,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1).headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
+    require(args.length >= 2, "usage: ProfileJobs <sfDir> q1[,q2,...] [passes]")
+    val entries = QueryCatalog.select(Some(args(1)))
     val passes = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    require(names.nonEmpty, "usage: ProfileJobs <sfDir> q1[,q2,...] [passes]")
     val spark = GraftSession.local("graft-profile")
     val sc = spark.sparkContext
     val starts =
@@ -44,9 +45,7 @@ object ProfileJobs {
           done.add((je.jobId, (System.nanoTime() - t0) / 1000000L, nStages, site))
         }
     })
-    for (name <- names) {
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"no such query: $name"))
+    for (Q(name, fn, _, _) <- entries) {
       for (p <- 1 to passes) {
         // clear BOTH maps between passes: a start without its end from the
         // previous pass would otherwise be attributed to this one

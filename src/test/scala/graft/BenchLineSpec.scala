@@ -140,7 +140,7 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("isolated re-measures render under full names beside the in-run time") {
     val line = Bench.renderLine(
-      Seq("q_embed_neardup" -> 1.5, "q_dedup_simhash" -> 5.416, "q_fast" -> 0.1),
+      Seq("q_embed_neardup_auto" -> 1.5, "q_dedup_simhash" -> 5.416, "q_fast" -> 0.1),
       Seq.empty, "sf0.1", Seq.empty,
       isolated = Seq("q_dedup_simhash" -> 0.926))
     // isolated carries the alone-measured number; "queries" keeps in-run
@@ -217,5 +217,21 @@ class BenchLineSpec extends AnyFunSuite {
     assert(full.contains("\"total_ms\":1500"), full)
     // 500 ms breaches the spread arm (500/120 > 3) — same verdict as the line
     assert(full.contains("\"degraded\":true"), full)
+  }
+
+  test("a name selection fails on an unknown or empty list, naming the unknown names") {
+    val sel = queries.QueryCatalog.select(Some("q_embed_neardup_auto_t90,q_embed_neardup_auto"))
+    // catalog order, whatever order the list gives
+    assert(sel.map(_.name) === names.filter(_.startsWith("q_embed_neardup_auto")))
+    assert(queries.QueryCatalog.select(None).map(_.name) === names)
+    val err = intercept[IllegalArgumentException](
+      queries.QueryCatalog.select(Some("q_embed_neardup_auto,q_no_such_entry")))
+    assert(err.getMessage.contains("q_no_such_entry") &&
+      !err.getMessage.contains("q_embed_neardup_auto"), err.getMessage)
+    intercept[IllegalArgumentException](queries.QueryCatalog.select(Some(" , ")))
+  }
+
+  test("the JSON string escaper names newline, CR and tab and code-escapes other controls") {
+    assert(Bench.js("a\"b\\c\nd\re\tf\u0001") === "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001\"")
   }
 }

@@ -260,38 +260,46 @@ class GraphRankSpec extends SparkSpec {
     // destinations: 100 shared by {1,2,3} (deg 3), 101 by {1,2} (deg 2),
     // 102 only by 3 (deg 1 -> cannot pair), 103 by everyone incl. the
     // hub-only source 9 (deg 4 -> cut at maxDegree = 3)
-    val edges = Seq(
+    val raw = Seq(
       (1L, 100L), (2L, 100L), (3L, 100L),
       (1L, 101L), (2L, 101L),
       (3L, 102L),
       (1L, 103L), (2L, 103L), (3L, 103L), (9L, 103L),
       (1L, 100L) // duplicate edge must not double-count
-    ).toDF("src", "dst")
-    def run(cap: Long) = GraphRank.linkScores(edges, cap)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
-      .toMap
+    )
+    val edges = raw.toDF("src", "dst")
+    // every co-neighbor pair (u < v) of the uncapped graph, enumerated
+    // in plain Scala: the candidate list scoreCandidatePairs scores
+    val coNeighbors = raw.groupBy(_._2).values
+      .flatMap(es => for (a <- es.map(_._1); b <- es.map(_._1) if a < b) yield (a, b))
+      .toSeq.distinct.toDF("src_a", "src_b")
+    def score(e: org.apache.spark.sql.DataFrame, cap: Long) =
+      GraphRank.scoreCandidatePairs(coNeighbors, e, cap)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
+        .toMap
     def aa(degs: Long*): Double =
       BigDecimal(degs.map(d => 1.0 / math.log(d.toDouble)).sum)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val capped = run(3L)
+    val capped = score(edges, 3L)
+    assert(capped.size === 6, capped.toString)
     // (1,2): share 100 (deg 3) and 101 (deg 2); 103 is capped away
     assert(capped((1L, 2L)) === ((2L, aa(3, 2))))
     assert(capped((1L, 3L)) === ((1L, aa(3))))
     assert(capped((2L, 3L)) === ((1L, aa(3))))
-    assert(!capped.keySet.exists { case (a, b) => a == 9L || b == 9L },
-      "hub-only source must vanish with the capped destination")
-    // uncapped: 103 (deg 4) back in play, pairs with 9 appear
-    val full = run(Long.MaxValue)
+    // the hub-only source's pairs lose their one shared destination to
+    // the cap: scored (0, 0.0), never dropped
+    for (u <- Seq(1L, 2L, 3L))
+      assert(capped((u, 9L)) === ((0L, 0.0)), s"($u, 9)")
+    // uncapped: 103 (deg 4) back in play, pairs with 9 score
+    val full = score(edges, Long.MaxValue)
     assert(full((1L, 2L)) === ((3L, aa(3, 2, 4))))
     assert(full((1L, 9L)) === ((1L, aa(4))))
     // deterministic under repartition
-    val again = GraphRank.linkScores(edges.repartition(5), 3L)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
-      .toMap
+    val again = score(edges.repartition(5), 3L)
     assert(again === capped)
 
-    // the candidate-list scale path agrees with all-pairs on shared pairs
-    // and returns (0, 0.0) for candidates with no common neighbor
+    // a short candidate list scores its pairs as the full co-neighbor
+    // list does, and (0, 0.0) for candidates with no common neighbor
     val cands = Seq((1L, 2L), (1L, 3L), (7L, 8L)).toDF("src_a", "src_b")
     val scored = GraphRank.scoreCandidatePairs(cands, edges, 3L)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))

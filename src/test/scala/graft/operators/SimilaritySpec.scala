@@ -34,8 +34,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("near-dup pairs finds identical vectors above threshold") {
+    // caller-supplied corpus size; the auto-mode test below counts it
     val pairs = Similarity.cosineNearDupPairs(vecs, dim = 4, threshold = 0.95,
-      nPlanes = 8, bands = 4)
+      n = Some(6L))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 1.0))
     assert(!pairs.exists(p => p._2 == 4L)) // opposite vector never matches
@@ -65,8 +66,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("near-dup pairs in auto mode finds the same clear dups") {
-    val pairs = Similarity.cosineNearDupPairs(vecs, dim = 4, threshold = 0.95,
-      nPlanes = 0)
+    val pairs = Similarity.cosineNearDupPairs(vecs, dim = 4, threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 1.0))
     assert(!pairs.exists(p => p._2 == 4L))
@@ -141,7 +141,7 @@ class SimilaritySpec extends SparkSpec {
     assert(est > 1e10, f"regime drifted: estimate $est%.2e")
     val err = intercept[IllegalArgumentException] {
       Similarity.cosineNearDupPairs(vecs, dim = 64, threshold = 0.25,
-        nPlanes = 0, n = Some(500000L))
+        n = Some(500000L))
     }
     assert(err.getMessage.contains("candidate pairs"))
     assert(err.getMessage.contains("annTopKAuto"))
@@ -149,12 +149,12 @@ class SimilaritySpec extends SparkSpec {
     // the ceiling is caller-overridable: forcing constructs the frame
     // (no job runs — caller-supplied n keeps construction pure)
     Similarity.cosineNearDupPairs(vecs, dim = 64, threshold = 0.25,
-      nPlanes = 0, n = Some(500000L), maxExpectedCandidatePairs = 1e12)
+      n = Some(500000L), maxExpectedCandidatePairs = 1e12)
     // and the feasible regime passes through untouched: t=0.9 at the same
     // corpus size derives near-linear candidates, far under the ceiling
     assert(Similarity.expectedAutoCandidatePairs(0.9, 500000L, dim = 64) < 1e9)
     Similarity.cosineNearDupPairs(vecs, dim = 64, threshold = 0.9,
-      nPlanes = 0, n = Some(500000L))
+      n = Some(500000L))
     // the constructed-but-never-run frames above are REGISTERED in the
     // CacheManager with a deliberately ill-typed plan (dim 64 over 4-dim
     // vectors); drop them here or a later test's cache activity re-plans

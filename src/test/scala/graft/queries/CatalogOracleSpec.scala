@@ -19,7 +19,7 @@ class CatalogOracleSpec extends SparkSpec {
     assert(entries.filter(_.oracle.isEmpty).map(_.name).isEmpty,
       "every catalog entry needs an oracle")
     withTempDir("oracle") { out =>
-      assert(Verify.dump(spark, sf, out, None).isEmpty)
+      assert(Verify.dump(spark, sf, out, entries).isEmpty)
       val log = new StringBuilder
       val code = Seq("python3", "tools/compare_oracle.py", sf, out)
         .!(ProcessLogger(l => log.append(l).append('\n'),

@@ -130,7 +130,7 @@ class PlanShapeSpec extends SparkSpec {
         "ngramJaccard" -> Dedup.ngramJaccard(docs, threshold = 0.15),
         "fuzzyDedupClusters" -> Dedup.fuzzyDedupClusters(docs, threshold = 0.5),
         "cosineNearDupPairs" -> Similarity.cosineNearDupPairs(emb, dim = 64,
-          threshold = 0.25, nPlanes = 16, bands = 4))) {
+          threshold = 0.25))) {
       val plan = df.queryExecution.executedPlan.toString
       assert(globalSort.findFirstIn(plan).isEmpty,
         s"$name plans a global sort:\n$plan")
@@ -138,7 +138,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("auto-mode near-dup with caller-supplied n constructs without any Spark job") {
-    // the scale contract behind cosineNearDupPairs(nPlanes = 0, n = Some):
+    // the scale contract behind cosineNearDupPairs(n = Some):
     // banding params come from the caller's count (ingest pipelines know
     // their batch size), so building the frame must not scan the corpus —
     // the round-5 shape ran an unconditional df.count() per invocation
@@ -155,13 +155,12 @@ class PlanShapeSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val auto = Similarity.cosineNearDupPairs(emb, dim = 64, threshold = 0.25,
-        nPlanes = 0, n = Some(500L))
+        n = Some(500L))
       org.apache.spark.graft.TestListenerBus.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() === 0, "construction ran Spark jobs despite caller-supplied n")
       // and the n = None path derives the same frame (its count() is the
       // cache materialization of the same projection, not extra work)
-      val counted = Similarity.cosineNearDupPairs(emb, dim = 64, threshold = 0.25,
-        nPlanes = 0)
+      val counted = Similarity.cosineNearDupPairs(emb, dim = 64, threshold = 0.25)
       assert(counted.exceptAll(auto).count() === 0 &&
         auto.exceptAll(counted).count() === 0,
         "caller-supplied n and counted n derived different pairs")

@@ -161,12 +161,16 @@ class TablesSpec extends SparkSpec {
 
   test("a table path rewritten in the same JVM loads with its new schema") {
     import spark.implicits._
-    // both layouts the loader reads: a directory of part files (ScaleData's
-    // df.write) and a single parquet file (the fixture testdata)
+    // every layout the loader reads: a directory of part files (ScaleData's
+    // df.write), a hive-partitioned directory (whose root lists the same
+    // names after every overwrite) and a single parquet file (the fixture
+    // testdata)
     val dir = s"$tmp/rewrite"
     val single = s"$dir/single.parquet"
     def write(df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$dir/multi.parquet")
+      df.withColumn("y", lit(2024)).write.mode("overwrite").partitionBy("y")
+        .parquet(s"$dir/part.parquet")
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/staging")
       val part = new java.io.File(s"$dir/staging").listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -176,12 +180,16 @@ class TablesSpec extends SparkSpec {
     write(Seq((1L, "a")).toDF("id", "text"))
     for (name <- Seq("multi", "single"))
       assert(Tables.load(spark, dir, name).columns.toSeq === Seq("id", "text"), name)
+    assert(Tables.load(spark, dir, "part").columns.toSeq === Seq("id", "text", "y"))
     write(Seq((2L, "b", "en")).toDF("id", "text", "lang"))
     for (name <- Seq("multi", "single")) {
       val back = Tables.load(spark, dir, name)
       assert(back.columns.toSeq === Seq("id", "text", "lang"), name)
       assert(back.as[(Long, String, String)].collect().toSeq === Seq((2L, "b", "en")), name)
     }
+    val part = Tables.load(spark, dir, "part")
+    assert(part.columns.toSeq === Seq("id", "text", "lang", "y"))
+    assert(part.as[(Long, String, String, Int)].collect().toSeq === Seq((2L, "b", "en", 2024)))
   }
 
   test("events ts repair: nanos-as-long shape → TimestampType micros") {

@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
 """Local simulation of the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/compare_oracle.py <sf_dir> <verify_out_dir>
+Usage: python3 tools/compare_oracle.py <sf_dir> <verify_out_dir> [filter]
 
 Registers each testdata parquet as a DuckDB view, runs every SQL in
 oracle_sql.json, and compares against the Spark-dumped parquet with columns
 sorted by name and exact (stringified) value equality — the strictest
 plausible version of the driver's hash compare.
+
+The optional filter is a comma list of names or name prefixes; a filter
+that matches no oracle key exits 1.
 """
 import duckdb, json, glob, sys
 import pyarrow.parquet as pq
@@ -25,6 +28,9 @@ def main(sf: str, out: str, only: str = "") -> int:
         names = set(only.split(","))
         oracle = {k: v for k, v in oracle.items()
                   if k in names or any(k.startswith(n) for n in names)}
+        if not oracle:  # a typo'd filter must not read as a clean compare
+            print(f"no oracle key matches filter {only!r}")
+            return 1
     ok, bad = [], []
     for name, sql in sorted(oracle.items()):
         try:
