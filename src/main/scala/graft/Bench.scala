@@ -111,6 +111,7 @@ object Bench {
     // (stable), so family grouping below is contiguous
     val only = sys.env.get("SPARK_GRAFT_ONLY")
     val selected = queries.QueryCatalog.select(only).map(q => q.name -> q.fn)
+    val watched = isolateRequest(sys.env.get("SPARK_GRAFT_ISOLATE"), selected.map(_._1))
     val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional durable checkpoint dir — the CLUSTER shape for the
@@ -215,9 +216,7 @@ object Bench {
     // SPARK_GRAFT_ISOLATE-requested names that ran successfully — the
     // watch-set hook for adjudicating a suspected regression without
     // waiting for it to reach the slow tail.
-    val requested = sys.env.get("SPARK_GRAFT_ISOLATE")
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
-      .filter(n => results.get(n).exists(_ >= 0))
+    val requested = watched.filter(n => results(n) >= 0)
     val slowest = results.toSeq.filter(_._2 >= 0).sortBy(-_._2)
       .take(IsolatedSideN).map(_._1)
     for (name <- (slowest ++ requested).distinct)
@@ -250,6 +249,20 @@ object Bench {
       canaries.toSeq, isolated.toSeq.take(IsolatedTopN)))
     spark.stop()
   }
+
+  /** SPARK_GRAFT_ISOLATE's watch set, in catalog order. Every name must be
+    * a catalog entry of the run's selection: an unknown or unselected name
+    * fails before any Spark work, naming it, instead of dropping out of
+    * the "isolated" map unseen.
+    */
+  private[graft] def isolateRequest(list: Option[String], selected: Seq[String]): Seq[String] =
+    list.fold(Seq.empty[String]) { l =>
+      val names = queries.QueryCatalog.select(Some(l)).map(_.name)
+      val outside = names.filterNot(selected.toSet)
+      require(outside.isEmpty,
+        s"SPARK_GRAFT_ISOLATE names entries outside the run's selection: ${outside.mkString(", ")}")
+      names
+    }
 
   /** Wall seconds of `passes` back-to-back runs of one entry, None for a
     * sample that threw something `onFailure` handles (after it has run);

@@ -16,6 +16,14 @@ import org.apache.spark.sql.SparkSession
   *     this would be ~2-3x total cores, and AQE coalesces down.
   *   - a generated-class cache of 1,000 entries, so a repeated pass reuses
   *     its compiled code instead of recompiling it with Janino.
+  *   - a local file system that starts no process per file
+  *     (`sources.ForkFreeLocalFileSystem` for `file:`, `ForkFreeLocalFs`
+  *     for FileContext): without libhadoop, Hadoop's own runs `chmod` for
+  *     every file and directory a sink, dump, checkpoint or state store
+  *     writes, and `readlink` on every checkpoint rename. A sticky, setuid
+  *     or setgid mode and a real symbolic link still go to Hadoop. The
+  *     JVM caches the first `file:` FileSystem it creates, so a JVM that
+  *     opened one before its first graft session keeps the default one.
   *
   * Every main takes its core count from `builder`'s default:
   * SPARK_GRAFT_CPUS when set, else every core of the host.
@@ -90,6 +98,8 @@ object GraftSession {
       // large stateful streaming. The provider is a runtime conf, so one
       // query can run under another (withStateStore below).
       .config(StateStoreKey, RocksDbStateStore)
+      .config("spark.hadoop.fs.file.impl", classOf[sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.ForkFreeLocalFs].getName)
 
   def local(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

@@ -231,6 +231,19 @@ class BenchLineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](queries.QueryCatalog.select(Some(" , ")))
   }
 
+  test("an isolate request fails on a misspelled or unselected name, naming it") {
+    val selected = Seq("q_filter_project", "q_embed_neardup_auto")
+    assert(Bench.isolateRequest(None, selected).isEmpty)
+    assert(Bench.isolateRequest(Some("q_embed_neardup_auto, q_filter_project"), selected) ===
+      names.filter(selected.contains))
+    val typo = intercept[IllegalArgumentException](
+      Bench.isolateRequest(Some("q_filter_projcet"), selected))
+    assert(typo.getMessage.contains("q_filter_projcet"), typo.getMessage)
+    val outside = intercept[IllegalArgumentException](
+      Bench.isolateRequest(Some("q_embed_neardup_auto,q_embed_neardup_auto_t90"), selected))
+    assert(outside.getMessage.endsWith(": q_embed_neardup_auto_t90"), outside.getMessage)
+  }
+
   test("the JSON string escaper names newline, CR and tab and code-escapes other controls") {
     assert(Bench.js("a\"b\\c\nd\re\tf\u0001") === "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001\"")
   }
